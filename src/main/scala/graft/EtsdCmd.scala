@@ -292,15 +292,19 @@ object EtsdCmd {
       case 'q' =>
         val spark = SparkSession.builder().appName("etsdCmd")
           .config("spark.sql.extensions", "graft.GraftExtensions")
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-          .config("spark.sql.shuffle.partitions", 32)
+          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+          .config("spark.sql.shuffle.partitions",
+            Runtime.getRuntime.availableProcessors)
           .config("spark.ui.enabled", false).getOrCreate()
+        spark.sparkContext.setLogLevel("WARN")
         try {
           val schema = loadSchema(path)
           // DSv2 scan: plans from the _graft_index sidecar (or one
           // distributed probe job) and pushes the channel + time range
           // into the block decode — the CLI stays O(selected data) on a
-          // many-file layout, like the reference's etsdFindBlock seek
+          // many-file layout, like the reference's etsdFindBlock seek.
+          // A selection the sidecar bounds to a few blocks is answered on
+          // the driver with no job at all (EtsdQueryApi's driver-local rule)
           val df = spark.read.format("graft.sources.TsdDataSource").load(path)
           EtsdQueryApi.query(df, schema, rest, Instant.now())
             .orderBy("channel").collect()

@@ -2,13 +2,17 @@ package graft.queries
 
 import java.time.Instant
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft._
 import graft.functions.TimeLiterals
 import graft.model.EtsdSchema
 import graft.operators.TimeSeriesOps
+import graft.sources.TsdLocalScan
 
 /** The `etsdCmd query` entry point re-expressed over the canonical long
   * DataFrame (etsdCmd.c:333-461): parses `q=`/`c=`/`s=`/`e=` arguments,
@@ -20,8 +24,23 @@ import graft.operators.TimeSeriesOps
   *
   * Counter channels in the long form carry per-interval deltas, so
   * tot/min/max/ave over `value` reproduces the reference's accumulation
-  * (its Min/Max also track per-interval deltas, etsdQuery.c:326-331). */
+  * (its Min/Max also track per-interval deltas, etsdQuery.c:326-331).
+  *
+  * Driver-local rule: when `df` is a bare `TsdDataSource` load and the
+  * sidecar prunes the selection to at most [[TsdLocalScan.MaxBlocks]]
+  * (1,024) blocks, the answer is folded on the driver and returned as a
+  * local relation of result rows — no Spark job, the reference's
+  * seek-a-few-blocks cost. The bound is a constant so that driver work
+  * stays O(1) in store size; anything else (a filtered frame, a fleet, a
+  * longer window) takes the distributed aggregate, with the same rows
+  * and schema either way. */
 object EtsdQueryApi {
+
+  /** Schema of every [[query]] result, local or distributed. */
+  val ResultSchema: StructType = StructType(Seq(
+    StructField("channel", StringType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("result", DoubleType, nullable = true)))
 
   final case class Args(verb: String, chan: Option[String],
                         start: Option[String], end: Option[String])
@@ -45,7 +64,17 @@ object EtsdQueryApi {
     * value, valid, is_register`); `now` injected for determinism. Output:
     * one row per matched channel: (channel, n, result). */
   def query(df: DataFrame, schema: EtsdSchema, rawArgs: Seq[String],
-            now: Instant): DataFrame = {
+            now: Instant): DataFrame =
+    run(df, schema, rawArgs, now, driverLocal = true)
+
+  /** [[query]] always through the distributed aggregate, never the
+    * driver-local fold: the reference plan the local answer must equal. */
+  private[graft] def queryDistributed(df: DataFrame, schema: EtsdSchema,
+      rawArgs: Seq[String], now: Instant): DataFrame =
+    run(df, schema, rawArgs, now, driverLocal = false)
+
+  private def run(df: DataFrame, schema: EtsdSchema, rawArgs: Seq[String],
+                  now: Instant, driverLocal: Boolean): DataFrame = {
     val a = parse(rawArgs)
     val verb = TimeSeriesOps.amtVerb(a.verb)
 
@@ -78,6 +107,27 @@ object EtsdQueryApi {
     val startE = a.start.map(epoch).getOrElse(begin.getEpochSecond)
     val endE = a.end.map(epoch).getOrElse(now.getEpochSecond)
 
+    val local =
+      if (driverLocal) TsdLocalScan.fold(df, startE, endE, chanName) else None
+    local.fold(distributed(df, verb, chanName, startE, endE)) { folds =>
+      val rows = folds.map { f =>
+        // the distributed aggregate's arithmetic: sum as a long, cast,
+        // then divided by the count as a double
+        val r = verb match {
+          case "min" => f.min.toDouble
+          case "max" => f.max.toDouble
+          case "ave" => f.sum.toDouble / f.n
+          case _     => f.sum.toDouble
+        }
+        Row(f.channel, f.n, r)
+      }
+      df.sparkSession.createDataFrame(rows.asJava, ResultSchema)
+    }
+  }
+
+  private def distributed(df: DataFrame, verb: String,
+                          chanName: Option[String], startE: Long,
+                          endE: Long): DataFrame = {
     val base = df
       .filter($"ts" >= timestamp_seconds(lit(startE)) &&
         $"ts" <= timestamp_seconds(lit(endE)) && !$"is_register" && $"valid")

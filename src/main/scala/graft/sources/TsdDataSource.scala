@@ -31,6 +31,12 @@ import graft.model.EtsdSchema
   * Partitions are fixed-size sector ranges: a single large file splits
   * across the cluster instead of one task (the v2 upgrade over the
   * `binaryFile` path in [[EtsdSource.read]]).
+  *
+  * `EtsdQueryApi.query` over a bare load of this source skips the scan
+  * when the sidecar prunes the selection to at most
+  * [[TsdLocalScan.MaxBlocks]] (1,024) blocks: [[TsdLocalScan]] reads those
+  * files on the driver with the same partition reader. The bound is a
+  * constant so that driver work stays O(1) in store size.
   */
 class TsdDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -74,8 +80,8 @@ object TsdDataSource {
 
 private[sources] class TsdTable(props: Map[String, String])
     extends Table with SupportsRead {
-  private def xdata = props.get("xdata").exists(_.toBoolean)
-  private def fleet = TsdDataSource.fleetMode(props)
+  private[sources] def xdata = props.get("xdata").exists(_.toBoolean)
+  private[sources] def fleet = TsdDataSource.fleetMode(props)
   require(!(xdata && fleet), "xdata reads are per-store; drop option(\"fleet\")")
   override def name(): String =
     if (fleet) s"tsdFleet(${props.getOrElse("stores", props.getOrElse("path", ""))})"
@@ -280,7 +286,7 @@ private[sources] class TsdScan(path: String, lo: Long, hi: Long,
     val fs = hadoopFs(root)
     val dir = if (fs.getFileStatus(root).isDirectory) root else root.getParent
     TsdIndex.forPlanning(spark, fs, root)
-      .filter(e => e.lastTs + e.blockSpanSec >= lo && e.firstTs <= hi)
+      .filter(_.overlaps(lo, hi))
       .map(e => (new Path(dir, e.name).toString, e))
   }
 
@@ -360,8 +366,7 @@ private[sources] class TsdFleetScan(rootPath: String,
     * pruning — one metadata pass for the whole fleet. */
   private lazy val pruned: Seq[(String, String, TsdIndexEntry)] =
     TsdIndex.forPlanningFleet(SparkSession.active, storeDirs)
-      .filter { case (_, _, e) =>
-        e.lastTs + e.blockSpanSec >= lo && e.firstTs <= hi }
+      .filter(_._3.overlaps(lo, hi))
 
   override def planInputPartitions(): Array[InputPartition] =
     TsdPacking.pack(

@@ -26,7 +26,14 @@ final case class TsdIndexEntry(
     lastTs: Long,      // epoch of last data block
     blockSpanSec: Long, // blockIntervals * intervalSec from the header
     modTime: Long = 0L // file modification time at probe/write
-)
+) {
+  /** Can this file hold a block overlapping `[lo, hi]` (epoch seconds)?
+    * The one file-level time-pruning predicate of every `.tsd` planner;
+    * it assumes block clocks only move forward (first block earliest,
+    * last block latest). */
+  def overlaps(lo: Long, hi: Long): Boolean =
+    lastTs + blockSpanSec >= lo && firstTs <= hi
+}
 
 /** Build, persist, and load the sidecar block index (`_graft_index`).
   *
@@ -177,6 +184,21 @@ object TsdIndex {
     }.toMap)
   }
 
+  /** One store's planning metadata from its directory listing and
+    * sidecar alone — no data-file read, no job: the fresh sidecar
+    * entries, and the data files the sidecar does not cover or covers
+    * with a stale entry, as `(name, length, modTime)`. */
+  def listStore(fs: FileSystem,
+      root: Path): (Seq[TsdIndexEntry], Seq[(String, Long, Long)]) = {
+    val files = fs.listStatus(root).filter(isDataFile)
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq
+    val cached = load(fs, root).getOrElse(Map.empty)
+    val (hit, miss) = files.partition { case (n, len, mod) =>
+      cached.get(n).exists(e => e.fileLen == len && e.modTime == mod)
+    }
+    (hit.map { case (n, _, _) => cached(n) }, miss)
+  }
+
   /** Fleet planning entry point: metadata for every data file of every
     * store, in ONE call — the multi-store scan's planner.
     *
@@ -201,17 +223,7 @@ object TsdIndex {
         (id, root, pool.submit(
           new java.util.concurrent.Callable[
               (Seq[TsdIndexEntry], Seq[(String, Long, Long)])] {
-            def call() = {
-              val fs = root.getFileSystem(conf)
-              val files = fs.listStatus(root).filter(isDataFile)
-                .map(f => (f.getPath.getName, f.getLen,
-                  f.getModificationTime)).toSeq
-              val cached = load(fs, root).getOrElse(Map.empty)
-              val (hit, miss) = files.partition { case (n, len, mod) =>
-                cached.get(n).exists(e => e.fileLen == len && e.modTime == mod)
-              }
-              (hit.map { case (n, _, _) => cached(n) }, miss)
-            }
+            def call() = listStore(root.getFileSystem(conf), root)
           }))
       }.map { case (id, root, fut) => (id, root, fut.get()) }
     } finally pool.shutdown()

@@ -108,7 +108,7 @@ class EtsdCmdSpec extends AnyFunSuite {
     assert(out.contains("Mains") && out.contains("CR"))
     assert(out.contains("AuxTemp") && out.contains("GS")) // gauge + signed
     // append data blocks through the encoder under the created schema,
-    // then query through the CLI path (EtsdQueryApi over EtsdSource)
+    // then query through the CLI path (EtsdQueryApi over the DSv2 source)
     val enc = new EtsdEncoder(created)
     (0 until 12).foreach { k =>
       enc.feed(1700000000L + k * 10L,
