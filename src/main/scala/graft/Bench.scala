@@ -1,37 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.operators.{DedupOps, DedupStats}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-FS streaming checkpoints: the FileSystem-based manager
-      // renames without forking a subprocess per checkpoint file (the
-      // FileContext default shells out via RawLocalFileSystem — see
-      // Verify.scala for the full note; measured 1.9–2.5× on every
-      // stateful fixture replay, ~60 s off build_total at sf0.1)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing" +
-          ".FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // absorb one-time session/JIT/parquet-footer warmup outside the
-    // per-query timings (first query otherwise eats ~4 s of JVM warmup);
-    // the second probe JIT-warms the md5/conv/higher-order-function
-    // interpreter paths the text/dedup queries run on
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    try {
-      import graft.operators.DedupOps
-      DedupOps.minHashSignatures(DedupOps.shingleHashArrays(
-        queries.Tables.table(spark, sfDir, "documents").limit(64),
-        $"doc_id", $"text")).count()
-    } catch { case _: Throwable => }
+    val spark = GraftSession("bench")
+    warmUp(spark, sfDir)
     // fixed calibration query: a constant-size in-memory shuffle+agg with
     // zero dependence on the corpus or on any graft operator, timed with
     // the same min-of-3 discipline as the battery and reported as
@@ -84,16 +58,10 @@ object Bench {
       spark.sparkContext.setJobDescription(s"caps:$name")
       Pins.scoped {
         try {
-          import graft.operators.DedupStats
-          DedupStats.awaitQuiesce(spark); DedupStats.reset()
-          fn(spark, sfDir).count()
-          DedupStats.awaitQuiesce(spark)
-          val b = DedupStats.droppedBuckets.get
-          if (b > 0) capRows(name) = (b, DedupStats.droppedRows.get,
-            DedupStats.maxDroppedBucket.get)
-          val sb = DedupStats.splitBuckets.get
-          if (sb > 0) splitRows(name) = (sb, DedupStats.splitRows.get,
-            DedupStats.maxSplitBucket.get)
+          val (_, drops, splits) =
+            DedupStats.census(spark)(fn(spark, sfDir).count())
+          if (drops._1 > 0) capRows(name) = drops
+          if (splits._1 > 0) splitRows(name) = splits
         } catch { case _: Throwable => () }
       }
       name -> best
@@ -129,6 +97,20 @@ object Bench {
     val failedJson = failed.take(12).map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"calib_s":$calibExec,"calib_end_s":$calibEndExec,"queries_file":"BENCH_FULL.json"}""")
     spark.stop()
+  }
+
+  /** Absorb one-time session/JIT/parquet-footer warmup outside the
+    * per-query timings (the first query otherwise eats ~4 s of JVM
+    * warmup); the second probe JIT-warms the md5/conv/higher-order-
+    * function interpreter paths the text/dedup queries run on. Shared
+    * with `tools.BenchOne` so its timings start from the same state. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try {
+      DedupOps.minHashSignatures(DedupOps.shingleHashArrays(
+        queries.Tables.table(spark, sfDir, "documents").limit(64),
+        $"doc_id", $"text")).count()
+    } catch { case _: Throwable => }
   }
 
   /** One query's honest timing pair: `build_s` = plan construction plus

@@ -5,8 +5,6 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 import graft.codec.{BlockBuffer, HeaderCodec, Layout}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.queries.EtsdQueryApi
@@ -290,13 +288,7 @@ object EtsdCmd {
         println(createSummary(schema))
         rrd.foreach(r => println(rrdCreateString(schema, r)))
       case 'q' =>
-        val spark = SparkSession.builder().appName("etsdCmd")
-          .config("spark.sql.extensions", "graft.GraftExtensions")
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            Runtime.getRuntime.availableProcessors)
-          .config("spark.ui.enabled", false).getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = GraftSession("etsdCmd")
         try {
           val schema = loadSchema(path)
           // DSv2 scan: plans from the _graft_index sidecar (or one

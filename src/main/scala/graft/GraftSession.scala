@@ -1,0 +1,42 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one way to build a graft session: Bench, Verify, the CLIs, the
+  * tools and the shared test session all start from [[builder]], so a
+  * timing taken by any of them runs under the same configuration. */
+object GraftSession {
+  /** Local cores: `SPARK_GRAFT_CPUS` if set, else the JVM's processors. */
+  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `SPARK_MASTER` (a deployment address) wins over `local[cores]`;
+    * shuffle partitions follow `cores` either way. */
+  def builder(app: String, cores: Int = GraftSession.cores): SparkSession.Builder =
+    SparkSession.builder().appName(app)
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(queries.Tables.NanosConf, "true")
+      // streaming checkpoints land on the LOCAL filesystem here, where
+      // the default FileContext-based checkpoint manager's
+      // rename-with-overwrite forks a subprocess per file
+      // (RawLocalFileSystem.getFileLinkStatus → Shell/readlink — thread
+      // dump in OPTIMIZATION_r16.md §streaming); the FileSystem-based
+      // manager renames with a plain (still atomic on a POSIX FS)
+      // File.renameTo. Measured 1.9–2.5× on every stateful fixture
+      // replay. On HDFS/S3 deployments neither manager forks — override
+      // the conf there if FileContext atomicity is preferred.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing" +
+          ".FileSystemBasedCheckpointFileManager")
+      .config("spark.ui.enabled", "false")
+
+  /** [[builder]]`(app).getOrCreate()` with WARN logging. */
+  def apply(app: String): SparkSession = {
+    val spark = builder(app).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.operators.DedupStats
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,28 +8,7 @@ object Verify {
     // args: sfDir outDir [queryName...] — names limit the dump to a
     // subset (local iteration); the driver always runs the full set
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming checkpoints land on the LOCAL filesystem here, where
-      // the default FileContext-based checkpoint manager's
-      // rename-with-overwrite forks a subprocess per file
-      // (RawLocalFileSystem.getFileLinkStatus → Shell/readlink — thread
-      // dump in OPTIMIZATION_r16.md §streaming); the FileSystem-based
-      // manager renames with a plain (still atomic on a POSIX FS)
-      // File.renameTo. Measured 1.9–2.5× on every stateful fixture
-      // replay. On HDFS/S3 deployments neither manager forks — override
-      // the conf there if FileContext atomicity is preferred.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing" +
-          ".FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("verify")
     new java.io.File(outDir).mkdirs()
     // per-query cap-drop counters (exact: one execution per query here),
     // dumped as a sidecar so the capped generators' recall trade is a
@@ -43,17 +22,12 @@ object Verify {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try Pins.scoped {
-        import graft.operators.DedupStats
-        DedupStats.awaitQuiesce(spark); DedupStats.reset()
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        DedupStats.awaitQuiesce(spark)
-        val b = DedupStats.droppedBuckets.get
-        if (b > 0) capRows(name) = (b, DedupStats.droppedRows.get,
-          DedupStats.maxDroppedBucket.get)
-        val sb = DedupStats.splitBuckets.get
-        if (sb > 0) splitRows(name) = (sb, DedupStats.splitRows.get,
-          DedupStats.maxSplitBucket.get)
+        val (_, drops, splits) = DedupStats.census(spark) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
+        if (drops._1 > 0) capRows(name) = drops
+        if (splits._1 > 0) splitRows(name) = splits
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // A failed query must leave an artifact: an absent output directory

@@ -162,6 +162,18 @@ object DedupStats {
                                exception: Exception): Unit = ()
       })
 
+  /** Run `body` with the counters zeroed around it and return its result
+    * plus the drop and split census `(buckets, rows, maxBucket)` it
+    * caused — the per-query harvest Bench and Verify both publish. */
+  def census[T](spark: SparkSession)(body: => T)
+      : (T, (Long, Long, Long), (Long, Long, Long)) = {
+    awaitQuiesce(spark); reset()
+    val result = body
+    awaitQuiesce(spark)
+    (result, (droppedBuckets.get, droppedRows.get, maxDroppedBucket.get),
+      (splitBuckets.get, splitRows.get, maxSplitBucket.get))
+  }
+
   /** Best-effort wait for the async listener bus to drain (tests). */
   def awaitQuiesce(spark: SparkSession): Unit =
     org.apache.spark.graftbridge.ListenerBridge

@@ -1289,7 +1289,7 @@ object LlmQueries {
     // copy the (fixture-sized) result out and DROP the sink — on EVERY
     // path, including a throwing feed (a state-bound require, a poison
     // row): the memory sink + temp view otherwise outlive the call, so
-    // a loop re-running the battery in one session (QueryTimer, a
+    // a loop re-running the battery in one session (BenchOne, a
     // bench harness) accumulates one full result set per invocation in
     // driver memory for the session's lifetime
     try {

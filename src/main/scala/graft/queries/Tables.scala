@@ -123,7 +123,7 @@ object Tables {
     * layout-independent. */
   private def eventsRaw(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    // nanosAsLong is also set at session build in Verify/Bench; this guard
+    // nanosAsLong is also set at session build in GraftSession; this guard
     // only covers driver-supplied sessions and avoids re-setting otherwise.
     if (s.conf.getOption(NanosConf).forall(_ != "true")) s.conf.set(NanosConf, "true")
     val raw = table(s, dir, "events")

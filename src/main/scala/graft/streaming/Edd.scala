@@ -310,20 +310,13 @@ object EddMain {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Session for the standalone daemon ([[main]]): local[32] with the
-    * RocksDB state store as the documented default.
-    *
-    * The hard-coded `master("local[32]")` is for THIS sandbox's CLI
-    * entry point only (the reference daemon is a single-box process,
-    * etsd.c:1). A production deployment submits the daemon via
-    * `spark-submit`, where master/deploy conf comes from the launcher —
-    * `SparkSession.builder.getOrCreate()` inherits it — so a cluster
-    * build should drop the `.master(...)` line (and the partition
-    * count) rather than override them here. */
+  /** Session for the standalone daemon ([[main]]): the shared
+    * [[graft.GraftSession]] configuration with the RocksDB state store
+    * as the documented default. A deployment points `SPARK_MASTER` at
+    * its cluster; the reference daemon itself is a single-box process
+    * (etsd.c:1). */
   private[streaming] def daemonSession(): SparkSession =
-    SparkSession.builder()
-      .appName("graft-edd").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    GraftSession.builder("graft-edd")
       .config("spark.sql.streaming.stateStore.providerClass",
         RocksDbProvider)
       .getOrCreate()

@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft._
 
-/** Single-query timing with EXACTLY the bench's discipline (unlike
-  * QueryTimer, which reconstructs the query per iteration): build the
-  * plan once (build_s = construction + first count), then exec_s = min
+/** Single-query timing with EXACTLY the bench's discipline: the same
+  * session ([[GraftSession]]) and warm-up (`Bench.warmUp`), then build
+  * the plan once (build_s = construction + first count) and exec_s = min
   * of 3 re-counts of the built plan — the same `Bench.timeQuery` the
   * battery uses, so numbers are directly comparable to BENCH_FULL.json.
   *
@@ -14,29 +12,8 @@ import graft._
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder().appName("benchone")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-    // SPARK_GRAFT_EVLOG=<dir>: write an event log for per-label job/
-    // stage attribution (tools/evlog_report.py) — diagnostics only
-    val spark = sys.env.get("SPARK_GRAFT_EVLOG").fold(b0)(d =>
-        b0.config("spark.eventLog.enabled", "true")
-          .config("spark.eventLog.compress", "false")
-          .config("spark.eventLog.dir", d))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    try {
-      import graft.operators.DedupOps
-      DedupOps.minHashSignatures(DedupOps.shingleHashArrays(
-        queries.Tables.table(spark, sfDir, "documents").limit(64),
-        $"doc_id", $"text")).count()
-    } catch { case _: Throwable => }
+    val spark = GraftSession("benchone")
+    Bench.warmUp(spark, sfDir)
     args.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(f"[b1] $name%-28s UNKNOWN")

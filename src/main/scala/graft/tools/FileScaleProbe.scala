@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.sources.{EtsdSink, TsdIndex}
 
@@ -30,12 +31,7 @@ import graft.sources.{EtsdSink, TsdIndex}
   * Run: `sbt "runMain graft.tools.FileScaleProbe"`. */
 object FileScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().appName("filescaleprobe")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("filescaleprobe")
     import spark.implicits._
 
     val startEpoch = 1704067200L // 2024-01-01 00:00 UTC

@@ -16,10 +16,7 @@ import graft.sources.EtsdSource
 object InterchangeProbe {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/tmp/refbuild/ref.tsd")
-    val spark = SparkSession.builder().appName("interchange").master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("interchange")
     if (args.length >= 2 && args(0) == "export") { // reverse direction:
       exportForReference(spark, args(1)); spark.stop(); return
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft._
@@ -54,15 +54,7 @@ object ParityProbe {
     // produce low-vs-high core scaling pairs at a data-bound scale
     // (sf0.1 is stage-floor-bound; k× corpora are where parallel
     // scaling is demonstrable)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().appName("parityprobe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("parityprobe")
 
     val dir = s"$out/${k}x"
     def missing(t: String) =

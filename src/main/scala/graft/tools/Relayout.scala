@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Multi-file input gate (diagnostics): rewrite every single-file test
   * table as an N-file parquet directory with rows round-robined across
@@ -31,11 +31,7 @@ object Relayout {
     val dateEvents = args.contains("--date-partition-events")
     val nFiles = args.drop(2).filterNot(_.startsWith("--"))
       .headOption.map(_.toInt).getOrElse(7)
-    val spark = SparkSession.builder().appName("relayout").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("relayout")
     val tables = Files.list(Paths.get(src)).iterator().asScala
       .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
     for (t <- tables) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft._
@@ -16,10 +16,7 @@ import graft.queries.Tables
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().appName("scaleprobe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("scaleprobe")
 
     def expand(df: DataFrame, idCol: String, k: Int, idStep: Long): DataFrame =
       (0 until k).map { r =>

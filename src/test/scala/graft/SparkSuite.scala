@@ -5,20 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all Spark-backed specs. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("graft-test", cores = 2)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      // same local-FS checkpoint manager as Bench/Verify (no subprocess
-      // fork per checkpoint rename — see Verify.scala)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing" +
-          ".FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -115,16 +115,18 @@ class EddSpec extends AnyFunSuite {
   test("EddMain daemon session defaults to the RocksDB state store") {
     // the long-running ingest daemon must not hold streaming state
     // on-heap (RocksDbStateSpec verifies operator parity under the
-    // provider; this pins the wiring). getOrCreate applies the conf to
-    // the shared test session, so restore it after the assert.
+    // provider; this pins the wiring). getOrCreate applies the runtime
+    // confs that differ from the shared test session's (the provider and
+    // the factory's core-count shuffle partitions), so restore them.
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
+    val restored = Seq(key, "spark.sql.shuffle.partitions")
+    val prev = restored.map(k => k -> spark.conf.getOption(k))
     try {
       val s = EddMain.daemonSession()
       assert(s.conf.get(key) == EddMain.RocksDbProvider)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

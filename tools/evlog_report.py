@@ -3,6 +3,13 @@
 
 Usage: python3 tools/evlog_report.py /tmp/spark-events/<app-id> [label-filter]
 
+Any entry point writes an event log when Spark's own `spark.eventLog.*`
+properties reach its forked JVM, e.g. for two bench queries timed exactly as
+the bench times them (the log directory must exist):
+
+  mkdir -p /tmp/spark-events
+  sbt 'set javaOptions ++= Seq("-Dspark.eventLog.enabled=true", "-Dspark.eventLog.compress=false", "-Dspark.eventLog.dir=/tmp/spark-events", "-Dspark.eventLog.rolling.enabled=false")' "runMain graft.tools.BenchOne llm_seg_dedup ts_amt"
+
 Groups jobs by their `spark.job.description` (Bench sets `bench:<query>` for
 build jobs and `bench:<query>:exec` for the timed re-executions), and reports
 per label: job count, wall of jobs, stage count, task count, task-time sum,
