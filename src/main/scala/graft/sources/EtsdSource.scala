@@ -7,19 +7,18 @@ import graft._
 import graft.codec._
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 
-/** Spark reader for native `.tsd` files (SURVEY.md §7 step 3): the analog
+/** Spark reads of native `.tsd` files (SURVEY.md §7 step 3): the analog
   * of `etsdInit` + block iteration (etsd.c:41-123, etsdRead.c:181-287),
   * producing the canonical long DataFrame
   * `(ts, channel, value, valid, is_register)`.
   *
-  * v1 strategy: `binaryFile` scan + per-file decode. Each 512-byte block
-  * is self-contained, so decode parallelism is per-file here and could be
-  * per-block-range via a DataSource V2 `PartitionReader` with time-range
-  * pushdown (the reference's `etsdFindBlock` sector pruning,
-  * etsdRead.c:300-353) if single files ever grow beyond a task — real ETSD
-  * files are ≤ a few hundred KB/day (`ECM-1240 storage format 2.txt:19-23`),
-  * so one-file-per-task is the right grain and the 100 TB path is many
-  * files, which binaryFile already parallelizes. */
+  * Scans go through the one DataSource V2 reader, [[TsdDataSource]]
+  * (time-range and channel pushdown, sector-range partitions, the
+  * `xdata=true` side table); [[fleet]], [[fleetWithStores]] and
+  * [[fleetRoot]] are its multi-store entry points. [[read]] is a
+  * whole-file `binaryFile` decode, kept as the reference decoder the
+  * scan is checked against, and [[blockTimestamps]] is the per-block
+  * time index. */
 object EtsdSource {
 
   /** Decoded long row; `value` is the stored sample (counter channels:
@@ -42,36 +41,22 @@ object EtsdSource {
       $"valid", $"is_register")
   }
 
-  /** Above this store count, [[fleet]] plans through ONE multi-store
-    * scan node instead of a union of per-store scans: a union's logical
-    * plan is O(stores) — at the 10k–100k-store fleet a 100 TB layout
-    * implies, analysis/optimization/serialization walk every store's
-    * scan node on every query. Below it, the union is equivalent and
-    * keeps the historical per-store plan shape. */
-  val FleetUnionMax = 8
-
   /** Fleet-wide read in the historical long schema (no store column).
     *
     * An ETSD deployment scales by STORES, not by widening one store — a
     * store's channel set is bounded by the 512-byte block capacity
     * (etsdCmd.c:295-299), so a fleet is one directory per daemon
-    * (etsd.c:33). Small fleets read as a union of per-store DSv2 scans
-    * (each planning against its own `_graft_index` sidecar, the union
-    * exchange-free); above [[FleetUnionMax]] stores the read delegates
-    * to [[fleetWithStores]] — a SINGLE scan node whose plan size is O(1)
-    * in store count — and drops the store column. `TsdIndexSpec` asserts
-    * value parity between the two shapes and zero file probes when
+    * (etsd.c:33). `dirs` are store directories, read through the single
+    * scan node of [[fleetWithStores]] with the store column dropped.
+    * Inputs that scan cannot encode — two stores with the same base name
+    * (the `store_id`), or a `,` in a path (the option encoding) — read as
+    * a union of per-store scans instead of throwing. `TsdIndexSpec`
+    * asserts one scan node, value parity and zero file probes when
     * sidecars exist. */
   def fleet(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     require(dirs.nonEmpty, "fleet requires at least one store directory")
-    // the single-scan path adds preconditions the historical union never
-    // had (distinct base names for store_id, comma-free paths for the
-    // option encoding) — inputs that violate them keep the union shape
-    // instead of newly throwing, so fleet() stays a drop-in
     val baseNames = dirs.map(d => new org.apache.hadoop.fs.Path(d).getName)
-    val fleetScanSafe =
-      baseNames.distinct.size == dirs.size && dirs.forall(!_.contains(','))
-    if (dirs.size > FleetUnionMax && fleetScanSafe)
+    if (baseNames.distinct.size == dirs.size && dirs.forall(!_.contains(',')))
       fleetWithStores(spark, dirs).drop("store_id")
     else
       dirs.map(d => spark.read.format("graft.sources.TsdDataSource").load(d))
@@ -80,7 +65,7 @@ object EtsdSource {
 
   /** Fleet-wide read carrying `store_id` (the store directory's base
     * name — must be distinct across the fleet), always through the
-    * single multi-store scan node ([[TsdFleetScan]]): per-store sidecar
+    * single multi-store scan node ([[TsdScan]]): per-store sidecar
     * planning happens inside ONE `planInputPartitions`, cache misses
     * across all stores coalesce into one probe job, and an `=`/`IN`
     * filter on `store_id` prunes whole stores at planning time. */
@@ -151,30 +136,6 @@ object EtsdSource {
             (p, off / BlockBuffer.BlockSize, b.timestamp, b.validIntervals)
           }
       }.toDF("path", "sector", "ts_epoch", "valid_intervals")
-  }
-
-  /** Per-block xData side table (SURVEY.md §1.5: the opaque per-block
-    * byte region, etsd.h:102-103, becomes a `BinaryType` side table):
-    * one row per data block, `(path, sector, block_epoch, xdata)`.
-    * Files whose schema reserves no xData region contribute no rows. */
-  def xData(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        val schema = HeaderCodec.decode(bytes.take(BlockBuffer.BlockSize))
-        if (schema.xDataSize == 0) Iterator.empty
-        else {
-          val layout = new Layout(schema)
-          (BlockBuffer.BlockSize until bytes.length by BlockBuffer.BlockSize)
-            .iterator.map { off =>
-              val block = bytes.slice(off, off + BlockBuffer.BlockSize)
-              (p, (off / BlockBuffer.BlockSize).toLong,
-                BlockBuffer(block).timestamp,
-                EtsdDecoder.blockXData(layout, block))
-            }
-        }
-      }.toDF("path", "sector", "block_epoch", "xdata")
   }
 
   /** Distributed encode→decode round-trip of a fixed-cadence grid through

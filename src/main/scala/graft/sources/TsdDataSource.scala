@@ -21,16 +21,22 @@ import graft.model.EtsdSchema
 /** DataSource V2 reader for native `.tsd` files with time-range filter
   * pushdown — the Spark-native form of the reference's `etsdFindBlock`
   * sector search (etsdRead.c:300-353): a `ts` predicate becomes
-  * block-range pruning, first at planning time per file (via the first
-  * and last block timestamps, two 512-byte probes), then per block inside
-  * each partition (4-byte timestamp check before any decode).
+  * block-range pruning, first at planning time per file (first and last
+  * block timestamps from the `_graft_index` sidecar, or one distributed
+  * probe job for files it does not cover; see [[TsdIndex]]), then per
+  * block inside each partition (4-byte timestamp check before any decode).
   *
   * Usage: `spark.read.format("graft.sources.TsdDataSource").load(path)`.
   * Output is the canonical long schema. Pruning is block-granular, so all
   * filters are also returned as residual — Spark re-applies them exactly.
-  * Partitions are fixed-size sector ranges: a single large file splits
-  * across the cluster instead of one task (the v2 upgrade over the
-  * `binaryFile` path in [[EtsdSource.read]]).
+  * Partitions are fixed-size sector ranges, so a single large file splits
+  * across the cluster instead of one task, and many small files pack into
+  * one task ([[TsdPacking]]).
+  *
+  * One scan, [[TsdScan]], serves every mode: a single store (a file or a
+  * directory), a fleet of stores with a `store_id` column
+  * (`option("stores", "d1,d2,…")` or `option("fleet", "true")`), and the
+  * per-block xData side table (`option("xdata", "true")`).
   *
   * `EtsdQueryApi.query` over a bare load of this source skips the scan
   * when the sidecar prunes the selection to at most
@@ -45,7 +51,7 @@ class TsdDataSource extends TableProvider {
     else EtsdSchema.LongSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
-    new TsdTable(properties.asScala.toMap)
+    new TsdTable(new CaseInsensitiveStringMap(properties))
 }
 
 object TsdDataSource {
@@ -58,7 +64,7 @@ object TsdDataSource {
     .add("xdata", org.apache.spark.sql.types.BinaryType, false)
 
   /** Multi-store (fleet) output: the long schema plus the originating
-    * store's id — ONE scan node for the whole fleet (see [[TsdFleetScan]]). */
+    * store's id — ONE scan node for the whole fleet (see [[TsdScan]]). */
   val FleetSchema: StructType = EtsdSchema.LongSchema
     .add("store_id", org.apache.spark.sql.types.StringType, false)
 
@@ -68,24 +74,16 @@ object TsdDataSource {
     * (`option("fleet", "true")`). */
   private[sources] def fleetMode(options: CaseInsensitiveStringMap): Boolean =
     options.containsKey("stores") || options.getBoolean("fleet", false)
-
-  // lenient parse matching CaseInsensitiveStringMap.getBoolean (only a
-  // case-insensitive "true" is true) so the two fleetMode views of the
-  // same options can never disagree — strict toBoolean would throw on
-  // option("fleet", "1") AFTER inferSchema had treated it as non-fleet
-  private[sources] def fleetMode(props: Map[String, String]): Boolean =
-    props.contains("stores") ||
-      props.get("fleet").exists(_.equalsIgnoreCase("true"))
 }
 
-private[sources] class TsdTable(props: Map[String, String])
+private[sources] class TsdTable(props: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
-  private[sources] def xdata = props.get("xdata").exists(_.toBoolean)
+  private[sources] def xdata = props.getBoolean("xdata", false)
   private[sources] def fleet = TsdDataSource.fleetMode(props)
   require(!(xdata && fleet), "xdata reads are per-store; drop option(\"fleet\")")
   override def name(): String =
-    if (fleet) s"tsdFleet(${props.getOrElse("stores", props.getOrElse("path", ""))})"
-    else s"tsd(${props.getOrElse("path", "")})"
+    if (fleet) s"tsdFleet(${props.getOrDefault("stores", props.getOrDefault("path", ""))})"
+    else s"tsd(${props.getOrDefault("path", "")})"
   override def schema(): StructType =
     if (fleet) TsdDataSource.FleetSchema
     else if (xdata) TsdDataSource.XDataSchema else EtsdSchema.LongSchema
@@ -102,8 +100,8 @@ private[sources] class TsdTable(props: Map[String, String])
 
 private[sources] class TsdScanBuilder(path: String, blocksPerPartition: Long,
                                       xdata: Boolean,
-                                      fleet: Boolean = false,
-                                      stores: Option[Seq[String]] = None)
+                                      fleet: Boolean,
+                                      stores: Option[Seq[String]])
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
   // each task bulk-reads its partition's sector ranges into byte arrays
@@ -182,10 +180,8 @@ private[sources] class TsdScanBuilder(path: String, blocksPerPartition: Long,
   }
   override def pushedFilters(): Array[sources.Filter] = pushed
   override def build(): Scan =
-    if (fleet)
-      new TsdFleetScan(path, stores, lo, hi, blocksPerPartition, chans,
-        storeSel, required)
-    else new TsdScan(path, lo, hi, blocksPerPartition, xdata, chans, required)
+    new TsdScan(path, fleet, stores, lo, hi, blocksPerPartition, xdata, chans,
+      storeSel, required)
 }
 
 /** One file's contiguous sector range — the unit the partition packer
@@ -193,6 +189,21 @@ private[sources] class TsdScanBuilder(path: String, blocksPerPartition: Long,
 private[sources] case class TsdChunk(file: String, startSector: Long,
     endSector: Long, store: Option[String] = None) {
   def nBlocks: Long = endSector - startSector + 1
+
+  /** The file's header schema and this chunk's whole sector range, read
+    * with ONE positioned `readFully` (see [[TsdPartitionReader]]). */
+  def read(hadoopProps: Seq[(String, String)]): (EtsdSchema, Array[Byte]) = {
+    val p = new Path(file)
+    val in = p.getFileSystem(HadoopConfs.build(hadoopProps)).open(p)
+    try {
+      val hdr = new Array[Byte](BlockBuffer.BlockSize)
+      in.readFully(0, hdr)
+      val schema = HeaderCodec.decode(hdr)
+      val data = new Array[Byte](nBlocks.toInt * BlockBuffer.BlockSize)
+      in.readFully(startSector * BlockBuffer.BlockSize, data)
+      (schema, data)
+    } finally in.close()
+  }
 }
 
 /** A scan partition: one or MORE file sector ranges read sequentially by
@@ -257,100 +268,53 @@ private[sources] object TsdPacking {
   }
 }
 
-private[sources] class TsdScan(path: String, lo: Long, hi: Long,
+/** The one `.tsd` scan. It plans over `(store id, file)` pairs: a plain
+  * load is one store without an id (no `store_id` column), planned by
+  * [[TsdIndex.forPlanning]] so a single-file load probes once; a fleet is
+  * one store per directory, planned in one [[TsdIndex.forPlanningFleet]]
+  * pass (per-store `_graft_index` sidecars, misses coalesced into one
+  * probe job).
+  *
+  * A fleet is ONE scan node, not a union of per-store scans: a union's
+  * logical plan is O(stores), and at the 10k–100k-store fleet a 100 TB
+  * layout implies, analysis, optimization and plan serialization would
+  * walk one scan node per store on every query. Here store count only
+  * affects planning-time metadata I/O (bounded-pool listings) and the
+  * partition list, which any file source pays. Store ids are the
+  * directory base names and must be distinct across the fleet; an
+  * `=`/`IN` predicate on `store_id` prunes whole stores before any
+  * metadata I/O. */
+private[sources] class TsdScan(path: String, fleet: Boolean,
+                               stores: Option[Seq[String]],
+                               lo: Long, hi: Long,
                                blocksPerPartition: Long,
-                               xdata: Boolean = false,
-                               chans: Option[Set[String]] = None,
-                               required: Option[StructType] = None)
+                               xdata: Boolean,
+                               chans: Option[Set[String]],
+                               storeSel: Option[Set[String]],
+                               required: Option[StructType])
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required.getOrElse(
-    if (xdata) TsdDataSource.XDataSchema else EtsdSchema.LongSchema)
+    if (fleet) TsdDataSource.FleetSchema
+    else if (xdata) TsdDataSource.XDataSchema else EtsdSchema.LongSchema)
   override def toBatch: Batch = this
   override def description(): String =
-    s"TsdScan path=$path tsRange=[${if (lo == Long.MinValue) "-inf" else lo}, " +
-      s"${if (hi == Long.MaxValue) "+inf" else hi}]" +
-      chans.fold("")(cs => s" chans=${cs.toSeq.sorted.mkString(",")}")
-
-  private def hadoopFs(p: Path) =
-    p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-
-  /** Surviving index entries after file-level time pruning, computed
-    * once per scan. Planning metadata comes from [[TsdIndex]] — the
-    * sidecar where fresh, one distributed probe job otherwise — so the
-    * driver never reads data-file bytes regardless of file count
-    * (the many-file form of etsdFindBlock's E_BEFORE/E_AFTER checks,
-    * etsdRead.c:300-353). */
-  private lazy val pruned: Seq[(String, TsdIndexEntry)] = {
-    val root = new Path(path)
-    val spark = SparkSession.active
-    val fs = hadoopFs(root)
-    val dir = if (fs.getFileStatus(root).isDirectory) root else root.getParent
-    TsdIndex.forPlanning(spark, fs, root)
-      .filter(_.overlaps(lo, hi))
-      .map(e => (new Path(dir, e.name).toString, e))
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    TsdPacking.pack(
-      pruned.map { case (file, e) => TsdChunk(file, 1L, e.nBlocks) },
-      blocksPerPartition, TsdPacking.OpenCostBlocks,
-      SparkSession.active.sparkContext.defaultParallelism,
-      lo, hi, chans.map(_.toSeq.sorted), required.map(_.fieldNames.toSeq))
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TsdReaderFactory(HadoopConfs.props(SparkSession.active), xdata)
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    // post-prune bytes from the index: lets AQE/broadcast decisions see
-    // a time-filtered .tsd scan as small when it is
-    override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(pruned.map(_._2.fileLen).sum)
-    override def numRows(): OptionalLong = OptionalLong.empty()
-  }
-}
-
-/** ONE scan node for a whole multi-store fleet — `store_id` is an output
-  * column, and planning for every store happens inside this single node
-  * (per-store `_graft_index` sidecars, misses coalesced into one probe
-  * job; see [[TsdIndex.forPlanningFleet]]).
-  *
-  * The alternative — a union of per-store scans — is value-identical but
-  * O(stores) in PLAN size: at the 10k–100k-store fleet a 100 TB layout
-  * implies, analysis, optimization, and plan serialization all walk one
-  * scan node per store on every query. Here the logical plan is O(1) in
-  * store count; store count only affects planning-time metadata I/O
-  * (bounded-pool listings) and the partition list, which any file source
-  * pays. Store ids are the directory base names and must be distinct
-  * across the fleet; an `=`/`IN` predicate on `store_id` prunes whole
-  * stores before any metadata I/O. */
-private[sources] class TsdFleetScan(rootPath: String,
-                                    stores: Option[Seq[String]],
-                                    lo: Long, hi: Long,
-                                    blocksPerPartition: Long,
-                                    chans: Option[Set[String]],
-                                    storeSel: Option[Set[String]],
-                                    required: Option[StructType] = None)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType =
-    required.getOrElse(TsdDataSource.FleetSchema)
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"TsdFleetScan stores=${storeDirs.size}" +
+    s"TsdScan ${if (fleet) s"stores=${storeDirs.size}" else s"path=$path"}" +
       s" tsRange=[${if (lo == Long.MinValue) "-inf" else lo}, " +
       s"${if (hi == Long.MaxValue) "+inf" else hi}]" +
       chans.fold("")(cs => s" chans=${cs.toSeq.sorted.mkString(",")}") +
       storeSel.fold("")(ss => s" storeSel=${ss.size}")
 
-  /** (storeId, dir) after store_id pushdown — explicit `stores` list, or
-    * the root's immediate subdirectories (one listing). */
+  private def hadoopFs(p: Path) =
+    p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+
+  /** Fleet mode: (storeId, dir) after store_id pushdown — the explicit
+    * `stores` list, or the root's immediate subdirectories (one listing). */
   private lazy val storeDirs: Seq[(String, Path)] = {
     val dirs: Seq[Path] = stores match {
       case Some(list) => list.map(new Path(_))
       case None =>
-        val root = new Path(rootPath)
-        val fs = root.getFileSystem(
-          SparkSession.active.sessionState.newHadoopConf())
-        fs.listStatus(root).filter(s => s.isDirectory &&
+        val root = new Path(path)
+        hadoopFs(root).listStatus(root).filter(s => s.isDirectory &&
             !s.getPath.getName.startsWith("_") &&
             !s.getPath.getName.startsWith("."))
           .map(_.getPath).toSeq.sortBy(_.getName)
@@ -362,25 +326,41 @@ private[sources] class TsdFleetScan(rootPath: String,
     withIds.filter { case (id, _) => storeSel.forall(_.contains(id)) }
   }
 
-  /** Surviving (store, file, entry) rows after store + file-level time
-    * pruning — one metadata pass for the whole fleet. */
-  private lazy val pruned: Seq[(String, String, TsdIndexEntry)] =
-    TsdIndex.forPlanningFleet(SparkSession.active, storeDirs)
-      .filter(_._3.overlaps(lo, hi))
+  /** Surviving (store id, file, entry) rows after store and file-level
+    * time pruning, computed once per scan. Planning metadata comes from
+    * [[TsdIndex]] — the sidecar where fresh, one distributed probe job
+    * otherwise — so the driver never reads data-file bytes regardless of
+    * file count (the many-file form of etsdFindBlock's E_BEFORE/E_AFTER
+    * checks, etsdRead.c:300-353). */
+  private lazy val pruned: Seq[(Option[String], String, TsdIndexEntry)] = {
+    val spark = SparkSession.active
+    val files =
+      if (fleet)
+        TsdIndex.forPlanningFleet(spark, storeDirs)
+          .map { case (id, file, e) => (Some(id), file, e) }
+      else {
+        val root = new Path(path)
+        val fs = hadoopFs(root)
+        val dir = if (fs.getFileStatus(root).isDirectory) root else root.getParent
+        TsdIndex.forPlanning(spark, fs, root)
+          .map(e => (None, new Path(dir, e.name).toString, e))
+      }
+    files.filter(_._3.overlaps(lo, hi))
+  }
 
   override def planInputPartitions(): Array[InputPartition] =
     TsdPacking.pack(
-      pruned.map { case (store, file, e) =>
-        TsdChunk(file, 1L, e.nBlocks, Some(store)) },
+      pruned.map { case (store, file, e) => TsdChunk(file, 1L, e.nBlocks, store) },
       blocksPerPartition, TsdPacking.OpenCostBlocks,
       SparkSession.active.sparkContext.defaultParallelism,
       lo, hi, chans.map(_.toSeq.sorted), required.map(_.fieldNames.toSeq))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new TsdReaderFactory(HadoopConfs.props(SparkSession.active),
-      xdata = false)
+    new TsdReaderFactory(HadoopConfs.props(SparkSession.active), xdata)
 
   override def estimateStatistics(): Statistics = new Statistics {
+    // post-prune bytes from the index: lets AQE/broadcast decisions see
+    // a time-filtered .tsd scan as small when it is
     override def sizeInBytes(): OptionalLong =
       OptionalLong.of(pruned.map(_._3.fileLen).sum)
     override def numRows(): OptionalLong = OptionalLong.empty()
@@ -425,17 +405,7 @@ private[sources] class TsdXDataPartitionReader(c: TsdChunk,
     hadoopProps: Seq[(String, String)]) extends PartitionReader[InternalRow] {
   private var data: Array[Byte] = _ // whole chunk sector range, one read
   private val schema: EtsdSchema = {
-    val fs = new Path(c.file).getFileSystem(HadoopConfs.build(hadoopProps))
-    val in = fs.open(new Path(c.file))
-    try {
-      val hdr = new Array[Byte](BlockBuffer.BlockSize)
-      in.readFully(0, hdr)
-      val s = HeaderCodec.decode(hdr)
-      val nBlk = (c.endSector - c.startSector + 1).toInt
-      data = new Array[Byte](nBlk * BlockBuffer.BlockSize)
-      in.readFully(c.startSector * BlockBuffer.BlockSize, data)
-      s
-    } finally in.close()
+    val (s, d) = c.read(hadoopProps); data = d; s
   }
   private val layout = new graft.codec.Layout(schema)
   private val span = schema.blockIntervals.toLong * schema.intervalSec
@@ -488,17 +458,7 @@ private[sources] class TsdPartitionReader(chunk: TsdChunk,
   import graft.codec.{BlockCodec, Layout, SignedCodec}
   private var data: Array[Byte] = _ // whole chunk sector range, one read
   private val schema: EtsdSchema = {
-    val fs = new Path(chunk.file).getFileSystem(HadoopConfs.build(hadoopProps))
-    val in = fs.open(new Path(chunk.file))
-    try {
-      val hdr = new Array[Byte](BlockBuffer.BlockSize)
-      in.readFully(0, hdr)
-      val s = HeaderCodec.decode(hdr)
-      val nBlk = (chunk.endSector - chunk.startSector + 1).toInt
-      data = new Array[Byte](nBlk * BlockBuffer.BlockSize)
-      in.readFully(chunk.startSector * BlockBuffer.BlockSize, data)
-      s
-    } finally in.close()
+    val (s, d) = chunk.read(hadoopProps); data = d; s
   }
   private val layout = new Layout(schema)
   private val codec = new BlockCodec(layout)

@@ -54,10 +54,9 @@ object TsdIndex {
     * only): how files got their planning metadata in the most recent
     * `planInputPartitions` calls. */
   object PlanStats {
-    val indexedFiles = new AtomicLong(0)      // served from the sidecar
-    val probedFiles = new AtomicLong(0)       // probed via the Spark job
-    val driverProbedFiles = new AtomicLong(0) // probed serially on the driver (never, by design)
-    def reset(): Unit = { indexedFiles.set(0); probedFiles.set(0); driverProbedFiles.set(0) }
+    val indexedFiles = new AtomicLong(0) // served from the sidecar
+    val probedFiles = new AtomicLong(0)  // probed via the Spark job
+    def reset(): Unit = { indexedFiles.set(0); probedFiles.set(0) }
   }
 
   /** Is this a data file the planner should consider? (Skips hidden
@@ -89,19 +88,19 @@ object TsdIndex {
     } finally in.close()
   }
 
-  /** Probe `files` as a distributed job: the driver ships (path, len)
-    * pairs; executors do the 3-read probes in parallel; only the tiny
-    * entry list (one row per file) returns to the driver. */
-  def probeDistributed(spark: SparkSession, dir: Path,
+  /** Probe `files` — (full path, length, modTime) — as ONE distributed
+    * job: executors do the 3-read probes in parallel; only the tiny entry
+    * list (one row per file, in input order) returns to the driver. The
+    * files may span directories and filesystems. */
+  def probeDistributed(spark: SparkSession,
                        files: Seq[(String, Long, Long)]): Seq[TsdIndexEntry] = {
     if (files.isEmpty) return Seq.empty
     val hadoopProps = HadoopConfs.props(spark)
-    val dirStr = dir.toString
     val parallelism = math.min(files.size,
       spark.sparkContext.defaultParallelism * 4).max(1)
     spark.sparkContext.parallelize(files, parallelism)
-      .map { case (name, len, mod) =>
-        val p = new Path(dirStr, name)
+      .map { case (path, len, mod) =>
+        val p = new Path(path)
         val fs = p.getFileSystem(HadoopConfs.build(hadoopProps))
         probe(fs, p, len, mod)
       }.collect().toSeq
@@ -116,8 +115,8 @@ object TsdIndex {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val files = fs.listStatus(root).filter(isDataFile)
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq
-    val entries = probeDistributed(spark, root, files)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq
+    val entries = probeDistributed(spark, files)
     writeSidecar(fs, root, entries)
     entries
   }
@@ -232,31 +231,13 @@ object TsdIndex {
       PlanStats.probedFiles.addAndGet(miss.size)
     }
     // all stores' misses -> ONE probe job, keyed back by full path
-    val missPaths = listed.flatMap { case (id, root, (_, miss)) =>
-      miss.map { case (n, len, mod) =>
-        (id, root.toString, n, len, mod)
-      }
+    val missPaths = listed.flatMap { case (_, root, (_, miss)) =>
+      miss.map { case (n, len, mod) => (new Path(root, n).toString, len, mod) }
     }
-    val probed: Map[(String, String), TsdIndexEntry] =
-      if (missPaths.isEmpty) Map.empty
-      else {
-        val hadoopProps = HadoopConfs.props(spark)
-        val parallelism = math.min(missPaths.size,
-          spark.sparkContext.defaultParallelism * 4).max(1)
-        spark.sparkContext
-          .parallelize(missPaths, parallelism)
-          .map { case (id, dir, name, len, mod) =>
-            val p = new Path(dir, name)
-            val pfs = p.getFileSystem(HadoopConfs.build(hadoopProps))
-            ((id, name), probe(pfs, p, len, mod))
-          }.collect().toMap
-      }
+    val probed = missPaths.map(_._1).zip(probeDistributed(spark, missPaths)).toMap
     listed.flatMap { case (id, root, (hit, miss)) =>
-      hit.map(e => (id, new Path(root, e.name).toString, e)) ++
-        miss.map { case (n, _, _) =>
-          val e = probed((id, n))
-          (id, new Path(root, n).toString, e)
-        }
+      (hit ++ miss.map { case (n, _, _) => probed(new Path(root, n).toString) })
+        .map(e => (id, new Path(root, e.name).toString, e))
     }
   }
 
@@ -274,8 +255,8 @@ object TsdIndex {
       // `create`) plans zero blocks instead of probing past EOF.
       if (st.getLen < 2L * BlockBuffer.BlockSize) return Seq.empty
       PlanStats.probedFiles.addAndGet(1)
-      return probeDistributed(spark, root.getParent,
-        Seq((root.getName, st.getLen, st.getModificationTime)))
+      return probeDistributed(spark,
+        Seq((root.toString, st.getLen, st.getModificationTime)))
     }
     // the directory case IS a one-store fleet: one listing + sidecar
     // partition + probe-job shape, so the freshness predicate and the

@@ -18,9 +18,9 @@ import graft.sources.{EtsdSink, TsdIndex}
   * (etsdCmd.c:295-299 — 10 FullS channels at 24 intervals is a full
   * block), so fleets add STORES (one per daemon, etsd.c:33) and extend
   * SPAN. The volume trend therefore scales stores × days with a fixed
-  * 10-channel FullS schema per store, and reads back fleet-wide as a
-  * union of per-store DSv2 scans — the plan a cluster-wide query would
-  * run. Pass criteria:
+  * 10-channel FullS schema per store, and reads back fleet-wide through
+  * the one multi-store DSv2 scan (`EtsdSource.fleet`) — the plan a
+  * cluster-wide query would run. Pass criteria:
   *
   *   - export and read-back grow ≤ linearly in readings;
   *   - planning a 1-day range over thousands of files stays ~flat (the
@@ -121,11 +121,10 @@ object FileScaleProbe {
 
     // --- fleet scale: ≥100 stores through the PUBLIC fleet API.
     // This is the 100×-scale story told through EtsdSource.fleet rather
-    // than a hand-built union: one DSv2 scan per store, each planning
-    // against its own _graft_index sidecar, so a narrow time-range
-    // query over the whole fleet prunes per-store with ZERO file-probe
-    // I/O (asserted via TsdIndex.PlanStats) and the union stays
-    // exchange-free.
+    // than a hand-built union: ONE DSv2 scan node for every store, each
+    // store planned against its own _graft_index sidecar, so a narrow
+    // time-range query over the whole fleet prunes per-store with ZERO
+    // file-probe I/O (asserted via TsdIndex.PlanStats).
     {
       val nStores = 128
       val nDays = 32
@@ -162,14 +161,13 @@ object FileScaleProbe {
       assert(dayRows == expect, s"fleet day query returned $dayRows")
       assert(TsdIndex.PlanStats.probedFiles.get() == 0,
         "fleet planning must be sidecar-only (zero per-file probes)")
-      assert(TsdIndex.PlanStats.driverProbedFiles.get() == 0)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     }
 
     // --- store-count trend through the SINGLE multi-store scan node:
     // 128 vs 1024 stores, same per-store data. The logical plan must be
-    // O(1) in store count (one TsdFleetScan node either way — vs one
-    // scan node per store in the union shape), planning must stay
+    // O(1) in store count (one TsdScan node either way — vs one scan
+    // node per store in a union of per-store loads), planning must stay
     // sidecar-only, and pure planning wall-time (no execution) must grow
     // sub-linearly — it's bounded-pool metadata I/O, not plan work.
     for (nStores <- Seq(128, 1024)) {

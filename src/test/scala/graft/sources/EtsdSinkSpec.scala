@@ -78,7 +78,7 @@ class EtsdSinkSpec extends AnyFunSuite {
     assert(EtsdCmd.loadSchema(dir) == schema)
   }
 
-  test("xData round-trips through both reader paths") {
+  test("xData round-trips through the DSv2 xdata reader") {
     import spark.implicits._
     val dir = Files.createTempDirectory("xdata").toString
     val xschema = schema.copy(xDataSize = 4)
@@ -94,29 +94,32 @@ class EtsdSinkSpec extends AnyFunSuite {
     EtsdSink.export(longFrame(30), xschema, dir, blocksPerFile = 2,
       xData = Some(side)).collect()
 
-    // reader path 1: binaryFile side table
-    val got1 = EtsdSource.xData(spark, dir)
-      .select($"block_epoch", $"xdata").as[(Long, Array[Byte])]
+    val dsv2 = spark.read.format("graft.sources.TsdDataSource")
+      .option("xdata", "true").load(dir)
+    // one row per block, the 4th present with its cleared region
+    val all = dsv2.select($"block_epoch", $"xdata").as[(Long, Array[Byte])]
       .collect().sortBy(_._1)
-    assert(got1.map(_._1).toSeq == blockEpochs)
-    got1.zipWithIndex.foreach { case ((_, bytes), i) =>
+    assert(all.map(_._1).toSeq == blockEpochs)
+    all.zipWithIndex.foreach { case ((_, bytes), i) =>
       if (i == 3) assert(bytes.length == 4) // present, content = cleared block
       else assert(bytes.toSeq == Seq[Byte](1, 2, 3, i.toByte))
     }
 
-    // reader path 2: DSv2 xdata mode, with block_epoch pushdown
-    val dsv2 = spark.read.format("graft.sources.TsdDataSource")
-      .option("xdata", "true").load(dir)
-    val got2 = dsv2.filter($"block_epoch" >= t0 + 60L)
-      .select($"block_epoch", $"xdata").as[(Long, Array[Byte])]
+    // block_epoch pushdown reaches the scan and prunes the first block
+    val filtered = dsv2.filter($"block_epoch" >= t0 + 60L)
+    val scanDesc = filtered.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.description()
+    }.mkString
+    assert(scanDesc.contains(s"tsRange=[${t0 + 60L}, +inf]"), scanDesc)
+    val got2 = filtered.select($"block_epoch", $"xdata").as[(Long, Array[Byte])]
       .collect().sortBy(_._1)
     assert(got2.map(_._1).toSeq == blockEpochs.drop(1))
     assert(got2.head._2.toSeq == Seq[Byte](1, 2, 3, 1))
 
-    // a schema without an xData region exposes no side rows on either path
+    // a schema without an xData region exposes no side rows
     val plainDir = Files.createTempDirectory("noxdata").toString
     EtsdSink.export(longFrame(6), schema, plainDir).collect()
-    assert(EtsdSource.xData(spark, plainDir).isEmpty)
     assert(spark.read.format("graft.sources.TsdDataSource")
       .option("xdata", "true").load(plainDir).isEmpty)
   }
@@ -131,7 +134,8 @@ class EtsdSinkSpec extends AnyFunSuite {
       (t0, Array[Byte](5, 5))).toDF("block_epoch", "xdata")
     EtsdSink.export(longFrame(6), xschema, dir, blocksPerFile = 1,
       xData = Some(side)).collect()
-    val got = EtsdSource.xData(spark, dir)
+    val got = spark.read.format("graft.sources.TsdDataSource")
+      .option("xdata", "true").load(dir)
       .select($"xdata").as[Array[Byte]].collect()
     assert(got.head.toSeq == Seq[Byte](1, 2))
   }

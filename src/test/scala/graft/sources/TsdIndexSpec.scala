@@ -40,6 +40,11 @@ class TsdIndexSpec extends AnyFunSuite {
     val stores = (0 until 3).map(_ => layout(20, indexed = true))
     TsdIndex.PlanStats.reset()
     val fl = EtsdSource.fleet(spark, stores)
+    // ONE scan node for the three stores, not a union of per-store scans
+    val scans = fl.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(scans.size == 1, s"fleet must plan ONE scan node, got ${scans.size}")
     // value parity: the fleet is exactly the concatenation of per-store reads
     assert(fl.count() == 3 * 20 * 4L)
     // planning stayed per-store AND sidecar-served: every store's files
@@ -47,7 +52,6 @@ class TsdIndexSpec extends AnyFunSuite {
     assert(TsdIndex.PlanStats.indexedFiles.get() >= 60)
     assert(TsdIndex.PlanStats.probedFiles.get() == 0,
       "fleet read must plan every store from its own sidecar")
-    assert(TsdIndex.PlanStats.driverProbedFiles.get() == 0)
     // a time-range pushdown prunes inside EACH store's scan: the layouts
     // share the same epoch grid, so the last-2-spans filter keeps ≤ 3
     // files per store (2 overlapping + 1 conservative boundary)
@@ -64,7 +68,7 @@ class TsdIndexSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // a rooted fleet via exportFleet: one job writes every store + sidecar
     val root = Files.createTempDirectory("tsdfleet").toString
-    val nStores = 12 // > EtsdSource.FleetUnionMax, so fleet() delegates too
+    val nStores = 12
     val rows = (0 until nStores).flatMap { si =>
       (0 until 20 * 4).map { k =>
         (f"st$si%02d", t0 + k, "G", Some(((si * 7 + k) % 200).toLong), true)
@@ -94,7 +98,6 @@ class TsdIndexSpec extends AnyFunSuite {
     // exportFleet maintained every store's sidecar: zero probes fleet-wide
     assert(TsdIndex.PlanStats.probedFiles.get() == 0,
       "fleet planning must be sidecar-only")
-    assert(TsdIndex.PlanStats.driverProbedFiles.get() == 0)
 
     // store_id pushdown prunes whole stores at planning time
     val one = fl.filter($"store_id" === "st03")
@@ -121,8 +124,7 @@ class TsdIndexSpec extends AnyFunSuite {
 
     // the root form resolves the same stores by listing
     assert(EtsdSource.fleetRoot(spark, root).count() == nStores * 20 * 4L)
-    // the historical fleet() schema delegates above the union threshold
-    // and stays store-free
+    // fleet() reads through the same scan and drops the store column
     val hist = EtsdSource.fleet(spark, stores)
     assert(!hist.columns.contains("store_id"))
     assert(hist.count() == nStores * 20 * 4L)
@@ -217,7 +219,6 @@ class TsdIndexSpec extends AnyFunSuite {
     assert(TsdIndex.PlanStats.indexedFiles.get() >= n)
     assert(TsdIndex.PlanStats.probedFiles.get() == 0,
       "sidecar-covered files must not be probed")
-    assert(TsdIndex.PlanStats.driverProbedFiles.get() == 0)
   }
 
   test("no sidecar: one distributed probe job, never serial driver reads") {
@@ -230,7 +231,6 @@ class TsdIndexSpec extends AnyFunSuite {
     assert(df.count() == n * 4L)
     assert(TsdIndex.PlanStats.probedFiles.get() >= n)
     assert(TsdIndex.PlanStats.indexedFiles.get() == 0)
-    assert(TsdIndex.PlanStats.driverProbedFiles.get() == 0)
   }
 
   test("stale sidecar entries (length mismatch) are re-probed, not trusted") {
@@ -284,7 +284,6 @@ class TsdIndexSpec extends AnyFunSuite {
     assert(TsdIndex.PlanStats.probedFiles.get() == 0,
       "the gate's read must plan from the sink-maintained sidecar")
     assert(TsdIndex.PlanStats.indexedFiles.get() > 0)
-    assert(TsdIndex.PlanStats.driverProbedFiles.get() == 0)
   }
 
   test("header-only single file plans zero blocks instead of probing past EOF") {
