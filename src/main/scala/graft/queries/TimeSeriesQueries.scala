@@ -309,8 +309,9 @@ object TimeSeriesQueries {
     }),
 
     // the FILE layer of the same codec in the gate: hourly sums →
-    // EtsdSink.export (distributed span-aligned .tsd files on disk) →
-    // TsdDataSource DSv2 read-back — the full etsdSave/etsdRW file
+    // EtsdSink.exportIndexed (distributed span-aligned .tsd files and
+    // their _graft_index sidecar) → TsdDataSource DSv2 read-back,
+    // planned from the sidecar — the full etsdSave/etsdRW file
     // round-trip (etsdSave.c:80-120, etsdRead.c:38-167), not just the
     // in-plan block codec. Missing hours inside a file's span encode as
     // the invalid sentinel and drop on decode, so output = present
@@ -326,9 +327,9 @@ object TimeSeriesQueries {
       val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
         $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_file_rt").toString
-      // .collect() here is one row per WRITTEN FILE (the sink's metadata
-      // return) — bounded by the fixture's ~62-day span / 8-block files
-      EtsdSink.export(long, schema, dir, blocksPerFile = 8).collect()
+      // returns one sidecar entry per written file — bounded by the
+      // fixture's ~62-day span / 8-block files
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
       s.read.format("graft.sources.TsdDataSource").load(dir)
         .filter($"valid" && !$"is_register")
         .select($"channel",
@@ -362,7 +363,7 @@ object TimeSeriesQueries {
           .as("value"),
         lit(true).as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_float_rt").toString
-      EtsdSink.export(long, schema, dir, blocksPerFile = 8).collect()
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
       s.read.format("graft.sources.TsdDataSource").load(dir)
         .filter($"valid" && !$"is_register")
         .select($"channel",
@@ -404,7 +405,7 @@ object TimeSeriesQueries {
       val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
         $"channel", folded.as("value"), lit(true).as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_mixed_rt").toString
-      EtsdSink.export(long, schema, dir, blocksPerFile = 8).collect()
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
       s.read.format("graft.sources.TsdDataSource").load(dir)
         .filter($"valid" && !$"is_register")
         .select($"channel",
@@ -439,7 +440,7 @@ object TimeSeriesQueries {
         $"channel", pmod($"s_c" * 37L, cap).as("value"),
         lit(true).as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_asc_rt").toString
-      EtsdSink.export(long, schema, dir, blocksPerFile = 8).collect()
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
       s.read.format("graft.sources.TsdDataSource").load(dir)
         .filter($"valid" && !$"is_register")
         .select($"channel",
@@ -477,7 +478,7 @@ object TimeSeriesQueries {
       val long = odo.select(timestamp_seconds($"bucket").as("ts"),
         $"channel", $"odo".as("value"), lit(true).as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_cnt_rt").toString
-      EtsdSink.export(long, schema, dir, blocksPerFile = 8).collect()
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
       s.read.format("graft.sources.TsdDataSource").load(dir)
         .filter($"valid")
         .select($"channel",
@@ -508,7 +509,7 @@ object TimeSeriesQueries {
       val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
         $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_blkidx").toString
-      EtsdSink.export(long, schema, dir, blocksPerFile = 8).collect()
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
       EtsdSource.blockTimestamps(s, dir)
         .select($"ts_epoch", $"valid_intervals".cast("long").as("n_iv"))
         .orderBy("ts_epoch")
@@ -541,8 +542,8 @@ object TimeSeriesQueries {
         .select($"block_epoch",
           expr("unhex(lpad(hex(block_epoch), 16, '0'))").as("xdata"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_xdata").toString
-      EtsdSink.export(long, schema, dir, blocksPerFile = 8,
-        xData = Some(side)).collect()
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8,
+        xData = Some(side))
       s.read.format("graft.sources.TsdDataSource")
         .option("xdata", "true").load(dir)
         .select($"block_epoch",
@@ -566,7 +567,7 @@ object TimeSeriesQueries {
       val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
         $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_retention").toString
-      EtsdSink.export(long, schema, dir, blocksPerFile = 4).collect()
+      EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 4)
       Retention.dropBlocksBefore(s, dir, cutoff)
       s.read.format("graft.sources.TsdDataSource").load(dir)
         .filter($"valid" && !$"is_register")
@@ -597,7 +598,7 @@ object TimeSeriesQueries {
       val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
         $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_manyfile").toString
-      // one row per WRITTEN FILE (~62 at sf0.01) — bounded by span/day
+      // one sidecar entry per written file (~62 at sf0.01) — bounded by span/day
       EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 1)
       // a reading at ts covers the interval ENDING at ts (bucket = ts−1h),
       // so bucket ∈ [S, E) ⟺ ts ∈ [S+1h, E+1h); literal timestamp

@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders,
+  KeyValueGroupedDataset, SparkSession}
 
 import graft._
 import graft.codec.{EtsdEncoder, Reading}
@@ -17,17 +18,24 @@ import org.apache.spark.sql.functions._
   * Layout: one file per `blocksPerFile` consecutive block spans, named by
   * the span's start epoch — deterministic, so a replayed/retried task
   * overwrites its own file (idempotent exactly-once under Structured
-  * Streaming's `foreachBatch` too). One file = one task via `groupByKey`
-  * on the span index; group size is bounded by construction
+  * Streaming's `foreachBatch` too). One file = one task via a `cogroup`
+  * on the span key; group size is bounded by construction
   * (blocksPerFile × blockIntervals × channels rows), so no task state
   * grows with the dataset — `blocksPerFile` is the file-size dial.
+  * Every export then merges the written files' metadata into each
+  * directory's `_graft_index` sidecar ([[TsdIndex]]), so a layout this
+  * sink writes always plans without probing its files.
   *
   * Input contract: `(ts, channel, value, valid)` at the schema's cadence;
   * counter channels carry the ABSOLUTE odometer (the encoder re-derives
   * stored deltas, registers, and missed-interval backfill exactly like
   * the daemon's save path). Missing (channel, interval) slots and rows
-  * with `valid=false` encode as the invalid sentinel. */
+  * with `valid=false` encode as the invalid sentinel. A row whose channel
+  * the schema does not declare fails the export. */
 object EtsdSink {
+
+  /** One input reading: `(epoch, channel, value, valid)`. */
+  private type LongRow = (Long, String, Option[Long], Boolean)
 
   /** Total lexicographic order on byte arrays (unsigned), shorter-prefix
     * first — the deterministic tie-break for duplicate xData rows. */
@@ -39,19 +47,8 @@ object EtsdSink {
     if (r != 0) r else a.length - b.length
   }
 
-  /** One row per written file: the file's full planning metadata,
-    * computed from the bytes just written (no re-reads). `toIndexEntry`
-    * feeds the `_graft_index` sidecar. */
-  final case class WrittenFile(path: String, name: String, fileLen: Long,
-      nBlocks: Long, firstTs: Long, lastTs: Long, blockSpanSec: Long,
-      modTime: Long = 0L) {
-    def toIndexEntry: TsdIndexEntry =
-      TsdIndexEntry(name, fileLen, nBlocks, firstTs, lastTs, blockSpanSec,
-        modTime)
-  }
-
-  /** Export and return one row per written file.
-    * An action (the returned Dataset must be consumed).
+  /** Export one store into `outDir` and merge its `_graft_index` sidecar;
+    * returns one sidecar entry per written file.
     *
     * `xData`: optional per-block side frame `(block_epoch: Long,
     * xdata: Binary)` — the plugin-written opaque region (etsd.h:102-103,
@@ -59,129 +56,54 @@ object EtsdSink {
     * co-grouped with the data rows on the same file-span key, so the
     * side frame adds one shuffle and no driver state. Ignored unless
     * `schema.xDataSize > 0`. */
-  def export(long: DataFrame, schema: EtsdSchema, outDir: String,
-             blocksPerFile: Int = 256,
-             xData: Option[DataFrame] = None): Dataset[WrittenFile] = {
+  def exportIndexed(long: DataFrame, schema: EtsdSchema, outDir: String,
+                    blocksPerFile: Int = 256,
+                    xData: Option[DataFrame] = None): Seq[TsdIndexEntry] = {
     val spark = long.sparkSession
     import spark.implicits._
-    require(blocksPerFile >= 1)
-    val names = schema.channels.map(_.name)
-    val chanIdx = names.zipWithIndex.toMap
-    val span = schema.intervalSec.toLong
-    val fileSpan = span * schema.blockIntervals * blocksPerFile
-    val out = outDir
-    val hadoopProps = HadoopConfs.props(spark)
-
-    val keyedLong = long.select(unix_timestamp($"ts").as("te"), $"channel",
-        $"value", $"valid")
-      .as[(Long, String, Option[Long], Boolean)]
+    val fileSpan = fileSpanSec(schema, blocksPerFile)
+    val data = long.select(unix_timestamp($"ts").as("te"), $"channel",
+        $"value", $"valid").as[LongRow]
       .groupByKey { case (te, _, _, _) => Math.floorDiv(te, fileSpan) }
-    val keyedXd = xData.filter(_ => schema.xDataSize > 0)
+    val side = xData.filter(_ => schema.xDataSize > 0)
       .getOrElse(spark.emptyDataset[(Long, Array[Byte])]
         .toDF("block_epoch", "xdata"))
       .select($"block_epoch", $"xdata").as[(Long, Array[Byte])]
       .groupByKey { case (be, _) => Math.floorDiv(be, fileSpan) }
-
-    keyedLong.cogroup(keyedXd) { (fileIdx, it, xit) =>
-      if (it.isEmpty) Iterator.empty else {
-        // duplicate side rows for one block resolve deterministically
-        // (lexicographically smallest bytes win) — an at-least-once
-        // upstream must not break the byte-identical-rewrite contract
-        val xd = xit.toSeq.groupBy(_._1).map { case (be, vs) =>
-          be -> vs.map(_._2).min(ByteLexOrdering)
-        }
-        val bytes = encodeSpanFile(schema, names, chanIdx, it.toArray, xd.get)
-        Iterator.single(
-          writeSpanFile(out, fileIdx * fileSpan, bytes, schema, hadoopProps))
-      }
-    }
+    writeSpans[Long](spark, data, side, schema, fileSpan, _ => outDir, identity)
+      .map(_._2)
   }
 
-  /** Encode one span-file's rows into file bytes (header + blocks) —
-    * the per-task body shared by [[export]] and [[exportFleet]] so the
-    * two layouts can never encode differently. */
-  private def encodeSpanFile(schema: EtsdSchema, names: Seq[String],
-      chanIdx: Map[String, Int],
-      rows: Array[(Long, String, Option[Long], Boolean)],
-      xd: Long => Option[Array[Byte]]): Array[Byte] = {
-    val span = schema.intervalSec.toLong
-    val bySlot = rows.groupBy { case (te, _, _, _) => Math.floorDiv(te, span) }
-    val slots = bySlot.keys
-    val enc = new EtsdEncoder(schema, xd)
-    (slots.min to slots.max).foreach { slot =>
-      val present = bySlot.getOrElse(slot, Array.empty)
-        .flatMap { case (_, c, v, ok) =>
-          chanIdx.get(c).map(_ -> (v, ok))
-        }.toMap
-      enc.feed(slot * span, names.indices.map { ci =>
-        present.get(ci) match {
-          case Some((Some(v), true)) => Reading(v)
-          case _                     => Reading(0L, status = 1)
-        }
-      }.toIndexedSeq)
-    }
-    enc.toFileBytes()
-  }
-
-  /** Write one encoded span file (overwrite: deterministic + idempotent)
-    * and return its planning metadata from the bytes in hand. */
-  private def writeSpanFile(outDir: String, startEpoch: Long,
-      bytes: Array[Byte], schema: EtsdSchema,
-      hadoopProps: Seq[(String, String)]): WrittenFile = {
-    val path = new Path(outDir, f"etsd-$startEpoch%012d.tsd")
-    val fs = path.getFileSystem(HadoopConfs.build(hadoopProps))
-    val os = fs.create(path, true)
-    try os.write(bytes) finally os.close()
-    val bsz = graft.codec.BlockBuffer.BlockSize
-    val nBlocks = bytes.length / bsz - 1
-    def tsAt(sector: Long): Long =
-      graft.codec.BlockBuffer(
-        bytes.slice((sector * bsz).toInt, (sector * bsz).toInt + bsz)).timestamp
-    // one status RPC per written file: the sidecar's freshness check
-    // compares (len, modTime), so the entry must carry the real mtime
-    val mod = fs.getFileStatus(path).getModificationTime
-    WrittenFile(path.toString, path.getName,
-      bytes.length.toLong, nBlocks.toLong, tsAt(1), tsAt(nBlocks.toLong),
-      schema.blockIntervals.toLong * schema.intervalSec, mod)
-  }
-
-  /** Fleet export: write MANY stores' `.tsd` layouts in ONE Spark job.
+  /** Fleet export: write MANY stores' `.tsd` layouts in ONE Spark job and
+    * return each written file's sidecar entry with its store id.
     *
-    * Input carries a `store_id` column alongside the [[export]] contract
-    * columns; each store lands under `rootDir/<store_id>/` with the
-    * shared `schema`. The job keys by (store, file-span) — still one
+    * Input carries a `store_id` column alongside the [[exportIndexed]]
+    * contract columns; each store lands under `rootDir/<store_id>/` with
+    * the shared `schema`. The job keys by (store, file-span) — still one
     * file per task, still bounded group size — so the fleet write costs
     * one shuffle regardless of store count, instead of the O(stores)
-    * separate jobs a per-store [[export]] loop would run (the write-side
-    * twin of the single multi-store fleet scan). Every store's
-    * `_graft_index` sidecar is then merged from the returned metadata on
-    * a bounded driver pool (tiny text files; no data re-reads).
-    * Store ids must be non-empty path-segment-safe names (letters,
-    * digits, `._-`; never `.`/`..` — enforced per task).
+    * separate jobs a per-store loop would run (the write-side twin of
+    * the single multi-store fleet scan). Store ids must be non-empty
+    * path-segment-safe names (letters, digits, `._-`; never `.`/`..` —
+    * enforced per task).
     *
-    * No xData side frame: fleet export writes data blocks only, exactly
-    * like a no-xData [[export]]. A layout whose schema reserves an
-    * xData region gets empty regions here — use the per-store
-    * [[export]] with its `xData` frame when the plugin region matters. */
+    * No xData side frame: a layout whose schema reserves an xData region
+    * gets empty regions here — use [[exportIndexed]] with its `xData`
+    * frame per store when the plugin region matters. */
   def exportFleet(long: DataFrame, schema: EtsdSchema, rootDir: String,
-                  blocksPerFile: Int = 256): Seq[(String, WrittenFile)] = {
+                  blocksPerFile: Int = 256): Seq[(String, TsdIndexEntry)] = {
     val spark = long.sparkSession
     import spark.implicits._
-    require(blocksPerFile >= 1)
-    val names = schema.channels.map(_.name)
-    val chanIdx = names.zipWithIndex.toMap
-    val fileSpan =
-      schema.intervalSec.toLong * schema.blockIntervals * blocksPerFile
-    val root = rootDir
-    val hadoopProps = HadoopConfs.props(spark)
-
-    val written = long
-      .select($"store_id", unix_timestamp($"ts").as("te"), $"channel",
-        $"value", $"valid")
+    val fileSpan = fileSpanSec(schema, blocksPerFile)
+    val data = long.select($"store_id", unix_timestamp($"ts").as("te"),
+        $"channel", $"value", $"valid")
       .as[(String, Long, String, Option[Long], Boolean)]
       .groupByKey { case (st, te, _, _, _) => (st, Math.floorDiv(te, fileSpan)) }
-      .mapGroups { (key: (String, Long), it) =>
-        val (store, fileIdx) = key
+      .mapValues { case (_, te, c, v, ok) => (te, c, v, ok) }
+    val side = spark.emptyDataset[(Long, Array[Byte])]
+      .groupByKey { case (be, _) => ("", be) } // no rows: the fleet has no xData
+    writeSpans[(String, Long)](spark, data, side, schema, fileSpan, {
+      case (store, _) =>
         // a store id IS a directory name under rootDir: reject anything
         // that could escape it (separators, "."/"..") or surprise a
         // filesystem — an upstream formatting bug must fail fast here,
@@ -194,37 +116,103 @@ object EtsdSink {
               c == '.') && !store.startsWith("_") && !store.startsWith("."),
           s"store_id must be a safe path segment not starting with " +
             s"'_' or '.', got '$store'")
-        val rows = it.map { case (_, te, c, v, ok) => (te, c, v, ok) }.toArray
-        val bytes = encodeSpanFile(schema, names, chanIdx, rows, _ => None)
-        (store, writeSpanFile(s"$root/$store", fileIdx * fileSpan, bytes,
-          schema, hadoopProps))
-      }.collect().toSeq
+        s"$rootDir/$store"
+    }, _._2).map { case ((store, _), e) => (store, e) }
+  }
 
-    // per-store sidecar merges: O(stores) tiny driver writes, flattened
-    // across a bounded pool (each is a <1 KB text file; the data job
-    // above is the only Spark job this export runs)
+  private def fileSpanSec(schema: EtsdSchema, blocksPerFile: Int): Long = {
+    require(blocksPerFile >= 1)
+    schema.intervalSec.toLong * schema.blockIntervals * blocksPerFile
+  }
+
+  /** The one write body behind both entry points: one task per span key
+    * `K` encodes and writes its file (in `dirOf(key)`, starting at
+    * `fileIdxOf(key) × fileSpan`), then the driver merges each
+    * directory's sidecar from the returned metadata on a bounded pool —
+    * tiny text files, no data re-reads; the cogroup is the only Spark
+    * job. */
+  private def writeSpans[K: Encoder](spark: SparkSession,
+      data: KeyValueGroupedDataset[K, LongRow],
+      side: KeyValueGroupedDataset[K, (Long, Array[Byte])],
+      schema: EtsdSchema, fileSpan: Long,
+      dirOf: K => String, fileIdxOf: K => Long): Seq[(K, TsdIndexEntry)] = {
+    val names = schema.channels.map(_.name)
+    val chanIdx = names.zipWithIndex.toMap
+    val hadoopProps = HadoopConfs.props(spark)
+    implicit val outEnc: Encoder[(K, TsdIndexEntry)] =
+      Encoders.tuple(implicitly[Encoder[K]], Encoders.product[TsdIndexEntry])
+
+    val written = data.cogroup(side) { (key, it, xit) =>
+      if (it.isEmpty) Iterator.empty else {
+        // duplicate side rows for one block resolve deterministically
+        // (lexicographically smallest bytes win) — an at-least-once
+        // upstream must not break the byte-identical-rewrite contract
+        val xd = xit.toSeq.groupBy(_._1).map { case (be, vs) =>
+          be -> vs.map(_._2).min(ByteLexOrdering)
+        }
+        val bytes = encodeSpanFile(schema, names, chanIdx, it.toArray, xd.get)
+        Iterator.single(key -> writeSpanFile(dirOf(key),
+          fileIdxOf(key) * fileSpan, bytes, schema, hadoopProps))
+      }
+    }.collect().toSeq
+
+    val byDir = written.groupBy { case (k, _) => dirOf(k) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, written.map(_._1).distinct.size.max(1)))
+      math.min(16, byDir.size.max(1)))
     try {
-      written.groupBy(_._1).map { case (store, fs) =>
+      byDir.map { case (dir, ws) =>
         pool.submit(new Runnable {
-          def run(): Unit = TsdIndex.merge(spark, s"$root/$store",
-            fs.map(_._2.toIndexEntry))
+          def run(): Unit = TsdIndex.merge(spark, dir, ws.map(_._2))
         })
       }.foreach(_.get())
     } finally pool.shutdown()
     written
   }
 
-  /** Export AND maintain the `_graft_index` sidecar in one pass: runs
-    * the export action, then merges the written files' metadata into the
-    * index from the rows already in hand — the sink-maintained index the
-    * planner reads instead of probing files (see [[TsdIndex]]). Returns
-    * the written-file rows. */
-  def exportIndexed(long: DataFrame, schema: EtsdSchema, outDir: String,
-                    blocksPerFile: Int = 256): Seq[WrittenFile] = {
-    val written = export(long, schema, outDir, blocksPerFile).collect().toSeq
-    TsdIndex.merge(long.sparkSession, outDir, written.map(_.toIndexEntry))
-    written
+  /** Encode one span-file's rows into file bytes (header + blocks). */
+  private def encodeSpanFile(schema: EtsdSchema, names: Seq[String],
+      chanIdx: Map[String, Int], rows: Array[LongRow],
+      xd: Long => Option[Array[Byte]]): Array[Byte] = {
+    val span = schema.intervalSec.toLong
+    val bySlot = rows.groupBy { case (te, _, _, _) => Math.floorDiv(te, span) }
+    val slots = bySlot.keys
+    val enc = new EtsdEncoder(schema, xd)
+    (slots.min to slots.max).foreach { slot =>
+      val present = bySlot.getOrElse(slot, Array.empty)
+        .map { case (_, c, v, ok) =>
+          chanIdx.getOrElse(c, throw new IllegalArgumentException(
+            s"channel '$c' is not in the schema (channels: " +
+              s"${names.mkString(", ")})")) -> (v, ok)
+        }.toMap
+      enc.feed(slot * span, names.indices.map { ci =>
+        present.get(ci) match {
+          case Some((Some(v), true)) => Reading(v)
+          case _                     => Reading(0L, status = 1)
+        }
+      }.toIndexedSeq)
+    }
+    enc.toFileBytes()
+  }
+
+  /** Write one encoded span file (overwrite: deterministic + idempotent)
+    * and return its sidecar entry from the bytes in hand. */
+  private def writeSpanFile(outDir: String, startEpoch: Long,
+      bytes: Array[Byte], schema: EtsdSchema,
+      hadoopProps: Seq[(String, String)]): TsdIndexEntry = {
+    val path = new Path(outDir, f"etsd-$startEpoch%012d.tsd")
+    val fs = path.getFileSystem(HadoopConfs.build(hadoopProps))
+    val os = fs.create(path, true)
+    try os.write(bytes) finally os.close()
+    val bsz = graft.codec.BlockBuffer.BlockSize
+    val nBlocks = bytes.length / bsz - 1
+    def tsAt(sector: Long): Long =
+      graft.codec.BlockBuffer(
+        bytes.slice((sector * bsz).toInt, (sector * bsz).toInt + bsz)).timestamp
+    // one status RPC per written file: the sidecar's freshness check
+    // compares (len, modTime), so the entry must carry the real mtime
+    val mod = fs.getFileStatus(path).getModificationTime
+    TsdIndexEntry(path.getName, bytes.length.toLong, nBlocks.toLong,
+      tsAt(1), tsAt(nBlocks.toLong),
+      schema.blockIntervals.toLong * schema.intervalSec, mod)
   }
 }

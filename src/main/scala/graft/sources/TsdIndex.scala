@@ -107,10 +107,11 @@ object TsdIndex {
   }
 
   /** Build the full index for a directory (distributed) and write the
-    * sidecar atomically (temp file + rename). Call after a batch
-    * [[EtsdSink.export]] or periodically over a streamed layout; the
-    * planner treats the sidecar as a cache, so a stale or missing one
-    * costs a re-probe, never a wrong plan. */
+    * sidecar atomically (temp file + rename). For directories written by
+    * other tools, such as the reference daemon: [[EtsdSink]] merges the
+    * sidecar itself and never leaves an unindexed layout. The planner
+    * treats the sidecar as a cache, so a stale or missing one costs a
+    * re-probe, never a wrong plan. */
   def write(spark: SparkSession, dir: String): Seq[TsdIndexEntry] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())

@@ -207,9 +207,11 @@ object Ingest {
         $"vmin", $"vmax", $"l.v".as("last"))
 
   /** Native `.tsd` mirror of the reading stream: every micro-batch is
-    * exported through [[graft.sources.EtsdSink]] into span-aligned ETSD
-    * files. Deterministic file names make batch replay idempotent, so the
-    * checkpoint gives effectively-once file contents — the reference's
+    * exported through [[graft.sources.EtsdSink.exportIndexed]] into
+    * span-aligned ETSD files plus their `_graft_index` sidecar, so a
+    * reader of the streamed layout never probes its files. Deterministic
+    * file names make batch replay idempotent, so the checkpoint gives
+    * effectively-once file contents — the reference's
     * `etsdCommit`+`etsdRotate` write path (etsdSave.c:58-99) with files
     * the reference's own tools can read. Input rows: `ts_us, channel,
     * value, valid` at the schema cadence (counters absolute).
@@ -229,8 +231,6 @@ object Ingest {
                 blocksPerFile: Int = 1): StreamingQuery =
     rows.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // exportIndexed keeps the _graft_index sidecar current per batch,
-        // so a reader planning over the streamed layout never probes files
         graft.sources.EtsdSink.exportIndexed(
           batch.select(timestamp_micros($"ts_us").as("ts"), $"channel",
             $"value", $"valid"),

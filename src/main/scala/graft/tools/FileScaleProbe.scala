@@ -8,10 +8,10 @@ import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.sources.{EtsdSink, TsdIndex}
 
 /** File-layer scale-trend probe (diagnostics, not the bench): times the
-  * full `EtsdSink.export` → `TsdDataSource` read-back loop on 1×/4×/16×
-  * synthetic hourly grids, plus a high-file-count case (thousands of
-  * small span files) that exercises the sidecar-index planning path and
-  * time-range file pruning.
+  * full `EtsdSink.exportIndexed` → `TsdDataSource` read-back loop on
+  * 1×/4×/16× synthetic hourly grids, plus a high-file-count case
+  * (thousands of small span files) that exercises the sidecar-index
+  * planning path and time-range file pruning.
   *
   * The growth axes mirror how an ETSD fleet actually scales: a single
   * store's channel set is bounded by the 512-byte block capacity
@@ -25,8 +25,9 @@ import graft.sources.{EtsdSink, TsdIndex}
   *   - export and read-back grow ≤ linearly in readings;
   *   - planning a 1-day range over thousands of files stays ~flat (the
   *     `_graft_index` sidecar means no per-file probe I/O);
-  *   - the one-row-per-written-file driver collect (`EtsdSink.export`'s
-  *     return) stays bounded by file count, which this probe reports.
+  *   - the one-entry-per-written-file driver collect (`exportIndexed`'s
+  *     return, which also feeds the sidecar) stays bounded by file count,
+  *     which this probe reports.
   *
   * Run: `sbt "runMain graft.tools.FileScaleProbe"`. */
 object FileScaleProbe {
@@ -65,9 +66,9 @@ object FileScaleProbe {
       val root = java.nio.file.Files.createTempDirectory(s"fsp_vol_$k").toString
       val stores = (0 until nStores).map(i => s"$root/store$i")
       val long = grid(nSlots)
-      val nFiles = time("export (8-block files)") {
+      val nFiles = time("exportIndexed (8-block files)") {
         stores.map { d =>
-          EtsdSink.export(long, storeSchema, d, blocksPerFile = 8).collect().length
+          EtsdSink.exportIndexed(long, storeSchema, d, blocksPerFile = 8).length
         }.sum
       }
       println(s"    files written: $nFiles")

@@ -56,8 +56,9 @@ object InterchangeProbe {
     }.toDF("te", "channel", "value", "valid")
       .select(org.apache.spark.sql.functions.timestamp_seconds($"te").as("ts"),
         $"channel", $"value", $"valid")
-    graft.sources.EtsdSink.export(rows, schema, outDir, blocksPerFile = 4)
-      .collect().foreach(p => println(s"[probe] wrote ${p.path} (${p.nBlocks} blocks)"))
+    graft.sources.EtsdSink.exportIndexed(rows, schema, outDir, blocksPerFile = 4)
+      .foreach(e => println(
+        s"[probe] wrote ${new org.apache.hadoop.fs.Path(outDir, e.name)} (${e.nBlocks} blocks)"))
     val totOdo = (1 until n).map(k => (k % 7) * 3L).sum
     println(s"[probe] expected: Odo tot=$totOdo (n=${n - 1} valid deltas), " +
       s"Gauge tot=${(0 until n).map(k => 100L + k % 50).sum} min=100 max=149")

@@ -37,8 +37,8 @@ class EtsdSinkSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("sink").toString
     // 30 intervals, 6/block, 2 blocks/file -> files of 12 intervals: 3 files
-    val written = EtsdSink.export(longFrame(30), schema, dir, blocksPerFile = 2)
-      .collect().sortBy(_.path)
+    val written = EtsdSink.exportIndexed(longFrame(30), schema, dir,
+      blocksPerFile = 2).sortBy(_.name)
     assert(written.length == 3)
     assert(written.map(_.nBlocks).toSeq == Seq(2L, 2L, 1L)) // last file short (6 iv)
     // written-file metadata matches the bytes on disk (feeds the sidecar)
@@ -67,11 +67,11 @@ class EtsdSinkSpec extends AnyFunSuite {
     assert(regRows.length == 5) // 2+2+1 blocks, one register slot each
 
     // idempotent rewrite: byte-identical second export
-    val before = written.map(w => java.nio.file.Paths.get(
-      new java.net.URI(w.path).getPath)).map(Files.readAllBytes)
-    EtsdSink.export(longFrame(30), schema, dir, blocksPerFile = 2).collect()
-    val after = written.map(w => java.nio.file.Paths.get(
-      new java.net.URI(w.path).getPath)).map(Files.readAllBytes)
+    val before = written.map(w => java.nio.file.Paths.get(dir, w.name))
+      .map(Files.readAllBytes)
+    EtsdSink.exportIndexed(longFrame(30), schema, dir, blocksPerFile = 2)
+    val after = written.map(w => java.nio.file.Paths.get(dir, w.name))
+      .map(Files.readAllBytes)
     assert(before.zip(after).forall(p => p._1.sameElements(p._2)))
 
     // the CLI opens the exported files
@@ -91,8 +91,8 @@ class EtsdSinkSpec extends AnyFunSuite {
     val side = blockEpochs.zipWithIndex.filter(_._2 != 3)
       .map { case (be, i) => (be, Array[Byte](1, 2, 3, i.toByte)) }
       .toDF("block_epoch", "xdata")
-    EtsdSink.export(longFrame(30), xschema, dir, blocksPerFile = 2,
-      xData = Some(side)).collect()
+    EtsdSink.exportIndexed(longFrame(30), xschema, dir, blocksPerFile = 2,
+      xData = Some(side))
 
     val dsv2 = spark.read.format("graft.sources.TsdDataSource")
       .option("xdata", "true").load(dir)
@@ -119,7 +119,7 @@ class EtsdSinkSpec extends AnyFunSuite {
 
     // a schema without an xData region exposes no side rows
     val plainDir = Files.createTempDirectory("noxdata").toString
-    EtsdSink.export(longFrame(6), schema, plainDir).collect()
+    EtsdSink.exportIndexed(longFrame(6), schema, plainDir)
     assert(spark.read.format("graft.sources.TsdDataSource")
       .option("xdata", "true").load(plainDir).isEmpty)
   }
@@ -132,18 +132,86 @@ class EtsdSinkSpec extends AnyFunSuite {
     // deterministic or re-exports stop being byte-identical
     val side = Seq((t0, Array[Byte](9, 9)), (t0, Array[Byte](1, 2)),
       (t0, Array[Byte](5, 5))).toDF("block_epoch", "xdata")
-    EtsdSink.export(longFrame(6), xschema, dir, blocksPerFile = 1,
-      xData = Some(side)).collect()
+    EtsdSink.exportIndexed(longFrame(6), xschema, dir, blocksPerFile = 1,
+      xData = Some(side))
     val got = spark.read.format("graft.sources.TsdDataSource")
       .option("xdata", "true").load(dir)
       .select($"xdata").as[Array[Byte]].collect()
     assert(got.head.toSeq == Seq[Byte](1, 2))
   }
 
+  test("a row whose channel is not in the schema fails the export") {
+    import spark.implicits._
+    val stray = Seq((t0 + 10L, "Volts", Some(230L), true))
+      .toDF("te", "channel", "value", "valid")
+      .select(org.apache.spark.sql.functions.timestamp_seconds($"te").as("ts"),
+        $"channel", $"value", $"valid")
+    val rows = longFrame(6).unionByName(stray)
+    def rejected(export: => Any): Unit = {
+      val e = intercept[Exception](export)
+      val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i }
+      assert(iae.exists(i => i.getMessage.contains("'Volts'") &&
+        i.getMessage.contains("Odo, Temp")), e.toString)
+    }
+    val dir = Files.createTempDirectory("badchan").toString
+    rejected(EtsdSink.exportIndexed(rows, schema, dir))
+    // the one span holds the stray row: no file written, no sidecar
+    assert(new java.io.File(dir).list().isEmpty)
+    val root = Files.createTempDirectory("badchanfleet").toString
+    rejected(EtsdSink.exportFleet(
+      rows.withColumn("store_id", org.apache.spark.sql.functions.lit("st0")),
+      schema, root))
+  }
+
+  test("the sink's sidecar equals a from-scratch TsdIndex.write, entry for entry") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val conf = spark.sessionState.newHadoopConf()
+    // the returned rows, the sidecar left behind, and a re-probe of the
+    // directory must agree on every field: name, fileLen, nBlocks,
+    // firstTs, lastTs, blockSpanSec and modTime
+    def assertParity(dir: String, returned: Seq[TsdIndexEntry]): Unit = {
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val left = TsdIndex.load(root.getFileSystem(conf), root)
+        .getOrElse(fail(s"no sidecar in $dir"))
+      assert(returned.nonEmpty)
+      assert(returned.sortBy(_.name) == left.values.toSeq.sortBy(_.name))
+      val probed = TsdIndex.write(spark, dir)
+      assert(probed.map(_.name).sorted == left.keys.toSeq.sorted)
+      probed.foreach(p => assert(left(p.name) == p, p.name))
+    }
+
+    // one store with an xData frame, exported twice: the rewrite must
+    // refresh every entry (new modTime), not leave the first export's
+    val dir = Files.createTempDirectory("parity").toString
+    val xschema = schema.copy(xDataSize = 4)
+    val side = (0 until 5).map(i => (t0 + 60L * i, Array[Byte](7, 7, 7, i.toByte)))
+      .toDF("block_epoch", "xdata")
+    EtsdSink.exportIndexed(longFrame(30), xschema, dir, blocksPerFile = 2,
+      xData = Some(side))
+    val again = EtsdSink.exportIndexed(longFrame(30), xschema, dir,
+      blocksPerFile = 2, xData = Some(side))
+    assert(again.size == 3)
+    assertParity(dir, again)
+
+    // every store of a 3-store fleet, each with its own file count
+    val root = Files.createTempDirectory("parityfleet").toString
+    val rows = (0 until 3).map(i =>
+        longFrame(30 - 12 * i).withColumn("store_id", lit(s"st$i")))
+      .reduce(_ unionByName _)
+    val written = EtsdSink.exportFleet(rows, schema, root, blocksPerFile = 2)
+    assert(written.groupBy(_._1).map { case (st, ws) => st -> ws.size } ==
+      Map("st0" -> 3, "st1" -> 2, "st2" -> 1))
+    written.groupBy(_._1).foreach { case (st, ws) =>
+      assertParity(s"$root/$st", ws.map(_._2))
+    }
+  }
+
   test("Retention drops span files below the cutoff (etsdRotate analog)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("ret").toString
-    EtsdSink.export(longFrame(30), schema, dir, blocksPerFile = 2).collect()
+    EtsdSink.exportIndexed(longFrame(30), schema, dir, blocksPerFile = 2)
     // cutoff at the second span's start: only the first file goes
     val dropped = Retention.dropBlocksBefore(spark, dir, t0 + 120)
     assert(dropped.length == 1 && dropped.head.contains("etsd-001700000040"))

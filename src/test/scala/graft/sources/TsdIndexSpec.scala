@@ -21,7 +21,8 @@ class TsdIndexSpec extends AnyFunSuite {
     intervalSec = 1, blockIntervals = 4)
   private val t0 = 1700000000L // multiple of the 4 s span
 
-  /** nFiles span files of one block each via the sink (+ sidecar). */
+  /** nFiles span files of one block each via the sink, with or without
+    * the sidecar it leaves. */
   private def layout(nFiles: Int, indexed: Boolean): String = {
     import spark.implicits._
     val dir = Files.createTempDirectory("tsdidx").toString
@@ -30,8 +31,8 @@ class TsdIndexSpec extends AnyFunSuite {
     }.toDF("te", "channel", "value", "valid")
       .select(org.apache.spark.sql.functions.timestamp_seconds($"te").as("ts"),
         $"channel", $"value", $"valid")
-    if (indexed) EtsdSink.exportIndexed(rows, schema, dir, blocksPerFile = 1)
-    else EtsdSink.export(rows, schema, dir, blocksPerFile = 1).collect()
+    EtsdSink.exportIndexed(rows, schema, dir, blocksPerFile = 1)
+    if (!indexed) Files.delete(Paths.get(dir, TsdIndex.FileName))
     dir
   }
 
@@ -242,7 +243,14 @@ class TsdIndexSpec extends AnyFunSuite {
       .toDF("te", "channel", "value", "valid")
       .select(org.apache.spark.sql.functions.timestamp_seconds($"te").as("ts"),
         $"channel", $"value", $"valid")
-    EtsdSink.export(rows, schema, dir, blocksPerFile = 2).collect()
+    // the sink refreshes the grown file's entry: put the old sidecar back
+    // (dropping the checksum the raw write bypassed) so it is stale
+    val sidecar = Paths.get(dir, TsdIndex.FileName)
+    val stale = Files.readAllBytes(sidecar)
+    EtsdSink.exportIndexed(rows, schema, dir, blocksPerFile = 2)
+    Files.write(sidecar, stale)
+    Files.deleteIfExists(
+      sidecar.getParent.resolve(s".${sidecar.getFileName}.crc"))
 
     TsdIndex.PlanStats.reset()
     val df = spark.read.format("graft.sources.TsdDataSource").load(dir)
@@ -275,15 +283,20 @@ class TsdIndexSpec extends AnyFunSuite {
     // the oracle gate's many-file query end to end (exportIndexed →
     // range-filtered DSv2 read): its correctness row in CORRECTNESS and
     // this planning assert together pin value AND plan for the
-    // many-file deployment shape
-    TsdIndex.PlanStats.reset()
+    // many-file deployment shape. The gate's other sink round trips
+    // (plain, xData side table, after a Retention drop) read their
+    // files back the same way and must plan the same way.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val df = graft.SparkEntry.queries("ts_tsd_manyfile")(spark, sfDir)
-    assert(df.count() > 0)
-    assert(TsdIndex.PlanStats.probedFiles.get() == 0,
-      "the gate's read must plan from the sink-maintained sidecar")
-    assert(TsdIndex.PlanStats.indexedFiles.get() > 0)
+    Seq("ts_tsd_manyfile", "ts_tsd_file_roundtrip", "ts_tsd_xdata",
+        "ts_retention_drop").foreach { q =>
+      TsdIndex.PlanStats.reset()
+      val df = graft.SparkEntry.queries(q)(spark, sfDir)
+      assert(df.count() > 0, q)
+      assert(TsdIndex.PlanStats.probedFiles.get() == 0,
+        s"$q: the read must plan from the sink-maintained sidecar")
+      assert(TsdIndex.PlanStats.indexedFiles.get() > 0, q)
+    }
   }
 
   test("header-only single file plans zero blocks instead of probing past EOF") {
@@ -307,7 +320,7 @@ class TsdIndexSpec extends AnyFunSuite {
         $"channel", $"value", $"valid")
     val firstFile = java.nio.file.Paths.get(dir, f"etsd-$t0%012d.tsd")
     val before = Files.readAllBytes(firstFile)
-    EtsdSink.export(rows, schema, dir, blocksPerFile = 1).collect()
+    EtsdSink.exportIndexed(rows, schema, dir, blocksPerFile = 1)
     val written = java.nio.file.Paths.get(dir, f"etsd-$newT0%012d.tsd")
     Files.write(firstFile, Files.readAllBytes(written)) // same-length overwrite
     Files.delete(written)
