@@ -48,21 +48,15 @@ object Bench {
       // iterations reuse the warmup's operator pins, then the query's
       // pins are released at its boundary — no cache accretion
       spark.sparkContext.setJobDescription(s"bench:$name")
-      val best = Pins.scoped {
-        timeQuery(() => fn(spark, sfDir))
+      val (best, census) = Pins.scoped {
+        timeQueryCensus(() => fn(spark, sfDir))
       }
-      // one extra instrumented pass: exact per-query cap-drop counters
-      // (the capped generators' deliberate recall trade must be a
-      // diffable round artifact, not a stderr line). Separate from the
-      // timed runs so the listener drain never skews a timing.
-      spark.sparkContext.setJobDescription(s"caps:$name")
-      Pins.scoped {
-        try {
-          val (_, drops, splits) =
-            DedupStats.census(spark)(fn(spark, sfDir).count())
-          if (drops._1 > 0) capRows(name) = drops
-          if (splits._1 > 0) splitRows(name) = splits
-        } catch { case _: Throwable => () }
+      // exact per-query cap-drop and split counters of the build run
+      // (the capped generators' deliberate trade must be a diffable
+      // round artifact, not a stderr line)
+      census.foreach { case (drops, splits) =>
+        if (drops._1 > 0) capRows(name) = drops
+        if (splits._1 > 0) splitRows(name) = splits
       }
       name -> best
     } // keep the name-sorted Seq: stable JSON field order run-to-run
@@ -125,12 +119,20 @@ object Bench {
     * broken query shows as a visible failure, not a ~0 s success.
     * Package-visible so BenchSpec can exercise the failure path. */
   private[graft] def timeQuery(build: () => org.apache.spark.sql.DataFrame)
-      : (Double, Double) =
+      : (Double, Double) = timeQueryCensus(build)._1
+
+  /** [[timeQuery]] plus the cap census (`DedupStats.census`: drops,
+    * splits) of the build run alone, None on a throw. The census's
+    * listener drains fall outside both timed regions. */
+  private[graft] def timeQueryCensus(build: () => org.apache.spark.sql.DataFrame)
+      : ((Double, Double), Option[((Long, Long, Long), (Long, Long, Long))]) =
     try {
-      val t0 = System.nanoTime()
-      val df = build()
-      df.count()
-      val buildS = (System.nanoTime() - t0) / 1e9
+      val ((df, buildS), drops, splits) = DedupStats.census(SparkSession.active) {
+        val t0 = System.nanoTime()
+        val df = build()
+        df.count()
+        (df, (System.nanoTime() - t0) / 1e9)
+      }
       // distinguish the timed exec jobs from the build/warmup jobs in the
       // event log / UI (guide §1.5); thread-local, reset by the next query
       val sc = df.sparkSession.sparkContext
@@ -145,6 +147,6 @@ object Bench {
           df.count()
           (System.nanoTime() - t1) / 1e9
         } finally desc.foreach(sc.setJobDescription)
-      (buildS, times.min)
-    } catch { case _: Throwable => (-1.0, -1.0) }
+      ((buildS, times.min), Some((drops, splits)))
+    } catch { case _: Throwable => ((-1.0, -1.0), None) }
 }

@@ -5,9 +5,13 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+
 import graft.codec.{BlockBuffer, HeaderCodec, Layout}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.queries.EtsdQueryApi
+import graft.sources.TsdIndex
 
 /** CLI entry point mirroring the reference's `etsdCmd` verbs
   * (usage etsdCmd.c:457-461; dispatch etsdCmd.c:618-663):
@@ -195,9 +199,18 @@ object EtsdCmd {
 
   /** `examinETSD` (etsdCmd.c:549-613): block geometry + one line per
     * channel with stream type and flag letters (C=counter G=gauge
-    * R=register S=signed E=edo). */
-  def examine(schema: EtsdSchema, fileBytes: Long): String = {
-    val blocks = fileBytes / BlockBuffer.BlockSize - 1 // minus header
+    * R=register S=signed E=edo). The block count is the whole store's:
+    * [[TsdIndex.dataBlocks]] summed over a directory's data files
+    * ([[TsdIndex.isDataFile]]), or over the one file `path` names. */
+  def examine(path: String): String = {
+    val schema = loadSchema(path)
+    val root = new HPath(path)
+    val fs = root.getFileSystem(new Configuration())
+    val st = fs.getFileStatus(root)
+    val files =
+      if (st.isDirectory) fs.listStatus(root).filter(TsdIndex.isDataFile).toSeq
+      else Seq(st)
+    val blocks = files.map(f => TsdIndex.dataBlocks(f.getLen)).sum
     val head =
       f"interval ${schema.intervalSec}%ds, ${schema.blockIntervals}%d intervals/block, " +
       f"$blocks%d data blocks, uid ${schema.uid}%d, xData ${schema.xDataSize}%d B"
@@ -303,7 +316,7 @@ object EtsdCmd {
             .foreach(r => println(s"${r.getString(0)}\t${r.getLong(1)}\t${r.getDouble(2)}"))
         } finally spark.stop()
       case 'e' =>
-        println(examine(loadSchema(path), Files.size(firstFile(path))))
+        println(examine(path))
       case 'd' =>
         // `dump <path> [sector]` one-shot; `dump <path> [sector] i`
         // enters the reference's interactive N/P/Q loop

@@ -491,8 +491,8 @@ object TimeSeriesQueries {
         .orderBy("channel", "ts_epoch", "is_reg")
     }),
 
-    // etsdTimeS in the gate: the block-timestamp probe over real
-    // exported files. The sink feeds each file-group's slot range
+    // etsdTimeS in the gate: the DSv2 per-block table (xdata=true) over
+    // real exported files. The sink feeds each file-group's slot range
     // continuously (missing hours as the invalid sentinel), so the
     // file's time index has a closed form: per 8-day file group with
     // present slots [lo, hi], blocks start at lo+24j with
@@ -510,8 +510,10 @@ object TimeSeriesQueries {
         $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
       val dir = java.nio.file.Files.createTempDirectory("tsd_blkidx").toString
       EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
-      EtsdSource.blockTimestamps(s, dir)
-        .select($"ts_epoch", $"valid_intervals".cast("long").as("n_iv"))
+      s.read.format("graft.sources.TsdDataSource")
+        .option("xdata", "true").load(dir)
+        .select($"block_epoch".as("ts_epoch"),
+          $"valid_intervals".cast("long").as("n_iv"))
         .orderBy("ts_epoch")
     }),
 

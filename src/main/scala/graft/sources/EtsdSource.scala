@@ -1,45 +1,22 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft._
 import graft.codec._
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 
-/** Spark reads of native `.tsd` files (SURVEY.md §7 step 3): the analog
-  * of `etsdInit` + block iteration (etsd.c:41-123, etsdRead.c:181-287),
-  * producing the canonical long DataFrame
-  * `(ts, channel, value, valid, is_register)`.
-  *
-  * Scans go through the one DataSource V2 reader, [[TsdDataSource]]
-  * (time-range and channel pushdown, sector-range partitions, the
-  * `xdata=true` side table); [[fleet]], [[fleetWithStores]] and
-  * [[fleetRoot]] are its multi-store entry points. [[read]] is a
-  * whole-file `binaryFile` decode, kept as the reference decoder the
-  * scan is checked against, and [[blockTimestamps]] is the per-block
-  * time index. */
+/** Multi-store and derived views over native `.tsd` files (SURVEY.md §7
+  * step 3). Every read goes through the one DataSource V2 reader,
+  * [[TsdDataSource]], which yields the canonical long DataFrame
+  * `(ts, channel, value, valid, is_register)` — the analog of
+  * `etsdInit` + block iteration (etsd.c:41-123, etsdRead.c:181-287) —
+  * and, with `xdata=true`, the per-block time index. [[fleet]],
+  * [[fleetWithStores]] and [[fleetRoot]] are its multi-store entry
+  * points; [[wide]] pivots the long form. The whole-file oracle the scan
+  * is checked against is the codec's `EtsdDecoder.decodeFile`. */
 object EtsdSource {
-
-  /** Decoded long row; `value` is the stored sample (counter channels:
-    * the delta), `ts_us` epoch micros. */
-  final case class LongRow(ts_us: Long, channel: String, value: Option[Long],
-                           valid: Boolean, is_register: Boolean)
-
-  /** Read one or many `.tsd` files (glob ok). Every file carries its own
-    * header schema; schemas may differ across files. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val bin = spark.read.format("binaryFile").load(path)
-      .select($"content").as[Array[Byte]]
-    bin.flatMap { bytes =>
-      val (schema, samples) = EtsdDecoder.decodeFile(bytes)
-      val names = schema.channels.map(_.name)
-      samples.map(s => LongRow(s.tsEpoch * 1000000L, names(s.chan), s.value,
-        s.value.isDefined, s.isRegister))
-    }.select(timestamp_micros($"ts_us").as("ts"), $"channel", $"value",
-      $"valid", $"is_register")
-  }
 
   /** Fleet-wide read in the historical long schema (no store column).
     *
@@ -116,26 +93,6 @@ object EtsdSource {
       .agg(first($"value"))
     if (globalSort) pivoted.orderBy($"ts")
     else pivoted.sortWithinPartitions($"ts")
-  }
-
-  /** Block-timestamp probe (`etsdTimeS`, etsdRead.h:27; consumed by the
-    * sector search `etsdFindBlock`, etsdRead.c:300-353): one row per data
-    * block with its sector number, timestamp, and valid-interval count —
-    * the file's time index. The reference binary-probes sectors with one
-    * fopen/fseek/fread per guess; here the whole index materializes in a
-    * single scan and time-range → block pruning becomes an ordinary
-    * filter on this frame (or parquet row-group stats once ingested). */
-  def blockTimestamps(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        (BlockBuffer.BlockSize until bytes.length by BlockBuffer.BlockSize)
-          .map { off =>
-            val b = BlockBuffer(bytes.slice(off, off + BlockBuffer.BlockSize))
-            (p, off / BlockBuffer.BlockSize, b.timestamp, b.validIntervals)
-          }
-      }.toDF("path", "sector", "ts_epoch", "valid_intervals")
   }
 
   /** Distributed encode→decode round-trip of a fixed-cadence grid through

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.codec.{BlockBuffer, EtsdDecoder, HeaderCodec}
+import graft.codec.{BlockBuffer, EtsdDecoder}
 import graft.model.EtsdSchema
 
 /** DataSource V2 reader for native `.tsd` files with time-range filter
@@ -36,7 +36,10 @@ import graft.model.EtsdSchema
   * One scan, [[TsdScan]], serves every mode: a single store (a file or a
   * directory), a fleet of stores with a `store_id` column
   * (`option("stores", "d1,d2,…")` or `option("fleet", "true")`), and the
-  * per-block xData side table (`option("xdata", "true")`).
+  * per-block table (`option("xdata", "true")`: the `etsdTimeS` block
+  * index plus the xData region). It is the engine's only `.tsd` reader.
+  * A partial trailing block (a torn write) is ignored in every mode, as
+  * by the driver-local fold: see [[TsdIndex.dataBlocks]].
   *
   * `EtsdQueryApi.query` over a bare load of this source skips the scan
   * when the sidecar prunes the selection to at most
@@ -55,13 +58,15 @@ class TsdDataSource extends TableProvider {
 }
 
 object TsdDataSource {
-  /** Per-block side-table schema for `option("xdata", true)` reads
-    * (SURVEY.md §1.5: the opaque per-block region, etsd.h:102-103, as a
-    * `BinaryType` side table). */
+  /** Per-block table schema for `option("xdata", true)` reads: the block
+    * time index (`etsdTimeS`, etsdRead.h:27) and the opaque per-block
+    * region (SURVEY.md §1.5, etsd.h:102-103), empty for a schema without
+    * one. */
   val XDataSchema: StructType = new StructType()
     .add("block_epoch", org.apache.spark.sql.types.LongType, false)
     .add("sector", org.apache.spark.sql.types.LongType, false)
     .add("xdata", org.apache.spark.sql.types.BinaryType, false)
+    .add("valid_intervals", org.apache.spark.sql.types.IntegerType, false)
 
   /** Multi-store (fleet) output: the long schema plus the originating
     * store's id — ONE scan node for the whole fleet (see [[TsdScan]]). */
@@ -196,9 +201,7 @@ private[sources] case class TsdChunk(file: String, startSector: Long,
     val p = new Path(file)
     val in = p.getFileSystem(HadoopConfs.build(hadoopProps)).open(p)
     try {
-      val hdr = new Array[Byte](BlockBuffer.BlockSize)
-      in.readFully(0, hdr)
-      val schema = HeaderCodec.decode(hdr)
+      val schema = TsdIndex.readHeader(in)
       val data = new Array[Byte](nBlocks.toInt * BlockBuffer.BlockSize)
       in.readFully(startSector * BlockBuffer.BlockSize, data)
       (schema, data)
@@ -399,7 +402,7 @@ private[sources] class TsdReaderFactory(hadoopProps: Seq[(String, String)],
 }
 
 /** xData-mode reader: one row per surviving block, no sample decode —
-  * just the 4-byte timestamp check and an `xDataSize`-byte slice. */
+  * just the block's 8-byte head and an `xDataSize`-byte slice. */
 private[sources] class TsdXDataPartitionReader(c: TsdChunk,
     p: TsdInputPartition,
     hadoopProps: Seq[(String, String)]) extends PartitionReader[InternalRow] {
@@ -411,21 +414,23 @@ private[sources] class TsdXDataPartitionReader(c: TsdChunk,
   private val span = schema.blockIntervals.toLong * schema.intervalSec
   private var sector = c.startSector
   private var cur: InternalRow = null
-  // xdata-mode column pruning: project (block_epoch, sector, xdata)
-  private val xCols = p.cols.getOrElse(Seq("block_epoch", "sector", "xdata"))
+  // xdata-mode column pruning
+  private val xCols = p.cols.getOrElse(
+    TsdDataSource.XDataSchema.fieldNames.toSeq)
 
   override def next(): Boolean = {
     cur = null
-    while (cur == null && sector <= c.endSector && schema.xDataSize > 0) {
+    while (cur == null && sector <= c.endSector) {
       val off = ((sector - c.startSector) * BlockBuffer.BlockSize).toInt
-      val buf = java.util.Arrays.copyOfRange(
-        data, off, off + BlockBuffer.BlockSize)
-      val ts = BlockBuffer(buf).timestamp
+      val buf = BlockBuffer(java.util.Arrays.copyOfRange(
+        data, off, off + BlockBuffer.BlockSize))
+      val ts = buf.timestamp
       if (ts + span >= p.lo && ts <= p.hi)
         cur = InternalRow.fromSeq(xCols.map[Any] {
-          case "block_epoch" => ts
-          case "sector"      => sector
-          case "xdata"       => EtsdDecoder.blockXData(layout, buf)
+          case "block_epoch"     => ts
+          case "sector"          => sector
+          case "xdata"           => EtsdDecoder.blockXData(layout, buf.bytes)
+          case "valid_intervals" => buf.validIntervals
           case other => throw new IllegalArgumentException(
             s"unknown projected column '$other'")
         }.toIndexedSeq)

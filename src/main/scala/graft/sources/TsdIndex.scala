@@ -3,10 +3,11 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.codec.{BlockBuffer, HeaderCodec}
+import graft.model.EtsdSchema
 
 /** Per-file planning metadata for a directory of `.tsd` span files:
   * everything `TsdDataSource` needs to prune and split a file without
@@ -43,8 +44,7 @@ final case class TsdIndexEntry(
   * distributed job (one task per batch of files, probes run on
   * executors) and written as a sidecar the planner reads in a single
   * small-file read. The `_` prefix keeps it invisible to Spark's file
-  * sources (hidden-file convention), so `binaryFile` readers of the same
-  * directory never see it.
+  * sources (hidden-file convention), and [[isDataFile]] skips it.
   */
 object TsdIndex {
   val FileName = "_graft_index"
@@ -59,23 +59,33 @@ object TsdIndex {
     def reset(): Unit = { indexedFiles.set(0); probedFiles.set(0) }
   }
 
+  /** Whole data blocks in a file of `len` bytes: the blocks after the
+    * header, floored. The one length rule of every `.tsd` reader, so a
+    * partial trailing block (a torn write) is ignored by all of them. */
+  def dataBlocks(len: Long): Long = len / BlockBuffer.BlockSize - 1
+
   /** Is this a data file the planner should consider? (Skips hidden
     * `_`/`.` files — the sidecar itself, Hadoop markers — and anything
     * too short to hold a header plus one block.) */
   def isDataFile(f: FileStatus): Boolean =
-    f.isFile && f.getLen >= 2L * BlockBuffer.BlockSize &&
+    f.isFile && dataBlocks(f.getLen) >= 1 &&
       !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
 
+  /** The header block of an open `.tsd` file, decoded. */
+  private[sources] def readHeader(in: FSDataInputStream): EtsdSchema = {
+    val hdr = new Array[Byte](BlockBuffer.BlockSize)
+    in.readFully(0, hdr)
+    HeaderCodec.decode(hdr)
+  }
+
   /** Probe one file: header decode + first/last block-timestamp reads
-    * (3 x 512 B). Runs on an EXECUTOR when called from [[build]]. */
+    * (3 x 512 B). Runs on an EXECUTOR when called from [[probeDistributed]]. */
   def probe(fs: FileSystem, path: Path, len: Long,
             modTime: Long = 0L): TsdIndexEntry = {
-    val nBlocks = len / BlockBuffer.BlockSize - 1
+    val nBlocks = dataBlocks(len)
     val in = fs.open(path)
     try {
-      val hdr = new Array[Byte](BlockBuffer.BlockSize)
-      in.readFully(0, hdr)
-      val schema = HeaderCodec.decode(hdr)
+      val schema = readHeader(in)
       def tsAt(off: Long): Long = {
         val w = new Array[Byte](4)
         in.readFully(off, w)
@@ -254,7 +264,7 @@ object TsdIndex {
       // single-file load: one probe, via the job for uniformity. Same
       // min-length guard as isDataFile — a header-only file (fresh
       // `create`) plans zero blocks instead of probing past EOF.
-      if (st.getLen < 2L * BlockBuffer.BlockSize) return Seq.empty
+      if (dataBlocks(st.getLen) < 1) return Seq.empty
       PlanStats.probedFiles.addAndGet(1)
       return probeDistributed(spark,
         Seq((root.toString, st.getLen, st.getModificationTime)))

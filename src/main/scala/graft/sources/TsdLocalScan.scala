@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.codec.BlockBuffer
 import graft.model.EtsdSchema
 
 /** Driver-local reads of a `.tsd` selection the sidecar bounds to a few
@@ -57,15 +56,15 @@ object TsdLocalScan {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val st = fs.getFileStatus(root)
-    def dataBlocks(len: Long) = len / BlockBuffer.BlockSize - 1
     val (files, indexed) =
       if (!st.isDirectory)
-        (Seq((root, dataBlocks(st.getLen))).filter(_._2 >= 1), 0)
+        (Seq((root, TsdIndex.dataBlocks(st.getLen))).filter(_._2 >= 1), 0)
       else {
         val (hit, miss) = TsdIndex.listStore(fs, root)
         (hit.filter(_.overlaps(lo, hi))
           .map(e => (new Path(root, e.name), e.nBlocks)) ++
-          miss.map { case (n, len, _) => (new Path(root, n), dataBlocks(len)) },
+          miss.map { case (n, len, _) =>
+            (new Path(root, n), TsdIndex.dataBlocks(len)) },
           hit.size)
       }
     if (files.map(_._2).sum > MaxBlocks) None

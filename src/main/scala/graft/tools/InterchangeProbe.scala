@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft._
-import graft.sources.EtsdSource
 
 /** Cross-implementation interchange probe (diagnostics): decode a `.tsd`
   * file written by the REFERENCE implementation (its `edd` daemon +
@@ -20,7 +19,8 @@ object InterchangeProbe {
     if (args.length >= 2 && args(0) == "export") { // reverse direction:
       exportForReference(spark, args(1)); spark.stop(); return
     }
-    val df = EtsdSource.read(spark, path).cache()
+    def tsd = spark.read.format("graft.sources.TsdDataSource")
+    val df = tsd.load(path).cache()
     println("[probe] samples (deltas for counters), excluding registers:")
     df.filter(!$"is_register" && $"valid")
       .groupBy($"channel")
@@ -32,7 +32,7 @@ object InterchangeProbe {
     df.filter($"is_register").orderBy($"ts", $"channel")
       .collect().foreach(r => println(s"[probe] ${r.mkString("\t")}"))
     println("[probe] block count: " +
-      EtsdSource.blockTimestamps(spark, path).count())
+      tsd.option("xdata", "true").load(path).count())
     spark.stop()
   }
 

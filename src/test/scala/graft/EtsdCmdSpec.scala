@@ -35,13 +35,34 @@ class EtsdCmdSpec extends AnyFunSuite {
 
   test("examine prints geometry and per-channel flags") {
     val dir = writeTsd()
-    val size = Files.size(Paths.get(dir, "a.tsd"))
-    val out = EtsdCmd.examine(EtsdCmd.loadSchema(dir), size)
+    val out = EtsdCmd.examine(dir)
     assert(out.contains("interval 10s, 6 intervals/block, 2 data blocks"))
     assert(out.contains("Mains"))
     assert(out.contains("CR")) // counter + register flags
     assert(out.contains("src1:3")) // AuxTemp source byte
     assert(out.contains("GS")) // gauge + signed
+    assert(EtsdCmd.examine(dir + "/a.tsd") == out)
+  }
+
+  test("examine <dir> reports the whole store's block count") {
+    import org.apache.spark.sql.functions.timestamp_seconds
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // 30 intervals of 6-interval blocks, 2 blocks per file: 2 + 2 + 1
+    val t0 = 1700000040L // aligned to the 120 s file span
+    val rows = (0 until 30).flatMap { k =>
+      Seq((t0 + 10L * k, "Mains", 100L + k), (t0 + 10L * k, "AuxTemp", k.toLong))
+    }.toDF("te", "channel", "value")
+      .select(timestamp_seconds($"te").as("ts"), $"channel", $"value",
+        org.apache.spark.sql.functions.lit(true).as("valid"))
+    val dir = Files.createTempDirectory("cmd_store").toString
+    val written = graft.sources.EtsdSink.exportIndexed(rows, schema, dir,
+      blocksPerFile = 2).sortBy(_.name)
+    assert(written.map(_.nBlocks).toSeq == Seq(2L, 2L, 1L))
+    assert(EtsdCmd.examine(dir).contains(
+      "interval 10s, 6 intervals/block, 5 data blocks"))
+    assert(EtsdCmd.examine(s"$dir/${written.head.name}").contains(
+      "2 data blocks"))
   }
 
   test("dumpSector renders header and data blocks with bounds checks") {
@@ -103,7 +124,7 @@ class EtsdCmdSpec extends AnyFunSuite {
     val created = EtsdCmd.create(f, Seq("T=10s",
       "Mains:8:E1", "AuxTemp:4:E3:G:I"))
     // examine reads back what create wrote (header-only file: 0 blocks)
-    val out = EtsdCmd.examine(EtsdCmd.loadSchema(f), Files.size(Paths.get(f)))
+    val out = EtsdCmd.examine(f)
     assert(out.contains("interval 10s") && out.contains("0 data blocks"))
     assert(out.contains("Mains") && out.contains("CR"))
     assert(out.contains("AuxTemp") && out.contains("GS")) // gauge + signed

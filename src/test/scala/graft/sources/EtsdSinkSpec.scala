@@ -21,6 +21,9 @@ class EtsdSinkSpec extends AnyFunSuite {
   // 30 intervals land in exactly three span-aligned files
   private val t0 = 1700000040L
 
+  private def load(dir: String) =
+    spark.read.format("graft.sources.TsdDataSource").load(dir)
+
   private def longFrame(n: Int) = {
     import spark.implicits._
     (0 until n).flatMap { k =>
@@ -46,7 +49,7 @@ class EtsdSinkSpec extends AnyFunSuite {
       Seq(t0, t0 + 120L, t0 + 240L))
     assert(written.forall(_.blockSpanSec == 60L))
 
-    val back = EtsdSource.read(spark, dir).filter(!$"is_register").cache()
+    val back = load(dir).filter(!$"is_register").cache()
     // gauge round-trips with signed values; the invalid slot is null
     val temp = back.filter($"channel" === "Temp").orderBy("ts").collect()
     assert(temp.length == 30)
@@ -63,7 +66,7 @@ class EtsdSinkSpec extends AnyFunSuite {
       .forall(_._1.getLong(2) == 7L))
 
     // registers re-anchor from block 2 of each file
-    val regRows = EtsdSource.read(spark, dir).filter($"is_register").collect()
+    val regRows = load(dir).filter($"is_register").collect()
     assert(regRows.length == 5) // 2+2+1 blocks, one register slot each
 
     // idempotent rewrite: byte-identical second export
@@ -117,11 +120,15 @@ class EtsdSinkSpec extends AnyFunSuite {
     assert(got2.map(_._1).toSeq == blockEpochs.drop(1))
     assert(got2.head._2.toSeq == Seq[Byte](1, 2, 3, 1))
 
-    // a schema without an xData region exposes no side rows
+    // a schema without an xData region: one row per block, every xdata
+    // empty (the per-block table serves every schema)
     val plainDir = Files.createTempDirectory("noxdata").toString
     EtsdSink.exportIndexed(longFrame(6), schema, plainDir)
-    assert(spark.read.format("graft.sources.TsdDataSource")
-      .option("xdata", "true").load(plainDir).isEmpty)
+    val plain = spark.read.format("graft.sources.TsdDataSource")
+      .option("xdata", "true").load(plainDir)
+      .select($"block_epoch", $"xdata").as[(Long, Array[Byte])].collect()
+    assert(plain.map(_._1).toSeq == Seq(t0))
+    assert(plain.forall(_._2.isEmpty))
   }
 
   test("duplicate xData side rows resolve to the lexicographically smallest") {
@@ -215,7 +222,7 @@ class EtsdSinkSpec extends AnyFunSuite {
     // cutoff at the second span's start: only the first file goes
     val dropped = Retention.dropBlocksBefore(spark, dir, t0 + 120)
     assert(dropped.length == 1 && dropped.head.contains("etsd-001700000040"))
-    val left = graft.sources.EtsdSource.read(spark, dir)
+    val left = load(dir)
       .filter(!$"is_register").count()
     assert(left == 36) // (30 - 12 dropped intervals) x 2 channels
     assert(Retention.dropBlocksBefore(spark, dir, 0L).isEmpty) // no-op

@@ -3,16 +3,19 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.time.Instant
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.timestamp_seconds
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.codec.{EtsdEncoder, Reading}
+import graft.codec.{EtsdDecoder, EtsdEncoder, Reading}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.queries.EtsdQueryApi
 
 /** End-to-end: encode a deterministic series into a real .tsd file, read
-  * it back through the Spark source, and drive the etsdCmd-style query
-  * API over it with verb/time/channel strings. */
+  * it back through the DSv2 scan (checked against the codec's whole-file
+  * decode), and drive the etsdCmd-style query API over it with
+  * verb/time/channel strings. */
 class EtsdSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -35,8 +38,24 @@ class EtsdSourceSpec extends AnyFunSuite {
     dir
   }
 
-  test("EtsdSource.read decodes a .tsd file into the long DataFrame") {
-    val df = EtsdSource.read(spark, tsdPath).cache()
+  private def load(path: String): DataFrame =
+    spark.read.format("graft.sources.TsdDataSource").load(path)
+
+  /** The codec's whole-file decode of the store's one file, as the long
+    * frame: the oracle the scan is checked against. */
+  private def decoded(dir: String): DataFrame = {
+    import spark.implicits._
+    val (s, samples) = EtsdDecoder.decodeFile(
+      Files.readAllBytes(Paths.get(dir, "test.tsd")))
+    samples.map(x => (x.tsEpoch, s.channels(x.chan).name, x.value,
+        x.value.isDefined, x.isRegister))
+      .toDF("te", "channel", "value", "valid", "is_register")
+      .select(timestamp_seconds($"te").as("ts"), $"channel", $"value",
+        $"valid", $"is_register")
+  }
+
+  test("the DSv2 scan decodes a .tsd file into the long DataFrame") {
+    val df = load(tsdPath).cache()
     assert(df.columns.toSeq == Seq("ts", "channel", "value", "valid", "is_register"))
     val odo = df.filter("channel = 'OdoMain' AND NOT is_register")
       .orderBy("ts").collect()
@@ -53,7 +72,7 @@ class EtsdSourceSpec extends AnyFunSuite {
   }
 
   test("EtsdQueryApi: verb substring, channel substring, time literals") {
-    val df = EtsdSource.read(spark, tsdPath)
+    val df = load(tsdPath)
     val now = Instant.ofEpochSecond(t0 + n * 10L)
 
     def one(args: String*): (Long, Double) = {
@@ -77,12 +96,15 @@ class EtsdSourceSpec extends AnyFunSuite {
     assert(one("q=ave", "c=temp")._2 == (8 * -5.0 + 7 * 20.0) / 15)
   }
 
-  test("blockTimestamps probes the per-sector time index (etsdTimeS)") {
-    val idx = EtsdSource.blockTimestamps(spark, tsdPath)
+  test("the xdata table is the per-sector time index (etsdTimeS)") {
+    val idx = spark.read.format("graft.sources.TsdDataSource")
+      .option("xdata", "true").load(tsdPath)
+      .select("sector", "block_epoch", "valid_intervals", "xdata")
       .orderBy("sector").collect()
-    assert(idx.map(_.getInt(1)).toSeq == Seq(1, 2, 3))
-    assert(idx.map(_.getLong(2)).toSeq == Seq(t0, t0 + 60L, t0 + 120L))
-    assert(idx.map(_.getInt(3)).toSeq == Seq(6, 6, 3)) // last block short
+    assert(idx.map(_.getLong(0)).toSeq == Seq(1, 2, 3))
+    assert(idx.map(_.getLong(1)).toSeq == Seq(t0, t0 + 60L, t0 + 120L))
+    assert(idx.map(_.getInt(2)).toSeq == Seq(6, 6, 3)) // last block short
+    assert(idx.forall(_.getAs[Array[Byte]](3).isEmpty)) // no xData region
   }
 
   test("EtsdQueryApi reports an empty file instead of an opaque NPE") {
@@ -97,7 +119,7 @@ class EtsdSourceSpec extends AnyFunSuite {
   }
 
   test("EtsdQueryApi rejects unknown channels and bad args") {
-    val df = EtsdSource.read(spark, tsdPath)
+    val df = load(tsdPath)
     val now = Instant.ofEpochSecond(t0)
     intercept[IllegalArgumentException](
       EtsdQueryApi.query(df, schema, Seq("c=nope"), now))
@@ -105,11 +127,11 @@ class EtsdSourceSpec extends AnyFunSuite {
       EtsdQueryApi.query(df, schema, Seq("zz"), now))
   }
 
-  test("DSv2 reader: same rows as v1, ts range pushed to block pruning") {
+  test("DSv2 reader: same rows as decodeFile, ts range pushed to block pruning") {
     import spark.implicits._
     val dir = tsdPath
-    val v2 = spark.read.format("graft.sources.TsdDataSource").load(dir)
-    val v1 = EtsdSource.read(spark, dir)
+    val v2 = load(dir)
+    val v1 = decoded(dir)
     // identical multisets of rows
     assert(v2.count() == v1.count())
     assert(v2.exceptAll(v1).isEmpty && v1.exceptAll(v2).isEmpty)
@@ -131,10 +153,11 @@ class EtsdSourceSpec extends AnyFunSuite {
   }
 
   test("DSv2 reader splits one file into sector-range partitions") {
+    val dir = tsdPath
     val v2 = spark.read.format("graft.sources.TsdDataSource")
-      .option("blocksPerPartition", 1).load(tsdPath)
+      .option("blocksPerPartition", 1).load(dir)
     assert(v2.rdd.getNumPartitions == 3) // 3 blocks -> 3 partitions
-    assert(v2.count() == EtsdSource.read(spark, tsdPath).count())
+    assert(v2.count() == decoded(dir).count())
   }
 
   test("DSv2 channel pushdown: decode skips non-selected channels") {
@@ -197,7 +220,7 @@ class EtsdSourceSpec extends AnyFunSuite {
   }
 
   test("wide pivots the long form to one column per channel") {
-    val long = EtsdSource.read(spark, tsdPath)
+    val long = load(tsdPath)
     val w = EtsdSource.wide(long, schema).collect()
     assert(EtsdSource.wide(long, schema).columns.toSeq ==
       Seq("ts", "OdoMain", "TempC"))
@@ -209,7 +232,7 @@ class EtsdSourceSpec extends AnyFunSuite {
   }
 
   test("wide(globalSort=false): same rows, no extra exchange for the sort") {
-    val long = EtsdSource.read(spark, tsdPath)
+    val long = load(tsdPath)
     val sorted = EtsdSource.wide(long, schema)
     val local = EtsdSource.wide(long, schema, globalSort = false)
     // value parity as a multiset — only the cross-partition order differs
@@ -229,6 +252,19 @@ class EtsdSourceSpec extends AnyFunSuite {
         Iterator.single(ts == ts.sorted)
       }.collect()
     assert(ok.forall(identity))
+  }
+
+  test("TsdDataSource is the one .tsd reader: binaryFile only feeds the ECM spool stream") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(sys.props("user.dir"), "src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found")
+    val files = Files.walk(root)
+    val readers = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => Files.readString(f).contains("format(\"binaryFile\")"))
+      .map(_.getFileName.toString).toList
+    finally files.close()
+    assert(readers == Seq("Edd.scala"))
   }
 
   test("roundTripHourlyBlocks is the identity on present buckets") {

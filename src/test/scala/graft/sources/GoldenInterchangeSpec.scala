@@ -18,6 +18,7 @@ import graft.model.StreamType
 class GoldenInterchangeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val path = getClass.getResource("/reference-written.tsd").getPath
+  private def tsd = spark.read.format("graft.sources.TsdDataSource")
 
   test("header schema decodes to the created channel catalog") {
     val schema = graft.EtsdCmd.loadSchema(path)
@@ -34,7 +35,7 @@ class GoldenInterchangeSpec extends AnyFunSuite {
 
   test("sample stats match the reference CLI's own min/max answers") {
     import spark.implicits._
-    val df = EtsdSource.read(spark, path).cache()
+    val df = tsd.load(path).cache()
     val stats = df.filter(!$"is_register" && $"valid")
       .groupBy($"channel")
       .agg(org.apache.spark.sql.functions.count($"value").as("n"),
@@ -54,7 +55,7 @@ class GoldenInterchangeSpec extends AnyFunSuite {
 
   test("registers expose the reference's stale-data bug verbatim") {
     import spark.implicits._
-    val regs = EtsdSource.read(spark, path).filter($"is_register")
+    val regs = tsd.load(path).filter($"is_register")
       .select($"channel", $"value").as[(String, Long)].collect()
     assert(regs.length == 15) // 3 blocks x 5 counter registers
     // every register in a block carries the SAME value — the last-read
@@ -64,14 +65,15 @@ class GoldenInterchangeSpec extends AnyFunSuite {
   }
 
   test("block index: 3 wall-clock-stamped blocks, last one short") {
-    val idx = EtsdSource.blockTimestamps(spark, path)
+    val idx = tsd.option("xdata", "true").load(path)
+      .select("sector", "block_epoch", "valid_intervals")
       .orderBy("sector").collect()
-    assert(idx.map(_.getInt(1)).toSeq == Seq(1, 2, 3))
-    val ts = idx.map(_.getLong(2))
+    assert(idx.map(_.getLong(0)).toSeq == Seq(1, 2, 3))
+    val ts = idx.map(_.getLong(1))
     // 44 s, not 88: the reference daemon sleeps `intervalTime -
     // checkTime/2` (edd.c:300-311) = 1 s here, so its real cadence was
     // half the header's 2 s interval — timestamps record wall clock
     assert(ts(1) - ts(0) == 44 && ts(2) - ts(1) == 44)
-    assert(idx.map(_.getInt(3)).toSeq == Seq(44, 44, 11)) // last short
+    assert(idx.map(_.getInt(2)).toSeq == Seq(44, 44, 11)) // last short
   }
 }

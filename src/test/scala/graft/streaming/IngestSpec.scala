@@ -103,7 +103,8 @@ class IngestSpec extends AnyFunSuite {
     mem.addData(0L to 11L: _*)
     q.processAllAvailable()
     q.stop()
-    val back = graft.sources.EtsdSource.read(spark, out).filter(!$"is_register")
+    val back = spark.read.format("graft.sources.TsdDataSource").load(out)
+      .filter(!$"is_register")
       .orderBy("ts").collect()
     assert(back.length == 12)
     assert(back.map(_.getLong(2)).toSeq ==
