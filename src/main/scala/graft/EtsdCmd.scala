@@ -11,14 +11,19 @@ import org.apache.hadoop.fs.{Path => HPath}
 import graft.codec.{BlockBuffer, HeaderCodec, Layout}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.queries.EtsdQueryApi
-import graft.sources.TsdIndex
+import graft.sources.{HadoopConfs, TsdIndex}
 
 /** CLI entry point mirroring the reference's `etsdCmd` verbs
   * (usage etsdCmd.c:457-461; dispatch etsdCmd.c:618-663):
   *
   *   - `query <path> [q=tot|ave|min|max] [c=chan] [s=start] [e=end]` —
   *     the analytical path (`queryETSD`, etsdCmd.c:333-461), driven
-  *     through [[graft.queries.EtsdQueryApi]] over the Spark long frame.
+  *     through [[graft.queries.EtsdQueryApi]]. A selection the sidecar
+  *     bounds to [[graft.sources.TsdLocalScan.MaxBlocks]] blocks (a point
+  *     query) is read and folded in this process with no Spark session,
+  *     like the reference's seek-and-read of a few blocks; anything
+  *     larger starts a session and runs the distributed plan over the
+  *     Spark long frame. Both print the same lines.
   *   - `examine <path>` — schema pretty-print (`examinETSD`,
   *     etsdCmd.c:549-613): per-channel type/flags + block geometry.
   *   - `dump <path> [sector]` — block hex dump (`dumpETSD` + `LogBlock`,
@@ -30,9 +35,8 @@ import graft.sources.TsdIndex
   * so specs golden-test it without capturing stdout. */
 object EtsdCmd {
 
-  /** First .tsd file under `path` (or `path` itself), for header reads.
-    * Spark reads take the path/glob as-is; header-only verbs need one
-    * concrete file — schema is immutable per file (etsdSave.c:80-99). */
+  /** First .tsd file under `path` (or `path` itself), for the dump
+    * verbs: they need one concrete local file. */
   private def firstFile(path: String): Path = {
     val p = Paths.get(path)
     if (Files.isDirectory(p)) {
@@ -44,19 +48,21 @@ object EtsdCmd {
     } else p
   }
 
-  def loadSchema(path: String): EtsdSchema = {
-    val header = new Array[Byte](BlockBuffer.BlockSize)
-    val in = Files.newInputStream(firstFile(path))
-    try {
-      var off = 0
-      var n = 0
-      while (off < header.length && n >= 0) {
-        n = in.read(header, off, header.length - off)
-        if (n > 0) off += n
-      }
-      require(off == header.length, s"short header read ($off bytes)")
-    } finally in.close()
-    HeaderCodec.decode(header)
+  /** The header schema of the first .tsd file under `path` (or `path`
+    * itself) — schema is immutable per file (etsdSave.c:80-99). Read
+    * through Hadoop with `conf`, so `path` may name any file system the
+    * scan can read. */
+  def loadSchema(path: String,
+                 conf: Configuration = HadoopConfs.standalone()): EtsdSchema = {
+    val root = new HPath(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(root).isDirectory) root
+      else fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".tsd"))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(s"no .tsd files in $path"))
+    val in = fs.open(file)
+    try TsdIndex.readHeader(in) finally in.close()
   }
 
   /** One `Name:Type[:E<n>|:M<n>][:flags]` channel spec (createETSD,
@@ -205,7 +211,7 @@ object EtsdCmd {
   def examine(path: String): String = {
     val schema = loadSchema(path)
     val root = new HPath(path)
-    val fs = root.getFileSystem(new Configuration())
+    val fs = root.getFileSystem(HadoopConfs.standalone())
     val st = fs.getFileStatus(root)
     val files =
       if (st.isDirectory) fs.listStatus(root).filter(TsdIndex.isDataFile).toSeq
@@ -286,6 +292,10 @@ object EtsdCmd {
     }
   }
 
+  /** One line of `query` output: `channel\tn\tresult`. */
+  def queryLine(channel: String, n: Long, result: Double): String =
+    s"$channel\t$n\t$result"
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: EtsdCmd create|query|examine|dump <path> [args]")
@@ -301,20 +311,23 @@ object EtsdCmd {
         println(createSummary(schema))
         rrd.foreach(r => println(rrdCreateString(schema, r)))
       case 'q' =>
-        val spark = GraftSession("etsdCmd")
-        try {
-          val schema = loadSchema(path)
-          // DSv2 scan: plans from the _graft_index sidecar (or one
-          // distributed probe job) and pushes the channel + time range
-          // into the block decode — the CLI stays O(selected data) on a
-          // many-file layout, like the reference's etsdFindBlock seek.
-          // A selection the sidecar bounds to a few blocks is answered on
-          // the driver with no job at all (EtsdQueryApi's driver-local rule)
-          val df = spark.read.format("graft.sources.TsdDataSource").load(path)
-          EtsdQueryApi.query(df, schema, rest, Instant.now())
-            .orderBy("channel").collect()
-            .foreach(r => println(s"${r.getString(0)}\t${r.getLong(1)}\t${r.getDouble(2)}"))
-        } finally spark.stop()
+        val now = Instant.now()
+        val conf = HadoopConfs.standalone()
+        val schema = loadSchema(path, conf)
+        // a selection the sidecar bounds to a few blocks is answered here
+        // with no session; bad arguments fail before one is built
+        EtsdQueryApi.answer(conf, path, schema, rest, now).getOrElse {
+          val spark = GraftSession("etsdCmd")
+          try {
+            // DSv2 scan: plans from the _graft_index sidecar (or one
+            // distributed probe job) and pushes the channel + time range
+            // into the block decode — the CLI stays O(selected data) on a
+            // many-file layout, like the reference's etsdFindBlock seek
+            val df = spark.read.format("graft.sources.TsdDataSource").load(path)
+            EtsdQueryApi.query(df, schema, rest, now).orderBy("channel")
+              .collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+          } finally spark.stop()
+        }.foreach { case (c, n, r) => println(queryLine(c, n, r)) }
       case 'e' =>
         println(examine(path))
       case 'd' =>

@@ -4,6 +4,7 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -33,7 +34,12 @@ import graft.sources.TsdLocalScan
   * seek-a-few-blocks cost. The bound is a constant so that driver work
   * stays O(1) in store size; anything else (a filtered frame, a fleet, a
   * longer window) takes the distributed aggregate, with the same rows
-  * and schema either way. */
+  * and schema either way. The local answer is one Spark-free core over
+  * `(path, Configuration)`: [[query]] reaches it through the load's path
+  * and the session's Hadoop configuration, and the cold `EtsdCmd query`
+  * calls it as [[answer]] before it builds any session. With `s=` missing
+  * or naming `begin`, the core reads `begin` itself when the whole store
+  * is within the bound, and otherwise leaves it to one aggregate job. */
 object EtsdQueryApi {
 
   /** Schema of every [[query]] result, local or distributed. */
@@ -60,6 +66,80 @@ object EtsdQueryApi {
     a
   }
 
+  /** A parsed, checked query: the AMT verb, the resolved channel name and
+    * the time literals, whose window may still wait on `begin`. */
+  private final case class Resolved(verb: String, chan: Option[String],
+      start: Option[String], end: Option[String], now: Instant) {
+    /** Does the window need the first stored sample (`s=` missing or
+      * naming `begin`)? */
+    def needsBegin: Boolean = {
+      def begins(lit: String) = lit.toLowerCase.contains("begin")
+      start.forall(begins) || end.exists(begins)
+    }
+
+    /** `[start, end]` in epoch seconds, `begin` the first stored sample's
+      * (read only when [[needsBegin]]). Defaults: `end=now`, `start=begin`
+      * (etsdCmd.c:449-454). */
+    def window(begin: Long): (Long, Long) = {
+      def epoch(lit: String) =
+        TimeLiterals.parseTimeEpoch(lit, now, Instant.ofEpochSecond(begin))
+      (start.fold(begin)(epoch), end.fold(now.getEpochSecond)(epoch))
+    }
+
+    /** The distributed aggregate's arithmetic: sum as a long, cast, then
+      * divided by the count as a double. */
+    def result(f: TsdLocalScan.ChannelFold): Double = verb match {
+      case "min" => f.min.toDouble
+      case "max" => f.max.toDouble
+      case "ave" => f.sum.toDouble / f.n
+      case _     => f.sum.toDouble
+    }
+  }
+
+  /** Parse and check `rawArgs` against `schema` before any data is read:
+    * a bad argument, an unknown channel or a bad time literal raises
+    * IllegalArgumentException here. */
+  private def resolve(schema: EtsdSchema, rawArgs: Seq[String],
+                      now: Instant): Resolved = {
+    val a = parse(rawArgs)
+    val chanName = a.chan.map { c =>
+      // number or name, like the reference CLI (etsdCmd.c:429-438):
+      // all-digits → channel index, else case-insensitive substring
+      val cfg =
+        if (c.nonEmpty && c.forall(_.isDigit))
+          // toIntOption: a 10+-digit numeral overflows Int — fall through
+          // to the uniform channel-not-found error, not NumberFormatException
+          c.toIntOption.flatMap(schema.channels.lift)
+        else schema.channel(c)
+      cfg.getOrElse(
+        throw new IllegalArgumentException(s"channel '$c' not found")).name
+    }
+    val q = Resolved(TimeSeriesOps.amtVerb(a.verb), chanName, a.start, a.end, now)
+    q.window(0L) // parses every literal
+    q
+  }
+
+  /** The answer core: `(channel, n, result)` rows in channel order, read
+    * and folded in this process by [[TsdLocalScan]] with no Spark job or
+    * session — or None when the sidecar does not bound the selection to
+    * [[TsdLocalScan.MaxBlocks]] blocks, or `begin` yields None. */
+  private def local(conf: Configuration, path: String, q: Resolved,
+                    begin: => Option[Long]): Option[Seq[(String, Long, Double)]] =
+    (if (q.needsBegin) begin else Some(0L)).flatMap { b =>
+      val (lo, hi) = q.window(b)
+      TsdLocalScan.fold(conf, path, lo, hi, q.chan)
+    }.map(_.map(f => (f.channel, f.n, q.result(f))))
+
+  /** [[query]]'s rows for the bare `.tsd` store at `path`, with no Spark
+    * session: the cold `EtsdCmd query`. None when the local rule declines
+    * (the selection is over [[TsdLocalScan.MaxBlocks]] blocks, or `begin`
+    * is needed and the whole store is); the caller then runs [[query]]
+    * over a session, which takes the distributed plan. Bad arguments
+    * raise IllegalArgumentException either way. */
+  def answer(conf: Configuration, path: String, schema: EtsdSchema,
+             rawArgs: Seq[String], now: Instant): Option[Seq[(String, Long, Double)]] =
+    local(conf, path, resolve(schema, rawArgs, now), TsdLocalScan.firstTs(conf, path))
+
   /** Run an AMT-family query. `df` is the long DataFrame (`ts, channel,
     * value, valid, is_register`); `now` injected for determinism. Output:
     * one row per matched channel: (channel, n, result). */
@@ -75,53 +155,29 @@ object EtsdQueryApi {
 
   private def run(df: DataFrame, schema: EtsdSchema, rawArgs: Seq[String],
                   now: Instant, driverLocal: Boolean): DataFrame = {
-    val a = parse(rawArgs)
-    val verb = TimeSeriesOps.amtVerb(a.verb)
-
-    val chanName = a.chan.map { c =>
-      // number or name, like the reference CLI (etsdCmd.c:429-438):
-      // all-digits → channel index, else case-insensitive substring
-      val cfg =
-        if (c.nonEmpty && c.forall(_.isDigit))
-          // toIntOption: a 10+-digit numeral overflows Int — fall through
-          // to the uniform channel-not-found error, not NumberFormatException
-          c.toIntOption.flatMap(schema.channels.lift)
-        else schema.channel(c)
-      cfg.getOrElse(
-        throw new IllegalArgumentException(s"channel '$c' not found")).name
-    }
+    val q = resolve(schema, rawArgs, now)
 
     // `begin` = first stored sample (reference seeks block 1,
     // etsdQuery.c:259-261) — one scalar agg, evaluated only when used
-    lazy val begin: Instant = {
+    lazy val begin: Long = {
       val r = df.agg(min(unix_timestamp($"ts"))).head()
       if (r.isNullAt(0)) // empty file: the reference's read error path
         throw new IllegalArgumentException("no data blocks in file")
-      Instant.ofEpochSecond(r.getLong(0))
+      r.getLong(0)
     }
-    def epoch(lit: String): Long = {
-      val b = if (lit.toLowerCase.contains("begin")) begin
-              else Instant.EPOCH // unused unless 'begin' appears
-      TimeLiterals.parseTimeEpoch(lit, now, b)
-    }
-    val startE = a.start.map(epoch).getOrElse(begin.getEpochSecond)
-    val endE = a.end.map(epoch).getOrElse(now.getEpochSecond)
 
-    val local =
-      if (driverLocal) TsdLocalScan.fold(df, startE, endE, chanName) else None
-    local.fold(distributed(df, verb, chanName, startE, endE)) { folds =>
-      val rows = folds.map { f =>
-        // the distributed aggregate's arithmetic: sum as a long, cast,
-        // then divided by the count as a double
-        val r = verb match {
-          case "min" => f.min.toDouble
-          case "max" => f.max.toDouble
-          case "ave" => f.sum.toDouble / f.n
-          case _     => f.sum.toDouble
-        }
-        Row(f.channel, f.n, r)
-      }
-      df.sparkSession.createDataFrame(rows.asJava, ResultSchema)
+    // a bare load takes the answer core; a store over MaxBlocks blocks
+    // resolves `begin` with the aggregate above, as the distributed plan
+    val rows = if (!driverLocal) None else TsdLocalScan.barePath(df).flatMap { path =>
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      local(conf, path, q, TsdLocalScan.firstTs(conf, path).orElse(Some(begin)))
+    }
+    rows.fold {
+      val (lo, hi) = q.window(if (q.needsBegin) begin else 0L)
+      distributed(df, q.verb, q.chan, lo, hi)
+    } { rs =>
+      df.sparkSession.createDataFrame(
+        rs.map { case (c, n, r) => Row(c, n, r) }.asJava, ResultSchema)
     }
   }
 

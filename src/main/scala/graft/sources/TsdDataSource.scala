@@ -4,6 +4,7 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -44,8 +45,9 @@ import graft.model.EtsdSchema
   * `EtsdQueryApi.query` over a bare load of this source skips the scan
   * when the sidecar prunes the selection to at most
   * [[TsdLocalScan.MaxBlocks]] (1,024) blocks: [[TsdLocalScan]] reads those
-  * files on the driver with the same partition reader. The bound is a
-  * constant so that driver work stays O(1) in store size.
+  * files on the driver with the same partition reader, and a cold
+  * `EtsdCmd query` reads them the same way before it builds any session.
+  * The bound is a constant so that driver work stays O(1) in store size.
   */
 class TsdDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -197,9 +199,9 @@ private[sources] case class TsdChunk(file: String, startSector: Long,
 
   /** The file's header schema and this chunk's whole sector range, read
     * with ONE positioned `readFully` (see [[TsdPartitionReader]]). */
-  def read(hadoopProps: Seq[(String, String)]): (EtsdSchema, Array[Byte]) = {
+  def read(conf: Configuration): (EtsdSchema, Array[Byte]) = {
     val p = new Path(file)
-    val in = p.getFileSystem(HadoopConfs.build(hadoopProps)).open(p)
+    val in = p.getFileSystem(conf).open(p)
     try {
       val schema = TsdIndex.readHeader(in)
       val data = new Array[Byte](nBlocks.toInt * BlockBuffer.BlockSize)
@@ -376,10 +378,11 @@ private[sources] class TsdReaderFactory(hadoopProps: Seq[(String, String)],
   /** Sequentially drains one per-chunk reader after another — the
     * many-small-files partition shape from [[TsdPacking.pack]]. Chunk
     * readers are constructed LAZILY so a partition of N files holds one
-    * open buffer at a time, not N. */
+    * open buffer at a time, not N; they share one Hadoop configuration. */
   override def createReader(ip: InputPartition): PartitionReader[InternalRow] = {
     val p = ip.asInstanceOf[TsdInputPartition]
     new PartitionReader[InternalRow] {
+      private lazy val conf = HadoopConfs.build(hadoopProps)
       private val it = p.chunks.iterator
       private var cur: PartitionReader[InternalRow] = null
       override def next(): Boolean = {
@@ -387,8 +390,8 @@ private[sources] class TsdReaderFactory(hadoopProps: Seq[(String, String)],
           if (cur == null) {
             if (!it.hasNext) return false
             cur =
-              if (xdata) new TsdXDataPartitionReader(it.next(), p, hadoopProps)
-              else new TsdPartitionReader(it.next(), p, hadoopProps)
+              if (xdata) new TsdXDataPartitionReader(it.next(), p, conf)
+              else new TsdPartitionReader(it.next(), p, conf)
           }
           if (cur.next()) return true
           cur.close(); cur = null
@@ -405,10 +408,10 @@ private[sources] class TsdReaderFactory(hadoopProps: Seq[(String, String)],
   * just the block's 8-byte head and an `xDataSize`-byte slice. */
 private[sources] class TsdXDataPartitionReader(c: TsdChunk,
     p: TsdInputPartition,
-    hadoopProps: Seq[(String, String)]) extends PartitionReader[InternalRow] {
+    conf: Configuration) extends PartitionReader[InternalRow] {
   private var data: Array[Byte] = _ // whole chunk sector range, one read
   private val schema: EtsdSchema = {
-    val (s, d) = c.read(hadoopProps); data = d; s
+    val (s, d) = c.read(conf); data = d; s
   }
   private val layout = new graft.codec.Layout(schema)
   private val span = schema.blockIntervals.toLong * schema.intervalSec
@@ -459,11 +462,11 @@ private[sources] class TsdXDataPartitionReader(c: TsdChunk,
   */
 private[sources] class TsdPartitionReader(chunk: TsdChunk,
     p: TsdInputPartition,
-    hadoopProps: Seq[(String, String)]) extends PartitionReader[InternalRow] {
+    conf: Configuration) extends PartitionReader[InternalRow] {
   import graft.codec.{BlockCodec, Layout, SignedCodec}
   private var data: Array[Byte] = _ // whole chunk sector range, one read
   private val schema: EtsdSchema = {
-    val (s, d) = chunk.read(hadoopProps); data = d; s
+    val (s, d) = chunk.read(conf); data = d; s
   }
   private val layout = new Layout(schema)
   private val codec = new BlockCodec(layout)

@@ -72,7 +72,7 @@ object TsdIndex {
       !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
 
   /** The header block of an open `.tsd` file, decoded. */
-  private[sources] def readHeader(in: FSDataInputStream): EtsdSchema = {
+  private[graft] def readHeader(in: FSDataInputStream): EtsdSchema = {
     val hdr = new Array[Byte](BlockBuffer.BlockSize)
     in.readFully(0, hdr)
     HeaderCodec.decode(hdr)

@@ -180,6 +180,31 @@ class EtsdCmdSpec extends AnyFunSuite {
       EtsdCmd.parseIntervalSec("45") == 45)
   }
 
+  test("query fails fast on bad arguments, before any session is built") {
+    // each raises in the argument check; a session built here would be
+    // the shared test session, stopped by the verb on its way out
+    val dir = writeTsd()
+    Seq(Seq("c=nope") -> "channel 'nope' not found",
+        Seq("q=tot", "x=1") -> "bad query arg 'x=1'",
+        Seq("s=soon") -> "soon",
+        Seq("s=begin", "e=now-4q") -> "now-4q").foreach { case (args, msg) =>
+      val e = intercept[IllegalArgumentException](
+        EtsdCmd.main(Array("query", dir) ++ args))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    assert(!TestSpark.spark.sparkContext.isStopped)
+  }
+
+  test("query on a store with no data blocks raises the reference's read error") {
+    val f = Files.createTempDirectory("cmd_empty").resolve("empty.tsd").toString
+    EtsdCmd.create(f, Seq("T=10s", "Mains:8:E1"))
+    Seq(Seq("q=tot"), Seq("s=begin+1h", "e=now")).foreach { args =>
+      val e = intercept[IllegalArgumentException](
+        EtsdCmd.main(Array("query", f) ++ args))
+      assert(e.getMessage == "no data blocks in file")
+    }
+  }
+
   test("main dispatches on first letter like etsdCmd.c:618-663") {
     val dir = writeTsd()
     EtsdCmd.main(Array("examine", dir)) // prints; must not throw

@@ -6,15 +6,18 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{EtsdCmd, TestSpark}
 import graft.codec.GenDriven
 import graft.operators.TimeSeriesOps
+import graft.sources.HadoopConfs
 
 /** Exactness of the driver-local `EtsdQueryApi.query` answer: over random
   * windows of 0-6 blocks (empty, before the first and after the last
   * block included), every verb and every way of naming a channel, it must
   * equal both the distributed plan of the same query and a whole-file
-  * decode — on a fresh, missing and stale sidecar and a single-file load. */
+  * decode — on a fresh, missing and stale sidecar and a single-file load.
+  * The cold CLI's lines, from the Spark-free core with no session, must
+  * print those same answers, `begin` defaults included. */
 class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
   import LocalQueryStores._
 
@@ -44,18 +47,40 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
       val args = Seq(s"q=$verb", s"s=${iso(lo)}",
         if (hi % 2 == 0) s"e=${iso(hi)}" else s"e=now-${now.getEpochSecond - hi}s") ++
         chan.map("c=" + _)
-      val df = load(spark, path)
-      val local = EtsdQueryApi.query(df, mixedSchema, args, now)
-      val dist = EtsdQueryApi.queryDistributed(df, mixedSchema, args, now)
-      assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
-        s"$args on $path must be answered on the driver")
-      assert(local.schema == dist.schema)
-      val want = oracle(path, TimeSeriesOps.amtVerb(verb), chan.map(resolved),
-        lo, hi)
-      val got = answer(local)
-      assert(got == answer(dist), s"$args on $path: local vs distributed")
-      assert(got == want, s"$args on $path: local vs whole-file decode")
+      agree(path, args, verb, chan, lo, hi)
     }
+
+  /** `args` on `path`: the in-process local answer, the distributed plan,
+    * the cold CLI's printed lines and the whole-file decode of `[lo, hi]`
+    * all agree. */
+  private def agree(path: String, args: Seq[String], verb: String,
+                    chan: Option[String], lo: Long, hi: Long): Unit = {
+    val df = load(spark, path)
+    val local = EtsdQueryApi.query(df, mixedSchema, args, now)
+    val dist = EtsdQueryApi.queryDistributed(df, mixedSchema, args, now)
+    assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      s"$args on $path must be answered on the driver")
+    assert(local.schema == dist.schema)
+    val want = oracle(path, TimeSeriesOps.amtVerb(verb), chan.map(resolved),
+      lo, hi)
+    val got = answer(local)
+    assert(got == answer(dist), s"$args on $path: local vs distributed")
+    assert(got == want, s"$args on $path: local vs whole-file decode")
+    assert(cliLines(path, args) == lines(answer(dist)),
+      s"$args on $path: CLI lines vs distributed")
+  }
+
+  /** The cold CLI's stdout for `args`, from the answer core alone. */
+  private def cliLines(path: String, args: Seq[String]): Seq[String] = {
+    val conf = HadoopConfs.standalone()
+    val rows = EtsdQueryApi.answer(conf, path, EtsdCmd.loadSchema(path, conf),
+      args, now)
+    assert(rows.isDefined, s"$args on $path must need no session")
+    rows.get.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) }
+  }
+
+  private def lines(a: Map[String, (Long, Double)]): Seq[String] =
+    a.toSeq.sortBy(_._1).map { case (c, (n, r)) => EtsdCmd.queryLine(c, n, r) }
 
   /** Channel argument -> schema name, as the CLI resolves it. */
   private def resolved(c: String): String =
@@ -93,5 +118,28 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
 
   test("single-file load: local == distributed == whole-file decode") {
     check(tsdFiles(store)(1).toString, 25)
+  }
+
+  test("begin defaults: resolved in the core on a store within MaxBlocks") {
+    Seq(store, withoutSidecar(store), tsdFiles(store)(1).toString).foreach { path =>
+      // `min(ts)` over every row: registers and invalid samples count
+      val files =
+        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path))) tsdFiles(path)
+        else Seq(java.nio.file.Paths.get(path))
+      val begin = files.flatMap(f => graft.codec.EtsdDecoder.decodeFile(
+        java.nio.file.Files.readAllBytes(f))._2).map(_.tsEpoch).min
+      Seq(
+        (Seq("q=tot"), begin, now.getEpochSecond),
+        (Seq("q=ave", "c=temp", "e=begin+25m"), begin, begin + 1500L),
+        (Seq("q=max", "s=begin+7m", s"e=${iso(begin + 3600L)}"),
+          begin + 420L, begin + 3600L),
+        (Seq("q=min", "c=1", "s=begin-1h", "e=begin+90s"),
+          begin - 3600L, begin + 90L)
+      ).foreach { case (args, lo, hi) =>
+        val verb = args.head.stripPrefix("q=")
+        val chan = args.find(_.startsWith("c=")).map(_.stripPrefix("c="))
+        agree(path, args, verb, chan, lo, hi)
+      }
+    }
   }
 }
