@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.time.Instant
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
@@ -11,7 +9,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import graft.codec.{BlockBuffer, HeaderCodec, Layout}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.queries.EtsdQueryApi
-import graft.sources.{HadoopConfs, TsdIndex}
+import graft.sources.{HadoopConfs, TsdIndex, TsdStore}
 
 /** CLI entry point mirroring the reference's `etsdCmd` verbs
   * (usage etsdCmd.c:457-461; dispatch etsdCmd.c:618-663):
@@ -30,40 +28,31 @@ import graft.sources.{HadoopConfs, TsdIndex}
   *     etsdCmd.c:465-547, errorlog.c:139-183), non-interactive: one
   *     sector per call instead of N/P/Q keys.
   *
+  * Every verb reads the files `path` names by the one rule of
+  * [[graft.sources.TsdIndex.listStore]] (rotated `name.<epoch>` files
+  * included), through Hadoop with [[graft.sources.HadoopConfs.standalone]].
+  * `dump` shows the schema file; a header-only store from `create`
+  * examines as 0 data blocks and its `query` raises "no data blocks in
+  * file". A `query` lists its store once.
+  *
   * The create path is [[graft.codec.EtsdEncoder]]; rotation/commit live
   * in [[graft.streaming.Ingest]]. Formatting is pure (string-returning)
   * so specs golden-test it without capturing stdout. */
 object EtsdCmd {
 
-  /** First .tsd file under `path` (or `path` itself), for the dump
-    * verbs: they need one concrete local file. */
-  private def firstFile(path: String): Path = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .filter(_.toString.endsWith(".tsd")).toSeq.sorted.headOption
-        .getOrElse(throw new IllegalArgumentException(s"no .tsd files in $path"))
-      finally s.close()
-    } else p
+  /** The store `path` names, listed once through `conf`, so `path` may
+    * name any file system the scan can read. */
+  private[graft] def openStore(path: String,
+      conf: Configuration = HadoopConfs.standalone()): TsdStore = {
+    val root = new HPath(path)
+    TsdIndex.listStore(root.getFileSystem(conf), root)
   }
 
-  /** The header schema of the first .tsd file under `path` (or `path`
-    * itself) — schema is immutable per file (etsdSave.c:80-99). Read
-    * through Hadoop with `conf`, so `path` may name any file system the
-    * scan can read. */
+  /** The header schema of the store `path` names — schema is immutable
+    * per file (etsdSave.c:80-99). */
   def loadSchema(path: String,
-                 conf: Configuration = HadoopConfs.standalone()): EtsdSchema = {
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf)
-    val file =
-      if (!fs.getFileStatus(root).isDirectory) root
-      else fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".tsd"))
-        .sortBy(_.getName).headOption
-        .getOrElse(throw new IllegalArgumentException(s"no .tsd files in $path"))
-    val in = fs.open(file)
-    try TsdIndex.readHeader(in) finally in.close()
-  }
+                 conf: Configuration = HadoopConfs.standalone()): EtsdSchema =
+    openStore(path, conf).schema
 
   /** One `Name:Type[:E<n>|:M<n>][:flags]` channel spec (createETSD,
     * etsdCmd.c:75-88,199-291). Defaults mirror the reference: counter with
@@ -206,17 +195,10 @@ object EtsdCmd {
   /** `examinETSD` (etsdCmd.c:549-613): block geometry + one line per
     * channel with stream type and flag letters (C=counter G=gauge
     * R=register S=signed E=edo). The block count is the whole store's:
-    * [[TsdIndex.dataBlocks]] summed over a directory's data files
-    * ([[TsdIndex.isDataFile]]), or over the one file `path` names. */
+    * [[TsdIndex.dataBlocks]] summed over its data files. */
   def examine(path: String): String = {
-    val schema = loadSchema(path)
-    val root = new HPath(path)
-    val fs = root.getFileSystem(HadoopConfs.standalone())
-    val st = fs.getFileStatus(root)
-    val files =
-      if (st.isDirectory) fs.listStatus(root).filter(TsdIndex.isDataFile).toSeq
-      else Seq(st)
-    val blocks = files.map(f => TsdIndex.dataBlocks(f.getLen)).sum
+    val store = openStore(path)
+    val (schema, blocks) = (store.schema, store.files.map(f => TsdIndex.dataBlocks(f.getLen)).sum)
     val head =
       f"interval ${schema.intervalSec}%ds, ${schema.blockIntervals}%d intervals/block, " +
       f"$blocks%d data blocks, uid ${schema.uid}%d, xData ${schema.xDataSize}%d B"
@@ -233,18 +215,21 @@ object EtsdCmd {
       .mkString("\n")
   }
 
-  /** `LogBlock` hex dump (errorlog.c:139-183): 16 bytes per line, offset +
-    * hex + printable ASCII. `sector` 0 = header block. */
-  def dumpSector(path: String, sector: Int): String = {
-    val f = firstFile(path)
-    val size = Files.size(f)
+  /** `LogBlock` hex dump (errorlog.c:139-183) of the store's schema file:
+    * 16 bytes per line, offset + hex + printable ASCII. `sector` 0 =
+    * header block. */
+  def dumpSector(path: String, sector: Int): String =
+    dumpSector(openStore(path), sector)
+
+  private def dumpSector(store: TsdStore, sector: Int): String = {
+    val size = store.schemaFile.getLen
     val off = sector.toLong * BlockBuffer.BlockSize
     require(sector >= 0 && off + BlockBuffer.BlockSize <= size,
       s"sector $sector out of range (file has ${size / BlockBuffer.BlockSize})")
-    // seek + one 512-byte read — the file may be arbitrarily large
+    // one positioned 512-byte read — the file may be arbitrarily large
     val block = new Array[Byte](BlockBuffer.BlockSize)
-    val raf = new java.io.RandomAccessFile(f.toFile, "r")
-    try { raf.seek(off); raf.readFully(block) } finally raf.close()
+    val in = store.fs.open(store.schemaFile.getPath)
+    try in.readFully(off, block) finally in.close()
     val header = if (sector == 0) s"sector 0 (header)" else {
       val b = BlockBuffer(block)
       s"sector $sector ts=${b.timestamp} validIntervals=${b.validIntervals}"
@@ -268,12 +253,13 @@ object EtsdCmd {
     * no matching case. */
   def dumpInteractive(path: String, startSector: Int,
                       in: java.io.BufferedReader, out: Appendable): Unit = {
-    val end = (Files.size(firstFile(path)) / BlockBuffer.BlockSize).toInt - 1
+    val store = openStore(path)
+    val end = (store.schemaFile.getLen / BlockBuffer.BlockSize).toInt - 1
     var sector = math.min(math.max(startSector, 0), end)
     var done = false
     while (!done) {
       out.append(s"Block: #$sector of $end\n")
-      out.append(dumpSector(path, sector)).append("\n")
+      out.append(dumpSector(store, sector)).append("\n")
       out.append("Display (N)ext block, (P)revious block, or (Q)uit (N/P/Q) ")
       Option(in.readLine()) match {
         case None => done = true // EOF behaves like Q
@@ -313,10 +299,10 @@ object EtsdCmd {
       case 'q' =>
         val now = Instant.now()
         val conf = HadoopConfs.standalone()
-        val schema = loadSchema(path, conf)
+        val store = openStore(path, conf)
         // a selection the sidecar bounds to a few blocks is answered here
         // with no session; bad arguments fail before one is built
-        EtsdQueryApi.answer(conf, path, schema, rest, now).getOrElse {
+        EtsdQueryApi.answer(conf, store, rest, now).getOrElse {
           val spark = GraftSession("etsdCmd")
           try {
             // DSv2 scan: plans from the _graft_index sidecar (or one
@@ -324,7 +310,7 @@ object EtsdCmd {
             // into the block decode — the CLI stays O(selected data) on a
             // many-file layout, like the reference's etsdFindBlock seek
             val df = spark.read.format("graft.sources.TsdDataSource").load(path)
-            EtsdQueryApi.query(df, schema, rest, now).orderBy("channel")
+            EtsdQueryApi.query(df, store.schema, rest, now).orderBy("channel")
               .collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
           } finally spark.stop()
         }.foreach { case (c, n, r) => println(queryLine(c, n, r)) }

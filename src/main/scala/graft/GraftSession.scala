@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
+import org.apache.logging.log4j.core.config.LoggerConfig
+import org.apache.logging.log4j.core.filter.RegexFilter
 import org.apache.spark.sql.SparkSession
 
 /** The one way to build a graft session: Bench, Verify, the CLIs, the
@@ -12,7 +16,8 @@ object GraftSession {
 
   /** `SPARK_MASTER` (a deployment address) wins over `local[cores]`;
     * shuffle partitions follow `cores` either way. */
-  def builder(app: String, cores: Int = GraftSession.cores): SparkSession.Builder =
+  def builder(app: String, cores: Int = GraftSession.cores): SparkSession.Builder = {
+    quietIdleCancel
     SparkSession.builder().appName(app)
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
       .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -32,6 +37,33 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.checkpointing" +
           ".FileSystemBasedCheckpointFileManager")
       .config("spark.ui.enabled", "false")
+  }
+
+  /** The Spark logger one of whose WARNs every session drops. */
+  private[graft] val SchedulerLogger = "org.apache.spark.scheduler.DAGScheduler"
+
+  /** A Spark class's first log call installs Spark's log configuration,
+    * which [[quietIdleCancel]] must add to, not precede. */
+  private object SparkLog extends org.apache.spark.internal.Logging {
+    def configure(): Unit = log
+  }
+
+  /** Drops exactly one WARN of [[SchedulerLogger]], "Failed to cancel job
+    * group <id>. Cannot find active jobs for it.": spark-sql 4.1's
+    * `MicroBatchExecution.stop` cancels its job group even when no job is
+    * running, so every stopped streaming query logged it. Every other
+    * message of that logger passes, at the level it inherits. */
+  private lazy val quietIdleCancel: Unit = {
+    SparkLog.configure()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    if (cfg.getLoggerConfig(SchedulerLogger).getName != SchedulerLogger)
+      cfg.addLogger(SchedulerLogger, new LoggerConfig(SchedulerLogger, null, true))
+    cfg.getLoggerConfig(SchedulerLogger).addFilter(RegexFilter.createFilter(
+      "(?s)Failed to cancel job group .*\\. Cannot find active jobs for it\\.",
+      null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+    ctx.updateLoggers()
+  }
 
   /** [[builder]]`(app).getOrCreate()` with WARN logging. */
   def apply(app: String): SparkSession = {

@@ -5,6 +5,7 @@ import java.time.Instant
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -13,7 +14,7 @@ import graft._
 import graft.functions.TimeLiterals
 import graft.model.EtsdSchema
 import graft.operators.TimeSeriesOps
-import graft.sources.TsdLocalScan
+import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
 
 /** The `etsdCmd query` entry point re-expressed over the canonical long
   * DataFrame (etsdCmd.c:333-461): parses `q=`/`c=`/`s=`/`e=` arguments,
@@ -123,22 +124,22 @@ object EtsdQueryApi {
     * and folded in this process by [[TsdLocalScan]] with no Spark job or
     * session — or None when the sidecar does not bound the selection to
     * [[TsdLocalScan.MaxBlocks]] blocks, or `begin` yields None. */
-  private def local(conf: Configuration, path: String, q: Resolved,
+  private def local(conf: Configuration, store: TsdStore, q: Resolved,
                     begin: => Option[Long]): Option[Seq[(String, Long, Double)]] =
     (if (q.needsBegin) begin else Some(0L)).flatMap { b =>
       val (lo, hi) = q.window(b)
-      TsdLocalScan.fold(conf, path, lo, hi, q.chan)
+      TsdLocalScan.fold(conf, store, lo, hi, q.chan)
     }.map(_.map(f => (f.channel, f.n, q.result(f))))
 
-  /** [[query]]'s rows for the bare `.tsd` store at `path`, with no Spark
+  /** [[query]]'s rows for the bare `.tsd` store `store`, with no Spark
     * session: the cold `EtsdCmd query`. None when the local rule declines
     * (the selection is over [[TsdLocalScan.MaxBlocks]] blocks, or `begin`
     * is needed and the whole store is); the caller then runs [[query]]
     * over a session, which takes the distributed plan. Bad arguments
     * raise IllegalArgumentException either way. */
-  def answer(conf: Configuration, path: String, schema: EtsdSchema,
-             rawArgs: Seq[String], now: Instant): Option[Seq[(String, Long, Double)]] =
-    local(conf, path, resolve(schema, rawArgs, now), TsdLocalScan.firstTs(conf, path))
+  def answer(conf: Configuration, store: TsdStore, rawArgs: Seq[String],
+             now: Instant): Option[Seq[(String, Long, Double)]] =
+    local(conf, store, resolve(store.schema, rawArgs, now), TsdLocalScan.firstTs(conf, store))
 
   /** Run an AMT-family query. `df` is the long DataFrame (`ts, channel,
     * value, valid, is_register`); `now` injected for determinism. Output:
@@ -170,7 +171,9 @@ object EtsdQueryApi {
     // resolves `begin` with the aggregate above, as the distributed plan
     val rows = if (!driverLocal) None else TsdLocalScan.barePath(df).flatMap { path =>
       val conf = df.sparkSession.sessionState.newHadoopConf()
-      local(conf, path, q, TsdLocalScan.firstTs(conf, path).orElse(Some(begin)))
+      val root = new Path(path)
+      val store = TsdIndex.listStore(root.getFileSystem(conf), root)
+      local(conf, store, q, TsdLocalScan.firstTs(conf, store).orElse(Some(begin)))
     }
     rows.fold {
       val (lo, hi) = q.window(if (q.needsBegin) begin else 0L)

@@ -36,6 +36,26 @@ object TimeSeriesQueries {
   private def events(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
 
+  /** Hourly cents per channel, the frame the `.tsd` fixtures encode:
+    * `s_c` = sum of `round(value * 100)` per (`keys`, `channel`, hour
+    * `bucket` in epoch seconds). */
+  private def hourlyCents(ev: DataFrame, keys: Column*): DataFrame =
+    ev.groupBy(keys ++ Seq($"event_type".as("channel"),
+        (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket")): _*)
+      .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
+
+  /** [[hourlyCents]] as the long frame a `.tsd` export takes, after the
+    * `keys` columns. */
+  private def hourlyLong(hourly: DataFrame, keys: Column*): DataFrame =
+    hourly.select(keys ++ Seq(timestamp_seconds($"bucket").as("ts"), $"channel",
+      $"s_c".as("value"), $"s_c".isNotNull.as("valid")): _*)
+
+  /** The hourly `.tsd` fixtures' schema: one `t` channel per event type,
+    * one-day blocks. */
+  private def hourlySchema(t: StreamType): EtsdSchema = EtsdSchema(
+    Tables.EventTypeCatalog.map(n => ChannelConfig(n, t)),
+    intervalSec = 3600, blockIntervals = 24)
+
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // etsdAMT tot/ave/min/max in one pass (etsdQuery.c:218-401)
     "ts_amt" -> ((s, d) =>
@@ -296,14 +316,11 @@ object TimeSeriesQueries {
     // decoded back — a distributed identity round-trip (etsdSave.c:206-330,
     // etsdRead.c:38-167)
     "ts_tsd_roundtrip" -> ((s, d) => {
-      val ev = events(s, d)
       // channel catalog = the fixed fixture schema (same 5-name catalog
       // ts_cli_query declares) — a .tsd header is created from config, not
       // discovered from data, so no data-dependent driver collect here
       val names = Tables.EventTypeCatalog
-      val hourly = ev.groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
+      val hourly = hourlyCents(events(s, d))
       EtsdSource.roundTripHourlyBlocks(hourly, names)
         .orderBy("channel", "bucket_epoch")
     }),
@@ -317,15 +334,8 @@ object TimeSeriesQueries {
     // the invalid sentinel and drop on decode, so output = present
     // buckets only, matching the oracle's plain hourly aggregation.
     "ts_tsd_file_roundtrip" -> ((s, d) => {
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.LargeS)),
-        intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
-      val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
-        $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
+      val schema = hourlySchema(StreamType.LargeS)
+      val long = hourlyLong(hourlyCents(events(s, d)))
       val dir = java.nio.file.Files.createTempDirectory("tsd_file_rt").toString
       // returns one sidecar entry per written file — bounded by the
       // fixture's ~62-day span / 8-block files
@@ -350,13 +360,8 @@ object TimeSeriesQueries {
     // breaks the hash.
     "ts_tsd_float_roundtrip" -> ((s, d) => {
       import graft.functions.HalfFloat
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.FloatS)),
-        intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
+      val schema = hourlySchema(StreamType.FloatS)
+      val hourly = hourlyCents(events(s, d))
       val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
         $"channel",
         HalfFloat.halfBits(pmod($"s_c", lit(1024L)).cast("double") + 0.5)
@@ -394,9 +399,7 @@ object TimeSeriesQueries {
         graft.codec.Layout.sortChannels(Tables.EventTypeCatalog.map { n =>
           val (t, sg) = lanes(n); ChannelConfig(n, t, signed = sg) }),
         intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
+      val hourly = hourlyCents(events(s, d))
       val folded = when($"channel" === "click", pmod($"s_c", lit(4000L)))
         .when($"channel" === "error", pmod($"s_c", lit(1000000L)))
         .when($"channel" === "purchase", pmod($"s_c", lit(60000L)) - 30000L)
@@ -427,13 +430,8 @@ object TimeSeriesQueries {
     // hour retroactive rescales actually fire), while staying clear of
     // the 524,287 overflow and the 0xFFFF store collision.
     "ts_tsd_autoscale_roundtrip" -> ((s, d) => {
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.AutoScale)),
-        intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
+      val schema = hourlySchema(StreamType.AutoScale)
+      val hourly = hourlyCents(events(s, d))
       val cap = AutoScaleCaps.foldLeft(lit(500000L): Column) {
         case (acc, (n, c)) => when($"channel" === n, lit(c)).otherwise(acc) }
       val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
@@ -466,9 +464,7 @@ object TimeSeriesQueries {
         names.map(n => ChannelConfig(n, StreamType.LargeS,
           counter = true, register = true)),
         intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
+      val hourly = hourlyCents(events(s, d))
       // fold keeps the whole-fixture odometer under 2^31 (register is a
       // 32-bit absolute lane) and each delta far below the 24-bit lane
       val odo = hourly.select($"channel", $"bucket",
@@ -499,15 +495,8 @@ object TimeSeriesQueries {
     // min(24, hi-start+1) fed intervals — exactly what etsdFindBlock
     // binary-probes for in the reference (etsdRead.c:300-353).
     "ts_tsd_block_index" -> ((s, d) => {
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.LargeS)),
-        intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
-      val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
-        $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
+      val schema = hourlySchema(StreamType.LargeS)
+      val long = hourlyLong(hourlyCents(events(s, d)))
       val dir = java.nio.file.Files.createTempDirectory("tsd_blkidx").toString
       EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 8)
       s.read.format("graft.sources.TsdDataSource")
@@ -523,15 +512,9 @@ object TimeSeriesQueries {
     // and the DSv2 xdata read decodes it back — epoch == payload proves
     // both placement (side row landed in ITS block) and byte fidelity.
     "ts_tsd_xdata" -> ((s, d) => {
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.LargeS)),
-        intervalSec = 3600, blockIntervals = 24).copy(xDataSize = 8)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
-      val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
-        $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
+      val schema = hourlySchema(StreamType.LargeS).copy(xDataSize = 8)
+      val hourly = hourlyCents(events(s, d))
+      val long = hourlyLong(hourly)
       // block starts from the same closed form the sink produces
       // (per 8-day group: lo+24j over the present slot range)
       val side = hourly
@@ -558,16 +541,9 @@ object TimeSeriesQueries {
     // metadata delete, never a data scan — then aggregate the survivors.
     // Span-aligned cutoff ⟺ kept rows are exactly bucket >= cutoff.
     "ts_retention_drop" -> ((s, d) => {
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.LargeS)),
-        intervalSec = 3600, blockIntervals = 24)
+      val schema = hourlySchema(StreamType.LargeS)
       val cutoff = 1704844800L // 2024-01-10 00:00 UTC, 4-day-span-aligned
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
-      val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
-        $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
+      val long = hourlyLong(hourlyCents(events(s, d)))
       val dir = java.nio.file.Files.createTempDirectory("tsd_retention").toString
       EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 4)
       Retention.dropBlocksBefore(s, dir, cutoff)
@@ -590,15 +566,8 @@ object TimeSeriesQueries {
     // entry with an off-by-one span, or a row filter applied to the
     // wrong interval edge all shift the totals.
     "ts_tsd_manyfile" -> ((s, d) => {
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.LargeS)),
-        intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy($"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
-      val long = hourly.select(timestamp_seconds($"bucket").as("ts"),
-        $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
+      val schema = hourlySchema(StreamType.LargeS)
+      val long = hourlyLong(hourlyCents(events(s, d)))
       val dir = java.nio.file.Files.createTempDirectory("tsd_manyfile").toString
       // one sidecar entry per written file (~62 at sf0.01) — bounded by span/day
       EtsdSink.exportIndexed(long, schema, dir, blocksPerFile = 1)
@@ -708,18 +677,9 @@ object TimeSeriesQueries {
 
   private def fleetRead(s: SparkSession, d: String): DataFrame = {
     val root = fleetFixtureRoots.computeIfAbsent(d, _ => {
-      val names = Tables.EventTypeCatalog
-      val schema = EtsdSchema(
-        names.map(n => ChannelConfig(n, StreamType.LargeS)),
-        intervalSec = 3600, blockIntervals = 24)
-      val hourly = events(s, d).groupBy(
-          format_string("s%03d", pmod($"user_id", lit(128))).as("store_id"),
-          $"event_type".as("channel"),
-          (floor(unix_timestamp($"ts") / Hour) * Hour).cast("long").as("bucket"))
-        .agg(sum(round($"value" * 100).cast("long")).as("s_c"))
-      val long = hourly.select($"store_id",
-        timestamp_seconds($"bucket").as("ts"),
-        $"channel", $"s_c".as("value"), $"s_c".isNotNull.as("valid"))
+      val schema = hourlySchema(StreamType.LargeS)
+      val long = hourlyLong(hourlyCents(events(s, d),
+        format_string("s%03d", pmod($"user_id", lit(128))).as("store_id")), $"store_id")
       val r = java.nio.file.Files.createTempDirectory("tsd_fleet").toString
       EtsdSink.exportFleet(long, schema, r, blocksPerFile = 8)
       r

@@ -203,16 +203,12 @@ object EtsdSink {
     val fs = path.getFileSystem(HadoopConfs.build(hadoopProps))
     val os = fs.create(path, true)
     try os.write(bytes) finally os.close()
-    val bsz = graft.codec.BlockBuffer.BlockSize
-    val nBlocks = bytes.length / bsz - 1
-    def tsAt(sector: Long): Long =
-      graft.codec.BlockBuffer(
-        bytes.slice((sector * bsz).toInt, (sector * bsz).toInt + bsz)).timestamp
     // one status RPC per written file: the sidecar's freshness check
     // compares (len, modTime), so the entry must carry the real mtime
     val mod = fs.getFileStatus(path).getModificationTime
-    TsdIndexEntry(path.getName, bytes.length.toLong, nBlocks.toLong,
-      tsAt(1), tsAt(nBlocks.toLong),
-      schema.blockIntervals.toLong * schema.intervalSec, mod)
+    TsdIndexEntry.of(path.getName, bytes.length.toLong, schema, mod) { sector =>
+      val off = (sector * graft.codec.BlockBuffer.BlockSize).toInt
+      bytes.slice(off, off + graft.codec.BlockBuffer.BlockSize)
+    }
   }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * are included consistently on both the read and write paths. Task
   * closures carry it as [[props]]: a bare `new Configuration()` on an
   * executor drops every `spark.hadoop.*` setting (s3a credentials,
-  * default FS, endpoints). A process with no session, the cold
-  * `EtsdCmd query`, builds it with [[standalone]]. */
+  * default FS, endpoints). A process with no session, an `EtsdCmd` verb
+  * (a cold point `query`, `examine`, `dump`), builds it with [[standalone]]. */
 object HadoopConfs {
   private val SparkHadoop = "spark.hadoop."
 

@@ -274,11 +274,11 @@ private[sources] object TsdPacking {
 }
 
 /** The one `.tsd` scan. It plans over `(store id, file)` pairs: a plain
-  * load is one store without an id (no `store_id` column), planned by
-  * [[TsdIndex.forPlanning]] so a single-file load probes once; a fleet is
-  * one store per directory, planned in one [[TsdIndex.forPlanningFleet]]
-  * pass (per-store `_graft_index` sidecars, misses coalesced into one
-  * probe job).
+  * load is one store without an id (no `store_id` column), the files
+  * [[TsdIndex.listStore]] finds for its path, so a single-file load
+  * probes once; a fleet is one store per directory, planned in one
+  * [[TsdIndex.forPlanningFleet]] pass (per-store `_graft_index` sidecars,
+  * misses coalesced into one probe job).
   *
   * A fleet is ONE scan node, not a union of per-store scans: a union's
   * logical plan is O(stores), and at the 10k–100k-store fleet a 100 TB
@@ -345,10 +345,7 @@ private[sources] class TsdScan(path: String, fleet: Boolean,
           .map { case (id, file, e) => (Some(id), file, e) }
       else {
         val root = new Path(path)
-        val fs = hadoopFs(root)
-        val dir = if (fs.getFileStatus(root).isDirectory) root else root.getParent
-        TsdIndex.forPlanning(spark, fs, root)
-          .map(e => (None, new Path(dir, e.name).toString, e))
+        TsdIndex.plan(spark, Seq((None, TsdIndex.listStore(hadoopFs(root), root))))
       }
     files.filter(_._3.overlaps(lo, hi))
   }

@@ -36,6 +36,54 @@ final case class TsdIndexEntry(
     lastTs + blockSpanSec >= lo && firstTs <= hi
 }
 
+object TsdIndexEntry {
+  /** The one entry builder, for a file probed on disk and for bytes a
+    * writer has in hand alike: the entry of file `name`, `len` bytes long,
+    * with header `schema`, where `block(sector)` gives the 512 bytes of a
+    * data block (sectors 1 to [[TsdIndex.dataBlocks]]). */
+  def of(name: String, len: Long, schema: EtsdSchema, modTime: Long)(
+      block: Long => Array[Byte]): TsdIndexEntry = {
+    val n = TsdIndex.dataBlocks(len)
+    def ts(sector: Long) = BlockBuffer(block(sector)).timestamp
+    TsdIndexEntry(name, len, n, ts(1), ts(n),
+      schema.blockIntervals.toLong * schema.intervalSec, modTime)
+  }
+}
+
+/** The files one `.tsd` store path names, from [[TsdIndex.listStore]]:
+  * its directory (the path, or a single file's parent), its data files in
+  * name order, and the file whose header is its schema. */
+final class TsdStore private[sources] (val fs: FileSystem, val dir: Path,
+    val files: Seq[FileStatus], sidecar: Boolean, schemaFiles: Seq[FileStatus]) {
+  /** The first data file, else (a header-only store from `create`) the
+    * first file that holds a header. */
+  def schemaFile: FileStatus = schemaFiles.headOption
+    .getOrElse(throw new IllegalArgumentException(s"no .tsd files in $dir"))
+
+  lazy val schema: EtsdSchema = {
+    val in = fs.open(schemaFile.getPath)
+    try TsdIndex.readHeader(in) finally in.close()
+  }
+
+  /** The fresh sidecar entries, and the data files the sidecar does not
+    * cover or covers with a stale entry. The sidecar is read on first use
+    * (a caller after the schema alone never reads it), and the split is
+    * counted in [[TsdIndex.PlanStats]] there, once per listing. */
+  lazy val (indexed: Seq[TsdIndexEntry], unindexed: Seq[FileStatus]) = {
+    val cached = Option.when(sidecar)(TsdIndex.load(fs, dir)).flatten.getOrElse(Map.empty)
+    val (hit, miss) = files.partition { f =>
+      cached.get(f.getPath.getName)
+        .exists(e => e.fileLen == f.getLen && e.modTime == f.getModificationTime)
+    }
+    TsdIndex.PlanStats.indexedFiles.addAndGet(hit.size)
+    TsdIndex.PlanStats.probedFiles.addAndGet(miss.size)
+    (hit.map(f => cached(f.getPath.getName)), miss)
+  }
+
+  /** The full path of the store's file `name`. */
+  def path(name: String): Path = new Path(dir, name)
+}
+
 /** Build, persist, and load the sidecar block index (`_graft_index`).
   *
   * At 100 TB a `.tsd` layout is >=1e5 span files; probing each serially
@@ -44,18 +92,29 @@ final case class TsdIndexEntry(
   * distributed job (one task per batch of files, probes run on
   * executors) and written as a sidecar the planner reads in a single
   * small-file read. The `_` prefix keeps it invisible to Spark's file
-  * sources (hidden-file convention), and [[isDataFile]] skips it.
+  * sources (hidden-file convention), and [[listStore]] skips it.
+  *
+  * [[listStore]] is the one rule for what a `.tsd` path names, used by
+  * every reader (the scan's planner, the driver-local fold, and the
+  * CLI's `query`, `examine` and `dump`):
+  *   - a file names a one-file store; a directory names its files;
+  *   - a data file is any file, whatever its name, that is not hidden
+  *     (`_` or `.` prefix) and holds a header plus at least one whole
+  *     block, so the reference's rotated `name.<epoch>` files count;
+  *   - the schema is the header of the first data file by name, or of a
+  *     header-only file when the store has no data block (a fresh
+  *     `create`), which plans zero blocks.
   */
 object TsdIndex {
   val FileName = "_graft_index"
   private val Header = "graft-tsd-index\tv2"
 
   /** Planning-path instrumentation (test observability, driver-side
-    * only): how files got their planning metadata in the most recent
-    * `planInputPartitions` calls. */
+    * only): how the data files of the stores planned since the last
+    * [[PlanStats.reset]] got their metadata, counted by [[TsdStore]]. */
   object PlanStats {
     val indexedFiles = new AtomicLong(0) // served from the sidecar
-    val probedFiles = new AtomicLong(0)  // probed via the Spark job
+    val probedFiles = new AtomicLong(0)  // probed, or read whole on the driver
     def reset(): Unit = { indexedFiles.set(0); probedFiles.set(0) }
   }
 
@@ -64,13 +123,6 @@ object TsdIndex {
     * partial trailing block (a torn write) is ignored by all of them. */
   def dataBlocks(len: Long): Long = len / BlockBuffer.BlockSize - 1
 
-  /** Is this a data file the planner should consider? (Skips hidden
-    * `_`/`.` files — the sidecar itself, Hadoop markers — and anything
-    * too short to hold a header plus one block.) */
-  def isDataFile(f: FileStatus): Boolean =
-    f.isFile && dataBlocks(f.getLen) >= 1 &&
-      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
-
   /** The header block of an open `.tsd` file, decoded. */
   private[graft] def readHeader(in: FSDataInputStream): EtsdSchema = {
     val hdr = new Array[Byte](BlockBuffer.BlockSize)
@@ -78,23 +130,14 @@ object TsdIndex {
     HeaderCodec.decode(hdr)
   }
 
-  /** Probe one file: header decode + first/last block-timestamp reads
-    * (3 x 512 B). Runs on an EXECUTOR when called from [[probeDistributed]]. */
-  def probe(fs: FileSystem, path: Path, len: Long,
-            modTime: Long = 0L): TsdIndexEntry = {
-    val nBlocks = dataBlocks(len)
+  /** Probe one file: header decode + first/last block reads (3 x 512 B).
+    * Runs on an EXECUTOR when called from [[probeDistributed]]. */
+  def probe(fs: FileSystem, path: Path, len: Long, modTime: Long): TsdIndexEntry = {
     val in = fs.open(path)
-    try {
-      val schema = readHeader(in)
-      def tsAt(off: Long): Long = {
-        val w = new Array[Byte](4)
-        in.readFully(off, w)
-        java.nio.ByteBuffer.wrap(w)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(0).toLong & 0xFFFFFFFFL
-      }
-      TsdIndexEntry(path.getName, len, nBlocks,
-        tsAt(BlockBuffer.BlockSize), tsAt(nBlocks * BlockBuffer.BlockSize),
-        schema.blockIntervals.toLong * schema.intervalSec, modTime)
+    try TsdIndexEntry.of(path.getName, len, readHeader(in), modTime) { sector =>
+      val b = new Array[Byte](BlockBuffer.BlockSize)
+      in.readFully(sector * BlockBuffer.BlockSize, b)
+      b
     } finally in.close()
   }
 
@@ -125,9 +168,8 @@ object TsdIndex {
   def write(spark: SparkSession, dir: String): Seq[TsdIndexEntry] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = fs.listStatus(root).filter(isDataFile)
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq
-    val entries = probeDistributed(spark, files)
+    val store = listStore(fs, root)
+    val entries = probeDistributed(spark, store.files.map(probeArg(store, _)))
     writeSidecar(fs, root, entries)
     entries
   }
@@ -169,9 +211,8 @@ object TsdIndex {
 
   /** Load the sidecar if present: one small driver-side read. */
   def load(fs: FileSystem, dir: Path): Option[Map[String, TsdIndexEntry]] = {
-    val p = new Path(dir, FileName)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
+    val in = try fs.open(new Path(dir, FileName))
+      catch { case _: java.io.FileNotFoundException => return None }
     val text = try {
       val out = new java.io.ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
@@ -194,19 +235,43 @@ object TsdIndex {
     }.toMap)
   }
 
-  /** One store's planning metadata from its directory listing and
-    * sidecar alone — no data-file read, no job: the fresh sidecar
-    * entries, and the data files the sidecar does not cover or covers
-    * with a stale entry, as `(name, length, modTime)`. */
-  def listStore(fs: FileSystem,
-      root: Path): (Seq[TsdIndexEntry], Seq[(String, Long, Long)]) = {
-    val files = fs.listStatus(root).filter(isDataFile)
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq
-    val cached = load(fs, root).getOrElse(Map.empty)
-    val (hit, miss) = files.partition { case (n, len, mod) =>
-      cached.get(n).exists(e => e.fileLen == len && e.modTime == mod)
+  /** The store `path` names — the only code that turns a `.tsd` path into
+    * files (see the rule above). Its I/O is one `getFileStatus`, plus one
+    * listing when `path` is a directory; the sidecar, whose presence the
+    * listing shows, is read only when [[TsdStore.indexed]] is first used.
+    * A single file has no sidecar: it is always unindexed. */
+  def listStore(fs: FileSystem, path: Path): TsdStore = {
+    val st = fs.getFileStatus(path)
+    val (dir, sidecar, visible) =
+      if (!st.isDirectory) (path.getParent, false, Seq(st))
+      else {
+        val listed = fs.listStatus(path).sortBy(_.getPath.getName).toSeq
+        (path, listed.exists(_.getPath.getName == FileName), listed.filter { f =>
+          f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
+        })
+      }
+    val files = visible.filter(f => dataBlocks(f.getLen) >= 1)
+    new TsdStore(fs, dir, files, sidecar,
+      files ++ visible.filter(_.getLen >= BlockBuffer.BlockSize))
+  }
+
+  /** `(full path, length, modTime)` of a store's file, as
+    * [[probeDistributed]] takes it. */
+  private def probeArg(s: TsdStore, f: FileStatus): (String, Long, Long) =
+    (s.path(f.getPath.getName).toString, f.getLen, f.getModificationTime)
+
+  /** Planning metadata for every data file of `stores` — (store id,
+    * store) pairs — as (store id, full file path, entry): the sidecar's
+    * fresh entries, and ONE distributed probe job for every store's
+    * unindexed files together. */
+  private[sources] def plan[K](spark: SparkSession,
+      stores: Seq[(K, TsdStore)]): Seq[(K, String, TsdIndexEntry)] = {
+    val misses = stores.flatMap { case (_, s) => s.unindexed.map(probeArg(s, _)) }
+    val probed = misses.map(_._1).zip(probeDistributed(spark, misses)).toMap
+    stores.flatMap { case (id, s) =>
+      (s.indexed ++ s.unindexed.map(f => probed(probeArg(s, f)._1)))
+        .map(e => (id, s.path(e.name).toString, e))
     }
-    (hit.map { case (n, _, _) => cached(n) }, miss)
   }
 
   /** Fleet planning entry point: metadata for every data file of every
@@ -225,53 +290,25 @@ object TsdIndex {
     val conf = spark.sessionState.newHadoopConf()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, stores.size))
-    // per store: (hits, misses-to-probe). FileSystem resolves PER STORE
-    // (cached by scheme+authority), so a fleet spanning filesystems —
-    // hot stores on one bucket/cluster, cold on another — plans fine.
+    // FileSystem resolves PER STORE (cached by scheme+authority), so a
+    // fleet spanning filesystems — hot stores on one bucket/cluster, cold
+    // on another — plans fine
     val listed = try {
       stores.map { case (id, root) =>
-        (id, root, pool.submit(
-          new java.util.concurrent.Callable[
-              (Seq[TsdIndexEntry], Seq[(String, Long, Long)])] {
-            def call() = listStore(root.getFileSystem(conf), root)
-          }))
-      }.map { case (id, root, fut) => (id, root, fut.get()) }
+        (id, pool.submit[TsdStore] { () =>
+          val s = listStore(root.getFileSystem(conf), root)
+          s.indexed // the sidecar read, on the pool too
+          s
+        })
+      }.map { case (id, fut) => (id, fut.get()) }
     } finally pool.shutdown()
-    listed.foreach { case (_, _, (hit, miss)) =>
-      PlanStats.indexedFiles.addAndGet(hit.size)
-      PlanStats.probedFiles.addAndGet(miss.size)
-    }
-    // all stores' misses -> ONE probe job, keyed back by full path
-    val missPaths = listed.flatMap { case (_, root, (_, miss)) =>
-      miss.map { case (n, len, mod) => (new Path(root, n).toString, len, mod) }
-    }
-    val probed = missPaths.map(_._1).zip(probeDistributed(spark, missPaths)).toMap
-    listed.flatMap { case (id, root, (hit, miss)) =>
-      (hit ++ miss.map { case (n, _, _) => probed(new Path(root, n).toString) })
-        .map(e => (id, new Path(root, e.name).toString, e))
-    }
+    plan(spark, listed)
   }
 
-  /** Planning entry point: metadata for every data file in `dir`, served
-    * from the sidecar where fresh (name + length match) and from ONE
-    * distributed probe job for the remainder. The driver's I/O is a
-    * directory listing plus at most one sidecar read, independent of
-    * file count. */
+  /** Planning entry point for one store, a file or a directory: [[plan]]
+    * over [[listStore]]`(fs, path)`. The driver's I/O is one status call,
+    * a listing and at most one sidecar read, independent of file count. */
   def forPlanning(spark: SparkSession, fs: FileSystem,
-                  root: Path): Seq[TsdIndexEntry] = {
-    val st = fs.getFileStatus(root)
-    if (!st.isDirectory) {
-      // single-file load: one probe, via the job for uniformity. Same
-      // min-length guard as isDataFile — a header-only file (fresh
-      // `create`) plans zero blocks instead of probing past EOF.
-      if (dataBlocks(st.getLen) < 1) return Seq.empty
-      PlanStats.probedFiles.addAndGet(1)
-      return probeDistributed(spark,
-        Seq((root.toString, st.getLen, st.getModificationTime)))
-    }
-    // the directory case IS a one-store fleet: one listing + sidecar
-    // partition + probe-job shape, so the freshness predicate and the
-    // PlanStats accounting can never drift between the two entry points
-    forPlanningFleet(spark, Seq((root.getName, root))).map(_._3)
-  }
+                  path: Path): Seq[TsdIndexEntry] =
+    plan(spark, Seq(((), listStore(fs, path)))).map(_._3)
 }

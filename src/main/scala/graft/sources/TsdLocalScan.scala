@@ -3,7 +3,6 @@ package graft.sources
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -21,9 +20,11 @@ import graft.model.EtsdSchema
   * [[MaxBlocks]] blocks remain, the surviving files are read here with
   * the scan's own [[TsdPartitionReader]] (same pushed time range and
   * channel set) and folded per channel. Everything here takes a store
-  * path and a Hadoop `Configuration`, not a DataFrame: `EtsdQueryApi`
-  * reaches it from a bare [[TsdDataSource]] load ([[barePath]]) and the
-  * cold `EtsdCmd query` before it builds any session.
+  * listed by [[TsdIndex.listStore]] and a Hadoop `Configuration`, not a
+  * DataFrame: `EtsdQueryApi` reaches it from a bare [[TsdDataSource]]
+  * load ([[barePath]]) and the cold `EtsdCmd query` before it builds any
+  * session, each listing the store once for the `begin` read and the
+  * fold together.
   *
   * The bound is a constant, not a setting: it caps the caller's work at
   * 512 KiB of reads and decode whatever the store's size, so the
@@ -53,32 +54,16 @@ object TsdLocalScan {
       case _ => None
     }
 
-  /** Whole files to read for `[lo, hi]`, or None past [[MaxBlocks]].
-    * Sidecar-covered files are pruned by [[TsdIndexEntry.overlaps]]; a
-    * file the sidecar does not cover, or covers with a stale entry, counts
-    * at its full length and is kept; a single-file load uses its file
-    * status alone. */
-  private def chunks(conf: Configuration, path: String, lo: Long,
-                     hi: Long): Option[Seq[TsdChunk]] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val st = fs.getFileStatus(root)
-    val (files, indexed) =
-      if (!st.isDirectory)
-        (Seq((root, TsdIndex.dataBlocks(st.getLen))).filter(_._2 >= 1), 0)
-      else {
-        val (hit, miss) = TsdIndex.listStore(fs, root)
-        (hit.filter(_.overlaps(lo, hi))
-          .map(e => (new Path(root, e.name), e.nBlocks)) ++
-          miss.map { case (n, len, _) =>
-            (new Path(root, n), TsdIndex.dataBlocks(len)) },
-          hit.size)
-      }
+  /** Whole files of `store` to read for `[lo, hi]`, or None past
+    * [[MaxBlocks]]. Sidecar-covered files are pruned by
+    * [[TsdIndexEntry.overlaps]]; an unindexed file (a single-file load, or
+    * one the sidecar does not cover or covers with a stale entry) counts
+    * at its full length and is kept. */
+  private def chunks(store: TsdStore, lo: Long, hi: Long): Option[Seq[TsdChunk]] = {
+    val files = store.indexed.filter(_.overlaps(lo, hi)).map(e => (e.name, e.nBlocks)) ++
+      store.unindexed.map(f => (f.getPath.getName, TsdIndex.dataBlocks(f.getLen)))
     if (files.map(_._2).sum > MaxBlocks) None
-    else {
-      TsdIndex.PlanStats.indexedFiles.addAndGet(indexed)
-      Some(files.map { case (p, n) => TsdChunk(p.toString, 1L, n) })
-    }
+    else Some(files.map { case (n, b) => TsdChunk(store.path(n).toString, 1L, b) })
   }
 
   /** Feeds `f` every row the scan emits from `cs` for `[lo, hi]` and
@@ -98,9 +83,9 @@ object TsdLocalScan {
     * or None when the selection is over [[MaxBlocks]]. Channels with no
     * kept sample are absent, as in a grouped aggregate; the rest come in
     * channel-name order. */
-  private[graft] def fold(conf: Configuration, path: String, lo: Long,
+  private[graft] def fold(conf: Configuration, store: TsdStore, lo: Long,
                           hi: Long, chan: Option[String]): Option[Seq[ChannelFold]] =
-    chunks(conf, path, lo, hi).map { cs =>
+    chunks(store, lo, hi).map { cs =>
       val want = chan.map(UTF8String.fromString)
       // n, sum, min, max per channel. No sum can overflow: samples are at
       // most 32 bits wide and a channel has fewer than 2^17 of them in
@@ -127,8 +112,8 @@ object TsdLocalScan {
     * registers and invalid samples included, the rows `min(ts)` over a
     * bare load covers — or None when the store is over [[MaxBlocks]].
     * An empty store has no first row: the reference's read error. */
-  private[graft] def firstTs(conf: Configuration, path: String): Option[Long] =
-    chunks(conf, path, Long.MinValue, Long.MaxValue).map { cs =>
+  private[graft] def firstTs(conf: Configuration, store: TsdStore): Option[Long] =
+    chunks(store, Long.MinValue, Long.MaxValue).map { cs =>
       var first = Long.MaxValue
       foreachRow(conf, cs, Long.MinValue, Long.MaxValue, None) { row =>
         first = math.min(first, row.getLong(0) / 1000000L)

@@ -22,8 +22,9 @@ import graft.sources.HadoopConfs
   * answered with no SparkContext at all; a window over
   * `TsdLocalScan.MaxBlocks` blocks starts one, and both print the
   * whole-file decode's lines. The store is read through a file system
-  * scheme that only `-Dspark.hadoop.*` registers, so both paths must take
-  * their Hadoop configuration from those properties. */
+  * scheme that only `-Dspark.hadoop.*` registers, so both paths, and the
+  * `dump` verb, must take their Hadoop configuration from those
+  * properties. */
 class ColdCliSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -37,11 +38,14 @@ class ColdCliSpec extends AnyFunSuite {
     (0 until 5 * 1440).map(k => (t0 + 60L * k, "G", Some((k % 200).toLong), k % 11 != 0)),
     blocksPerFile = 256)
 
-  /** Runs `EtsdCmd query <graftfs:store> args` in a child JVM: exit code,
-    * stdout lines, and whether the child constructed a SparkContext. */
-  private def cli(args: Seq[String]): (Int, Seq[String], Boolean) = {
+  /** Runs `EtsdCmd <verb> <graftfs:store> args` in a child JVM, with
+    * `stdin` as its input: exit code, stdout lines, and whether the child
+    * constructed a SparkContext. */
+  private def cli(args: Seq[String], verb: String = "query",
+                  stdin: String = ""): (Int, Seq[String], Boolean) = {
     val dir = Files.createTempDirectory("coldcli")
     val marker = dir.resolve("context-started")
+    val in = Files.writeString(dir.resolve("stdin.txt"), stdin).toFile
     val out = dir.resolve("stdout.txt").toFile
     val err = dir.resolve("stderr.txt").toFile
     val jvmOpts = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
@@ -52,9 +56,9 @@ class ColdCliSpec extends AnyFunSuite {
       s"-D${ContextMarker.Prop}=$marker",
       s"-Dspark.hadoop.fs.${SchemeLocalFs.Scheme}.impl=${classOf[SchemeLocalFs].getName}",
       "-cp", System.getProperty("java.class.path"),
-      "graft.EtsdCmd", "query", s"${SchemeLocalFs.Scheme}:$store") ++ args
+      "graft.EtsdCmd", verb, s"${SchemeLocalFs.Scheme}:$store") ++ args
     val pb = new ProcessBuilder(cmd.asJava).directory(dir.toFile)
-      .redirectOutput(out).redirectError(err)
+      .redirectInput(in).redirectOutput(out).redirectError(err)
     pb.environment().remove("SPARK_MASTER")
     pb.environment().put("SPARK_GRAFT_CPUS", "2")
     val p = pb.start()
@@ -81,11 +85,12 @@ class ColdCliSpec extends AnyFunSuite {
 
   test("the core declines a begin default on a store over MaxBlocks") {
     val conf = HadoopConfs.standalone()
+    val listed = EtsdCmd.openStore(store, conf)
     val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
-    assert(EtsdQueryApi.answer(conf, store, schema, Seq("c=g"), now).isEmpty)
-    assert(EtsdQueryApi.answer(conf, store, schema, Seq("s=begin+1h"), now).isEmpty)
+    assert(EtsdQueryApi.answer(conf, listed, Seq("c=g"), now).isEmpty)
+    assert(EtsdQueryApi.answer(conf, listed, Seq("s=begin+1h"), now).isEmpty)
     val lo = t0 + 3 * 86400L
-    assert(EtsdQueryApi.answer(conf, store, schema, window(lo, lo + 2 * span), now)
+    assert(EtsdQueryApi.answer(conf, listed, window(lo, lo + 2 * span), now)
       .isDefined)
   }
 
@@ -100,6 +105,21 @@ class ColdCliSpec extends AnyFunSuite {
     assert(long._1 == 0)
     assert(long._2 == oracleLines(t0 + 3600L, t0 + 4 * 86400L))
     assert(long._3, "a window over MaxBlocks must start Spark")
+  }
+
+  test("dump reads the store through the session-free configuration") {
+    val one = cli(Seq("2"), verb = "dump")
+    assert(one._1 == 0 && !one._3)
+    assert(one._2 == EtsdCmd.dumpSector(store, 2).linesIterator.toSeq)
+
+    val keys = "n\np\nn\nq\n"
+    val walked = cli(Seq("1", "i"), verb = "dump", stdin = keys)
+    val want = new java.lang.StringBuilder
+    EtsdCmd.dumpInteractive(store, 1,
+      new java.io.BufferedReader(new java.io.StringReader(keys)), want)
+    assert(walked._1 == 0 && !walked._3)
+    assert(walked._2 == want.toString.linesIterator.toSeq)
+    assert("Block: #".r.findAllIn(walked._2.mkString("\n")).size == 4)
   }
 }
 

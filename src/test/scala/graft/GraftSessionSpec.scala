@@ -35,4 +35,50 @@ class GraftSessionSpec extends AnyFunSuite {
     }.map(_.getFileName.toString)
     assert(builders == Seq("GraftSession.scala"))
   }
+
+  test("a stopped streaming query logs no idle job-group cancel; " +
+      "other DAGScheduler WARNs still log") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val own = ctx.getConfiguration.getLoggerConfig(GraftSession.SchedulerLogger)
+    assert(own.getName == GraftSession.SchedulerLogger)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture-dag", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    // the test session logs at ERROR; this logger logs WARN for the test
+    own.addAppender(capture, Level.WARN, null)
+    own.setLevel(Level.WARN)
+    ctx.updateLoggers()
+    try {
+      import spark.implicits._
+      implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val mem = MemoryStream[Long]
+      mem.addData(1L, 2L, 3L)
+      val q = mem.toDF().writeStream.format("memory")
+        .queryName("idle_cancel_probe").start()
+      try q.processAllAvailable() finally q.stop()
+      assert(spark.table("idle_cancel_probe").count() == 3)
+      // a task binary over 1 MiB draws the scheduler's own WARN
+      val big = new Array[Byte](2 << 20)
+      assert(spark.sparkContext.parallelize(Seq(1), 1)
+        .map(_ + big.length).collect().head == (2 << 20) + 1)
+    } finally {
+      own.setLevel(null)
+      own.removeAppender("capture-dag")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val msgs = seen.asScala.toSeq
+    assert(!msgs.exists(_.contains("Cannot find active jobs")), msgs)
+    assert(msgs.exists(_.startsWith("Broadcasting large task binary")), msgs)
+  }
 }

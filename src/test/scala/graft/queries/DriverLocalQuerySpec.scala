@@ -73,8 +73,7 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
   /** The cold CLI's stdout for `args`, from the answer core alone. */
   private def cliLines(path: String, args: Seq[String]): Seq[String] = {
     val conf = HadoopConfs.standalone()
-    val rows = EtsdQueryApi.answer(conf, path, EtsdCmd.loadSchema(path, conf),
-      args, now)
+    val rows = EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, now)
     assert(rows.isDefined, s"$args on $path must need no session")
     rows.get.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) }
   }
