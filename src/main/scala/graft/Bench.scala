@@ -33,8 +33,7 @@ object Bench {
     // min of 3 timed iterations. Any throw — at construction or in a
     // timed run — reports the -1 sentinel so a broken query shows up as
     // a visible failure rather than an implausibly fast ~0s success.
-    val capRows = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
-    val splitRows = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
+    val caps = new DedupStats.CapCensus
     val epochRows = scala.collection.mutable.LinkedHashMap[String, Double]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // wall epoch (seconds since battery start) at which this query's
@@ -54,28 +53,19 @@ object Bench {
       // exact per-query cap-drop and split counters of the build run
       // (the capped generators' deliberate trade must be a diffable
       // round artifact, not a stderr line)
-      census.foreach { case (drops, splits) =>
-        if (drops._1 > 0) capRows(name) = drops
-        if (splits._1 > 0) splitRows(name) = splits
-      }
+      census.foreach { case (drops, splits) => caps.record(name, drops, splits) }
       name -> best
     } // keep the name-sorted Seq: stable JSON field order run-to-run
     val qs = results.map { case (k, (_, e)) => s"\"" + k + "\":" + e }
       .mkString("{", ",", "}")
     val builds = results.map { case (k, (b, _)) => s"\"" + k + "\":" + b }
       .mkString("{", ",", "}")
-    val caps = capRows.map { case (k, (b, r, m)) =>
-      s"""\"$k\":{\"dropped_buckets\":$b,\"dropped_rows\":$r,\"max_bucket\":$m}"""
-    }.mkString("{", ",", "}")
-    val splits = splitRows.map { case (k, (b, r, m)) =>
-      s"""\"$k\":{\"split_buckets\":$b,\"split_rows\":$r,\"max_bucket\":$m}"""
-    }.mkString("{", ",", "}")
     val (calibEndBuild, calibEndExec) = calibrate()
     val epochs = epochRows.map { case (k, e) => s"\"" + k + "\":" + e }
       .mkString("{", ",", "}")
     val total = results.map(_._2._2).filter(_ >= 0).sum
     val buildTotal = results.map(_._2._1).filter(_ >= 0).sum
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","build_total":$buildTotal,"calib_s":$calibExec,"calib_build_s":$calibBuild,"calib_end_s":$calibEndExec,"calib_end_build_s":$calibEndBuild,"queries":$qs,"build_s":$builds,"epoch_s":$epochs,"cap_drops":$caps,"cap_splits":$splits,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","build_total":$buildTotal,"calib_s":$calibExec,"calib_build_s":$calibBuild,"calib_end_s":$calibEndExec,"calib_end_build_s":$calibEndBuild,"queries":$qs,"build_s":$builds,"epoch_s":$epochs,"cap_drops":${caps.dropsJson},"cap_splits":${caps.splitsJson},"sf":"$sfDir"}"""
     println(full)
     // The driver captures only a 2000-char tail of this stdout; the full
     // line above is ~10k chars (122 query names alone exceed the budget),

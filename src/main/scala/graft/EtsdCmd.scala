@@ -308,9 +308,10 @@ object EtsdCmd {
             // DSv2 scan: plans from the _graft_index sidecar (or one
             // distributed probe job) and pushes the channel + time range
             // into the block decode — the CLI stays O(selected data) on a
-            // many-file layout, like the reference's etsdFindBlock seek
+            // many-file layout, like the reference's etsdFindBlock seek.
+            // The local fold just declined, so straight to the aggregate.
             val df = spark.read.format("graft.sources.TsdDataSource").load(path)
-            EtsdQueryApi.query(df, store.schema, rest, now).orderBy("channel")
+            EtsdQueryApi.queryDistributed(df, store.schema, rest, now).orderBy("channel")
               .collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
           } finally spark.stop()
         }.foreach { case (c, n, r) => println(queryLine(c, n, r)) }

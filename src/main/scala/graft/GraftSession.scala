@@ -17,7 +17,7 @@ object GraftSession {
   /** `SPARK_MASTER` (a deployment address) wins over `local[cores]`;
     * shuffle partitions follow `cores` either way. */
   def builder(app: String, cores: Int = GraftSession.cores): SparkSession.Builder = {
-    quietIdleCancel
+    quietExpectedWarns
     SparkSession.builder().appName(app)
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
       .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -43,17 +43,24 @@ object GraftSession {
   private[graft] val SchedulerLogger = "org.apache.spark.scheduler.DAGScheduler"
 
   /** A Spark class's first log call installs Spark's log configuration,
-    * which [[quietIdleCancel]] must add to, not precede. */
+    * which [[quietExpectedWarns]] must add to, not precede. */
   private object SparkLog extends org.apache.spark.internal.Logging {
     def configure(): Unit = log
   }
 
-  /** Drops exactly one WARN of [[SchedulerLogger]], "Failed to cancel job
-    * group <id>. Cannot find active jobs for it.": spark-sql 4.1's
-    * `MicroBatchExecution.stop` cancels its job group even when no job is
-    * running, so every stopped streaming query logged it. Every other
-    * message of that logger passes, at the level it inherits. */
-  private lazy val quietIdleCancel: Unit = {
+  /** Drops two WARNs that report expected events, and nothing else:
+    *   - of [[SchedulerLogger]], "Failed to cancel job group <id>. Cannot
+    *     find active jobs for it.": spark-sql 4.1's
+    *     `MicroBatchExecution.stop` cancels its job group even when no job
+    *     is running, so every stopped streaming query logged it;
+    *   - of any logger, "RDD <n> was locally checkpointed, its lineage has
+    *     been truncated and cannot be recomputed after unpersisting": every
+    *     [[Pins]] release unpersists a local checkpoint, the trade its
+    *     scaladoc documents. `RDD.unpersist` logs it under the RDD
+    *     subclass's own logger, so this filter matches the message across
+    *     the whole logging context.
+    * Every other message passes, at the level its logger has. */
+  private lazy val quietExpectedWarns: Unit = {
     SparkLog.configure()
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val cfg = ctx.getConfiguration
@@ -61,6 +68,10 @@ object GraftSession {
       cfg.addLogger(SchedulerLogger, new LoggerConfig(SchedulerLogger, null, true))
     cfg.getLoggerConfig(SchedulerLogger).addFilter(RegexFilter.createFilter(
       "(?s)Failed to cancel job group .*\\. Cannot find active jobs for it\\.",
+      null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+    cfg.addFilter(RegexFilter.createFilter(
+      "(?s)RDD \\d+ was locally checkpointed, its lineage has been truncated " +
+        "and cannot be recomputed after unpersisting",
       null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
     ctx.updateLoggers()
   }

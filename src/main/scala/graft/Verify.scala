@@ -10,13 +10,10 @@ object Verify {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     val spark = GraftSession("verify")
     new java.io.File(outDir).mkdirs()
-    // per-query cap-drop counters (exact: one execution per query here),
-    // dumped as a sidecar so the capped generators' recall trade is a
-    // diffable artifact of every verify run
-    val capRows = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
-    // over-cap buckets SPLIT into bounded sub-buckets (containment path):
-    // extra join volume, zero recall loss — censused separately from drops
-    val splitRows = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
+    // per-query cap-drop and split counters (exact: one execution per
+    // query here), dumped as sidecars so the capped generators' trade is
+    // a diffable artifact of every verify run
+    val caps = new DedupStats.CapCensus
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -26,8 +23,7 @@ object Verify {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
-        if (drops._1 > 0) capRows(name) = drops
-        if (splits._1 > 0) splitRows(name) = splits
+        caps.record(name, drops, splits)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // A failed query must leave an artifact: an absent output directory
@@ -46,14 +42,8 @@ object Verify {
         errors(name) = s"${e.getClass.getName}: ${e.getMessage}".take(500)
       }
     }
-    Files.writeString(Paths.get(s"$outDir/cap_drops.json"),
-      capRows.map { case (k, (b, r, m)) =>
-        s"""\"$k\": {\"dropped_buckets\": $b, \"dropped_rows\": $r, \"max_bucket\": $m}"""
-      }.mkString("{", ", ", "}"))
-    Files.writeString(Paths.get(s"$outDir/cap_splits.json"),
-      splitRows.map { case (k, (b, r, m)) =>
-        s"""\"$k\": {\"split_buckets\": $b, \"split_rows\": $r, \"max_bucket\": $m}"""
-      }.mkString("{", ", ", "}"))
+    Files.writeString(Paths.get(s"$outDir/cap_drops.json"), caps.dropsJson)
+    Files.writeString(Paths.get(s"$outDir/cap_splits.json"), caps.splitsJson)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -174,6 +174,30 @@ object DedupStats {
       (splitBuckets.get, splitRows.get, maxSplitBucket.get))
   }
 
+  /** The per-query [[census]] of one battery run, as Bench writes it
+    * (`BENCH_FULL.json`'s `cap_drops` and `cap_splits`) and Verify
+    * (`cap_drops.json`, `cap_splits.json`): one
+    * `(buckets, rows, max_bucket)` record per query with a non-zero
+    * count, in run order. */
+  final class CapCensus {
+    private val drops = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
+    private val splits = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
+
+    /** Record query `name`'s drop and split census. */
+    def record(name: String, d: (Long, Long, Long), s: (Long, Long, Long)): Unit = {
+      if (d._1 > 0) drops(name) = d
+      if (s._1 > 0) splits(name) = s
+    }
+
+    def dropsJson: String = json(drops, "dropped")
+    def splitsJson: String = json(splits, "split")
+
+    private def json(rows: Iterable[(String, (Long, Long, Long))], kind: String) =
+      rows.map { case (k, (b, r, m)) =>
+        s""""$k":{"${kind}_buckets":$b,"${kind}_rows":$r,"max_bucket":$m}"""
+      }.mkString("{", ",", "}")
+  }
+
   /** Best-effort wait for the async listener bus to drain (tests). */
   def awaitQuiesce(spark: SparkSession): Unit =
     org.apache.spark.graftbridge.ListenerBridge

@@ -35,10 +35,11 @@ import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
   * seek-a-few-blocks cost. The bound is a constant so that driver work
   * stays O(1) in store size; anything else (a filtered frame, a fleet, a
   * longer window) takes the distributed aggregate, with the same rows
-  * and schema either way. The local answer is one Spark-free core over
-  * `(path, Configuration)`: [[query]] reaches it through the load's path
-  * and the session's Hadoop configuration, and the cold `EtsdCmd query`
-  * calls it as [[answer]] before it builds any session. With `s=` missing
+  * and schema either way. The local answer is one Spark-free core over a
+  * listed [[TsdStore]] and a Hadoop `Configuration`: [[query]] lists the
+  * load's path through the session's Hadoop configuration, and the cold
+  * `EtsdCmd query` calls it as [[answer]] on the store it listed before
+  * it builds any session. With `s=` missing
   * or naming `begin`, the core reads `begin` itself when the whole store
   * is within the bound, and otherwise leaves it to one aggregate job. */
 object EtsdQueryApi {
@@ -134,9 +135,9 @@ object EtsdQueryApi {
   /** [[query]]'s rows for the bare `.tsd` store `store`, with no Spark
     * session: the cold `EtsdCmd query`. None when the local rule declines
     * (the selection is over [[TsdLocalScan.MaxBlocks]] blocks, or `begin`
-    * is needed and the whole store is); the caller then runs [[query]]
-    * over a session, which takes the distributed plan. Bad arguments
-    * raise IllegalArgumentException either way. */
+    * is needed and the whole store is); the caller then runs
+    * [[queryDistributed]] over a session, which does not retry the fold.
+    * Bad arguments raise IllegalArgumentException either way. */
   def answer(conf: Configuration, store: TsdStore, rawArgs: Seq[String],
              now: Instant): Option[Seq[(String, Long, Double)]] =
     local(conf, store, resolve(store.schema, rawArgs, now), TsdLocalScan.firstTs(conf, store))
@@ -149,7 +150,8 @@ object EtsdQueryApi {
     run(df, schema, rawArgs, now, driverLocal = true)
 
   /** [[query]] always through the distributed aggregate, never the
-    * driver-local fold: the reference plan the local answer must equal. */
+    * driver-local fold: the reference plan the local answer must equal,
+    * and the cold `EtsdCmd query`'s plan once [[answer]] has declined. */
   private[graft] def queryDistributed(df: DataFrame, schema: EtsdSchema,
       rawArgs: Seq[String], now: Instant): DataFrame =
     run(df, schema, rawArgs, now, driverLocal = false)

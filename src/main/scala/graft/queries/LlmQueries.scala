@@ -1,9 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft._
 import graft.functions.DetHash
@@ -1267,61 +1265,23 @@ object LlmQueries {
     * (ts, doc_id) order and the chunks are fed in doc_id order, so a
     * cell's holder is exactly its minimum doc_id — the oracle's closed
     * form. */
-  /** Shared TEST-HARNESS scaffolding the four streaming gate fixtures
-    * run on: a [[MemoryStream]] feeding the operator under test into a
-    * uniquely-named in-memory sink, read back after the feed completes.
-    * One implementation so the UUID-sink / Append-mode / try-finally
-    * plumbing (and any future fix to it) lives in one place. */
-  private def runStreamFixture[T: org.apache.spark.sql.Encoder](
-      s: SparkSession, prefix: String)(
-      toStream: DataFrame => DataFrame)(
-      build: DataFrame => DataFrame)(
-      feed: (MemoryStream[T],
-             org.apache.spark.sql.streaming.StreamingQuery) => Unit)
-      : DataFrame = {
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val mem = MemoryStream[T]
-    val sink =
-      s"${prefix}_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = build(toStream(mem.toDF()))
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    // copy the (fixture-sized) result out and DROP the sink — on EVERY
-    // path, including a throwing feed (a state-bound require, a poison
-    // row): the memory sink + temp view otherwise outlive the call, so
-    // a loop re-running the battery in one session (BenchOne, a
-    // bench harness) accumulates one full result set per invocation in
-    // driver memory for the session's lifetime
-    try {
-      try feed(mem, q) finally q.stop()
-      val out = s.table(sink)
-      val rows = java.util.Arrays.asList(out.collect(): _*)
-      s.createDataFrame(rows, out.schema)
-    } finally s.catalog.dropTempView(sink)
-  }
-
   private def streamNearDedupVerdicts(s: SparkSession,
                                       d: String): DataFrame = {
     import s.implicits._
     val rows = docs(s, d).filter($"doc_id" <= StreamNdMaxDoc)
       .select($"doc_id", $"text").as[(Long, String)]
       .collect().sortBy(_._1)
-    runStreamFixture[(Long, String)](s, "nd") { df =>
-      df.select($"_1".as("doc_id"),
-        timestamp_seconds(lit(StreamNdT0) + $"_1").as("ts"),
-        $"_2".as("text"))
-    } { stream =>
-      DedupOps.streamingNearDedup(stream, StreamNdLatenessSec).toDF()
-    } { (mem, q) =>
-      rows.grouped(60).foreach { chunk =>
-        mem.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
+    val mem = StreamFixture.source[(Long, String)](s)
+    val stream = mem.toDF().select($"_1".as("doc_id"),
+      timestamp_seconds(lit(StreamNdT0) + $"_1").as("ts"),
+      $"_2".as("text"))
+    StreamFixture.collect(s, "nd",
+        DedupOps.streamingNearDedup(stream, StreamNdLatenessSec).toDF()) { q =>
+      StreamFixture.feed(q, mem, rows.grouped(60).map(_.toSeq).toSeq)
       // the streaming contract, asserted like streamDistinct's: state is
       // one row per distinct (band, bkey) cell — ≤ NumBands per doc —
       // never per-row or per-shingle
-      val maxState = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal)
-        .maxOption.getOrElse(0L)
+      val maxState = StreamFixture.progress(q).maxStateRows
       require(maxState <= DetHash.NumBands * (StreamNdMaxDoc + 1),
         s"near-dup state holds $maxState rows for ${rows.length} docs")
     }
@@ -1354,17 +1314,13 @@ object LlmQueries {
     val rows = sp.filter($"split" =!= "test" && $"doc_id" <= StreamCtMaxDoc)
       .select($"doc_id", $"text").as[(Long, String)]
       .collect().sortBy(_._1)
-    runStreamFixture[(Long, String)](s, "ct") { df =>
-      df.select($"_1".as("doc_id"),
-        timestamp_seconds(lit(StreamNdT0) + $"_1").as("ts"),
-        $"_2".as("text"))
-    } { stream =>
-      DedupOps.streamingContamination(stream, evalIdx,
-        minJaccard = 0.5, maxLatenessSec = StreamNdLatenessSec)
-    } { (mem, q) =>
-      rows.grouped(100).foreach { chunk =>
-        mem.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
+    val mem = StreamFixture.source[(Long, String)](s)
+    val stream = mem.toDF().select($"_1".as("doc_id"),
+      timestamp_seconds(lit(StreamNdT0) + $"_1").as("ts"),
+      $"_2".as("text"))
+    StreamFixture.collect(s, "ct", DedupOps.streamingContamination(stream,
+        evalIdx, minJaccard = 0.5, maxLatenessSec = StreamNdLatenessSec)) { q =>
+      StreamFixture.feed(q, mem, rows.grouped(100).map(_.toSeq).toSeq)
     }
       .select($"train_id", $"eval_id", $"n_common", $"jaccard")
       .orderBy("train_id", "eval_id")
@@ -1389,41 +1345,29 @@ object LlmQueries {
     idx.count()
     val rows = dirty.filter($"did" < 1000000L + StreamFzMaxDoc)
       .select($"did", $"dk").as[(Long, String)].collect().sortBy(_._1)
-    runStreamFixture[(Long, String)](s, "fz") { df =>
-      df.select($"_1".as("did"),
-        timestamp_seconds(lit(StreamNdT0) + ($"_1" - 1000000L)).as("ts"),
-        $"_2".as("dk"))
-    } { stream =>
-      FuzzyJoinOps.streamingFuzzyLink(stream, $"did", $"ts", $"dk",
-        idx, FuzzyK, maxLatenessSec = StreamNdLatenessSec)
-    } { (mem, q) =>
-      rows.grouped(50).foreach { chunk =>
-        mem.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
+    val mem = StreamFixture.source[(Long, String)](s)
+    val stream = mem.toDF().select($"_1".as("did"),
+      timestamp_seconds(lit(StreamNdT0) + ($"_1" - 1000000L)).as("ts"),
+      $"_2".as("dk"))
+    StreamFixture.collect(s, "fz", FuzzyJoinOps.streamingFuzzyLink(stream,
+        $"did", $"ts", $"dk", idx, FuzzyK,
+        maxLatenessSec = StreamNdLatenessSec)) { q =>
+      StreamFixture.feed(q, mem, rows.grouped(50).map(_.toSeq).toSeq)
       // the streaming contract: state is one row per emitted pair (plus
       // nothing per probe or per candidate) — a candidate- or probe-
-      // sized leak overshoots this bound immediately. The absent-metric
-      // case fails loudly (r12 ADVICE pattern) — but only when batches
-      // were actually fed: an empty corpus legitimately has no progress
-      // (EmptyInputSpec's shape), and there is nothing to assert.
-      if (rows.nonEmpty) {
-        val maxState = q.recentProgress.toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal)
-          .maxOption.getOrElse(-1L)
-        require(maxState >= 0, "stream fuzzy link: state metrics absent")
-        // the contract is one state row per emitted DISTINCT pair, so
-        // the bound is the OBSERVED emitted-link count (each batch's
-        // sink rows are post-dedup distinct pairs, and a pair enters
-        // state in the batch it emits) — not a fixed multiple of the
-        // probe count, which a legitimately link-dense corpus (many
-        // clean keys sharing a dirty key's prefix) would overshoot
-        val emitted = q.recentProgress.toSeq
-          .map(_.sink.numOutputRows).filter(_ >= 0).sum
-        require(maxState <= emitted,
-          s"fuzzy-link state holds $maxState rows but only $emitted " +
-            s"links were emitted for ${rows.length} probes — a probe- " +
-            "or candidate-sized leak, not pair-level state")
-      }
+      // sized leak overshoots this bound immediately. The contract is
+      // one state row per emitted DISTINCT pair, so the bound is the
+      // OBSERVED emitted-link count (each batch's sink rows are
+      // post-dedup distinct pairs, and a pair enters state in the batch
+      // it emits) — not a fixed multiple of the probe count, which a
+      // legitimately link-dense corpus (many clean keys sharing a dirty
+      // key's prefix) would overshoot
+      val p = StreamFixture.progress(q)
+      val (maxState, emitted) = (p.maxStateRows, p.sinkRows)
+      require(maxState <= emitted,
+        s"fuzzy-link state holds $maxState rows but only $emitted " +
+          s"links were emitted for ${rows.length} probes — a probe- " +
+          "or candidate-sized leak, not pair-level state")
     }
       .select($"right_id".as("doc_id"), $"left_id".as("did"), $"dist")
       .orderBy("doc_id", "did")
@@ -1450,24 +1394,21 @@ object LlmQueries {
     val probes = idx.filter($"vec_id" < AnnProbeMax)
       .select($"vec_id", $"qv").as[(Long, Seq[Long])]
       .collect().sortBy(_._1)
-    runStreamFixture[(Long, Long, Seq[Long])](s, "ann") { df =>
-      df.select($"_1".as("probe_id"),
-        timestamp_seconds(lit(StreamNdT0) + $"_2").as("ts"),
-        $"_3".as("qv"))
-    } { stream =>
-      VectorOps.streamingAnnServe(stream, idx, AnnK, LshPlanes,
-        EmbDim, probeRadius = 2, windowSec = StreamAnnWindowSec,
-        latenessSec = 1L)
-    } { (mem, q) =>
-      mem.addData(probes.map { case (id, qv) => (id, id, qv) }.toSeq: _*)
-      q.processAllAvailable()
+    val mem = StreamFixture.source[(Long, Long, Seq[Long])](s)
+    val stream = mem.toDF().select($"_1".as("probe_id"),
+      timestamp_seconds(lit(StreamNdT0) + $"_2").as("ts"),
+      $"_3".as("qv"))
+    StreamFixture.collect(s, "ann", VectorOps.streamingAnnServe(stream, idx,
+        AnnK, LshPlanes, EmbDim, probeRadius = 2,
+        windowSec = StreamAnnWindowSec, latenessSec = 1L)) { q =>
       // the watermark advancer needs A vector; on an empty corpus (no
       // probes) a zero vector keeps the fixture total — its own window
       // never emits either way
       val sentinelQv = probes.headOption.map(_._2)
         .getOrElse(Seq.fill(EmbDim)(0L))
-      mem.addData((-1L, 10L * StreamAnnWindowSec, sentinelQv))
-      q.processAllAvailable()
+      StreamFixture.feed(q, mem, Seq(
+        probes.map { case (id, qv) => (id, id, qv) }.toSeq,
+        Seq((-1L, 10L * StreamAnnWindowSec, sentinelQv))))
     }
       .filter($"probe_id" >= 0)
       .select($"probe_id", $"vec_id", $"cos", $"rk")
@@ -1500,14 +1441,11 @@ object LlmQueries {
     val rows = embs(s, d).filter(arriving)
       .select($"vec_id", $"embedding".cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val appended = runStreamFixture[(Long, Seq[Double])](s, "apd") { df =>
-      df.select($"_1".as("vec_id"), $"_2".as("emb"))
-    } { stream =>
-      VectorOps.streamingIvfAssign(stream, $"vec_id", $"emb", cents)
-    } { (mem, q) =>
-      rows.grouped(100).foreach { chunk =>
-        mem.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
+    val mem = StreamFixture.source[(Long, Seq[Double])](s)
+    val appended = StreamFixture.collect(s, "apd", VectorOps.streamingIvfAssign(
+        mem.toDF().select($"_1".as("vec_id"), $"_2".as("emb")),
+        $"vec_id", $"emb", cents)) { q =>
+      StreamFixture.feed(q, mem, rows.grouped(100).map(_.toSeq).toSeq)
     }
     VectorOps.ivfKnnWithIndex(vecs, cents,
         baseAssign.unionByName(appended.select($"vec_id", $"list_id")),
@@ -1533,14 +1471,11 @@ object LlmQueries {
     val rows = embs(s, d).filter(arriving)
       .select($"vec_id", $"embedding".cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val appended = runStreamFixture[(Long, Seq[Double])](s, "pqa") { df =>
-      df.select($"_1".as("vec_id"), $"_2".as("emb"))
-    } { stream =>
-      VectorOps.streamingPqEncode(stream, $"vec_id", $"emb", codebook, PqM)
-    } { (mem, q) =>
-      rows.grouped(100).foreach { chunk =>
-        mem.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
+    val mem = StreamFixture.source[(Long, Seq[Double])](s)
+    val appended = StreamFixture.collect(s, "pqa", VectorOps.streamingPqEncode(
+        mem.toDF().select($"_1".as("vec_id"), $"_2".as("emb")),
+        $"vec_id", $"emb", codebook, PqM)) { q =>
+      StreamFixture.feed(q, mem, rows.grouped(100).map(_.toSeq).toSeq)
     }
     VectorOps.pqKnnWithIndex(vecs, codebook,
         baseCodes.unionByName(appended.select($"vec_id", $"codes")),
@@ -1564,16 +1499,13 @@ object LlmQueries {
     val rows = docs(s, d).filter($"doc_id" <= StreamFdMaxMedia)
       .select($"doc_id", $"text").as[(Long, String)]
       .collect().sortBy(_._1)
-    runStreamFixture[(Long, String)](s, "fd") { df =>
-      df.select($"_1".as("media_id"),
-        timestamp_seconds(lit(StreamNdT0) + $"_1").as("ts"),
-        encode($"_2", "UTF-8").as("payload"))
-    } { stream =>
-      MultimodalOps.streamingFrameDedup(stream, StreamNdLatenessSec).toDF()
-    } { (mem, q) =>
-      rows.grouped(80).foreach { chunk =>
-        mem.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
+    val mem = StreamFixture.source[(Long, String)](s)
+    val stream = mem.toDF().select($"_1".as("media_id"),
+      timestamp_seconds(lit(StreamNdT0) + $"_1").as("ts"),
+      encode($"_2", "UTF-8").as("payload"))
+    StreamFixture.collect(s, "fd",
+        MultimodalOps.streamingFrameDedup(stream, StreamNdLatenessSec).toDF()) { q =>
+      StreamFixture.feed(q, mem, rows.grouped(80).map(_.toSeq).toSeq)
     }
       .groupBy($"media_id")
       .agg(count(lit(1)).as("n_frames"),

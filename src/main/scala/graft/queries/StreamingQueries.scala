@@ -3,9 +3,7 @@ package graft.queries
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft._
 import graft.streaming.{EcmPackets, EddConfig, EddMain, Ingest, SrcRow}
@@ -34,24 +32,17 @@ object StreamingQueries {
   def streamIngestTotals(spark: SparkSession,
                          restart: Boolean = false): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = Files.createTempDirectory("stream_ingest")
     val out = s"$dir/out"
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val ticks = mem.toDF().select($"value".as("n"),
       timestamp_seconds(lit(T0) + $"value" * IntervalSec).as("ts"))
     val deltas = Ingest.counterDeltas(
       Ingest.simTransform(ticks, 0, Some(StatusEvery)).as[SrcRow])
     def start() = Ingest.commitStream(deltas.toDF(), BlockSec, out, s"$dir/ckpt")
-    if (!restart) {
-      val q = start()
-      try {
-        Seq(1L to 200L, 201L to 400L, 401L to N).foreach { batch =>
-          mem.addData(batch: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } else {
+    if (!restart)
+      StreamFixture.feedThenStop(start(), mem, Seq(1L to 200L, 201L to 400L, 401L to N))
+    else {
       // ts_stream_restart: the SAME feed, but the ingest query is KILLED
       // after the first batch and a new query resumes from the
       // checkpoint — with ticks 201..400 having arrived while nothing
@@ -64,19 +55,20 @@ object StreamingQueries {
       // reference analog is its crash-safe append-only block contract
       // (README.md:7-9); we gate the strictly stronger claim that a
       // kill+resume is value-invisible.
-      val q1 = start()
-      try {
-        mem.addData(1L to 200L: _*)
-        q1.processAllAvailable()
-      } finally q1.stop()
+      StreamFixture.feedThenStop(start(), mem, Seq(1L to 200L))
       mem.addData(201L to 400L: _*) // arrives while the query is down
-      val q2 = start()
-      try {
-        q2.processAllAvailable()
-        mem.addData(401L to N: _*)
-        q2.processAllAvailable()
-      } finally q2.stop()
+      // the resumed query first drains that backlog as its own batch
+      StreamFixture.feedThenStop(start(), mem, Seq(Nil, 401L to N))
     }
+    deltaTotals(spark, out)
+  }
+
+  /** Per-channel row, delta, invalid-row and delta-sum counts of the
+    * [[Ingest.counterDeltas]] output committed under `out` — the
+    * read-back of `ts_stream_ingest`, `_restart`, `_reset` and
+    * `_timeout`. */
+  private def deltaTotals(spark: SparkSession, out: String): DataFrame = {
+    import spark.implicits._
     spark.read.parquet(out)
       .groupBy($"channel")
       .agg(count(lit(1)).as("n_rows"),
@@ -111,19 +103,15 @@ object StreamingQueries {
     * admits or drops anything unplanned. */
   def streamLateTotals(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val rows = mem.toDF().select($"value".as("n"))
       .select($"n", explode(typedLit(LateChans)).as("ch"))
       .select(((lit(LateT0) + $"n" * 10L) * 1000000L).as("ts_us"),
         $"ch._1".as("channel"),
         (($"n" * $"ch._2") % 101L).cast("double").as("value"),
         ($"n" % 7L =!= 0L).as("valid"))
-    val agg = Ingest.blockAggregate(rows, 600L, "20 minutes")
-    val sink = s"late_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    StreamFixture.collect(spark, "late_sink",
+        Ingest.blockAggregate(rows, 600L, "20 minutes")) { q =>
       val held = (LateDropped ++ LateAdmitted).toSet
       // b1 advances the watermark to t0+1800s; the two sub-300 admits
       // return in b2 against still-open blocks. b3 re-injects the
@@ -136,14 +124,12 @@ object StreamingQueries {
         (301L to 450L).filterNot(held) ++ Seq(230L, 280L),
         (451L to 600L) ++ Seq(350L) ++ LateDropped,
         Seq(800L))
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      val dropped = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq.map(_.numRowsDroppedByWatermark)).sum
+      StreamFixture.feed(q, mem, batches)
+      val dropped = StreamFixture.progress(q).droppedByWatermark
       require(dropped == LateDropped.size * LateChans.size,
         s"watermark dropped $dropped rows, planted ${LateDropped.size *
           LateChans.size} - late-data semantics drifted")
-    } finally q.stop()
-    spark.table(sink).orderBy("block_epoch", "channel")
+    }.orderBy("block_epoch", "channel")
   }
 
   // ---- ts_stream_dedup fixture geometry (duplicate delivery) ----
@@ -166,8 +152,7 @@ object StreamingQueries {
     * that slips through shifts both and fails loudly. */
   def streamDedupTotals(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val deduped = mem.toDF().select($"value".as("n"))
       .select($"n", explode(typedLit(LateChans)).as("ch"))
       .select(timestamp_seconds(lit(LateT0) + $"n" * 10L).as("ts"),
@@ -180,27 +165,20 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n"), sum($"v").as("total"))
       .select(unix_seconds($"window.start").as("block_epoch"),
         $"channel", $"n", $"total")
-    val sink = s"dedup_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    StreamFixture.collect(spark, "dedup_sink", agg) { q =>
       // the final sentinel (n=1500) pushes the watermark past every real
       // block end so Append emits them; its own block never closes
       val batches = Seq(
         (1L to 400L) ++ DupWithin,
         (401L to 600L) ++ DupAcross,
         Seq(1500L))
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      val updated = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq)
-        .filter(_.operatorName.contains("dedupe"))
-        .map(_.numRowsUpdated).sum
+      StreamFixture.feed(q, mem, batches)
+      val updated = StreamFixture.progress(q).rowsUpdated("dedupe")
       val wantDistinct = (LateN + 1) * LateChans.size // ticks + sentinel
       require(updated == wantDistinct,
         s"dedup state admitted $updated rows, planted $wantDistinct - " +
           "duplicate-delivery semantics drifted")
-    } finally q.stop()
-    spark.table(sink).orderBy("block_epoch", "channel")
+    }.orderBy("block_epoch", "channel")
   }
 
   // ---- ts_stream_distinct fixture geometry (sketch cardinality) ----
@@ -224,9 +202,8 @@ object StreamingQueries {
     * bucket — a per-event state leak fails loudly. */
   def streamDistinct(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val thr = 1L << (60 - DistinctLogInvFrac)
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val kept = mem.toDF().select($"value".as("n"))
       .select($"n", explode(typedLit(LateChans)).as("ch"))
       .select(timestamp_seconds(lit(LateT0) + $"n" * 10L).as("ts"),
@@ -252,30 +229,17 @@ object StreamingQueries {
         size($"hs").cast("long").as("n_kept"),
         (size($"hs").cast("long") * (1L << DistinctLogInvFrac))
           .as("est_distinct"))
-    val sink = s"dist_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    StreamFixture.collect(spark, "dist_sink", agg) { q =>
       // the sentinel (n=50000) pushes the watermark past both real
       // hourly buckets so Append emits them; its own bucket never closes
-      Seq(1L to 300L, 301L to LateN, Seq(50000L)).foreach { b =>
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-      val maxState = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal)
-        .maxOption.getOrElse(0L)
+      StreamFixture.feed(q, mem, Seq(1L to 300L, 301L to LateN, Seq(50000L)))
       // ≤ one row per (hourly bucket, channel) incl. the sentinel's open
-      // bucket — 3 buckets × 2 channels, with headroom for overlap.
-      // The ≥ 1 bound keeps the guard non-vacuous: if a Spark upgrade
-      // stops populating stateOperators, maxState reads 0 and the leak
-      // assert would otherwise pass while asserting nothing.
-      require(maxState >= 1L,
-        "stateOperators metrics are empty - the state-leak guard is blind")
+      // bucket — 3 buckets × 2 channels, with headroom for overlap
+      val maxState = StreamFixture.progress(q).maxStateRows
       require(maxState <= 8L,
         s"distinct state holds $maxState rows for ${LateChans.size} " +
           "channels x 3 buckets - sketch state is leaking per-event rows")
-    } finally q.stop()
-    spark.table(sink).orderBy("bucket_epoch", "channel")
+    }.orderBy("bucket_epoch", "channel")
   }
 
   /** Streaming percentile monitoring — the KMV quantile sketch live,
@@ -288,9 +252,8 @@ object StreamingQueries {
     * State is again one row per open bucket, asserted via metrics. */
   def streamQuantiles(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val thr = 1L << (60 - DistinctLogInvFrac)
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val kept = mem.toDF().select($"value".as("n"))
       .select($"n", explode(typedLit(LateChans)).as("ch"))
       .select(timestamp_seconds(lit(LateT0) + $"n" * 10L).as("ts"),
@@ -311,23 +274,13 @@ object StreamingQueries {
           floor(($"n_kept" * 50 + 99L) / 100L).cast("int")).as("p50"),
         element_at($"vs",
           floor(($"n_kept" * 95 + 99L) / 100L).cast("int")).as("p95"))
-    val sink = s"qtl_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
-      Seq(1L to 300L, 301L to LateN, Seq(50000L)).foreach { b =>
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-      val maxState = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal)
-        .maxOption.getOrElse(0L)
-      require(maxState >= 1L, // same non-vacuity bound as streamDistinct
-        "stateOperators metrics are empty - the state-leak guard is blind")
+    StreamFixture.collect(spark, "qtl_sink", agg) { q =>
+      StreamFixture.feed(q, mem, Seq(1L to 300L, 301L to LateN, Seq(50000L)))
+      val maxState = StreamFixture.progress(q).maxStateRows
       require(maxState <= 8L,
         s"quantile state holds $maxState rows for ${LateChans.size} " +
           "channels x 3 buckets - sample state is leaking per-event rows")
-    } finally q.stop()
-    spark.table(sink).orderBy("bucket_epoch", "channel")
+    }.orderBy("bucket_epoch", "channel")
   }
 
   // ---- ts_stream_cms fixture geometry (heavy-hitter sketch) ----
@@ -357,8 +310,7 @@ object StreamingQueries {
     * the tick closed form, not just their error bound. */
   def streamCmsHeavy(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val cells = mem.toDF().select($"value".as("n"))
       .select(timestamp_seconds(lit(LateT0) + $"n" * 10L).as("ts"), $"n")
       // zipf-ish: every 5th tick lands on a hot id in [0, 7)
@@ -374,33 +326,23 @@ object StreamingQueries {
       .agg(count(lit(1)).as("cnt"))
       .select(unix_seconds($"window.start").as("bucket_epoch"),
         $"j", $"cell", $"cnt")
-    val sink = s"cms_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = cells.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    val landed = StreamFixture.collect(spark, "cms_sink", cells) { q =>
       // sentinel (n=50000) closes both real hourly buckets; its own
       // window stays open and never lands
-      Seq(1L to 300L, 301L to LateN, Seq(50000L)).foreach { b =>
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-      val maxState = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal)
-        .maxOption.getOrElse(0L)
+      StreamFixture.feed(q, mem, Seq(1L to 300L, 301L to LateN, Seq(50000L)))
       // the sketch bound: ≤ d·w per open window (3 windows incl. the
       // sentinel's). The fixture has 600+ ticks/window × d cells, so a
       // per-event leak lands far above this and fails loudly.
-      require(maxState >= 1L, // same non-vacuity bound as streamDistinct
-        "stateOperators metrics are empty - the state-leak guard is blind")
+      val maxState = StreamFixture.progress(q).maxStateRows
       require(maxState <= CmsStreamD * CmsStreamW * 3,
         s"CMS state holds $maxState rows > d*w*windows = " +
           s"${CmsStreamD * CmsStreamW * 3} - sketch state is leaking " +
           "per-event rows")
-    } finally q.stop()
+    }
     // batch probe readout over the landed counter tables; both sides
-    // read the sink, so the probe side's columns are RENAMED before the
+    // read them, so the probe side's columns are RENAMED before the
     // self-join (aliased outputs carry fresh attribute ids — the
     // standard cure for conflicting-reference self-joins)
-    val landed = spark.table(sink)
     val probes = landed.select($"bucket_epoch".as("pe")).distinct()
       .select($"pe", explode(array(
         (0 until CmsStreamProbes).map(i => lit(i.toLong)): _*)).as("u"))
@@ -429,9 +371,8 @@ object StreamingQueries {
     * form recomputed in DuckDB. */
   def streamMirrorRollups(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = Files.createTempDirectory("edo_mirror")
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val rows = mem.toDF().select($"value".as("n"))
       .select($"n", explode(typedLit(LateChans)).as("ch"))
       .select(((lit(LateT0) + $"n" * 10L) * 1000000L).as("ts_us"),
@@ -440,11 +381,7 @@ object StreamingQueries {
         ($"n" % 7 =!= 0).as("valid"))
     val q = Ingest.edoMirror(rows, Seq(3600L, 86400L),
       s"$dir/out", s"$dir/ckpt")
-    try {
-      Seq(1L to 300L, 301L to LateN).foreach { b =>
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
+    StreamFixture.feedThenStop(q, mem, Seq(1L to 300L, 301L to LateN))
     Ingest.mergeMirror(spark, s"$dir/out")
       .select($"resolution_sec".cast("long").as("resolution_sec"),
         $"channel", $"bucket_epoch", $"n", $"ave", $"vmin", $"vmax", $"last")
@@ -468,28 +405,23 @@ object StreamingQueries {
     * DATA_INVALID. */
   def streamTsdMirror(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val names = Seq("c0", "c1")
     val schema = graft.model.EtsdSchema(
       names.map(n => graft.model.ChannelConfig(n,
         graft.model.StreamType.LargeS)),
       intervalSec = 3600, blockIntervals = 24)
     val dir = Files.createTempDirectory("tsd_mirror")
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val rows = mem.toDF().select($"value".as("n"))
       .select($"n", explode(typedLit(LateChans)).as("ch"))
       .select(((lit(TsdT0) + $"n" * 3600L) * 1000000L).as("ts_us"),
         $"ch._1".as("channel"),
         (($"n" * $"ch._2") % 101L).as("value"),
         ($"n" % 7 =!= 0).as("valid"))
-    val q = Ingest.tsdMirror(rows, schema, s"$dir/out", s"$dir/ckpt")
-    try {
-      // one whole day-span per micro-batch, as the contract requires
-      (0 until TsdDays).foreach { day =>
-        mem.addData((day * 24L) until ((day + 1) * 24L): _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    // one whole day-span per micro-batch, as the contract requires
+    StreamFixture.feedThenStop(
+      Ingest.tsdMirror(rows, schema, s"$dir/out", s"$dir/ckpt"), mem,
+      (0 until TsdDays).map(day => (day * 24L) until ((day + 1) * 24L)))
     spark.read.format("graft.sources.TsdDataSource").load(s"$dir/out")
       .filter($"valid" && !$"is_register")
       .select($"channel",
@@ -516,9 +448,8 @@ object StreamingQueries {
     * against the interval-join closed form. */
   def streamJoinEnriched(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val memT = MemoryStream[Long]
-    val memA = MemoryStream[Long]
+    val memT = StreamFixture.source[Long](spark)
+    val memA = StreamFixture.source[Long](spark)
     val ticks = memT.toDF().select($"value".as("n"))
       .select($"n", explode(typedLit(LateChans)).as("ch"))
       .select(timestamp_seconds(lit(LateT0) + $"n" * 10L).as("ts"),
@@ -534,18 +465,14 @@ object StreamingQueries {
           "ts < ats + interval 600 seconds"))
       .select(unix_seconds($"ats").as("alert_epoch"), $"channel",
         unix_micros($"ts").as("ts_us"), $"v")
-    val sink = s"join_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    StreamFixture.collect(spark, "join_sink", joined) { q =>
       // alerts 4-6 arrive AFTER their covered ticks: the matches must
       // be served from the join's buffered tick state
       memT.addData(1L to 300L: _*); memA.addData(1L, 2L, 3L)
       q.processAllAvailable()
       memT.addData(301L to 600L: _*); memA.addData(4L, 5L, 6L)
       q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).orderBy("alert_epoch", "channel", "ts_us")
+    }.orderBy("alert_epoch", "channel", "ts_us")
   }
 
   // ---- ts_stream_sessions fixture geometry ----
@@ -569,8 +496,7 @@ object StreamingQueries {
     * boundary different from the batch operator, pinned by the oracle. */
   def streamSessionTotals(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val sentinelTs = LateT0 + 80000L
     val rows = mem.toDF().select($"value".as("n"))
       .select(
@@ -586,17 +512,12 @@ object StreamingQueries {
       .select($"user_id",
         unix_micros($"session_window.start").as("start_us"),
         unix_micros($"session_window.end").as("end_us"), $"n_events")
-    val sink = s"sess_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
-      val batches = Seq(
+    StreamFixture.collect(spark, "sess_sink", agg) { q =>
+      StreamFixture.feed(q, mem, Seq(
         (1L to SessN).filter(_ % 2 == 1),
         (1L to SessN).filter(_ % 2 == 0), // hours-older ticks return late
-        Seq(-1L))                         // flush sentinel (user 99 only)
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink).orderBy("user_id", "start_us")
+        Seq(-1L)))                        // flush sentinel (user 99 only)
+    }.orderBy("user_id", "start_us")
   }
 
   // ---- ts_stream_ecm fixture geometry (golden ECM-1240 wire bytes) ----
@@ -635,9 +556,8 @@ object StreamingQueries {
     * `n_invalid` and fail the gate. */
   def streamEcmTotals(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = Files.createTempDirectory("stream_ecm")
-    val mem = MemoryStream[(Long, Array[Byte])]
+    val mem = StreamFixture.source[(Long, Array[Byte])](spark)
     val rows = Ingest.applyStatus(EcmPackets.toSrcRows(
       EcmPackets.decodeStream(mem.toDS()), sourceId = 3).toDF())
     val q = Ingest.commitStream(rows, BlockSec, s"$dir/out", s"$dir/ckpt")
@@ -651,11 +571,8 @@ object StreamingQueries {
                     else Array.emptyByteArray
       ((EcmT0 + n * 10L) * 1000000L, garbage ++ p ++ partial)
     }
-    try {
-      Seq(1L to 80L, 81L to 160L, 161L to EcmN).foreach { b =>
-        mem.addData(b.map(buffer): _*); q.processAllAvailable()
-      }
-    } finally q.stop()
+    StreamFixture.feedThenStop(q, mem,
+      Seq(1L to 80L, 81L to 160L, 161L to EcmN).map(_.map(buffer)))
     spark.read.parquet(s"$dir/out")
       .groupBy($"channel")
       .agg(count(lit(1)).as("n_rows"),
@@ -687,9 +604,8 @@ object StreamingQueries {
     * around the reset. Totals hash-compare against the closed form. */
   def streamResetTotals(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = Files.createTempDirectory("stream_reset")
-    val mem = MemoryStream[(Long, Array[Byte])]
+    val mem = StreamFixture.source[(Long, Array[Byte])](spark)
     val deltas = Ingest.counterDeltas(EcmPackets.toSrcRows(
       EcmPackets.decodeStream(mem.toDS()), sourceId = 4))
     val q = Ingest.commitStream(deltas.toDF(), BlockSec, s"$dir/out", s"$dir/ckpt")
@@ -702,18 +618,9 @@ object StreamingQueries {
       if (ResetCorrupt(n)) p(20) = (p(20) ^ 0x5A).toByte
       ((EcmT0 + n * 10L) * 1000000L, p)
     }
-    try {
-      Seq(1L to ResetAt, ResetAt + 1 to 450L, 451L to ResetN).foreach { b =>
-        mem.addData(b.map(buffer): _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.read.parquet(s"$dir/out")
-      .groupBy($"channel")
-      .agg(count(lit(1)).as("n_rows"),
-        count($"delta").as("n_deltas"),
-        (count(lit(1)) - count($"delta")).as("n_invalid"),
-        sum($"delta").as("total"))
-      .orderBy("channel")
+    StreamFixture.feedThenStop(q, mem,
+      Seq(1L to ResetAt, ResetAt + 1 to 450L, 451L to ResetN).map(_.map(buffer)))
+    deltaTotals(spark, s"$dir/out")
   }
 
   // ---- ts_stream_timeout fixture geometry (give-up after 255 misses) ----
@@ -741,9 +648,8 @@ object StreamingQueries {
     * closed form (re-anchor iff the gap exceeds 255 missed intervals). */
   def streamTimeoutTotals(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = Files.createTempDirectory("stream_timeout")
-    val mem = MemoryStream[(Long, Array[Byte])]
+    val mem = StreamFixture.source[(Long, Array[Byte])](spark)
     val deltas = Ingest.counterDeltas(EcmPackets.toSrcRows(
       EcmPackets.decodeStream(mem.toDS()), sourceId = 5))
     val q = Ingest.commitStream(deltas.toDF(), BlockSec, s"$dir/out", s"$dir/ckpt")
@@ -753,19 +659,10 @@ object StreamingQueries {
         p(20) = (p(20) ^ 0x5A).toByte // checksum breaks in flight
       ((EcmT0 + n * 10L) * 1000000L, p)
     }
-    try {
-      // batch 1 ends mid-outage (tick 300 is inside the corrupted run)
-      Seq(1L to 300L, 301L to 500L, 501L to TimeoutN).foreach { b =>
-        mem.addData(b.map(buffer): _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.read.parquet(s"$dir/out")
-      .groupBy($"channel")
-      .agg(count(lit(1)).as("n_rows"),
-        count($"delta").as("n_deltas"),
-        (count(lit(1)) - count($"delta")).as("n_invalid"),
-        sum($"delta").as("total"))
-      .orderBy("channel")
+    // batch 1 ends mid-outage (tick 300 is inside the corrupted run)
+    StreamFixture.feedThenStop(q, mem,
+      Seq(1L to 300L, 301L to 500L, 501L to TimeoutN).map(_.map(buffer)))
+    deltaTotals(spark, s"$dir/out")
   }
 
   // ---- ts_stream_edd fixture geometry (assembled ≤4-source daemon) ----
@@ -793,19 +690,14 @@ object StreamingQueries {
     * slip all shift the per-channel rows. */
   def streamEddTotals(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val cfg = EddConfig.parse(EddConfigText)
     val dir = Files.createTempDirectory("stream_edd")
-    val mem = MemoryStream[Long]
+    val mem = StreamFixture.source[Long](spark)
     val ticks = mem.toDF().select($"value".as("n"),
       timestamp_seconds(lit(EcmT0) + $"value" * IntervalSec).as("ts"))
     val rows = EddMain.assembleFromTicks(ticks, cfg)
     val q = Ingest.commitStream(rows, BlockSec, s"$dir/out", s"$dir/ckpt")
-    try {
-      Seq(1L to 200L, 201L to EddN).foreach { b =>
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
+    StreamFixture.feedThenStop(q, mem, Seq(1L to 200L, 201L to EddN))
     spark.read.parquet(s"$dir/out")
       .groupBy($"channel")
       .agg(count(lit(1)).as("n_rows"),

@@ -81,4 +81,48 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(!msgs.exists(_.contains("Cannot find active jobs")), msgs)
     assert(msgs.exists(_.startsWith("Broadcasting large task binary")), msgs)
   }
+
+  test("releasing a pin logs no locally-checkpointed WARN; " +
+      "other WARNs of the RDD's logger still log") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    import org.apache.spark.sql.execution.LogicalRDD
+
+    // a pin's checkpointed RDD is a MapPartitionsRDD, which logs under
+    // its own class name
+    val name = "org.apache.spark.rdd.MapPartitionsRDD"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    assert(cfg.getLoggerConfig(name).getName != name)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture-rdd", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val own = new LoggerConfig(name, Level.WARN, false)
+    own.addAppender(capture, Level.WARN, null)
+    cfg.addLogger(name, own)
+    ctx.updateLoggers()
+    try {
+      val pinned = Pins.pin(spark.range(100).selectExpr("id * 2 AS v"))
+      val rdd = pinned.queryExecution.analyzed.collectFirst {
+        case lr: LogicalRDD => lr.rdd
+      }
+      assert(rdd.exists(_.isCheckpointed), pinned.queryExecution.analyzed)
+      assert(rdd.get.getClass.getName == name)
+      Pins.releaseAll()
+      org.slf4j.LoggerFactory.getLogger(name).warn("another RDD warning")
+    } finally {
+      cfg.removeLogger(name)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val msgs = seen.asScala.toSeq
+    assert(!msgs.exists(_.contains("was locally checkpointed")), msgs)
+    assert(msgs == Seq("another RDD warning"), msgs)
+  }
 }
