@@ -50,10 +50,10 @@ object Bench {
       val (best, census) = Pins.scoped {
         timeQueryCensus(() => fn(spark, sfDir))
       }
-      // exact per-query cap-drop and split counters of the build run
-      // (the capped generators' deliberate trade must be a diffable
-      // round artifact, not a stderr line)
-      census.foreach { case (drops, splits) => caps.record(name, drops, splits) }
+      // exact per-query cap-split counters of the build run (the capped
+      // generators' deliberate trade must be a diffable round artifact,
+      // not a stderr line)
+      census.foreach(caps.record(name, _))
       name -> best
     } // keep the name-sorted Seq: stable JSON field order run-to-run
     val qs = results.map { case (k, (_, e)) => s"\"" + k + "\":" + e }
@@ -111,13 +111,13 @@ object Bench {
   private[graft] def timeQuery(build: () => org.apache.spark.sql.DataFrame)
       : (Double, Double) = timeQueryCensus(build)._1
 
-  /** [[timeQuery]] plus the cap census (`DedupStats.census`: drops,
-    * splits) of the build run alone, None on a throw. The census's
+  /** [[timeQuery]] plus the cap-split census (`DedupStats.census`) of
+    * the build run alone, None on a throw. The census's
     * listener drains fall outside both timed regions. */
   private[graft] def timeQueryCensus(build: () => org.apache.spark.sql.DataFrame)
-      : ((Double, Double), Option[((Long, Long, Long), (Long, Long, Long))]) =
+      : ((Double, Double), Option[(Long, Long, Long)]) =
     try {
-      val ((df, buildS), drops, splits) = DedupStats.census(SparkSession.active) {
+      val ((df, buildS), splits) = DedupStats.census(SparkSession.active) {
         val t0 = System.nanoTime()
         val df = build()
         df.count()
@@ -137,6 +137,6 @@ object Bench {
           df.count()
           (System.nanoTime() - t1) / 1e9
         } finally desc.foreach(sc.setJobDescription)
-      ((buildS, times.min), Some((drops, splits)))
+      ((buildS, times.min), Some(splits))
     } catch { case _: Throwable => ((-1.0, -1.0), None) }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.time.Instant
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path => HPath}
 
 import graft.codec.{BlockBuffer, HeaderCodec, Layout}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
@@ -21,7 +20,9 @@ import graft.sources.{HadoopConfs, TsdIndex, TsdStore}
   *     query) is read and folded in this process with no Spark session,
   *     like the reference's seek-and-read of a few blocks; anything
   *     larger starts a session and runs the distributed plan over the
-  *     Spark long frame. Both print the same lines.
+  *     Spark long frame. Both print the same lines. The `begin` default
+  *     is the earliest file's block 1, read from the sidecar on either
+  *     path, so it never costs a Spark job of its own.
   *   - `examine <path>` — schema pretty-print (`examinETSD`,
   *     etsdCmd.c:549-613): per-channel type/flags + block geometry.
   *   - `dump <path> [sector]` — block hex dump (`dumpETSD` + `LogBlock`,
@@ -30,7 +31,8 @@ import graft.sources.{HadoopConfs, TsdIndex, TsdStore}
   *
   * Every verb reads the files `path` names by the one rule of
   * [[graft.sources.TsdIndex.listStore]] (rotated `name.<epoch>` files
-  * included), through Hadoop with [[graft.sources.HadoopConfs.standalone]].
+  * included), and `create` writes its header, through Hadoop with
+  * [[graft.sources.HadoopConfs.standalone]].
   * `dump` shows the schema file; a header-only store from `create`
   * examines as 0 data blocks and its `query` raises "no data blocks in
   * file". A `query` lists its store once.
@@ -148,11 +150,20 @@ object EtsdCmd {
   }
 
   /** `create` verb: write the header block of a fresh (empty) `.tsd` file
-    * (createETSD, etsdCmd.c:301-318). Returns the derived schema; the
-    * summary line mirrors the reference's printf (etsdCmd.c:301). */
+    * (createETSD, etsdCmd.c:301-318) through [[HadoopConfs.standalone]],
+    * so `path` may name any file system the other verbs read. Returns the
+    * derived schema; the summary line mirrors the reference's printf
+    * (etsdCmd.c:301). */
   def create(path: String, args: Seq[String]): EtsdSchema = {
     val schema = createSchema(args)
-    Files.write(Paths.get(path), HeaderCodec.encode(schema))
+    val p = new HPath(path)
+    // no checksum file beside it: blocks are appended to it in place
+    val fs = p.getFileSystem(HadoopConfs.standalone()) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    val out = fs.create(p, true)
+    try out.write(HeaderCodec.encode(schema)) finally out.close()
     schema
   }
 

@@ -10,8 +10,8 @@ object Verify {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     val spark = GraftSession("verify")
     new java.io.File(outDir).mkdirs()
-    // per-query cap-drop and split counters (exact: one execution per
-    // query here), dumped as sidecars so the capped generators' trade is
+    // per-query cap-split counters (exact: one execution per query
+    // here), dumped as sidecars so the capped generators' trade is
     // a diffable artifact of every verify run
     val caps = new DedupStats.CapCensus
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -19,11 +19,11 @@ object Verify {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try Pins.scoped {
-        val (_, drops, splits) = DedupStats.census(spark) {
+        val (_, splits) = DedupStats.census(spark) {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
-        caps.record(name, drops, splits)
+        caps.record(name, splits)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // A failed query must leave an artifact: an absent output directory

@@ -12,7 +12,7 @@ import java.time.{Instant, LocalDate, LocalDateTime, LocalTime, ZoneOffset}
   * optional sign, float magnitude, case-insensitive unit word (first letter
   * decides: s/m/h/d/w/y).
   *
-  * Points in time: `now`, `mid`/`midnight`, `begin` (first stored sample),
+  * Points in time: `now`, `mid`/`midnight`, `begin` (first stored block),
   * ISO `yyyy-mm-dd[ hh:mm[:ss]]`, US `mm/dd/yy[yy][ hh:mm[:ss]]`, bare
   * `hh:mm[:ss]` (today, or yesterday if that would be in the future), each
   * optionally followed by `+`/`-` and a duration (`now-4h`, `midnight+90m`).
@@ -54,8 +54,10 @@ object TimeLiterals {
     * etsdQuery.c:97-182).
     *
     * @param now   "current" time (injected for determinism)
-    * @param begin timestamp of the first stored sample (`begin` keyword;
-    *              reference seeks block 1, etsdQuery.c:259-261)
+    * @param begin the `begin` keyword's time: the stamp of the store's
+    *              first block, as the reference seeks block 1
+    *              (etsdQuery.c:259-261); `EtsdQueryApi` reads it from the
+    *              store's index entries
     */
   def parseTimeEpoch(lit: String, now: Instant, begin: Instant): Long = {
     val t0 = lit.trim

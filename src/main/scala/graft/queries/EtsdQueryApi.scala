@@ -21,7 +21,7 @@ import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
   * resolves the channel by case-insensitive substring (etsdChanNum,
   * etsdQuery.c:193-203), the verb by substring (`q=maximum` works,
   * etsdQuery.c:374-395), and start/end through the CLI time-literal
-  * grammar. Defaults: `end=now`, `start=begin` — the first stored sample
+  * grammar. Defaults: `end=now`, `start=begin` — the first stored block
   * (etsdCmd.c:449-454).
   *
   * Counter channels in the long form carry per-interval deltas, so
@@ -39,9 +39,18 @@ import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
   * listed [[TsdStore]] and a Hadoop `Configuration`: [[query]] lists the
   * load's path through the session's Hadoop configuration, and the cold
   * `EtsdCmd query` calls it as [[answer]] on the store it listed before
-  * it builds any session. With `s=` missing
-  * or naming `begin`, the core reads `begin` itself when the whole store
-  * is within the bound, and otherwise leaves it to one aggregate job. */
+  * it builds any session.
+  *
+  * `begin` (`s=` missing or naming it) of a `.tsd` load is the store's
+  * earliest block-1 stamp, read from its index entries
+  * ([[TsdIndex.begin]]): the fresh sidecar's, and a probe of each
+  * unindexed file, in this process within the bound and with the
+  * planner's one probe job past it, never with a job over the data. It
+  * is the first stored sample whenever the schema has a register channel
+  * and block clocks run forward; with no register it is one interval
+  * earlier, and a clock stepping backwards inside a file is not looked
+  * for, as in the reference. Only a frame that is not a bare `.tsd` load
+  * takes `begin` as its smallest `ts`, with one aggregate job. */
 object EtsdQueryApi {
 
   /** Schema of every [[query]] result, local or distributed. */
@@ -72,16 +81,15 @@ object EtsdQueryApi {
     * the time literals, whose window may still wait on `begin`. */
   private final case class Resolved(verb: String, chan: Option[String],
       start: Option[String], end: Option[String], now: Instant) {
-    /** Does the window need the first stored sample (`s=` missing or
-      * naming `begin`)? */
+    /** Does the window need `begin` (`s=` missing or naming it)? */
     def needsBegin: Boolean = {
       def begins(lit: String) = lit.toLowerCase.contains("begin")
       start.forall(begins) || end.exists(begins)
     }
 
-    /** `[start, end]` in epoch seconds, `begin` the first stored sample's
-      * (read only when [[needsBegin]]). Defaults: `end=now`, `start=begin`
-      * (etsdCmd.c:449-454). */
+    /** `[start, end]` in epoch seconds, `begin` the first stored block's
+      * stamp (read only when [[needsBegin]]). Defaults: `end=now`,
+      * `start=begin` (etsdCmd.c:449-454). */
     def window(begin: Long): (Long, Long) = {
       def epoch(lit: String) =
         TimeLiterals.parseTimeEpoch(lit, now, Instant.ofEpochSecond(begin))
@@ -121,26 +129,28 @@ object EtsdQueryApi {
     q
   }
 
-  /** The answer core: `(channel, n, result)` rows in channel order, read
-    * and folded in this process by [[TsdLocalScan]] with no Spark job or
-    * session — or None when the sidecar does not bound the selection to
-    * [[TsdLocalScan.MaxBlocks]] blocks, or `begin` yields None. */
+  /** The answer core over `[lo, hi]`: `(channel, n, result)` rows in
+    * channel order, read and folded in this process by [[TsdLocalScan]]
+    * with no Spark job or session, or None when the sidecar does not bound
+    * the selection to [[TsdLocalScan.MaxBlocks]] blocks. */
   private def local(conf: Configuration, store: TsdStore, q: Resolved,
-                    begin: => Option[Long]): Option[Seq[(String, Long, Double)]] =
-    (if (q.needsBegin) begin else Some(0L)).flatMap { b =>
-      val (lo, hi) = q.window(b)
-      TsdLocalScan.fold(conf, store, lo, hi, q.chan)
-    }.map(_.map(f => (f.channel, f.n, q.result(f))))
+                    window: (Long, Long)): Option[Seq[(String, Long, Double)]] =
+    TsdLocalScan.fold(conf, store, window._1, window._2, q.chan)
+      .map(_.map(f => (f.channel, f.n, q.result(f))))
 
   /** [[query]]'s rows for the bare `.tsd` store `store`, with no Spark
-    * session: the cold `EtsdCmd query`. None when the local rule declines
-    * (the selection is over [[TsdLocalScan.MaxBlocks]] blocks, or `begin`
-    * is needed and the whole store is); the caller then runs
+    * session: the cold `EtsdCmd query`. `begin` comes from the store's
+    * index entries ([[TsdLocalScan.begin]]). None when the local rule
+    * declines, which is when the selection is over
+    * [[TsdLocalScan.MaxBlocks]] blocks; the caller then runs
     * [[queryDistributed]] over a session, which does not retry the fold.
     * Bad arguments raise IllegalArgumentException either way. */
   def answer(conf: Configuration, store: TsdStore, rawArgs: Seq[String],
-             now: Instant): Option[Seq[(String, Long, Double)]] =
-    local(conf, store, resolve(store.schema, rawArgs, now), TsdLocalScan.firstTs(conf, store))
+             now: Instant): Option[Seq[(String, Long, Double)]] = {
+    val q = resolve(store.schema, rawArgs, now)
+    (if (q.needsBegin) TsdLocalScan.begin(store) else Some(0L))
+      .flatMap(b => local(conf, store, q, q.window(b)))
+  }
 
   /** Run an AMT-family query. `df` is the long DataFrame (`ts, channel,
     * value, valid, is_register`); `now` injected for determinism. Output:
@@ -159,29 +169,28 @@ object EtsdQueryApi {
   private def run(df: DataFrame, schema: EtsdSchema, rawArgs: Seq[String],
                   now: Instant, driverLocal: Boolean): DataFrame = {
     val q = resolve(schema, rawArgs, now)
-
-    // `begin` = first stored sample (reference seeks block 1,
-    // etsdQuery.c:259-261) — one scalar agg, evaluated only when used
-    lazy val begin: Long = {
+    val spark = df.sparkSession
+    lazy val conf = spark.sessionState.newHadoopConf()
+    // a bare load's store, listed once and only when used: an explicit
+    // window on the distributed plan never lists it
+    lazy val store = TsdLocalScan.barePath(df).map { path =>
+      val root = new Path(path)
+      TsdIndex.listStore(root.getFileSystem(conf), root)
+    }
+    // `begin` (etsdQuery.c:259-261): a `.tsd` load's from its index
+    // entries, read here or, past the local bound, with the planner's one
+    // probe job; any other frame's as its smallest `ts`, one aggregate job
+    def begin: Long = store.fold {
       val r = df.agg(min(unix_timestamp($"ts"))).head()
-      if (r.isNullAt(0)) // empty file: the reference's read error path
+      if (r.isNullAt(0)) // empty frame: the reference's read error path
         throw new IllegalArgumentException("no data blocks in file")
       r.getLong(0)
-    }
+    }(s => TsdLocalScan.begin(s).getOrElse(TsdIndex.begin(TsdIndex.forPlanning(spark, s))))
 
-    // a bare load takes the answer core; a store over MaxBlocks blocks
-    // resolves `begin` with the aggregate above, as the distributed plan
-    val rows = if (!driverLocal) None else TsdLocalScan.barePath(df).flatMap { path =>
-      val conf = df.sparkSession.sessionState.newHadoopConf()
-      val root = new Path(path)
-      val store = TsdIndex.listStore(root.getFileSystem(conf), root)
-      local(conf, store, q, TsdLocalScan.firstTs(conf, store).orElse(Some(begin)))
-    }
-    rows.fold {
-      val (lo, hi) = q.window(if (q.needsBegin) begin else 0L)
-      distributed(df, q.verb, q.chan, lo, hi)
-    } { rs =>
-      df.sparkSession.createDataFrame(
+    val (lo, hi) = q.window(if (q.needsBegin) begin else 0L)
+    val rows = if (!driverLocal) None else store.flatMap(local(conf, _, q, (lo, hi)))
+    rows.fold(distributed(df, q.verb, q.chan, lo, hi)) { rs =>
+      spark.createDataFrame(
         rs.map { case (c, n, r) => Row(c, n, r) }.asJava, ResultSchema)
     }
   }

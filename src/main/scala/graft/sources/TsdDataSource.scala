@@ -48,6 +48,9 @@ import graft.model.EtsdSchema
   * files on the driver with the same partition reader, and a cold
   * `EtsdCmd query` reads them the same way before it builds any session.
   * The bound is a constant so that driver work stays O(1) in store size.
+  * Its `begin` default is the store's earliest block-1 stamp, read from
+  * the sidecar entries this scan plans with ([[TsdIndex.begin]]), so no
+  * query over this source scans its data for `begin`.
   */
 class TsdDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

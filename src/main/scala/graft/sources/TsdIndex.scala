@@ -310,5 +310,22 @@ object TsdIndex {
     * a listing and at most one sidecar read, independent of file count. */
   def forPlanning(spark: SparkSession, fs: FileSystem,
                   path: Path): Seq[TsdIndexEntry] =
-    plan(spark, Seq(((), listStore(fs, path)))).map(_._3)
+    forPlanning(spark, listStore(fs, path))
+
+  /** [[forPlanning]] for a store already listed. */
+  def forPlanning(spark: SparkSession, store: TsdStore): Seq[TsdIndexEntry] =
+    plan(spark, Seq(((), store))).map(_._3)
+
+  /** `begin`, the CLI's first stored sample, of a store whose data files
+    * have `entries`: the smallest block-1 stamp ([[TsdIndexEntry.firstTs]]),
+    * the earliest file's block 1, as the reference seeks block 1
+    * (etsdQuery.c:259-261). It equals `min(ts)` over the store's rows
+    * whenever its schema has a register channel (a register row carries
+    * the block's own stamp) and its block clocks run forward; with no
+    * register it is one interval before the first sample, and a clock
+    * stepping backwards inside a file is not looked for. A store with no
+    * data block raises the reference's read error. */
+  def begin(entries: Seq[TsdIndexEntry]): Long =
+    if (entries.isEmpty) throw new IllegalArgumentException("no data blocks in file")
+    else entries.map(_.firstTs).min
 }

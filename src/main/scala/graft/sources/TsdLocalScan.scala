@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,13 +23,15 @@ import graft.model.EtsdSchema
   * DataFrame: `EtsdQueryApi` reaches it from a bare [[TsdDataSource]]
   * load ([[barePath]]) and the cold `EtsdCmd query` before it builds any
   * session, each listing the store once for the `begin` read and the
-  * fold together.
+  * fold together. `begin` comes from the store's index entries
+  * ([[begin]]), never from decoding its blocks.
   *
   * The bound is a constant, not a setting: it caps the caller's work at
   * 512 KiB of reads and decode whatever the store's size, so the
-  * planner's "no per-row driver logic at scale" rule holds. The decision
-  * itself reads only the directory listing and the sidecar — never a
-  * data file, never a probe job. */
+  * planner's "no per-row driver logic at scale" rule holds. The fold's
+  * decision itself reads only the directory listing and the sidecar —
+  * never a data file, never a probe job; [[begin]] probes only files the
+  * sidecar lacks, within the same bound. */
 object TsdLocalScan {
   /** Most 512 B blocks (512 KiB) a selection may span to be read in the
     * calling process. */
@@ -66,18 +67,6 @@ object TsdLocalScan {
     else Some(files.map { case (n, b) => TsdChunk(store.path(n).toString, 1L, b) })
   }
 
-  /** Feeds `f` every row the scan emits from `cs` for `[lo, hi]` and
-    * channel `chan` (every channel when None): registers and invalid
-    * samples included, whole blocks at the window's edges. */
-  private def foreachRow(conf: Configuration, cs: Seq[TsdChunk], lo: Long,
-      hi: Long, chan: Option[String])(f: InternalRow => Unit): Unit = {
-    val part = TsdInputPartition(cs, lo, hi, chan.map(Seq(_)))
-    cs.foreach { c =>
-      val r = new TsdPartitionReader(c, part, conf)
-      try while (r.next()) f(r.get()) finally r.close()
-    }
-  }
-
   /** Per-channel fold of the valid, non-register samples with `lo <= ts
     * <= hi` (epoch seconds) of channel `chan` (every channel when None),
     * or None when the selection is over [[MaxBlocks]]. Channels with no
@@ -91,35 +80,38 @@ object TsdLocalScan {
       // most 32 bits wide and a channel has fewer than 2^17 of them in
       // MaxBlocks blocks of <= 127 intervals.
       val acc = mutable.HashMap.empty[UTF8String, Array[Long]]
-      foreachRow(conf, cs, lo, hi, chan) { row =>
-        val ts = row.getLong(0) / 1000000L
-        val name = row.getUTF8String(1)
-        if (row.getBoolean(3) && !row.getBoolean(4) && ts >= lo && ts <= hi &&
-            want.forall(_ == name)) {
-          val v = row.getLong(2)
-          val a = acc.getOrElseUpdate(name,
-            Array(0L, 0L, Long.MaxValue, Long.MinValue))
-          a(0) += 1; a(1) += v
-          a(2) = math.min(a(2), v); a(3) = math.max(a(3), v)
-        }
+      // the scan's rows hold registers, invalid samples and whole blocks
+      // at the window's edges: keep only what the aggregate keeps
+      val part = TsdInputPartition(cs, lo, hi, chan.map(Seq(_)))
+      cs.foreach { c =>
+        val r = new TsdPartitionReader(c, part, conf)
+        try while (r.next()) {
+          val row = r.get()
+          val ts = row.getLong(0) / 1000000L
+          val name = row.getUTF8String(1)
+          if (row.getBoolean(3) && !row.getBoolean(4) && ts >= lo && ts <= hi &&
+              want.forall(_ == name)) {
+            val v = row.getLong(2)
+            val a = acc.getOrElseUpdate(name,
+              Array(0L, 0L, Long.MaxValue, Long.MinValue))
+            a(0) += 1; a(1) += v
+            a(2) = math.min(a(2), v); a(3) = math.max(a(3), v)
+          }
+        } finally r.close()
       }
       acc.toSeq.map { case (name, a) =>
         ChannelFold(name.toString, a(0), a(1), a(2), a(3))
       }.sortBy(_.channel)
     }
 
-  /** The smallest `ts` (epoch seconds) of any row of the whole store —
-    * registers and invalid samples included, the rows `min(ts)` over a
-    * bare load covers — or None when the store is over [[MaxBlocks]].
-    * An empty store has no first row: the reference's read error. */
-  private[graft] def firstTs(conf: Configuration, store: TsdStore): Option[Long] =
-    chunks(store, Long.MinValue, Long.MaxValue).map { cs =>
-      var first = Long.MaxValue
-      foreachRow(conf, cs, Long.MinValue, Long.MaxValue, None) { row =>
-        first = math.min(first, row.getLong(0) / 1000000L)
-      }
-      if (first == Long.MaxValue)
-        throw new IllegalArgumentException("no data blocks in file")
-      first
+  /** `begin` of `store` ([[TsdIndex.begin]]), read in the calling
+    * process: the fresh sidecar entries' block-1 stamps, plus a probe of
+    * each unindexed file's first and last block. None when the unindexed
+    * files span over [[MaxBlocks]] blocks, a store whose every selection
+    * [[fold]] declines too. */
+  private[graft] def begin(store: TsdStore): Option[Long] =
+    Option.when(store.unindexed.map(f => TsdIndex.dataBlocks(f.getLen)).sum <= MaxBlocks) {
+      TsdIndex.begin(store.indexed ++ store.unindexed.map(f => TsdIndex.probe(store.fs,
+        store.path(f.getPath.getName), f.getLen, f.getModificationTime)))
     }
 }

@@ -2,11 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft._
+import graft.sources.HadoopConfs
 
 /** One parsed source stanza (`SN:`/`SC:`/`SP:`, edd.c:122-138). */
 final case class EddSource(plugin: String, config: Option[String] = None,
@@ -270,16 +272,19 @@ object EddMain {
 
   /** Start the daemon: block geometry comes from the ETSD file's own
     * header (`etsdInit`, edd.c:189) when `E:` names an existing `.tsd`
-    * file/directory, else from the defaults. Output lands under
+    * file/directory, else from the defaults; both are read through
+    * Hadoop with [[HadoopConfs.standalone]], as `EtsdCmd` reads them. Output lands under
     * `<etsdFile>_spark/` (blocks + checkpoints + EDO rollups) — the
     * parquet block store IS this engine's ETSD file. */
   def start(spark: SparkSession, cfg: EddConfig,
             startEpoch: Long = System.currentTimeMillis() / 1000,
             defaultIntervalSec: Int = 10,
             defaultBlockIntervals: Int = 24): EddQueries = {
+    val conf = HadoopConfs.standalone()
+    val etsd = new Path(cfg.etsdFile)
     val (intervalSec, blockIntervals) =
-      if (Files.exists(Paths.get(cfg.etsdFile))) {
-        val s = EtsdCmd.loadSchema(cfg.etsdFile)
+      if (etsd.getFileSystem(conf).exists(etsd)) {
+        val s = EtsdCmd.loadSchema(cfg.etsdFile, conf)
         (s.intervalSec, s.blockIntervals)
       } else (defaultIntervalSec, defaultBlockIntervals)
     val root = cfg.etsdFile + "_spark"

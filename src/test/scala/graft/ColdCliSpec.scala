@@ -15,11 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.queries.EtsdQueryApi
 import graft.queries.LocalQueryStores._
-import graft.sources.HadoopConfs
+import graft.sources.{HadoopConfs, TsdIndex}
 
 /** A cold `EtsdCmd query` process, launched as a user runs it: a fresh JVM
   * on this classpath with the build's JVM options. A point window is
-  * answered with no SparkContext at all; a window over
+  * answered with no SparkContext at all, as is an hour from the `begin`
+  * default, which the sidecar supplies; a window over
   * `TsdLocalScan.MaxBlocks` blocks starts one, and both print the
   * whole-file decode's lines. The store is read through a file system
   * scheme that only `-Dspark.hadoop.*` registers, so both paths, and the
@@ -83,7 +84,7 @@ class ColdCliSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.y") == null && conf.get("fs.z") == null)
   }
 
-  test("the core declines a begin default on a store over MaxBlocks") {
+  test("the core reads begin from the sidecar of a large store") {
     val conf = HadoopConfs.standalone()
     val listed = EtsdCmd.openStore(store, conf)
     val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
@@ -92,6 +93,34 @@ class ColdCliSpec extends AnyFunSuite {
     val lo = t0 + 3 * 86400L
     assert(EtsdQueryApi.answer(conf, listed, window(lo, lo + 2 * span), now)
       .isDefined)
+    // an hour from `begin`, the earliest block 1, is a few blocks of the
+    // 1,800: answered here, as the whole-file decode has it
+    val begin = firstBlockTs(tsdFiles(store))
+    val got = EtsdQueryApi.answer(conf, listed, Seq("q=ave", "c=g", "s=begin", "e=begin+1h"), now)
+    assert(got.map(_.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) })
+      .contains(oracleLines(begin, begin + 3600L)))
+  }
+
+  test("the CLI's distributed fallback lists its store at most 3 times") {
+    // what a cold `EtsdCmd query` does once the core declines: the core's
+    // listing, then the distributed plan over a session, here in-process
+    val key = s"fs.${CountingFs.Scheme}.impl"
+    spark.conf.set(key, classOf[CountingFs].getName)
+    try {
+      val path = s"${CountingFs.Scheme}:$store"
+      val args = Seq("q=ave", "c=g", "s=begin+1h")
+      val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
+      CountingFs.reset()
+      val conf = spark.sessionState.newHadoopConf()
+      assert(EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, now).isEmpty)
+      val rows = EtsdQueryApi.queryDistributed(load(spark, path), schema, args, now)
+        .orderBy("channel").collect().toSeq
+        .map(r => EtsdCmd.queryLine(r.getString(0), r.getLong(1), r.getDouble(2)))
+      val begin = firstBlockTs(tsdFiles(store))
+      assert(rows == oracleLines(begin + 3600L, now.getEpochSecond))
+      assert(CountingFs.calls("list", store) <= 3, CountingFs.log)
+      assert(CountingFs.calls("open", s"$store/${TsdIndex.FileName}") <= 3, CountingFs.log)
+    } finally spark.conf.unset(key)
   }
 
   test("a cold point query starts no SparkContext; a long window does") {

@@ -195,6 +195,20 @@ class EtsdCmdSpec extends AnyFunSuite {
     assert(!TestSpark.spark.sparkContext.isStopped)
   }
 
+  test("create then examine a file on a scheme only spark.hadoop.* registers") {
+    val prop = s"spark.hadoop.fs.${SchemeLocalFs.Scheme}.impl"
+    System.setProperty(prop, classOf[SchemeLocalFs].getName)
+    try {
+      val f = s"${Files.createTempDirectory("create_fs")}/new.tsd"
+      val path = s"${SchemeLocalFs.Scheme}:$f"
+      EtsdCmd.main(Array("create", path, "T=10s", "Mains:8:E1"))
+      assert(Files.size(Paths.get(f)) == BlockBuffer.BlockSize)
+      val out = EtsdCmd.examine(path)
+      assert(out.contains("interval 10s") && out.contains("0 data blocks"), out)
+      assert(out.contains("Mains"), out)
+    } finally System.clearProperty(prop)
+  }
+
   test("query on a store with no data blocks raises the reference's read error") {
     val f = Files.createTempDirectory("cmd_empty").resolve("empty.tsd").toString
     EtsdCmd.create(f, Seq("T=10s", "Mains:8:E1"))

@@ -63,10 +63,9 @@ class GraftSessionSpec extends AnyFunSuite {
       implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
       val mem = MemoryStream[Long]
       mem.addData(1L, 2L, 3L)
-      val q = mem.toDF().writeStream.format("memory")
-        .queryName("idle_cancel_probe").start()
-      try q.processAllAvailable() finally q.stop()
-      assert(spark.table("idle_cancel_probe").count() == 3)
+      val got = graft.queries.StreamFixture.collect(spark, "idle_cancel_probe",
+        mem.toDF())(_.processAllAvailable())
+      assert(got.count() == 3)
       // a task binary over 1 MiB draws the scheduler's own WARN
       val big = new Array[Byte](2 << 20)
       assert(spark.sparkContext.parallelize(Seq(1), 1)

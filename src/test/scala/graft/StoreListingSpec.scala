@@ -41,6 +41,22 @@ class StoreListingSpec extends AnyFunSuite {
     dir.toString
   }
 
+  /** A copy of the store as the reference daemon leaves it: the newest
+    * file live under the bare name `garage.tsd`, which sorts before the
+    * older, rotated `garage.tsd.<epoch>` files; with a sidecar when
+    * `indexed`. */
+  private def live(indexed: Boolean): String = {
+    val dir = Files.createTempDirectory("live")
+    val files = tsdFiles(store)
+    files.foreach { f =>
+      val epoch = f.getFileName.toString.stripPrefix("etsd-").stripSuffix(".tsd").toLong
+      val name = if (f == files.last) "garage.tsd" else s"garage.tsd.$epoch"
+      Files.copy(f, dir.resolve(name), StandardCopyOption.COPY_ATTRIBUTES)
+    }
+    if (indexed) TsdIndex.write(spark, dir.toString)
+    dir.toString
+  }
+
   /** What `EtsdCmd.main(args)` prints. */
   private def stdout(args: String*): Seq[String] = {
     val buf = new ByteArrayOutputStream()
@@ -87,6 +103,31 @@ class StoreListingSpec extends AnyFunSuite {
       assert(printed == lines(scan), s"$args: CLI lines vs the DSv2 scan")
       assert(scan == oracle(store, verb, chan, lo, hi), s"$args: scan vs decodeFile")
     }
+  }
+
+  test("begin is the oldest rotated file's block 1, not the live file's") {
+    val files = tsdFiles(store)
+    val begin = firstBlockTs(files)
+    assert(begin < firstBlockTs(files.takeRight(1)))
+    val args = Seq("q=max", "c=odo", "s=begin", "e=begin+5m")
+    val want = oracle(store, "max", Some("Odo"), begin, begin + 300L)
+    assert(want.nonEmpty)
+    // no sidecar: each file's own block 1 is read
+    val bare = live(indexed = false)
+    assert(stdout(Seq("query", bare) ++ args: _*) == lines(want))
+    assert(answer(EtsdQueryApi.queryDistributed(load(spark, bare), mixedSchema, args,
+      now)) == want)
+    // with a sidecar, `begin` comes from it: of the data files, only the
+    // schema's header and the window's first file or two are opened
+    val indexed = live(indexed = true)
+    val prop = s"spark.hadoop.fs.${CountingFs.Scheme}.impl"
+    System.setProperty(prop, classOf[CountingFs].getName)
+    try {
+      CountingFs.reset()
+      assert(stdout(Seq("query", s"${CountingFs.Scheme}:$indexed") ++ args: _*) == lines(want))
+      assert(CountingFs.calls("open", s"$indexed/garage.tsd") == 1, CountingFs.log)
+      assert(CountingFs.opened.count(_.startsWith(s"$indexed/garage.tsd")) <= 3, CountingFs.log)
+    } finally System.clearProperty(prop)
   }
 
   test("one EtsdCmd query lists its store once and reads its sidecar at most once") {
@@ -155,4 +196,5 @@ object CountingFs {
   def calls(call: String, path: String): Int =
     seen.asScala.count(_ == ((call, path)))
   def log: String = seen.asScala.mkString(", ")
+  def opened: Seq[String] = seen.asScala.toSeq.collect { case ("open", p) => p }
 }

@@ -195,7 +195,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
         .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSeq
     }
     DedupStats.awaitQuiesce(spark)
-    assert(DedupStats.splitBuckets.get > 0 && DedupStats.droppedBuckets.get == 0)
+    assert(DedupStats.splitBuckets.get > 0)
     assert(near.nonEmpty, "split mega-buckets must still pair sub-mates")
     assert(near.size < 60 * 59 / 2,
       s"the skew guard must bound the pair set, got ${near.size}")

@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
 import graft.TestSpark
+import graft.queries.StreamFixture
 
 /** Streaming ANN serving must answer the batch serving contract: on one
   * corpus, [[VectorOps.streamingAnnServe]]'s emitted top-k equals
@@ -51,27 +51,23 @@ class StreamingAnnSpec extends AnyFunSuite {
     val stream = mem.toDF().select($"_1".as("probe_id"),
       timestamp_seconds(lit(T0) + $"_2".cast("long")).as("ts"),
       $"_3".as("qv"))
-    val sink = s"annspec_${java.util.UUID.randomUUID.toString.take(8)}"
-    val sq2 = VectorOps.streamingAnnServe(stream, idx, K, Planes, Dim,
-        probeRadius = 2, windowSec = WindowSec, latenessSec = 1L)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    val out = StreamFixture.collect(spark, "annspec", VectorOps.streamingAnnServe(stream,
+        idx, K, Planes, Dim, probeRadius = 2, windowSec = WindowSec, latenessSec = 1L)) { sq2 =>
       mem.addData(probeRows.map { case (id, qv) => (id, id, qv) }.toSeq: _*)
       sq2.processAllAvailable()
       // append mode: the serving window is still open — nothing emitted
-      assert(spark.table(sink).isEmpty,
+      assert(spark.table(sq2.name).isEmpty,
         "no emission before the watermark passes the window end")
       mem.addData((-1L, 10L * WindowSec, probeRows.head._2))
       sq2.processAllAvailable()
-    } finally sq2.stop()
-    val got = spark.table(sink).filter($"probe_id" >= 0)
+    }
+    val got = out.filter($"probe_id" >= 0)
       .select($"probe_id", $"vec_id", $"cos", $"rk")
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(got == batch,
       s"stream/batch mismatch: only-stream=${got -- batch}, only-batch=${batch -- got}")
     // the watermark advancer's own window stays open: no -1 rows landed
-    assert(spark.table(sink).filter($"probe_id" < 0).isEmpty)
+    assert(out.filter($"probe_id" < 0).isEmpty)
     Pins.releaseAll()
   }
 
@@ -124,12 +120,8 @@ class StreamingAnnSpec extends AnyFunSuite {
     val stream = mem.toDF().select($"_1".as("probe_id"),
       timestamp_seconds(lit(T0) + $"_2".cast("long")).as("ts"),
       $"_3".as("qv"))
-    val sink = s"annnan_${java.util.UUID.randomUUID.toString.take(8)}"
-    val sq2 = VectorOps.streamingAnnServe(stream, idx, k, planes, dim,
-        probeRadius = 1, windowSec = WindowSec, latenessSec = 1L)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    val got = StreamFixture.collect(spark, "annnan", VectorOps.streamingAnnServe(stream,
+        idx, k, planes, dim, probeRadius = 1, windowSec = WindowSec, latenessSec = 1L)) { sq2 =>
       mem.addData((0L, 0L, pv))
       sq2.processAllAvailable()
       // redeliver the probe row WITHIN the same serving window (an
@@ -139,8 +131,7 @@ class StreamingAnnSpec extends AnyFunSuite {
       sq2.processAllAvailable()
       mem.addData((-1L, 10L * WindowSec, pv))
       sq2.processAllAvailable()
-    } finally sq2.stop()
-    val got = spark.table(sink).filter($"probe_id" >= 0)
+    }.filter($"probe_id" >= 0)
       .select($"probe_id", $"vec_id", $"cos", $"rk")
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(got == batch,

@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
 import graft.TestSpark
+import graft.queries.StreamFixture
 
 /** Streaming eval-set contamination screening: an arriving train doc
   * that is a near-copy of an eval doc must be flagged against exactly
@@ -31,21 +31,15 @@ class StreamingContaminationSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, String)]
     val docs = mem.toDF().select($"_1".as("doc_id"),
       timestamp_seconds($"_2").as("ts"), $"_3".as("text"))
-    val sink = s"sc_sink_${java.util.UUID.randomUUID.toString.take(8)}"
-    val q = DedupOps.streamingContamination(docs, evalIdx,
-        minJaccard = 0.5, maxLatenessSec = 3600L)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    val got = StreamFixture.collect(spark, "sc_sink", DedupOps.streamingContamination(
+        docs, evalIdx, minJaccard = 0.5, maxLatenessSec = 3600L)) { q =>
       mem.addData((1L, 100L, Leaked), (2L, 110L, Clean))
       q.processAllAvailable()
       // at-least-once re-delivery of the leaked doc a batch later: the
       // flagged-pair state must collapse it (no second emission)
       mem.addData((1L, 120L, Leaked))
       q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table(sink)
-      .select($"train_id", $"eval_id", $"jaccard")
+    }.select($"train_id", $"eval_id", $"jaccard")
       .as[(Long, Long, Double)].collect().toSeq
     assert(got.map(r => (r._1, r._2)) == Seq((1L, 100L)),
       s"exactly the leaked pair must be flagged once: $got")

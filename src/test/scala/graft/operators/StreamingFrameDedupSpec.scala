@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.queries.StreamFixture
 
 /** Streaming frame dedup: a media item arriving within the horizon that
   * shares frame-aligned content with an earlier item must hit against
@@ -36,15 +36,10 @@ class StreamingFrameDedupSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, Array[Byte])]
     val media = mem.toDF().select($"_1".as("media_id"),
       timestamp_seconds($"_2").as("ts"), $"_3".as("payload"))
-    val sink = s"fd_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = MultimodalOps.streamingFrameDedup(media, latenessSec)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    val out = MultimodalOps.streamingFrameDedup(media, latenessSec).toDF()
+    StreamFixture.collect(spark, "fd_sink", out) { q =>
       batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink)
-      .groupBy($"media_id")
+    }.groupBy($"media_id")
       .agg(count(lit(1)).as("n_frames"),
         count(when($"is_hit" && $"holder" =!= $"media_id", lit(1)))
           .as("n_ext_hits"),

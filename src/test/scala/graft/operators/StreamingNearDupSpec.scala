@@ -2,12 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
 import graft.TestSpark
 import graft.functions.DetHash
+import graft.queries.StreamFixture
 
 /** Streaming MinHash-LSH near-dup detection: a clone arriving within the
   * lateness horizon must collide with its original's band cells; an
@@ -31,15 +31,10 @@ class StreamingNearDupSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, String)]
     val docs = mem.toDF().select($"_1".as("doc_id"),
       timestamp_seconds($"_2").as("ts"), $"_3".as("text"))
-    val sink = s"nd_sink_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = DedupOps.streamingNearDedup(docs, latenessSec)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    val out = DedupOps.streamingNearDedup(docs, latenessSec).toDF()
+    StreamFixture.collect(spark, "nd_sink", out) { q =>
       batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink)
-      .groupBy($"doc_id")
+    }.groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bands"),
         count(when($"is_hit", lit(1))).as("n_hits"),
         collect_set(when($"is_hit", $"holder")).as("holders"))

@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.queries.StreamFixture
 
 /** The composed at-ingest pipeline in ONE streaming query — exact dedup
   * feeding contamination screening, two stateful operators chained
@@ -38,10 +38,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // stage 2: the survivors probe the static eval index
     val flags = DedupOps.streamingContamination(deduped, evalIdx,
       minJaccard = 0.5, maxLatenessSec = 3600L)
-    val sink = s"pl_sink_${java.util.UUID.randomUUID.toString.take(8)}"
-    val q = flags.writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
+    val got = StreamFixture.collect(spark, "pl_sink", flags) { q =>
       mem.addData((1L, 100L, Leaked), (2L, 110L, Clean))
       q.processAllAvailable()
       // exact redelivery (same text, later ts, new id): dropped by the
@@ -49,9 +46,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       // so no second flag can appear under any downstream state
       mem.addData((3L, 120L, Leaked))
       q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table(sink)
-      .select($"train_id", $"eval_id").as[(Long, Long)].collect().toSeq
+    }.select($"train_id", $"eval_id").as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 100L)),
       s"exactly the first leaked copy must flag once: $got")
   }

@@ -3,11 +3,11 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
 import graft.TestSpark
+import graft.queries.StreamFixture
 
 /** Ignore-don't-crash, proven with actual poison: each streaming
   * operator is fed NULL event-times / NULL payloads alongside clean
@@ -37,18 +37,12 @@ class StreamingPoisonSpec extends AnyFunSuite {
       build: DataFrame => DataFrame, prefix: String): Seq[String] = {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[T]
-    val sink =
-      s"${prefix}_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = build(toStream(mem.toDF()))
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(rows: _*)
-      q.processAllAvailable()
-    } finally q.stop()
     // sorted multiset, NOT a Set: a regression that re-emits a clean
     // row twice must fail the equality, not be deduplicated away
-    spark.table(sink).collect().map(_.toString).toSeq.sorted
+    StreamFixture.collect(spark, prefix, build(toStream(mem.toDF()))) { q =>
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+    }.collect().map(_.toString).toSeq.sorted
   }
 
   private def docStream(df: DataFrame): DataFrame = {

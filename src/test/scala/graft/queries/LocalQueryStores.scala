@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.timestamp_seconds
 
-import graft.codec.{EtsdDecoder, Layout}
+import graft.codec.{BlockBuffer, EtsdDecoder, Layout}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.sources.{EtsdSink, TsdIndex}
 
@@ -67,6 +67,13 @@ object LocalQueryStores {
     assert(f.setLastModified(f.lastModified() + 60000L))
     d
   }
+
+  /** `begin` by the reference's rule, read from the bytes: the smallest
+    * block-1 stamp over the data files `files`. */
+  def firstBlockTs(files: Seq[Path]): Long = files.map { f =>
+    BlockBuffer(Files.readAllBytes(f).slice(BlockBuffer.BlockSize, 2 * BlockBuffer.BlockSize))
+      .timestamp
+  }.min
 
   def load(spark: SparkSession, path: String): DataFrame =
     spark.read.format("graft.sources.TsdDataSource").load(path)

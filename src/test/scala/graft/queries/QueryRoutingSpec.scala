@@ -16,7 +16,8 @@ import graft.sources.TsdLocalScan
 /** Which `EtsdQueryApi.query` inputs are answered on the driver: a bare
   * `TsdDataSource` load whose selection the sidecar bounds to at most
   * `TsdLocalScan.MaxBlocks` blocks runs no Spark job at all; longer
-  * windows and every other input plan the DSv2 scan. */
+  * windows and every other input plan the DSv2 scan, and a `begin`
+  * default adds no job to it. */
 class QueryRoutingSpec extends AnyFunSuite {
   import LocalQueryStores._
 
@@ -114,6 +115,18 @@ class QueryRoutingSpec extends AnyFunSuite {
     val (got, jobs) = ask(df, a)
     assert(jobs > 0)
     assert(got == oracle(store, "ave", Some("G"), lo, lo + 7 * 86400L))
+  }
+
+  test("a begin default runs no job beyond the distributed plan's") {
+    // `begin` comes from the sidecar: the 2,880-block store's begin..now
+    // query runs exactly the jobs of the same window written out
+    val df = load(spark, store)
+    val begin = firstBlockTs(tsdFiles(store))
+    val (got, jobs) = ask(df, Seq("q=ave", "c=g"))
+    val (want, planJobs) = ask(df, args(begin, now.getEpochSecond))
+    assert(got == want)
+    assert(got == oracle(store, "ave", Some("G"), begin, now.getEpochSecond))
+    assert(jobs == planJobs, s"begin default: $jobs jobs, its window alone: $planJobs")
   }
 
   test("inputs other than a bare long load take the distributed path") {

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
 import graft.TestSpark
+import graft.queries.StreamFixture
 
 /** End-to-end streaming ingest: deterministic generator → status handling
   * → tumbling block commit with checkpointing; totals must match the
@@ -168,23 +169,20 @@ class IngestSpec extends AnyFunSuite {
     val rows = mem.toDF().toDF("t", "v")
       .select(($"t" * 1000000L).as("ts_us"), lit("c").as("channel"),
         $"v".as("value"), lit(true).as("valid"))
-    val q = Ingest.blockAggregate(rows, blockSec = 60L, maxLateness = "30 seconds")
-      .writeStream.format("memory").queryName("blocks")
-      .outputMode("append").start()
-    // batch 1: two rows in window [0,60), one in [60,120) -> wm = 70-30 = 40
-    mem.addData((10L, 1L), (20L, 2L), (70L, 10L))
-    q.processAllAvailable()
-    // batch 2: ts=50 is LATE but above the 40 s watermark -> admitted into
-    // its (still open) window; ts=100 pushes wm to 70 -> window 0 closes
-    mem.addData((50L, 4L), (100L, 20L))
-    q.processAllAvailable()
-    // batch 3: ts=30 is below the watermark -> dropped entirely;
-    // ts=160 pushes wm to 130 >= 120 -> window 1 closes
-    mem.addData((30L, 100L), (160L, 40L))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("blocks")
-      .select($"block_epoch", $"n", $"total").as[(Long, Long, Long)]
+    val got = StreamFixture.collect(spark, "blocks",
+        Ingest.blockAggregate(rows, blockSec = 60L, maxLateness = "30 seconds")) { q =>
+      // batch 1: two rows in window [0,60), one in [60,120) -> wm = 70-30 = 40
+      mem.addData((10L, 1L), (20L, 2L), (70L, 10L))
+      q.processAllAvailable()
+      // batch 2: ts=50 is LATE but above the 40 s watermark -> admitted into
+      // its (still open) window; ts=100 pushes wm to 70 -> window 0 closes
+      mem.addData((50L, 4L), (100L, 20L))
+      q.processAllAvailable()
+      // batch 3: ts=30 is below the watermark -> dropped entirely;
+      // ts=160 pushes wm to 130 >= 120 -> window 1 closes
+      mem.addData((30L, 100L), (160L, 40L))
+      q.processAllAvailable()
+    }.select($"block_epoch", $"n", $"total").as[(Long, Long, Long)]
       .collect().sortBy(_._1)
     // window 0 includes the admitted late row (1+2+4), NOT the dropped 100
     assert(got.toSeq == Seq((0L, 3L, 7L), (60L, 2L, 30L)))
@@ -196,19 +194,16 @@ class IngestSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, String)] // (ts_sec, doc_id, text)
     val docs = mem.toDF().toDF("t", "doc_id", "text")
       .select(timestamp_seconds($"t").as("ts"), $"doc_id", $"text")
-    val q = graft.operators.DedupOps
-      .streamingExactDedup(docs, $"text", maxLateness = "60 seconds")
-      .writeStream.format("memory").queryName("sdedup")
-      .outputMode("append").start()
-    // batch 1: A twice (dup within batch), B once
-    mem.addData((10L, 1L, "Alpha  doc"), (20L, 2L, "alpha doc"), (30L, 3L, "beta"))
-    q.processAllAvailable()
-    // batch 2: another copy of A within the watermark -> dropped;
-    // C is new -> kept
-    mem.addData((40L, 4L, "ALPHA DOC"), (50L, 5L, "gamma"))
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("sdedup").select($"doc_id").as[Long]
+    val kept = StreamFixture.collect(spark, "sdedup", graft.operators.DedupOps
+        .streamingExactDedup(docs, $"text", maxLateness = "60 seconds")) { q =>
+      // batch 1: A twice (dup within batch), B once
+      mem.addData((10L, 1L, "Alpha  doc"), (20L, 2L, "alpha doc"), (30L, 3L, "beta"))
+      q.processAllAvailable()
+      // batch 2: another copy of A within the watermark -> dropped;
+      // C is new -> kept
+      mem.addData((40L, 4L, "ALPHA DOC"), (50L, 5L, "gamma"))
+      q.processAllAvailable()
+    }.select($"doc_id").as[Long]
       .collect().sorted.toSeq
     assert(kept == Seq(1L, 3L, 5L)) // first copy of each distinct text only
   }
@@ -217,22 +212,18 @@ class IngestSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[SrcRow]
-    val q = Ingest.counterDeltas(mem.toDS())
-      .writeStream.format("memory").queryName("deltas")
-      .outputMode("append").start()
-
     def row(i: Int, reading: Long, status: Int) =
       SrcRow(i * 1000000L, 0, "c", reading, status, counter = true)
-    // batch 1: baseline, clean delta, then two misses
-    mem.addData(row(1, 100, 0), row(2, 150, 0), row(3, 0, 1), row(4, 0, 1))
-    q.processAllAvailable()
-    // batch 2 (state crosses the batch boundary): recovery averages the
-    // accumulated delta over 1+missed; then a reset clears the baseline
-    mem.addData(row(5, 250, 0), row(6, 0, 2), row(7, 999, 0))
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("deltas").as[DeltaRow].collect().sortBy(_.ts_us)
+    val got = StreamFixture.collect(spark, "deltas",
+        Ingest.counterDeltas(mem.toDS()).toDF()) { q =>
+      // batch 1: baseline, clean delta, then two misses
+      mem.addData(row(1, 100, 0), row(2, 150, 0), row(3, 0, 1), row(4, 0, 1))
+      q.processAllAvailable()
+      // batch 2 (state crosses the batch boundary): recovery averages the
+      // accumulated delta over 1+missed; then a reset clears the baseline
+      mem.addData(row(5, 250, 0), row(6, 0, 2), row(7, 999, 0))
+      q.processAllAvailable()
+    }.as[DeltaRow].collect().sortBy(_.ts_us)
     assert(got.map(_.delta).toSeq == Seq(None, Some(50L), None, None,
       Some((250L - 150L) / 3), None, None))
     assert(got.map(_.missed).toSeq == Seq(0, 0, 0, 1, 2, 0, 0))
@@ -257,13 +248,11 @@ class IngestSpec extends AnyFunSuite {
         SrcRow((2 + run) * 1000000L, 0, ch, 1000L + 512L * (run + 1), 0,
           counter = true)
     val mem = MemoryStream[SrcRow]
-    val q = Ingest.counterDeltas(mem.toDS())
-      .writeStream.format("memory").queryName("giveup")
-      .outputMode("append").start()
-    mem.addData(rows("a", 255) ++ rows("b", 256): _*)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("giveup").as[DeltaRow].collect()
+    val got = StreamFixture.collect(spark, "giveup",
+        Ingest.counterDeltas(mem.toDS()).toDF()) { q =>
+      mem.addData(rows("a", 255) ++ rows("b", 256): _*)
+      q.processAllAvailable()
+    }.as[DeltaRow].collect()
     val aRec = got.filter(r => r.channel == "a" && r.ts_us == 257 * 1000000L).head
     val bRec = got.filter(r => r.channel == "b" && r.ts_us == 258 * 1000000L).head
     assert(aRec.delta.contains(512L) && aRec.missed == 255,

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
 import graft.TestSpark
+import graft.queries.StreamFixture
 
 /** The 100 TB state-store path: at cluster scale, streaming state (the
   * per-channel `LastReading` decode state, windowed block aggregates,
@@ -37,19 +38,14 @@ class RocksDbStateSpec extends AnyFunSuite {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     def run(): Seq[DeltaRow] = {
       val mem = MemoryStream[SrcRow]
-      val sink = s"rocks_cd_${java.util.UUID.randomUUID.toString.take(8)}"
-      val q = Ingest.counterDeltas(mem.toDS())
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
       def row(i: Int, reading: Long, status: Int) =
         SrcRow(i * 1000000L, 0, "c", reading, status, counter = true)
-      try {
+      StreamFixture.collect(spark, "rocks_cd", Ingest.counterDeltas(mem.toDS()).toDF()) { q =>
         mem.addData(row(1, 100, 0), row(2, 150, 0), row(3, 0, 1))
         q.processAllAvailable()
         mem.addData(row(4, 0, 1), row(5, 250, 0), row(6, 0, 2), row(7, 999, 0))
         q.processAllAvailable()
-      } finally q.stop()
-      spark.table(sink).as[DeltaRow].collect().toSeq.sortBy(_.ts_us)
+      }.as[DeltaRow].collect().toSeq.sortBy(_.ts_us)
     }
     val rocks = withRocksDb { run() }
     val default = run()
@@ -69,15 +65,10 @@ class RocksDbStateSpec extends AnyFunSuite {
           ($"epoch" % 7L).as("value"), lit(true).as("valid"))
       val agg = Ingest.blockAggregate(rows, blockSec = 600L,
         maxLateness = "30 seconds")
-      val sink = s"rocks_ba_${java.util.UUID.randomUUID.toString.take(8)}"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
+      StreamFixture.collect(spark, "rocks_ba", agg) { q =>
         mem.addData(1L to 60L: _*); q.processAllAvailable()
         mem.addData(61L to 200L: _*); q.processAllAvailable()
-      } finally q.stop()
-      spark.table(sink)
-        .select($"block_epoch", $"n", $"total").as[(Long, Long, Long)]
+      }.select($"block_epoch", $"n", $"total").as[(Long, Long, Long)]
         .collect().toSeq.sortBy(_._1)
     }
     // closed form over the ticks whose 600 s block CLOSED under the
@@ -105,18 +96,13 @@ class RocksDbStateSpec extends AnyFunSuite {
       val mem = MemoryStream[(Long, Long, String)]
       val docs = mem.toDF().select($"_1".as("doc_id"),
         timestamp_seconds($"_2").as("ts"), $"_3".as("text"))
-      val sink = s"rocks_nd_${java.util.UUID.randomUUID.toString.take(8)}"
-      val q = graft.operators.DedupOps.streamingNearDedup(docs, 3600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
+      StreamFixture.collect(spark, "rocks_nd",
+          graft.operators.DedupOps.streamingNearDedup(docs, 3600L).toDF()) { q =>
         mem.addData((1L, 100L, orig), (3L, 110L, other))
         q.processAllAvailable()
         mem.addData((2L, 120L, clone))
         q.processAllAvailable()
-      } finally q.stop()
-      spark.table(sink)
-        .select($"doc_id", $"band", $"holder", $"is_hit")
+      }.select($"doc_id", $"band", $"holder", $"is_hit")
         .as[(Long, Int, Long, Boolean)].collect().toSeq.sorted
     }
     val rocks = withRocksDb { run() }
@@ -137,18 +123,13 @@ class RocksDbStateSpec extends AnyFunSuite {
       val mem = MemoryStream[(Long, Long, Array[Byte])]
       val media = mem.toDF().select($"_1".as("media_id"),
         timestamp_seconds($"_2").as("ts"), $"_3".as("payload"))
-      val sink = s"rocks_fd_${java.util.UUID.randomUUID.toString.take(8)}"
-      val q = graft.operators.MultimodalOps.streamingFrameDedup(media, 3600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
+      StreamFixture.collect(spark, "rocks_fd",
+          graft.operators.MultimodalOps.streamingFrameDedup(media, 3600L).toDF()) { q =>
         mem.addData((1L, 100L, orig), (3L, 110L, payload(3)))
         q.processAllAvailable()
         mem.addData((2L, 120L, copy))
         q.processAllAvailable()
-      } finally q.stop()
-      spark.table(sink)
-        .select($"media_id", $"frame_idx", $"holder", $"is_hit")
+      }.select($"media_id", $"frame_idx", $"holder", $"is_hit")
         .as[(Long, Int, Long, Boolean)].collect().toSeq.sorted
     }
     val rocks = withRocksDb { run() }
@@ -170,16 +151,11 @@ class RocksDbStateSpec extends AnyFunSuite {
       val mem = MemoryStream[(Long, Long, String)]
       val docs = mem.toDF().select($"_1".as("doc_id"),
         timestamp_seconds($"_2").as("ts"), $"_3".as("text"))
-      val sink = s"rocks_ct_${java.util.UUID.randomUUID.toString.take(8)}"
-      val q = graft.operators.DedupOps.streamingContamination(docs, evalIdx,
-          minJaccard = 0.5, maxLatenessSec = 3600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
+      StreamFixture.collect(spark, "rocks_ct", graft.operators.DedupOps
+          .streamingContamination(docs, evalIdx, minJaccard = 0.5, maxLatenessSec = 3600L)) { q =>
         mem.addData((1L, 100L, leaked)); q.processAllAvailable()
         mem.addData((1L, 120L, leaked)); q.processAllAvailable() // re-delivery
-      } finally q.stop()
-      spark.table(sink).select($"train_id", $"eval_id")
+      }.select($"train_id", $"eval_id")
         .as[(Long, Long)].collect().toSeq.sorted
     }
     val rocks = withRocksDb { run() }
@@ -207,19 +183,15 @@ class RocksDbStateSpec extends AnyFunSuite {
       val stream = mem.toDF().select($"_1".as("probe_id"),
         timestamp_seconds(lit(1700000000L) + $"_2".cast("long")).as("ts"),
         $"_3".as("qv"))
-      val sink = s"rocks_ann_${java.util.UUID.randomUUID.toString.take(8)}"
-      val q = graft.operators.VectorOps.streamingAnnServe(stream, idx,
-          k = 3, planes = planes, dim = dim, probeRadius = 2,
-          windowSec = 3600L, latenessSec = 1L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
+      val out = StreamFixture.collect(spark, "rocks_ann",
+          graft.operators.VectorOps.streamingAnnServe(stream, idx,
+            k = 3, planes = planes, dim = dim, probeRadius = 2,
+            windowSec = 3600L, latenessSec = 1L)) { q =>
         mem.addData(probes.map { case (id, qv) => (id, id, qv) }.toSeq: _*)
         q.processAllAvailable()
         mem.addData((-1L, 36000L, probes.head._2))
         q.processAllAvailable()
-      } finally q.stop()
-      val out = spark.table(sink).filter($"probe_id" >= 0)
+      }.filter($"probe_id" >= 0)
         .select($"probe_id", $"vec_id", $"rk")
         .as[(Long, Long, Int)].collect().toSeq.sorted
       Pins.releaseAll()
@@ -239,14 +211,10 @@ class RocksDbStateSpec extends AnyFunSuite {
       val rows = mem.toDF().select(
         timestamp_seconds(lit(t0) + $"value" * 10L).as("ts"),
         pmod($"value", lit(37L)).as("k"))
-      val sink = s"rocks_dd_${java.util.UUID.randomUUID.toString.take(8)}"
-      val q = graft.operators.DedupOps.streamingExactDedup(
-          rows, concat(lit("doc "), $"k".cast("string")), "1 hour")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { mem.addData(1L to 300L: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(sink).count()
+      StreamFixture.collect(spark, "rocks_dd", graft.operators.DedupOps.streamingExactDedup(
+          rows, concat(lit("doc "), $"k".cast("string")), "1 hour")) { q =>
+        mem.addData(1L to 300L: _*); q.processAllAvailable()
+      }.count()
     }
     assert(got == 37L, s"expected one survivor per key, got $got")
   }
