@@ -5,7 +5,6 @@ import java.time.Instant
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -36,21 +35,22 @@ import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
   * stays O(1) in store size; anything else (a filtered frame, a fleet, a
   * longer window) takes the distributed aggregate, with the same rows
   * and schema either way. The local answer is one Spark-free core over a
-  * listed [[TsdStore]] and a Hadoop `Configuration`: [[query]] lists the
-  * load's path through the session's Hadoop configuration, and the cold
-  * `EtsdCmd query` calls it as [[answer]] on the store it listed before
-  * it builds any session.
+  * listed [[TsdStore]] and a Hadoop `Configuration`: [[query]] takes the
+  * store the load owns ([[TsdLocalScan.bareStore]]), listed once for the
+  * `begin` read, the fold and the scan a declined fold plans, and the
+  * cold `EtsdCmd query` calls it as [[answer]] on the store it listed
+  * before it builds any session.
   *
   * `begin` (`s=` missing or naming it) of a `.tsd` load is the store's
   * earliest block-1 stamp, read from its index entries
   * ([[TsdIndex.begin]]): the fresh sidecar's, and a probe of each
-  * unindexed file, in this process within the bound and with the
-  * planner's one probe job past it, never with a job over the data. It
-  * is the first stored sample whenever the schema has a register channel
-  * and block clocks run forward; with no register it is one interval
-  * earlier, and a clock stepping backwards inside a file is not looked
-  * for, as in the reference. Only a frame that is not a bare `.tsd` load
-  * takes `begin` as its smallest `ts`, with one aggregate job. */
+  * unindexed file, in this process within the bound and past it with the
+  * load's one probe job, which its scan reuses, never with a job over the
+  * data. It is the first stored sample whenever the schema has a register
+  * channel and block clocks run forward; with no register it is one
+  * interval earlier, and a clock stepping backwards inside a file is not
+  * looked for, as in the reference. Only a frame that is not a bare `.tsd`
+  * load takes `begin` as its smallest `ts`, with one aggregate job. */
 object EtsdQueryApi {
 
   /** Schema of every [[query]] result, local or distributed. */
@@ -170,25 +170,20 @@ object EtsdQueryApi {
                   now: Instant, driverLocal: Boolean): DataFrame = {
     val q = resolve(schema, rawArgs, now)
     val spark = df.sparkSession
-    lazy val conf = spark.sessionState.newHadoopConf()
-    // a bare load's store, listed once and only when used: an explicit
-    // window on the distributed plan never lists it
-    lazy val store = TsdLocalScan.barePath(df).map { path =>
-      val root = new Path(path)
-      TsdIndex.listStore(root.getFileSystem(conf), root)
-    }
+    lazy val store = TsdLocalScan.bareStore(df)
     // `begin` (etsdQuery.c:259-261): a `.tsd` load's from its index
-    // entries, read here or, past the local bound, with the planner's one
+    // entries, read here or, past the local bound, with the load's one
     // probe job; any other frame's as its smallest `ts`, one aggregate job
     def begin: Long = store.fold {
       val r = df.agg(min(unix_timestamp($"ts"))).head()
       if (r.isNullAt(0)) // empty frame: the reference's read error path
         throw new IllegalArgumentException("no data blocks in file")
       r.getLong(0)
-    }(s => TsdLocalScan.begin(s).getOrElse(TsdIndex.begin(TsdIndex.forPlanning(spark, s))))
+    }(s => TsdLocalScan.begin(s).getOrElse(TsdIndex.begin(s.planned)))
 
     val (lo, hi) = q.window(if (q.needsBegin) begin else 0L)
-    val rows = if (!driverLocal) None else store.flatMap(local(conf, _, q, (lo, hi)))
+    val rows = if (!driverLocal) None
+      else store.flatMap(local(spark.sessionState.newHadoopConf(), _, q, (lo, hi)))
     rows.fold(distributed(df, q.verb, q.chan, lo, hi)) { rs =>
       spark.createDataFrame(
         rs.map { case (c, n, r) => Row(c, n, r) }.asJava, ResultSchema)

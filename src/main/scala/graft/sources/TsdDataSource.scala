@@ -42,6 +42,12 @@ import graft.model.EtsdSchema
   * A partial trailing block (a torn write) is ignored in every mode, as
   * by the driver-local fold: see [[TsdIndex.dataBlocks]].
   *
+  * A single-store load lists its store, reads its sidecar and probes the
+  * files the sidecar lacks once, when first planned ([[TsdTable.store]]);
+  * `begin`, the driver-local fold and every scan of the load share them.
+  * So a load sees the files present when it is first planned, as Spark's
+  * own file sources do (`InMemoryFileIndex`); a new load sees later ones.
+  *
   * `EtsdQueryApi.query` over a bare load of this source skips the scan
   * when the sidecar prunes the selection to at most
   * [[TsdLocalScan.MaxBlocks]] (1,024) blocks: [[TsdLocalScan]] reads those
@@ -49,14 +55,12 @@ import graft.model.EtsdSchema
   * `EtsdCmd query` reads them the same way before it builds any session.
   * The bound is a constant so that driver work stays O(1) in store size.
   * Its `begin` default is the store's earliest block-1 stamp, read from
-  * the sidecar entries this scan plans with ([[TsdIndex.begin]]), so no
-  * query over this source scans its data for `begin`.
+  * the entries this scan plans with ([[TsdIndex.begin]]), so no query
+  * over this source scans its data for `begin`.
   */
 class TsdDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    if (TsdDataSource.fleetMode(options)) TsdDataSource.FleetSchema
-    else if (options.getBoolean("xdata", false)) TsdDataSource.XDataSchema
-    else EtsdSchema.LongSchema
+    new TsdTable(options).schema()
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
     new TsdTable(new CaseInsensitiveStringMap(properties))
@@ -91,6 +95,19 @@ private[sources] class TsdTable(props: CaseInsensitiveStringMap)
   private[sources] def xdata = props.getBoolean("xdata", false)
   private[sources] def fleet = TsdDataSource.fleetMode(props)
   require(!(xdata && fleet), "xdata reads are per-store; drop option(\"fleet\")")
+  private[sources] def path: String = props.get("path")
+  private[sources] def stores: Option[Seq[String]] =
+    Option(props.get("stores")).map(_.split(',').toSeq.filter(_.nonEmpty))
+
+  /** The store a single-store load names, listed through
+    * [[TsdIndex.listStore]] the first time the load is planned and kept
+    * for the load's life with its sidecar entries and probed entries
+    * ([[TsdStore.planned]]). */
+  private[sources] lazy val store: TsdStore = {
+    val root = new Path(path)
+    TsdIndex.listStore(
+      root.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), root)
+  }
   override def name(): String =
     if (fleet) s"tsdFleet(${props.getOrDefault("stores", props.getOrDefault("path", ""))})"
     else s"tsd(${props.getOrDefault("path", "")})"
@@ -100,20 +117,13 @@ private[sources] class TsdTable(props: CaseInsensitiveStringMap)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TsdScanBuilder(options.get("path"),
-      options.getLong("blocksPerPartition", 2048),
-      options.getBoolean("xdata", false),
-      fleet = TsdDataSource.fleetMode(options),
-      stores = Option(options.get("stores"))
-        .map(_.split(',').toSeq.filter(_.nonEmpty)))
+    new TsdScanBuilder(this, options.getLong("blocksPerPartition", 2048))
 }
 
-private[sources] class TsdScanBuilder(path: String, blocksPerPartition: Long,
-                                      xdata: Boolean,
-                                      fleet: Boolean,
-                                      stores: Option[Seq[String]])
+private[sources] class TsdScanBuilder(table: TsdTable, blocksPerPartition: Long)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
+  import table.{fleet, xdata}
   // each task bulk-reads its partition's sector ranges into byte arrays
   // bounded by blocksPerPartition * 512 B; validate at scan build so a
   // misconfiguration fails with a message instead of Int overflow /
@@ -190,8 +200,7 @@ private[sources] class TsdScanBuilder(path: String, blocksPerPartition: Long,
   }
   override def pushedFilters(): Array[sources.Filter] = pushed
   override def build(): Scan =
-    new TsdScan(path, fleet, stores, lo, hi, blocksPerPartition, xdata, chans,
-      storeSel, required)
+    new TsdScan(table, lo, hi, blocksPerPartition, chans, storeSel, required)
 }
 
 /** One file's contiguous sector range — the unit the partition packer
@@ -277,11 +286,11 @@ private[sources] object TsdPacking {
 }
 
 /** The one `.tsd` scan. It plans over `(store id, file)` pairs: a plain
-  * load is one store without an id (no `store_id` column), the files
-  * [[TsdIndex.listStore]] finds for its path, so a single-file load
-  * probes once; a fleet is one store per directory, planned in one
-  * [[TsdIndex.forPlanningFleet]] pass (per-store `_graft_index` sidecars,
-  * misses coalesced into one probe job).
+  * load is one store without an id (no `store_id` column), the load's
+  * [[TsdTable.store]], which it plans from without listing again; a fleet
+  * is one store per directory, planned in one [[TsdIndex.forPlanningFleet]]
+  * pass (per-store `_graft_index` sidecars, misses coalesced into one
+  * probe job). Both keep files by [[TsdStore.select]].
   *
   * A fleet is ONE scan node, not a union of per-store scans: a union's
   * logical plan is O(stores), and at the 10k–100k-store fleet a 100 TB
@@ -292,18 +301,15 @@ private[sources] object TsdPacking {
   * directory base names and must be distinct across the fleet; an
   * `=`/`IN` predicate on `store_id` prunes whole stores before any
   * metadata I/O. */
-private[sources] class TsdScan(path: String, fleet: Boolean,
-                               stores: Option[Seq[String]],
+private[sources] class TsdScan(table: TsdTable,
                                lo: Long, hi: Long,
                                blocksPerPartition: Long,
-                               xdata: Boolean,
                                chans: Option[Set[String]],
                                storeSel: Option[Set[String]],
                                required: Option[StructType])
     extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required.getOrElse(
-    if (fleet) TsdDataSource.FleetSchema
-    else if (xdata) TsdDataSource.XDataSchema else EtsdSchema.LongSchema)
+  import table.{fleet, path, xdata}
+  override def readSchema(): StructType = required.getOrElse(table.schema())
   override def toBatch: Batch = this
   override def description(): String =
     s"TsdScan ${if (fleet) s"stores=${storeDirs.size}" else s"path=$path"}" +
@@ -312,17 +318,15 @@ private[sources] class TsdScan(path: String, fleet: Boolean,
       chans.fold("")(cs => s" chans=${cs.toSeq.sorted.mkString(",")}") +
       storeSel.fold("")(ss => s" storeSel=${ss.size}")
 
-  private def hadoopFs(p: Path) =
-    p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-
   /** Fleet mode: (storeId, dir) after store_id pushdown — the explicit
     * `stores` list, or the root's immediate subdirectories (one listing). */
   private lazy val storeDirs: Seq[(String, Path)] = {
-    val dirs: Seq[Path] = stores match {
+    val dirs: Seq[Path] = table.stores match {
       case Some(list) => list.map(new Path(_))
       case None =>
         val root = new Path(path)
-        hadoopFs(root).listStatus(root).filter(s => s.isDirectory &&
+        root.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+          .listStatus(root).filter(s => s.isDirectory &&
             !s.getPath.getName.startsWith("_") &&
             !s.getPath.getName.startsWith("."))
           .map(_.getPath).toSeq.sortBy(_.getName)
@@ -334,29 +338,20 @@ private[sources] class TsdScan(path: String, fleet: Boolean,
     withIds.filter { case (id, _) => storeSel.forall(_.contains(id)) }
   }
 
-  /** Surviving (store id, file, entry) rows after store and file-level
-    * time pruning, computed once per scan. Planning metadata comes from
-    * [[TsdIndex]] — the sidecar where fresh, one distributed probe job
-    * otherwise — so the driver never reads data-file bytes regardless of
-    * file count (the many-file form of etsdFindBlock's E_BEFORE/E_AFTER
-    * checks, etsdRead.c:300-353). */
-  private lazy val pruned: Seq[(Option[String], String, TsdIndexEntry)] = {
-    val spark = SparkSession.active
-    val files =
-      if (fleet)
-        TsdIndex.forPlanningFleet(spark, storeDirs)
-          .map { case (id, file, e) => (Some(id), file, e) }
-      else {
-        val root = new Path(path)
-        TsdIndex.plan(spark, Seq((None, TsdIndex.listStore(hadoopFs(root), root))))
-      }
-    files.filter(_._3.overlaps(lo, hi))
-  }
+  /** Surviving whole-file chunks after store and file-level time pruning,
+    * computed once per scan. Planning metadata comes from [[TsdIndex]] —
+    * the sidecar where fresh, one distributed probe job otherwise — so the
+    * driver never reads data-file bytes regardless of file count (the
+    * many-file form of etsdFindBlock's E_BEFORE/E_AFTER checks,
+    * etsdRead.c:300-353). */
+  private lazy val pruned: Seq[TsdChunk] =
+    if (!fleet) table.store.select(lo, hi, table.store.planned)
+    else TsdIndex.forPlanningFleet(SparkSession.active, storeDirs).flatMap {
+      case (id, s, entries) => s.select(lo, hi, entries).map(_.copy(store = Some(id)))
+    }
 
   override def planInputPartitions(): Array[InputPartition] =
-    TsdPacking.pack(
-      pruned.map { case (store, file, e) => TsdChunk(file, 1L, e.nBlocks, store) },
-      blocksPerPartition, TsdPacking.OpenCostBlocks,
+    TsdPacking.pack(pruned, blocksPerPartition, TsdPacking.OpenCostBlocks,
       SparkSession.active.sparkContext.defaultParallelism,
       lo, hi, chans.map(_.toSeq.sorted), required.map(_.fieldNames.toSeq))
 
@@ -367,7 +362,7 @@ private[sources] class TsdScan(path: String, fleet: Boolean,
     // post-prune bytes from the index: lets AQE/broadcast decisions see
     // a time-filtered .tsd scan as small when it is
     override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(pruned.map(_._3.fileLen).sum)
+      OptionalLong.of(pruned.map(c => (c.nBlocks + 1) * BlockBuffer.BlockSize).sum)
     override def numRows(): OptionalLong = OptionalLong.empty()
   }
 }

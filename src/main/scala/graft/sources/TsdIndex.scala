@@ -27,14 +27,7 @@ final case class TsdIndexEntry(
     lastTs: Long,      // epoch of last data block
     blockSpanSec: Long, // blockIntervals * intervalSec from the header
     modTime: Long = 0L // file modification time at probe/write
-) {
-  /** Can this file hold a block overlapping `[lo, hi]` (epoch seconds)?
-    * The one file-level time-pruning predicate of every `.tsd` planner;
-    * it assumes block clocks only move forward (first block earliest,
-    * last block latest). */
-  def overlaps(lo: Long, hi: Long): Boolean =
-    lastTs + blockSpanSec >= lo && firstTs <= hi
-}
+)
 
 object TsdIndexEntry {
   /** The one entry builder, for a file probed on disk and for bytes a
@@ -78,6 +71,28 @@ final class TsdStore private[sources] (val fs: FileSystem, val dir: Path,
     TsdIndex.PlanStats.indexedFiles.addAndGet(hit.size)
     TsdIndex.PlanStats.probedFiles.addAndGet(miss.size)
     (hit.map(f => cached(f.getPath.getName)), miss)
+  }
+
+  /** Every data file's entry: the fresh sidecar's, then the rest from ONE
+    * distributed probe job on the active session ([[TsdIndex.plan]]).
+    * Computed on first use and kept, so a store probes at most once for
+    * `begin` and every scan planned from it. */
+  private[graft] lazy val planned: Seq[TsdIndexEntry] =
+    TsdIndex.plan(SparkSession.active, Seq(this)).head
+
+  /** The one window-to-files rule of every `.tsd` reader: whole-file
+    * chunks of the data files that can hold a block overlapping `[lo, hi]`
+    * (epoch seconds). A file with an entry in `entries` is kept when its
+    * first block starts by `hi` and its last block ends at or after `lo`,
+    * which assumes block clocks only move forward; one without is kept. */
+  private[sources] def select(lo: Long, hi: Long,
+                              entries: Seq[TsdIndexEntry]): Seq[TsdChunk] = {
+    val known = entries.map(_.name).toSet
+    val kept = entries.filter(e => e.lastTs + e.blockSpanSec >= lo && e.firstTs <= hi)
+      .map(e => (e.name, e.nBlocks))
+    val whole = files.map(f => (f.getPath.getName, TsdIndex.dataBlocks(f.getLen)))
+      .filterNot(f => known(f._1))
+    (kept ++ whole).map { case (n, b) => TsdChunk(path(n).toString, 1L, b) }
   }
 
   /** The full path of the store's file `name`. */
@@ -260,22 +275,18 @@ object TsdIndex {
   private def probeArg(s: TsdStore, f: FileStatus): (String, Long, Long) =
     (s.path(f.getPath.getName).toString, f.getLen, f.getModificationTime)
 
-  /** Planning metadata for every data file of `stores` — (store id,
-    * store) pairs — as (store id, full file path, entry): the sidecar's
-    * fresh entries, and ONE distributed probe job for every store's
-    * unindexed files together. */
-  private[sources] def plan[K](spark: SparkSession,
-      stores: Seq[(K, TsdStore)]): Seq[(K, String, TsdIndexEntry)] = {
-    val misses = stores.flatMap { case (_, s) => s.unindexed.map(probeArg(s, _)) }
-    val probed = misses.map(_._1).zip(probeDistributed(spark, misses)).toMap
-    stores.flatMap { case (id, s) =>
-      (s.indexed ++ s.unindexed.map(f => probed(probeArg(s, f)._1)))
-        .map(e => (id, s.path(e.name).toString, e))
-    }
+  /** Every data file's entry, per store of `stores`: the fresh sidecar
+    * entries, and ONE distributed probe job for every store's unindexed
+    * files together. */
+  private[sources] def plan(spark: SparkSession,
+                            stores: Seq[TsdStore]): Seq[Seq[TsdIndexEntry]] = {
+    val probed = probeDistributed(spark,
+      stores.flatMap(s => s.unindexed.map(probeArg(s, _)))).iterator
+    stores.map(s => s.indexed ++ s.unindexed.map(_ => probed.next()))
   }
 
-  /** Fleet planning entry point: metadata for every data file of every
-    * store, in ONE call — the multi-store scan's planner.
+  /** Fleet planning entry point: every store of `stores` listed, with
+    * every data file's entry, in ONE call — the multi-store scan's planner.
     *
     * Driver work per store is one directory listing plus one tiny
     * sidecar read, flattened across a bounded thread pool (metadata RPCs
@@ -283,9 +294,9 @@ object TsdIndex {
     * store count at fleet sizes); cache MISSES from ALL stores coalesce
     * into a single distributed probe job — one Spark job per fleet scan
     * at worst, zero when sidecars are fresh, never one per store.
-    * Returns (storeId, absoluteFilePath, entry). */
-  def forPlanningFleet(spark: SparkSession,
-      stores: Seq[(String, Path)]): Seq[(String, String, TsdIndexEntry)] = {
+    * Returns (storeId, store, entries). */
+  def forPlanningFleet(spark: SparkSession, stores: Seq[(String, Path)])
+      : Seq[(String, TsdStore, Seq[TsdIndexEntry])] = {
     if (stores.isEmpty) return Seq.empty
     val conf = spark.sessionState.newHadoopConf()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -302,7 +313,7 @@ object TsdIndex {
         })
       }.map { case (id, fut) => (id, fut.get()) }
     } finally pool.shutdown()
-    plan(spark, listed)
+    listed.zip(plan(spark, listed.map(_._2))).map { case ((id, s), es) => (id, s, es) }
   }
 
   /** Planning entry point for one store, a file or a directory: [[plan]]
@@ -310,11 +321,7 @@ object TsdIndex {
     * a listing and at most one sidecar read, independent of file count. */
   def forPlanning(spark: SparkSession, fs: FileSystem,
                   path: Path): Seq[TsdIndexEntry] =
-    forPlanning(spark, listStore(fs, path))
-
-  /** [[forPlanning]] for a store already listed. */
-  def forPlanning(spark: SparkSession, store: TsdStore): Seq[TsdIndexEntry] =
-    plan(spark, Seq(((), store))).map(_._3)
+    plan(spark, Seq(listStore(fs, path))).head
 
   /** `begin`, the CLI's first stored sample, of a store whose data files
     * have `entries`: the smallest block-1 stamp ([[TsdIndexEntry.firstTs]]),

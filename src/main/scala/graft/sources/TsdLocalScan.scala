@@ -20,11 +20,11 @@ import graft.model.EtsdSchema
   * the scan's own [[TsdPartitionReader]] (same pushed time range and
   * channel set) and folded per channel. Everything here takes a store
   * listed by [[TsdIndex.listStore]] and a Hadoop `Configuration`, not a
-  * DataFrame: `EtsdQueryApi` reaches it from a bare [[TsdDataSource]]
-  * load ([[barePath]]) and the cold `EtsdCmd query` before it builds any
-  * session, each listing the store once for the `begin` read and the
-  * fold together. `begin` comes from the store's index entries
-  * ([[begin]]), never from decoding its blocks.
+  * DataFrame: `EtsdQueryApi` reaches it as the store a bare
+  * [[TsdDataSource]] load owns ([[bareStore]]), which that load's scans
+  * plan from too, and the cold `EtsdCmd query` as the store it lists
+  * before it builds any session. `begin` comes from the store's index
+  * entries ([[begin]]), never from decoding its blocks.
   *
   * The bound is a constant, not a setting: it caps the caller's work at
   * 512 KiB of reads and decode whatever the store's size, so the
@@ -41,40 +41,33 @@ object TsdLocalScan {
   private[graft] final case class ChannelFold(channel: String, n: Long,
       sum: Long, min: Long, max: Long)
 
-  /** The load path of a bare single-store [[TsdDataSource]] relation in
-    * the long schema; None for anything else (a filtered or projected
+  /** The store of a bare single-store [[TsdDataSource]] relation in the
+    * long schema, the one its load lists and its scans plan from
+    * ([[TsdTable.store]]); None for anything else (a filtered or projected
     * frame, a fleet or xData load, another source). */
-  private[graft] def barePath(df: DataFrame): Option[String] =
+  private[graft] def bareStore(df: DataFrame): Option[TsdStore] =
     df.queryExecution.analyzed match {
       case r: DataSourceV2Relation => r.table match {
         case t: TsdTable if !t.fleet && !t.xdata &&
             r.output.map(_.name) == EtsdSchema.LongSchema.fieldNames.toSeq =>
-          Option(r.options.get("path"))
+          Some(t.store)
         case _ => None
       }
       case _ => None
     }
 
-  /** Whole files of `store` to read for `[lo, hi]`, or None past
-    * [[MaxBlocks]]. Sidecar-covered files are pruned by
-    * [[TsdIndexEntry.overlaps]]; an unindexed file (a single-file load, or
-    * one the sidecar does not cover or covers with a stale entry) counts
-    * at its full length and is kept. */
-  private def chunks(store: TsdStore, lo: Long, hi: Long): Option[Seq[TsdChunk]] = {
-    val files = store.indexed.filter(_.overlaps(lo, hi)).map(e => (e.name, e.nBlocks)) ++
-      store.unindexed.map(f => (f.getPath.getName, TsdIndex.dataBlocks(f.getLen)))
-    if (files.map(_._2).sum > MaxBlocks) None
-    else Some(files.map { case (n, b) => TsdChunk(store.path(n).toString, 1L, b) })
-  }
-
   /** Per-channel fold of the valid, non-register samples with `lo <= ts
     * <= hi` (epoch seconds) of channel `chan` (every channel when None),
-    * or None when the selection is over [[MaxBlocks]]. Channels with no
-    * kept sample are absent, as in a grouped aggregate; the rest come in
-    * channel-name order. */
+    * or None when the selection is over [[MaxBlocks]]. The files read are
+    * [[TsdStore.select]]'s over the fresh sidecar entries alone: an
+    * unindexed file (a single-file load, or one the sidecar does not
+    * cover or covers with a stale entry) counts at its full length and is
+    * kept. Channels with no kept sample are absent, as in a grouped
+    * aggregate; the rest come in channel-name order. */
   private[graft] def fold(conf: Configuration, store: TsdStore, lo: Long,
                           hi: Long, chan: Option[String]): Option[Seq[ChannelFold]] =
-    chunks(store, lo, hi).map { cs =>
+    Some(store.select(lo, hi, store.indexed))
+      .filter(_.map(_.nBlocks).sum <= MaxBlocks).map { cs =>
       val want = chan.map(UTF8String.fromString)
       // n, sum, min, max per channel. No sum can overflow: samples are at
       // most 32 bits wide and a channel has fewer than 2^17 of them in

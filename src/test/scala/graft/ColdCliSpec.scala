@@ -101,9 +101,34 @@ class ColdCliSpec extends AnyFunSuite {
       .contains(oracleLines(begin, begin + 3600L)))
   }
 
-  test("the CLI's distributed fallback lists its store at most 3 times") {
+  test("an in-process query over a declined window lists its store once") {
+    // the load's one listing serves `begin`, the declined local attempt
+    // and the scan it then plans
+    val key = s"fs.${CountingFs.Scheme}.impl"
+    spark.conf.set(key, classOf[CountingFs].getName)
+    try {
+      val path = s"${CountingFs.Scheme}:$store"
+      val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
+      val begin = firstBlockTs(tsdFiles(store))
+      Seq(window(t0 + 3600L, t0 + 4 * 86400L) -> oracleLines(t0 + 3600L, t0 + 4 * 86400L),
+          Seq("q=ave", "c=g", "s=begin+1h") -> oracleLines(begin + 3600L, now.getEpochSecond))
+        .foreach { case (args, want) =>
+          val df = load(spark, path)
+          CountingFs.reset()
+          val rows = EtsdQueryApi.query(df, schema, args, now)
+            .orderBy("channel").collect().toSeq
+            .map(r => EtsdCmd.queryLine(r.getString(0), r.getLong(1), r.getDouble(2)))
+          assert(rows == want, args)
+          assert(CountingFs.calls("list", store) == 1, CountingFs.log)
+          assert(CountingFs.calls("open", s"$store/${TsdIndex.FileName}") == 1, CountingFs.log)
+        }
+    } finally spark.conf.unset(key)
+  }
+
+  test("the CLI's distributed fallback lists its store at most twice") {
     // what a cold `EtsdCmd query` does once the core declines: the core's
-    // listing, then the distributed plan over a session, here in-process
+    // listing, then the distributed plan over a session, here in-process;
+    // the session load lists once for its `begin` and its scan
     val key = s"fs.${CountingFs.Scheme}.impl"
     spark.conf.set(key, classOf[CountingFs].getName)
     try {
@@ -118,8 +143,8 @@ class ColdCliSpec extends AnyFunSuite {
         .map(r => EtsdCmd.queryLine(r.getString(0), r.getLong(1), r.getDouble(2)))
       val begin = firstBlockTs(tsdFiles(store))
       assert(rows == oracleLines(begin + 3600L, now.getEpochSecond))
-      assert(CountingFs.calls("list", store) <= 3, CountingFs.log)
-      assert(CountingFs.calls("open", s"$store/${TsdIndex.FileName}") <= 3, CountingFs.log)
+      assert(CountingFs.calls("list", store) <= 2, CountingFs.log)
+      assert(CountingFs.calls("open", s"$store/${TsdIndex.FileName}") <= 2, CountingFs.log)
     } finally spark.conf.unset(key)
   }
 

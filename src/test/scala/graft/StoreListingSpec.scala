@@ -10,12 +10,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{lit, timestamp_seconds}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.codec.{BlockBuffer, EtsdDecoder}
 import graft.queries.EtsdQueryApi
 import graft.queries.LocalQueryStores._
-import graft.sources.TsdIndex
+import graft.sources.{EtsdSink, TsdIndex}
 
 /** Every `.tsd` reader resolves a store path by the one rule of
   * `TsdIndex.listStore`: a store of rotated files (`garage.tsd.<epoch>`,
@@ -141,6 +142,31 @@ class StoreListingSpec extends AnyFunSuite {
       assert(CountingFs.calls("list", store) == 1, CountingFs.log)
       assert(CountingFs.calls("open", s"$store/${TsdIndex.FileName}") <= 1, CountingFs.log)
     } finally System.clearProperty(prop)
+  }
+
+  test("a load sees the files present when it is first planned") {
+    import spark.implicits._
+    val dir = copyStore(store)
+    val df = load(spark, dir)
+    val q = Seq("q=tot", "c=temp", s"e=${iso(now.getEpochSecond + 86400L)}")
+    val count = df.count()
+    val total = answer(EtsdQueryApi.query(df, mixedSchema, q, now))
+    // one more span file, two file spans after the store's last one
+    val fileSpan = 8 * span
+    val t = (Math.floorDiv(tEnd, fileSpan) + 2) * fileSpan
+    EtsdSink.exportIndexed((1 to 47).map(k => t + 10L * k)
+        .flatMap(te => Seq((te, "Temp", 7L), (te, "Amps", 3L)))
+        .toDF("te", "channel", "value")
+        .select(timestamp_seconds($"te").as("ts"), $"channel", $"value", lit(true).as("valid")),
+      mixedSchema, dir, blocksPerFile = 8)
+    val added = tsdFiles(dir).last
+    assert(tsdFiles(dir).size == tsdFiles(store).size + 1)
+    assert(df.count() == count)
+    assert(answer(EtsdQueryApi.query(df, mixedSchema, q, now)) == total)
+    // a new load reads the new file
+    assert(load(spark, dir).count() == count + load(spark, added.toString).count())
+    assert(answer(EtsdQueryApi.query(load(spark, dir), mixedSchema, q, now))("Temp")._1 ==
+      total("Temp")._1 + 47)
   }
 
   test("an in-process point query makes no more file-system calls than " +

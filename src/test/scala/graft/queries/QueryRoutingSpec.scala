@@ -39,11 +39,13 @@ class QueryRoutingSpec extends AnyFunSuite {
   private def args(lo: Long, hi: Long, chan: Boolean = true): Seq[String] =
     Seq("q=ave", s"s=${iso(lo)}", s"e=${iso(hi)}") ++ (if (chan) Seq("c=g") else Nil)
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsOf(f: => Unit): Int = {
+  /** Spark jobs started while `f` runs, of those `pick` accepts. */
+  private def jobsOf(f: => Unit,
+                     pick: SparkListenerJobStart => Boolean = _ => true): Int = {
     val jobs = new AtomicInteger(0)
     val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (pick(j)) jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(l)
     try {
@@ -129,6 +131,20 @@ class QueryRoutingSpec extends AnyFunSuite {
     assert(jobs == planJobs, s"begin default: $jobs jobs, its window alone: $planJobs")
   }
 
+  test("a begin default over an unindexed store runs one probe job") {
+    // no sidecar and 2,880 blocks: `begin` is past the local bound, so it
+    // comes from the load's probe job, whose entries the scan then plans
+    // with; the probe job's call site is in TsdIndex
+    val bare = withoutSidecar(store)
+    val begin = firstBlockTs(tsdFiles(bare))
+    var got = Map.empty[String, (Long, Double)]
+    val probes = jobsOf(
+      { got = answer(EtsdQueryApi.query(load(spark, bare), schema, Seq("q=ave", "c=g"), now)) },
+      _.stageInfos.exists(_.name.contains("TsdIndex.scala")))
+    assert(probes == 1)
+    assert(got == oracle(bare, "ave", Some("G"), begin, now.getEpochSecond))
+  }
+
   test("inputs other than a bare long load take the distributed path") {
     import spark.implicits._
     val lo = t0 + 3 * fileSpan + 9 * span
@@ -139,9 +155,11 @@ class QueryRoutingSpec extends AnyFunSuite {
       .option("stores", store).load()
     val xdata = spark.read.format("graft.sources.TsdDataSource")
       .option("xdata", "true").load(store)
-    assert(TsdLocalScan.barePath(bare).contains(store))
+    assert(TsdLocalScan.bareStore(bare).map(_.dir.toString).contains(store))
+    assert(TsdLocalScan.bareStore(bare).get eq TsdLocalScan.bareStore(bare).get,
+      "a load lists its store once")
     Seq(filtered, fleet, xdata, bare.select("ts", "channel", "value", "valid",
-        "is_register")).foreach(df => assert(TsdLocalScan.barePath(df).isEmpty))
+        "is_register")).foreach(df => assert(TsdLocalScan.bareStore(df).isEmpty))
     val want = oracle(store, "ave", Some("G"), lo, lo + span - 1)
     Seq(filtered, fleet).foreach { df =>
       val q = EtsdQueryApi.query(df, schema, a, now)
