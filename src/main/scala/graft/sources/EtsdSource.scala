@@ -42,10 +42,10 @@ object EtsdSource {
 
   /** Fleet-wide read carrying `store_id` (the store directory's base
     * name — must be distinct across the fleet), always through the
-    * single multi-store scan node ([[TsdScan]]): per-store sidecar
-    * planning happens inside ONE `planInputPartitions`, cache misses
-    * across all stores coalesce into one probe job, and an `=`/`IN`
-    * filter on `store_id` prunes whole stores at planning time. */
+    * single multi-store scan node ([[TsdScan]]): the load lists each
+    * store and reads its sidecar once, when a scan first selects it,
+    * cache misses across all stores coalesce into one probe job, and an
+    * `=`/`IN` filter on `store_id` prunes whole stores at planning time. */
   def fleetWithStores(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     require(dirs.nonEmpty, "fleet requires at least one store directory")
     // the store list travels as ONE comma-joined DSv2 option: a path
@@ -59,9 +59,9 @@ object EtsdSource {
   }
 
   /** [[fleetWithStores]] over a fleet ROOT directory: every immediate
-    * subdirectory is a store. The store list is resolved at planning
-    * time by one listing of the root — the natural shape for a rotating
-    * fleet where stores come and go without the query changing. */
+    * subdirectory is a store, found by one listing of the root when the
+    * load is first planned and kept, as its files are, for the load's
+    * life: load again to see stores added or removed since. */
   def fleetRoot(spark: SparkSession, root: String): DataFrame =
     spark.read.format("graft.sources.TsdDataSource")
       .option("fleet", "true").load(root)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util.OptionalLong
+import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.jdk.CollectionConverters._
 
@@ -42,11 +43,12 @@ import graft.model.EtsdSchema
   * A partial trailing block (a torn write) is ignored in every mode, as
   * by the driver-local fold: see [[TsdIndex.dataBlocks]].
   *
-  * A single-store load lists its store, reads its sidecar and probes the
-  * files the sidecar lacks once, when first planned ([[TsdTable.store]]);
-  * `begin`, the driver-local fold and every scan of the load share them.
-  * So a load sees the files present when it is first planned, as Spark's
-  * own file sources do (`InMemoryFileIndex`); a new load sees later ones.
+  * A load resolves the stores it names once, and lists each store, reads
+  * its sidecar and probes the files the sidecar lacks once, when a scan
+  * first selects it ([[TsdTable.listed]]); `begin`, the driver-local fold
+  * and every scan of the load share them. So a load sees the stores and
+  * files present when it is first planned, as Spark's own file sources do
+  * (`InMemoryFileIndex`); a new load sees later ones.
   *
   * `EtsdQueryApi.query` over a bare load of this source skips the scan
   * when the sidecar prunes the selection to at most
@@ -81,33 +83,68 @@ object TsdDataSource {
     * store's id — ONE scan node for the whole fleet (see [[TsdScan]]). */
   val FleetSchema: StructType = EtsdSchema.LongSchema
     .add("store_id", org.apache.spark.sql.types.StringType, false)
-
-  /** Fleet mode is on when the caller passes an explicit store-dir list
-    * (`option("stores", "d1,d2,…")`) or asks to treat the load path as a
-    * fleet ROOT whose immediate subdirectories are the stores
-    * (`option("fleet", "true")`). */
-  private[sources] def fleetMode(options: CaseInsensitiveStringMap): Boolean =
-    options.containsKey("stores") || options.getBoolean("fleet", false)
 }
 
 private[sources] class TsdTable(props: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
   private[sources] def xdata = props.getBoolean("xdata", false)
-  private[sources] def fleet = TsdDataSource.fleetMode(props)
+  /** Fleet mode: an explicit store-dir list (`option("stores", "d1,d2,…")`)
+    * or a fleet ROOT whose immediate subdirectories are the stores
+    * (`option("fleet", "true")`). */
+  private[sources] def fleet = props.containsKey("stores") || props.getBoolean("fleet", false)
   require(!(xdata && fleet), "xdata reads are per-store; drop option(\"fleet\")")
   private[sources] def path: String = props.get("path")
-  private[sources] def stores: Option[Seq[String]] =
-    Option(props.get("stores")).map(_.split(',').toSeq.filter(_.nonEmpty))
 
-  /** The store a single-store load names, listed through
-    * [[TsdIndex.listStore]] the first time the load is planned and kept
-    * for the load's life with its sidecar entries and probed entries
-    * ([[TsdStore.planned]]). */
-  private[sources] lazy val store: TsdStore = {
-    val root = new Path(path)
-    TsdIndex.listStore(
-      root.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), root)
+  /** The stores this load names, `(id, path)`, resolved once per load: a
+    * plain or xData load is one store with no id; a fleet is its `stores`
+    * list, or the immediate subdirectories of its root (one listing), with
+    * the directory base names as ids, which must be distinct. */
+  private[sources] lazy val named: Seq[(Option[String], Path)] =
+    if (!fleet) Seq(None -> new Path(path))
+    else {
+      val dirs = Option(props.get("stores")) match {
+        case Some(list) => list.split(',').toSeq.filter(_.nonEmpty).map(new Path(_))
+        case None =>
+          val root = new Path(path)
+          root.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+            .listStatus(root).filter(s => s.isDirectory && !s.getPath.getName.matches("[_.].*"))
+            .map(_.getPath).toSeq.sortBy(_.getName)
+      }
+      val dup = dirs.groupBy(_.getName).filter(_._2.size > 1).keys
+      require(dup.isEmpty,
+        s"fleet store ids (dir base names) must be distinct: ${dup.mkString(",")}")
+      dirs.map(p => Some(p.getName) -> p)
+    }
+
+  private val listedStores = scala.collection.mutable.Map.empty[Option[String], TsdStore]
+
+  /** The named stores whose id `keep` accepts, each listed through
+    * [[TsdIndex.listStore]] when a scan first selects it and kept for the
+    * load's life, with its entries ([[TsdStore.planned]]). More than one
+    * new store are listed, sidecars read, on a bounded pool (metadata
+    * calls are latency-bound); a missing store raises the listing's own
+    * `FileNotFoundException`, as a single-store load does. */
+  private[sources] def listed(keep: Option[String] => Boolean)
+      : Seq[(Option[String], TsdStore)] = synchronized {
+    val selected = named.filter(n => keep(n._1))
+    val fresh = selected.filterNot(n => listedStores.contains(n._1))
+    lazy val conf = SparkSession.active.sessionState.newHadoopConf()
+    def list(p: Path) = TsdIndex.listStore(p.getFileSystem(conf), p)
+    if (fresh.size == 1) listedStores(fresh.head._1) = list(fresh.head._2)
+    else if (fresh.nonEmpty) {
+      val pool = Executors.newFixedThreadPool(math.min(16, fresh.size))
+      try fresh.map { case (id, p) => id -> pool.submit { () => val s = list(p); s.indexed; s } }
+        .foreach { case (id, fut) =>
+          listedStores(id) = try fut.get() catch { case e: ExecutionException => throw e.getCause }
+        }
+      finally pool.shutdown()
+    }
+    selected.map { case (id, _) => id -> listedStores(id) }
   }
+
+  /** The store a single-store load names ([[listed]]). */
+  private[sources] def store: TsdStore = listed(_ => true).head._2
+
   override def name(): String =
     if (fleet) s"tsdFleet(${props.getOrDefault("stores", props.getOrDefault("path", ""))})"
     else s"tsd(${props.getOrDefault("path", "")})"
@@ -285,22 +322,21 @@ private[sources] object TsdPacking {
   }
 }
 
-/** The one `.tsd` scan. It plans over `(store id, file)` pairs: a plain
-  * load is one store without an id (no `store_id` column), the load's
-  * [[TsdTable.store]], which it plans from without listing again; a fleet
-  * is one store per directory, planned in one [[TsdIndex.forPlanningFleet]]
-  * pass (per-store `_graft_index` sidecars, misses coalesced into one
-  * probe job). Both keep files by [[TsdStore.select]].
+/** The one `.tsd` scan. It plans over `(store id, file)` pairs from its
+  * load's stores ([[TsdTable.listed]]): a plain load is one store without
+  * an id (no `store_id` column), a fleet one store per directory. ONE
+  * [[TsdIndex.plan]] covers the selected stores not planned before (their
+  * sidecars, misses in one probe job); [[TsdStore.select]] keeps files.
   *
   * A fleet is ONE scan node, not a union of per-store scans: a union's
   * logical plan is O(stores), and at the 10k–100k-store fleet a 100 TB
   * layout implies, analysis, optimization and plan serialization would
   * walk one scan node per store on every query. Here store count only
-  * affects planning-time metadata I/O (bounded-pool listings) and the
-  * partition list, which any file source pays. Store ids are the
-  * directory base names and must be distinct across the fleet; an
-  * `=`/`IN` predicate on `store_id` prunes whole stores before any
-  * metadata I/O. */
+  * affects the load's metadata I/O (bounded-pool listings, once per
+  * store) and the partition list, which any file source pays. Store ids
+  * are the directory base names and must be distinct across the fleet;
+  * an `=`/`IN` predicate on `store_id` prunes whole stores before any
+  * metadata I/O of theirs. */
 private[sources] class TsdScan(table: TsdTable,
                                lo: Long, hi: Long,
                                blocksPerPartition: Long,
@@ -312,43 +348,28 @@ private[sources] class TsdScan(table: TsdTable,
   override def readSchema(): StructType = required.getOrElse(table.schema())
   override def toBatch: Batch = this
   override def description(): String =
-    s"TsdScan ${if (fleet) s"stores=${storeDirs.size}" else s"path=$path"}" +
+    (if (fleet) s"TsdScan stores=${table.named.count(n => selected(n._1))}"
+     else s"TsdScan path=$path") +
       s" tsRange=[${if (lo == Long.MinValue) "-inf" else lo}, " +
       s"${if (hi == Long.MaxValue) "+inf" else hi}]" +
       chans.fold("")(cs => s" chans=${cs.toSeq.sorted.mkString(",")}") +
       storeSel.fold("")(ss => s" storeSel=${ss.size}")
 
-  /** Fleet mode: (storeId, dir) after store_id pushdown — the explicit
-    * `stores` list, or the root's immediate subdirectories (one listing). */
-  private lazy val storeDirs: Seq[(String, Path)] = {
-    val dirs: Seq[Path] = table.stores match {
-      case Some(list) => list.map(new Path(_))
-      case None =>
-        val root = new Path(path)
-        root.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-          .listStatus(root).filter(s => s.isDirectory &&
-            !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .map(_.getPath).toSeq.sortBy(_.getName)
-    }
-    val withIds = dirs.map(p => (p.getName, p))
-    val dup = withIds.groupBy(_._1).filter(_._2.size > 1).keys
-    require(dup.isEmpty,
-      s"fleet store ids (dir base names) must be distinct: ${dup.mkString(",")}")
-    withIds.filter { case (id, _) => storeSel.forall(_.contains(id)) }
-  }
+  /** Whether the store with id `id` survives `store_id` pushdown. */
+  private def selected(id: Option[String]): Boolean = storeSel.forall(s => id.exists(s))
 
   /** Surviving whole-file chunks after store and file-level time pruning,
     * computed once per scan. Planning metadata comes from [[TsdIndex]] —
-    * the sidecar where fresh, one distributed probe job otherwise — so the
-    * driver never reads data-file bytes regardless of file count (the
-    * many-file form of etsdFindBlock's E_BEFORE/E_AFTER checks,
-    * etsdRead.c:300-353). */
-  private lazy val pruned: Seq[TsdChunk] =
-    if (!fleet) table.store.select(lo, hi, table.store.planned)
-    else TsdIndex.forPlanningFleet(SparkSession.active, storeDirs).flatMap {
-      case (id, s, entries) => s.select(lo, hi, entries).map(_.copy(store = Some(id)))
+    * the sidecar where fresh, one distributed probe job otherwise, once
+    * per store of the load — so the driver never reads data-file bytes
+    * regardless of file count (the many-file form of etsdFindBlock's
+    * E_BEFORE/E_AFTER checks, etsdRead.c:300-353). */
+  private lazy val pruned: Seq[TsdChunk] = {
+    val stores = table.listed(selected)
+    stores.zip(TsdIndex.plan(SparkSession.active, stores.map(_._2))).flatMap {
+      case ((id, s), entries) => s.select(lo, hi, entries).map(_.copy(store = id))
     }
+  }
 
   override def planInputPartitions(): Array[InputPartition] =
     TsdPacking.pack(pruned, blocksPerPartition, TsdPacking.OpenCostBlocks,

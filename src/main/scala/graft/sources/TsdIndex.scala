@@ -77,8 +77,9 @@ final class TsdStore private[sources] (val fs: FileSystem, val dir: Path,
     * distributed probe job on the active session ([[TsdIndex.plan]]).
     * Computed on first use and kept, so a store probes at most once for
     * `begin` and every scan planned from it. */
-  private[graft] lazy val planned: Seq[TsdIndexEntry] =
+  private[graft] def planned: Seq[TsdIndexEntry] =
     TsdIndex.plan(SparkSession.active, Seq(this)).head
+  @volatile private[sources] var entries: Seq[TsdIndexEntry] = null // set by plan
 
   /** The one window-to-files rule of every `.tsd` reader: whole-file
     * chunks of the data files that can hold a block overlapping `[lo, hi]`
@@ -125,8 +126,9 @@ object TsdIndex {
   private val Header = "graft-tsd-index\tv2"
 
   /** Planning-path instrumentation (test observability, driver-side
-    * only): how the data files of the stores planned since the last
-    * [[PlanStats.reset]] got their metadata, counted by [[TsdStore]]. */
+    * only): how the data files of the stores listed since the last
+    * [[PlanStats.reset]] got their metadata, counted by [[TsdStore]] once
+    * per listing; a load lists each of its stores once. */
   object PlanStats {
     val indexedFiles = new AtomicLong(0) // served from the sidecar
     val probedFiles = new AtomicLong(0)  // probed, or read whole on the driver
@@ -276,44 +278,17 @@ object TsdIndex {
     (s.path(f.getPath.getName).toString, f.getLen, f.getModificationTime)
 
   /** Every data file's entry, per store of `stores`: the fresh sidecar
-    * entries, and ONE distributed probe job for every store's unindexed
-    * files together. */
+    * entries, and ONE distributed probe job for the unindexed files of
+    * every store not planned before, together. The entries are kept with
+    * the store ([[TsdStore.planned]]); planning is serialized, so a store
+    * is probed at most once whichever thread plans it. */
   private[sources] def plan(spark: SparkSession,
-                            stores: Seq[TsdStore]): Seq[Seq[TsdIndexEntry]] = {
+                            stores: Seq[TsdStore]): Seq[Seq[TsdIndexEntry]] = synchronized {
+    val todo = stores.filter(_.entries == null)
     val probed = probeDistributed(spark,
-      stores.flatMap(s => s.unindexed.map(probeArg(s, _)))).iterator
-    stores.map(s => s.indexed ++ s.unindexed.map(_ => probed.next()))
-  }
-
-  /** Fleet planning entry point: every store of `stores` listed, with
-    * every data file's entry, in ONE call — the multi-store scan's planner.
-    *
-    * Driver work per store is one directory listing plus one tiny
-    * sidecar read, flattened across a bounded thread pool (metadata RPCs
-    * are latency-bound, so 16-way overlap keeps wall-clock ~flat in
-    * store count at fleet sizes); cache MISSES from ALL stores coalesce
-    * into a single distributed probe job — one Spark job per fleet scan
-    * at worst, zero when sidecars are fresh, never one per store.
-    * Returns (storeId, store, entries). */
-  def forPlanningFleet(spark: SparkSession, stores: Seq[(String, Path)])
-      : Seq[(String, TsdStore, Seq[TsdIndexEntry])] = {
-    if (stores.isEmpty) return Seq.empty
-    val conf = spark.sessionState.newHadoopConf()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, stores.size))
-    // FileSystem resolves PER STORE (cached by scheme+authority), so a
-    // fleet spanning filesystems — hot stores on one bucket/cluster, cold
-    // on another — plans fine
-    val listed = try {
-      stores.map { case (id, root) =>
-        (id, pool.submit[TsdStore] { () =>
-          val s = listStore(root.getFileSystem(conf), root)
-          s.indexed // the sidecar read, on the pool too
-          s
-        })
-      }.map { case (id, fut) => (id, fut.get()) }
-    } finally pool.shutdown()
-    listed.zip(plan(spark, listed.map(_._2))).map { case ((id, s), es) => (id, s, es) }
+      todo.flatMap(s => s.unindexed.map(probeArg(s, _)))).iterator
+    todo.foreach(s => s.entries = s.indexed ++ s.unindexed.map(_ => probed.next()))
+    stores.map(_.entries)
   }
 
   /** Planning entry point for one store, a file or a directory: [[plan]]

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.codec.{BlockBuffer, EtsdDecoder}
 import graft.queries.EtsdQueryApi
 import graft.queries.LocalQueryStores._
-import graft.sources.{EtsdSink, TsdIndex}
+import graft.sources.{EtsdSink, EtsdSource, TsdIndex}
 
 /** Every `.tsd` reader resolves a store path by the one rule of
   * `TsdIndex.listStore`: a store of rotated files (`garage.tsd.<epoch>`,
@@ -169,6 +169,23 @@ class StoreListingSpec extends AnyFunSuite {
       total("Temp")._1 + 47)
   }
 
+  test("a fleet load lists each store and reads each sidecar once") {
+    val key = s"fs.${CountingFs.Scheme}.impl"
+    spark.conf.set(key, classOf[CountingFs].getName)
+    try {
+      val dirs = Seq(store, copyStore(store))
+      val df = EtsdSource.fleetWithStores(spark, dirs.map(d => s"${CountingFs.Scheme}:$d"))
+      CountingFs.reset()
+      val n = df.count()
+      assert(df.count() == n)
+      assert(n == 2 * load(spark, store).count())
+      dirs.foreach { d =>
+        assert(CountingFs.calls("list", d) == 1, CountingFs.log)
+        assert(CountingFs.calls("open", s"$d/${TsdIndex.FileName}") == 1, CountingFs.log)
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("an in-process point query makes no more file-system calls than " +
       "when it listed its store twice") {
     val key = s"fs.${CountingFs.Scheme}.impl"
@@ -223,4 +240,5 @@ object CountingFs {
     seen.asScala.count(_ == ((call, path)))
   def log: String = seen.asScala.mkString(", ")
   def opened: Seq[String] = seen.asScala.toSeq.collect { case ("open", p) => p }
+  def listed: Seq[String] = seen.asScala.toSeq.collect { case ("list", p) => p }
 }

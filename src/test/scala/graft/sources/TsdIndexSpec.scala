@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{CountingFs, TestSpark}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 
 /** Scale-hardened planning: `TsdDataSource` must plan a many-file layout
@@ -100,19 +100,28 @@ class TsdIndexSpec extends AnyFunSuite {
     assert(TsdIndex.PlanStats.probedFiles.get() == 0,
       "fleet planning must be sidecar-only")
 
-    // store_id pushdown prunes whole stores at planning time
-    val one = fl.filter($"store_id" === "st03")
-    TsdIndex.PlanStats.reset()
-    assert(one.count() == 20 * 4L)
-    // each action plans once: exactly the selected store's 20 files
-    assert(TsdIndex.PlanStats.indexedFiles.get() == 20,
-      "pruned stores must contribute zero metadata I/O")
-    // partitions are bin-packed (TsdPacking: many small files per task),
-    // so the count is bounded by the selected store's 20 files rather
-    // than equal to it; the indexedFiles assertion above is what proves
-    // pruned stores contributed zero planning I/O
-    assert(one.rdd.getNumPartitions <= 20 && one.rdd.getNumPartitions >= 1,
-      "an = filter on store_id must plan only that store's files")
+    // store_id pushdown prunes whole stores at planning time. A fresh
+    // load: `fl` has listed and planned every store, and a filter over it
+    // shares its table, so it would list nothing
+    val key = s"fs.${CountingFs.Scheme}.impl"
+    spark.conf.set(key, classOf[CountingFs].getName)
+    try {
+      val one = EtsdSource.fleetWithStores(spark,
+        stores.map(d => s"${CountingFs.Scheme}:$d")).filter($"store_id" === "st03")
+      TsdIndex.PlanStats.reset()
+      CountingFs.reset()
+      assert(one.count() == 20 * 4L)
+      // the load plans once: exactly the selected store's 20 files
+      assert(TsdIndex.PlanStats.indexedFiles.get() == 20,
+        "pruned stores must contribute zero metadata I/O")
+      assert(CountingFs.listed == Seq(s"$root/st03"), CountingFs.log)
+      // partitions are bin-packed (TsdPacking: many small files per task),
+      // so the count is bounded by the selected store's 20 files rather
+      // than equal to it; the assertions above are what prove pruned
+      // stores contributed zero planning I/O
+      assert(one.rdd.getNumPartitions <= 20 && one.rdd.getNumPartitions >= 1,
+        "an = filter on store_id must plan only that store's files")
+    } finally spark.conf.unset(key)
 
     // time pushdown still prunes inside EVERY store's file set
     val cutoff = java.sql.Timestamp.from(
@@ -187,19 +196,26 @@ class TsdIndexSpec extends AnyFunSuite {
       Files.deleteIfExists(Paths.get(f"$root/nx$si%02d", TsdIndex.FileName))
     }
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // probe jobs: those with a stage whose call site is TsdIndex.scala
+    val probes = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        if (j.stageInfos.exists(_.name.contains("TsdIndex.scala"))) probes.incrementAndGet()
+      }
+    }
+    def counted(f: => Unit): Unit = {
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        f
+        org.apache.spark.graftbridge.ListenerBridge
+          .waitUntilEmpty(spark.sparkContext, 10000L)
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
     TsdIndex.PlanStats.reset()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = EtsdSource.fleetRoot(spark, root).count()
-      org.apache.spark.graftbridge.ListenerBridge
-        .waitUntilEmpty(spark.sparkContext, 10000L)
-      assert(n == nStores * 2 * 4L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val df = EtsdSource.fleetRoot(spark, root)
+    counted(assert(df.count() == nStores * 2 * 4L))
     assert(TsdIndex.PlanStats.probedFiles.get() == nStores * 2L,
       "every file must go through the probe path")
     // one coalesced probe job + the count's own job(s) — NOT one job
@@ -207,6 +223,41 @@ class TsdIndexSpec extends AnyFunSuite {
     // that still fails an O(stores) regression at 6 stores)
     assert(jobs.get() <= 4,
       s"fleet probing must be ONE job, saw ${jobs.get()} jobs total")
+    // the load keeps its probed entries: a second count probes nothing
+    counted(assert(df.count() == nStores * 2 * 4L))
+    assert(probes.get() == 1, s"a fleet load must probe once, saw ${probes.get()} probe jobs")
+  }
+
+  test("a missing fleet store raises the single store's error") {
+    val missing = Files.createTempDirectory("tsdfleetgone").resolve("gone").toString
+    val single = intercept[java.io.FileNotFoundException] {
+      spark.read.format("graft.sources.TsdDataSource").load(missing).count()
+    }
+    assert(single.getMessage.contains(missing))
+    val stores = Seq(layout(2, indexed = true), layout(2, indexed = true), missing)
+    val fleet = intercept[java.io.FileNotFoundException] {
+      EtsdSource.fleetWithStores(spark, stores).count()
+    }
+    assert(fleet.getMessage.contains(missing))
+  }
+
+  test("a fleet load sees the stores present when it is first planned") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("tsdfleetgrow").toString
+    def rowsOf(ids: Seq[String]) = ids.flatMap { id =>
+      (0 until 8).map(k => (id, t0 + k, "G", Some(5L), true))
+    }.toDF("store_id", "te", "channel", "value", "valid")
+      .select($"store_id",
+        org.apache.spark.sql.functions.timestamp_seconds($"te").as("ts"),
+        $"channel", $"value", $"valid")
+    EtsdSink.exportFleet(rowsOf(Seq("g00", "g01")), schema, root, blocksPerFile = 1)
+    val df = EtsdSource.fleetRoot(spark, root)
+    assert(df.count() == 2 * 8L)
+    EtsdSink.exportFleet(rowsOf(Seq("g02")), schema, root, blocksPerFile = 1)
+    assert(Files.isDirectory(Paths.get(root, "g02")))
+    assert(df.count() == 2 * 8L)
+    // a new load lists the root again and reads the new store
+    assert(EtsdSource.fleetRoot(spark, root).count() == 3 * 8L)
   }
 
   test("planning 1000 files from the sidecar: zero file probes") {
