@@ -16,13 +16,14 @@ import graft.sources.{HadoopConfs, TsdIndex, TsdStore}
   *   - `query <path> [q=tot|ave|min|max] [c=chan] [s=start] [e=end]` —
   *     the analytical path (`queryETSD`, etsdCmd.c:333-461), driven
   *     through [[graft.queries.EtsdQueryApi]]. A selection the sidecar
-  *     bounds to [[graft.sources.TsdLocalScan.MaxBlocks]] blocks (a point
-  *     query) is read and folded in this process with no Spark session,
-  *     like the reference's seek-and-read of a few blocks; anything
-  *     larger starts a session and runs the distributed plan over the
-  *     Spark long frame. Both print the same lines. The `begin` default
-  *     is the earliest file's block 1, read from the sidecar on either
-  *     path, so it never costs a Spark job of its own.
+  *     bounds to [[graft.sources.TsdLocalScan.MaxBlocks]] blocks (8 MiB,
+  *     whatever the window's length) is read and folded in this process
+  *     with no Spark session, as the reference answers every window from
+  *     one thread; anything larger starts a session and runs the
+  *     distributed plan over the Spark long frame. Both print the same
+  *     lines. The `begin` default is the earliest file's block 1, read
+  *     from the sidecar on either path, so it never costs a Spark job of
+  *     its own.
   *   - `examine <path>` — schema pretty-print (`examinETSD`,
   *     etsdCmd.c:549-613): per-channel type/flags + block geometry.
   *   - `dump <path> [sector]` — block hex dump (`dumpETSD` + `LogBlock`,

@@ -12,38 +12,37 @@ import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.scheduler.SparkListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.queries.EtsdQueryApi
 import graft.queries.LocalQueryStores._
 import graft.sources.{HadoopConfs, TsdIndex}
 
 /** A cold `EtsdCmd query` process, launched as a user runs it: a fresh JVM
   * on this classpath with the build's JVM options. A point window is
-  * answered with no SparkContext at all, as is an hour from the `begin`
-  * default, which the sidecar supplies; a window over
-  * `TsdLocalScan.MaxBlocks` blocks starts one, and both print the
-  * whole-file decode's lines. The store is read through a file system
+  * answered with no SparkContext at all, as is the full span from the
+  * `begin` default, which the sidecar supplies, of a store within
+  * `TsdLocalScan.MaxBlocks` blocks; a window over the bound starts one,
+  * and both print the whole-file decode's lines. The store is read through a file system
   * scheme that only `-Dspark.hadoop.*` registers, so both paths, and the
   * `dump` verb, must take their Hadoop configuration from those
   * properties. */
 class ColdCliSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  // one gauge, 60 s cadence, 240 s blocks, 256-block files on a file-span
-  // grid: 5 days is 1,800 blocks in 8 files
-  private val schema = EtsdSchema(Seq(ChannelConfig("G", StreamType.HalfS)),
-    intervalSec = 60, blockIntervals = 4)
-  private val span = 240L
-  private val t0 = 256 * span * 27670L
+  // the gauge store: 5 days is 1,800 blocks in 8 files; `overBound` holds
+  // the windows the local fold declines
+  private val schema = gaugeSchema
+  private val span = gaugeSpan
+  private val t0 = gaugeT0
   private lazy val store = exportStore(spark, schema,
     (0 until 5 * 1440).map(k => (t0 + 60L * k, "G", Some((k % 200).toLong), k % 11 != 0)),
     blocksPerFile = 256)
+  private val bigNow = java.time.Instant.ofEpochSecond(overBoundEnd + 3600L)
 
-  /** Runs `EtsdCmd <verb> <graftfs:store> args` in a child JVM, with
-    * `stdin` as its input: exit code, stdout lines, and whether the child
+  /** Runs `EtsdCmd <verb> <graftfs:on> args` in a child JVM, with `stdin`
+    * as its input: exit code, stdout lines, and whether the child
     * constructed a SparkContext. */
-  private def cli(args: Seq[String], verb: String = "query",
-                  stdin: String = ""): (Int, Seq[String], Boolean) = {
+  private def cli(args: Seq[String], verb: String = "query", stdin: String = "",
+                  on: String = store): (Int, Seq[String], Boolean) = {
     val dir = Files.createTempDirectory("coldcli")
     val marker = dir.resolve("context-started")
     val in = Files.writeString(dir.resolve("stdin.txt"), stdin).toFile
@@ -57,7 +56,7 @@ class ColdCliSpec extends AnyFunSuite {
       s"-D${ContextMarker.Prop}=$marker",
       s"-Dspark.hadoop.fs.${SchemeLocalFs.Scheme}.impl=${classOf[SchemeLocalFs].getName}",
       "-cp", System.getProperty("java.class.path"),
-      "graft.EtsdCmd", verb, s"${SchemeLocalFs.Scheme}:$store") ++ args
+      "graft.EtsdCmd", verb, s"${SchemeLocalFs.Scheme}:$on") ++ args
     val pb = new ProcessBuilder(cmd.asJava).directory(dir.toFile)
       .redirectInput(in).redirectOutput(out).redirectError(err)
     pb.environment().remove("SPARK_MASTER")
@@ -70,8 +69,8 @@ class ColdCliSpec extends AnyFunSuite {
       Files.exists(marker))
   }
 
-  private def oracleLines(lo: Long, hi: Long): Seq[String] =
-    oracle(store, "ave", Some("G"), lo, hi).toSeq.sortBy(_._1)
+  private def oracleLines(lo: Long, hi: Long, on: String = store): Seq[String] =
+    oracle(on, "ave", Some("G"), lo, hi).toSeq.sortBy(_._1)
       .map { case (c, (n, r)) => EtsdCmd.queryLine(c, n, r) }
 
   private def window(lo: Long, hi: Long): Seq[String] =
@@ -86,18 +85,25 @@ class ColdCliSpec extends AnyFunSuite {
 
   test("the core reads begin from the sidecar of a large store") {
     val conf = HadoopConfs.standalone()
+    val big = EtsdCmd.openStore(overBound, conf)
+    assert(EtsdQueryApi.answer(conf, big, Seq("c=g"), bigNow).isEmpty)
+    assert(EtsdQueryApi.answer(conf, big, Seq("s=begin+1h"), bigNow).isEmpty)
+    // the 1,800-block store is within the bound: the same defaults answer
+    // here, as the whole-file decode has them
     val listed = EtsdCmd.openStore(store, conf)
     val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
-    assert(EtsdQueryApi.answer(conf, listed, Seq("c=g"), now).isEmpty)
-    assert(EtsdQueryApi.answer(conf, listed, Seq("s=begin+1h"), now).isEmpty)
+    val begin = firstBlockTs(tsdFiles(store))
+    def lines(args: Seq[String]) = EtsdQueryApi.answer(conf, listed, args, now)
+      .map(_.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) })
+    assert(lines(Seq("q=ave", "c=g")).contains(oracleLines(begin, now.getEpochSecond)))
+    assert(lines(Seq("q=ave", "c=g", "s=begin+1h"))
+      .contains(oracleLines(begin + 3600L, now.getEpochSecond)))
     val lo = t0 + 3 * 86400L
     assert(EtsdQueryApi.answer(conf, listed, window(lo, lo + 2 * span), now)
       .isDefined)
     // an hour from `begin`, the earliest block 1, is a few blocks of the
-    // 1,800: answered here, as the whole-file decode has it
-    val begin = firstBlockTs(tsdFiles(store))
-    val got = EtsdQueryApi.answer(conf, listed, Seq("q=ave", "c=g", "s=begin", "e=begin+1h"), now)
-    assert(got.map(_.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) })
+    // 1,800
+    assert(lines(Seq("q=ave", "c=g", "s=begin", "e=begin+1h"))
       .contains(oracleLines(begin, begin + 3600L)))
   }
 
@@ -107,20 +113,22 @@ class ColdCliSpec extends AnyFunSuite {
     val key = s"fs.${CountingFs.Scheme}.impl"
     spark.conf.set(key, classOf[CountingFs].getName)
     try {
-      val path = s"${CountingFs.Scheme}:$store"
-      val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
-      val begin = firstBlockTs(tsdFiles(store))
-      Seq(window(t0 + 3600L, t0 + 4 * 86400L) -> oracleLines(t0 + 3600L, t0 + 4 * 86400L),
-          Seq("q=ave", "c=g", "s=begin+1h") -> oracleLines(begin + 3600L, now.getEpochSecond))
+      val path = s"${CountingFs.Scheme}:$overBound"
+      val begin = firstBlockTs(tsdFiles(overBound))
+      Seq(window(t0 + 3600L, overBoundEnd) ->
+            oracleLines(t0 + 3600L, overBoundEnd, overBound),
+          Seq("q=ave", "c=g", "s=begin+1h") ->
+            oracleLines(begin + 3600L, bigNow.getEpochSecond, overBound))
         .foreach { case (args, want) =>
           val df = load(spark, path)
           CountingFs.reset()
-          val rows = EtsdQueryApi.query(df, schema, args, now)
+          val rows = EtsdQueryApi.query(df, schema, args, bigNow)
             .orderBy("channel").collect().toSeq
             .map(r => EtsdCmd.queryLine(r.getString(0), r.getLong(1), r.getDouble(2)))
           assert(rows == want, args)
-          assert(CountingFs.calls("list", store) == 1, CountingFs.log)
-          assert(CountingFs.calls("open", s"$store/${TsdIndex.FileName}") == 1, CountingFs.log)
+          assert(CountingFs.calls("list", overBound) == 1, CountingFs.log)
+          assert(CountingFs.calls("open", s"$overBound/${TsdIndex.FileName}") == 1,
+            CountingFs.log)
         }
     } finally spark.conf.unset(key)
   }
@@ -132,19 +140,19 @@ class ColdCliSpec extends AnyFunSuite {
     val key = s"fs.${CountingFs.Scheme}.impl"
     spark.conf.set(key, classOf[CountingFs].getName)
     try {
-      val path = s"${CountingFs.Scheme}:$store"
+      val path = s"${CountingFs.Scheme}:$overBound"
       val args = Seq("q=ave", "c=g", "s=begin+1h")
-      val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
       CountingFs.reset()
       val conf = spark.sessionState.newHadoopConf()
-      assert(EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, now).isEmpty)
-      val rows = EtsdQueryApi.queryDistributed(load(spark, path), schema, args, now)
+      assert(EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, bigNow).isEmpty)
+      val rows = EtsdQueryApi.queryDistributed(load(spark, path), schema, args, bigNow)
         .orderBy("channel").collect().toSeq
         .map(r => EtsdCmd.queryLine(r.getString(0), r.getLong(1), r.getDouble(2)))
-      val begin = firstBlockTs(tsdFiles(store))
-      assert(rows == oracleLines(begin + 3600L, now.getEpochSecond))
-      assert(CountingFs.calls("list", store) <= 2, CountingFs.log)
-      assert(CountingFs.calls("open", s"$store/${TsdIndex.FileName}") <= 2, CountingFs.log)
+      val begin = firstBlockTs(tsdFiles(overBound))
+      assert(rows == oracleLines(begin + 3600L, bigNow.getEpochSecond, overBound))
+      assert(CountingFs.calls("list", overBound) <= 2, CountingFs.log)
+      assert(CountingFs.calls("open", s"$overBound/${TsdIndex.FileName}") <= 2,
+        CountingFs.log)
     } finally spark.conf.unset(key)
   }
 
@@ -155,10 +163,20 @@ class ColdCliSpec extends AnyFunSuite {
     assert(point._2 == oracleLines(lo, lo + 2 * span - 1))
     assert(!point._3, "the point query constructed a SparkContext")
 
-    val long = cli(window(t0 + 3600L, t0 + 4 * 86400L))
+    val long = cli(window(t0 + 3600L, overBoundEnd), on = overBound)
     assert(long._1 == 0)
-    assert(long._2 == oracleLines(t0 + 3600L, t0 + 4 * 86400L))
+    assert(long._2 == oracleLines(t0 + 3600L, overBoundEnd, overBound))
     assert(long._3, "a window over MaxBlocks must start Spark")
+  }
+
+  test("a cold full-span query starts no SparkContext") {
+    // begin..now over all 1,800 blocks: within the bound, folded in the
+    // child with no session
+    val begin = firstBlockTs(tsdFiles(store))
+    val (code, out, started) = cli(Seq("q=ave", "c=g"))
+    assert(code == 0)
+    assert(out == oracleLines(begin, Long.MaxValue))
+    assert(!started, "the full-span query constructed a SparkContext")
   }
 
   test("dump reads the store through the session-free configuration") {

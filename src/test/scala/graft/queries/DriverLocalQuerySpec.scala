@@ -8,16 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{EtsdCmd, TestSpark}
 import graft.codec.GenDriven
+import graft.model.EtsdSchema
 import graft.operators.TimeSeriesOps
-import graft.sources.HadoopConfs
+import graft.sources.{HadoopConfs, TsdIndex, TsdLocalScan}
 
 /** Exactness of the driver-local `EtsdQueryApi.query` answer: over random
   * windows of 0-6 blocks (empty, before the first and after the last
   * block included), every verb and every way of naming a channel, it must
   * equal both the distributed plan of the same query and a whole-file
-  * decode — on a fresh, missing and stale sidecar and a single-file load.
-  * The cold CLI's lines, from the Spark-free core with no session, must
-  * print those same answers, `begin` defaults included. */
+  * decode — on a fresh, missing and stale sidecar and a single-file load —
+  * and so must it over windows of a week up to the full span of a store
+  * of a few thousand blocks. The cold CLI's lines, from the Spark-free
+  * core with no session, must print those same answers, `begin` defaults
+  * included. */
 class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
   import LocalQueryStores._
 
@@ -27,6 +30,16 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
   private val span = mixedSchema.intervalSec.toLong * mixedSchema.blockIntervals
   private val tEnd = mixedT0 + 10L * mixedIntervals
   private val now = Instant.ofEpochSecond(tEnd + 3600L)
+
+  // the mixed channels at 60 s cadence in 30-minute blocks, 128 blocks per
+  // file: eight weeks is 2,689 blocks
+  private val longSchema = mixedSchema.copy(intervalSec = 60, blockIntervals = 30)
+  private val longSpan = 1800L
+  private val longIntervals = 8 * 7 * 1440
+  private val longEnd = mixedT0 + 60L * longIntervals
+  private val longNow = Instant.ofEpochSecond(longEnd + 3600L)
+  private lazy val longStore = exportStore(spark, longSchema,
+    mixedRows(mixedT0, longIntervals, 60L), blocksPerFile = 128)
 
   /** (verb spelling, channel argument, start, end). */
   private val genQuery: Gen[(String, Option[String], Long, Long)] = for {
@@ -54,10 +67,11 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
     * the cold CLI's printed lines and the whole-file decode of `[lo, hi]`
     * all agree. */
   private def agree(path: String, args: Seq[String], verb: String,
-                    chan: Option[String], lo: Long, hi: Long): Unit = {
+                    chan: Option[String], lo: Long, hi: Long,
+                    schema: EtsdSchema = mixedSchema, at: Instant = now): Unit = {
     val df = load(spark, path)
-    val local = EtsdQueryApi.query(df, mixedSchema, args, now)
-    val dist = EtsdQueryApi.queryDistributed(df, mixedSchema, args, now)
+    val local = EtsdQueryApi.query(df, schema, args, at)
+    val dist = EtsdQueryApi.queryDistributed(df, schema, args, at)
     assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
       s"$args on $path must be answered on the driver")
     assert(local.schema == dist.schema)
@@ -66,14 +80,14 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
     val got = answer(local)
     assert(got == answer(dist), s"$args on $path: local vs distributed")
     assert(got == want, s"$args on $path: local vs whole-file decode")
-    assert(cliLines(path, args) == lines(answer(dist)),
+    assert(cliLines(path, args, at) == lines(answer(dist)),
       s"$args on $path: CLI lines vs distributed")
   }
 
   /** The cold CLI's stdout for `args`, from the answer core alone. */
-  private def cliLines(path: String, args: Seq[String]): Seq[String] = {
+  private def cliLines(path: String, args: Seq[String], at: Instant): Seq[String] = {
     val conf = HadoopConfs.standalone()
-    val rows = EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, now)
+    val rows = EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, at)
     assert(rows.isDefined, s"$args on $path must need no session")
     rows.get.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) }
   }
@@ -138,6 +152,30 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
         val verb = args.head.stripPrefix("q=")
         val chan = args.find(_.startsWith("c=")).map(_.stripPrefix("c="))
         agree(path, args, verb, chan, lo, hi)
+      }
+    }
+  }
+
+  test("no channel sum of a local fold can overflow") {
+    // MaxBlocks blocks of <= 127 intervals, each sample <= 32 bits wide
+    assert(BigInt(TsdLocalScan.MaxBlocks) * 127 * (1L << 32) < (BigInt(1) << 53))
+  }
+
+  test("long windows: local == distributed == CLI == whole-file decode") {
+    val blocks = tsdFiles(longStore).map(f => TsdIndex.dataBlocks(java.nio.file.Files.size(f))).sum
+    assert(blocks > 2000 && blocks <= TsdLocalScan.MaxBlocks, s"$blocks blocks")
+    val genWindow = for {
+      verb <- Gen.oneOf("tot", "ave", "min", "max")
+      len <- Gen.choose(7 * 86400L, longEnd - mixedT0 + 2 * longSpan)
+      lo <- Gen.choose(mixedT0 - 2 * longSpan, longEnd + 2 * longSpan - len)
+    } yield (verb, lo, lo + len)
+    val full = ("tot", mixedT0 - longSpan, longEnd + longSpan)
+    val windows = full +: (0 until 8).map(i => sample(genWindow, 7L * i + 1))
+    windows.zipWithIndex.foreach { case ((verb, lo, hi), i) =>
+      // all channels, then one, named each way in turn
+      Seq(None, Some(Seq("Temp", "odo", "2")(i % 3))).foreach { chan =>
+        val args = Seq(s"q=$verb", s"s=${iso(lo)}", s"e=${iso(hi)}") ++ chan.map("c=" + _)
+        agree(longStore, args, verb, chan, lo, hi, longSchema, longNow)
       }
     }
   }

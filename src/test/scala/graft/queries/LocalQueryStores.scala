@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.timestamp_seconds
 
+import graft.TestSpark
 import graft.codec.{BlockBuffer, EtsdDecoder, Layout}
 import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.sources.{EtsdSink, TsdIndex}
@@ -119,10 +120,15 @@ object LocalQueryStores {
   val mixedT0 = 1700000160L + 130L
   val mixedIntervals = 320
 
-  def mixedRows: Seq[(Long, String, Option[Long], Boolean)] = {
+  def mixedRows: Seq[(Long, String, Option[Long], Boolean)] =
+    mixedRows(mixedT0, mixedIntervals, 10L)
+
+  /** The mixed store's three channels over `n` intervals of `step` s from
+    * `t0`. */
+  def mixedRows(t0: Long, n: Int, step: Long): Seq[(Long, String, Option[Long], Boolean)] = {
     var odo = (1L << 32) - 9000L
-    (0 until mixedIntervals).flatMap { k =>
-      val te = mixedT0 + 10L * k
+    (0 until n).flatMap { k =>
+      val te = t0 + step * k
       odo += (k * 37) % 211
       def ok(c: Int) = (k * 7 + c * 13) % 41 >= 3 // short invalid runs
       Seq(
@@ -131,4 +137,27 @@ object LocalQueryStores {
         (te, "Amps", Some(((k * 17) % 250).toLong), ok(2)))
     }
   }
+
+  /** One gauge at 60 s cadence in 240 s blocks, 256-block files on a
+    * file-span grid from [[gaugeT0]]: the geometry of the routing and
+    * cold-CLI stores. */
+  val gaugeSchema: EtsdSchema = EtsdSchema(Seq(ChannelConfig("G", StreamType.HalfS)),
+    intervalSec = 60, blockIntervals = 4)
+  val gaugeSpan = 240L
+  val gaugeFileSpan: Long = 256 * gaugeSpan
+  val gaugeT0: Long = gaugeFileSpan * 27670L
+
+  /** Files in [[overBound]]. */
+  private val overBoundFiles = 66
+  /** The end of [[overBound]]'s last block. */
+  val overBoundEnd: Long = gaugeT0 + overBoundFiles * gaugeFileSpan
+
+  /** A store over `TsdLocalScan.MaxBlocks`: the gauge in 66 full 256-block
+    * files (16,896 blocks, 67,584 rows), every 11th sample invalid, so the
+    * driver-local fold declines any window that keeps over 64 of its files.
+    * Exported once per JVM. */
+  lazy val overBound: String = exportStore(TestSpark.spark, gaugeSchema,
+    (0 until overBoundFiles * 256 * 4).map(k =>
+      (gaugeT0 + 60L * k, "G", Some((k % 200).toLong), k % 11 != 0)),
+    blocksPerFile = 256)
 }

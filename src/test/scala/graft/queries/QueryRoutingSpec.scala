@@ -10,31 +10,30 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.model.{ChannelConfig, EtsdSchema, StreamType}
 import graft.sources.TsdLocalScan
 
 /** Which `EtsdQueryApi.query` inputs are answered on the driver: a bare
   * `TsdDataSource` load whose selection the sidecar bounds to at most
-  * `TsdLocalScan.MaxBlocks` blocks runs no Spark job at all; longer
-  * windows and every other input plan the DSv2 scan, and a `begin`
-  * default adds no job to it. */
+  * `TsdLocalScan.MaxBlocks` blocks runs no Spark job at all, a week-long
+  * window included; longer selections and every other input plan the
+  * DSv2 scan, and a `begin` default adds no job to it. */
 class QueryRoutingSpec extends AnyFunSuite {
   import LocalQueryStores._
 
   private lazy val spark = TestSpark.spark
 
-  // one gauge, 60 s cadence, 240 s blocks, 256-block files on a file-span
-  // grid: 8 days is 2,880 blocks in 12 files
-  private val schema = EtsdSchema(Seq(ChannelConfig("G", StreamType.HalfS)),
-    intervalSec = 60, blockIntervals = 4)
-  private val span = 240L
-  private val fileSpan = 256 * span
-  private val t0 = fileSpan * 27670L
+  // the gauge store: 8 days is 2,880 blocks in 12 files; `overBound` holds
+  // the selections the local fold declines
+  private val schema = gaugeSchema
+  private val span = gaugeSpan
+  private val fileSpan = gaugeFileSpan
+  private val t0 = gaugeT0
   private val days = 8
   private lazy val store = exportStore(spark, schema,
     (0 until days * 1440).map(k => (t0 + 60L * k, "G", Some((k % 200).toLong), true)),
     blocksPerFile = 256)
   private val now = Instant.ofEpochSecond(t0 + days * 86400L + 3600L)
+  private val bigNow = Instant.ofEpochSecond(overBoundEnd + 3600L)
 
   private def args(lo: Long, hi: Long, chan: Boolean = true): Seq[String] =
     Seq("q=ave", s"s=${iso(lo)}", s"e=${iso(hi)}") ++ (if (chan) Seq("c=g") else Nil)
@@ -60,10 +59,11 @@ class QueryRoutingSpec extends AnyFunSuite {
     df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }.size
 
   /** The CLI's action: ordered collect; returns (answer, jobs run). */
-  private def ask(df: DataFrame, a: Seq[String]): (Map[String, (Long, Double)], Int) = {
+  private def ask(df: DataFrame, a: Seq[String],
+                  at: Instant = now): (Map[String, (Long, Double)], Int) = {
     var got = Map.empty[String, (Long, Double)]
     val jobs = jobsOf {
-      got = answer(EtsdQueryApi.query(df, schema, a, now).orderBy("channel"))
+      got = answer(EtsdQueryApi.query(df, schema, a, at).orderBy("channel"))
     }
     (got, jobs)
   }
@@ -96,53 +96,70 @@ class QueryRoutingSpec extends AnyFunSuite {
     }
   }
 
-  test("the block bound: 1,024 surviving blocks stay local, one file more does not") {
-    val df = load(spark, store)
+  test("the block bound: 16,384 surviving blocks stay local, one file more does not") {
+    val df = load(spark, overBound)
     val lo = t0 + fileSpan + 1 // the file before ends exactly at lo - 1
-    val four = args(lo, t0 + 5 * fileSpan - 1, chan = false)
-    assert(TsdLocalScan.MaxBlocks == 4 * 256)
-    assert(scans(EtsdQueryApi.query(df, schema, four, now)) == 0)
-    val five = args(lo, t0 + 5 * fileSpan, chan = false)
-    val dist = EtsdQueryApi.query(df, schema, five, now)
+    assert(TsdLocalScan.MaxBlocks == 64 * 256)
+    val last = t0 + 65 * fileSpan - 1 // the last second of file 64
+    val within = args(lo, last, chan = false)
+    assert(scans(EtsdQueryApi.query(df, schema, within, bigNow)) == 0)
+    val (got, jobs) = ask(df, within, bigNow)
+    assert(jobs == 0, s"$within ran $jobs jobs")
+    assert(got == oracle(overBound, "ave", None, lo, last))
+    val over = args(lo, last + 1, chan = false)
+    val dist = EtsdQueryApi.query(df, schema, over, bigNow)
     assert(scans(dist) == 1)
-    assert(answer(dist) == oracle(store, "ave", None, lo, t0 + 5 * fileSpan))
+    assert(answer(dist) == oracle(overBound, "ave", None, lo, last + 1))
   }
 
-  test("a week-long window still plans the DSv2 scan") {
+  test("a week-long window runs no job and plans a local table scan") {
     val df = load(spark, store)
     val lo = t0 + 86400L
     val a = args(lo, lo + 7 * 86400L)
-    val q = EtsdQueryApi.query(df, schema, a, now)
-    assert(scans(q) == 1)
+    val plan = EtsdQueryApi.query(df, schema, a, now).orderBy("channel")
+      .queryExecution.executedPlan
+    assert(plan.isInstanceOf[LocalTableScanExec], plan)
     val (got, jobs) = ask(df, a)
-    assert(jobs > 0)
+    assert(jobs == 0, s"$a ran $jobs jobs")
     assert(got == oracle(store, "ave", Some("G"), lo, lo + 7 * 86400L))
   }
 
+  test("a window over MaxBlocks plans the DSv2 scan") {
+    val df = load(spark, overBound)
+    val lo = t0 + 86400L
+    val a = args(lo, overBoundEnd)
+    assert(scans(EtsdQueryApi.query(df, schema, a, bigNow)) == 1)
+    val (got, jobs) = ask(df, a, bigNow)
+    assert(jobs > 0)
+    assert(got == oracle(overBound, "ave", Some("G"), lo, overBoundEnd))
+  }
+
   test("a begin default runs no job beyond the distributed plan's") {
-    // `begin` comes from the sidecar: the 2,880-block store's begin..now
-    // query runs exactly the jobs of the same window written out
-    val df = load(spark, store)
-    val begin = firstBlockTs(tsdFiles(store))
-    val (got, jobs) = ask(df, Seq("q=ave", "c=g"))
-    val (want, planJobs) = ask(df, args(begin, now.getEpochSecond))
+    // `begin` comes from the sidecar: the over-the-bound store's
+    // begin..now query runs exactly the jobs of the same window written out
+    val df = load(spark, overBound)
+    val begin = firstBlockTs(tsdFiles(overBound))
+    val (got, jobs) = ask(df, Seq("q=ave", "c=g"), bigNow)
+    val (want, planJobs) = ask(df, args(begin, bigNow.getEpochSecond), bigNow)
+    assert(planJobs > 0, "the window must be over the local bound")
     assert(got == want)
-    assert(got == oracle(store, "ave", Some("G"), begin, now.getEpochSecond))
+    assert(got == oracle(overBound, "ave", Some("G"), begin, bigNow.getEpochSecond))
     assert(jobs == planJobs, s"begin default: $jobs jobs, its window alone: $planJobs")
   }
 
   test("a begin default over an unindexed store runs one probe job") {
-    // no sidecar and 2,880 blocks: `begin` is past the local bound, so it
+    // no sidecar and 16,896 blocks: `begin` is past the local bound, so it
     // comes from the load's probe job, whose entries the scan then plans
     // with; the probe job's call site is in TsdIndex
-    val bare = withoutSidecar(store)
+    val bare = withoutSidecar(overBound)
     val begin = firstBlockTs(tsdFiles(bare))
     var got = Map.empty[String, (Long, Double)]
     val probes = jobsOf(
-      { got = answer(EtsdQueryApi.query(load(spark, bare), schema, Seq("q=ave", "c=g"), now)) },
+      { got = answer(EtsdQueryApi.query(load(spark, bare), schema, Seq("q=ave", "c=g"),
+          bigNow)) },
       _.stageInfos.exists(_.name.contains("TsdIndex.scala")))
     assert(probes == 1)
-    assert(got == oracle(bare, "ave", Some("G"), begin, now.getEpochSecond))
+    assert(got == oracle(bare, "ave", Some("G"), begin, bigNow.getEpochSecond))
   }
 
   test("inputs other than a bare long load take the distributed path") {
