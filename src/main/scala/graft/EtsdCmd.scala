@@ -16,7 +16,7 @@ import graft.sources.{HadoopConfs, TsdIndex, TsdStore}
   *   - `query <path> [q=tot|ave|min|max] [c=chan] [s=start] [e=end]` —
   *     the analytical path (`queryETSD`, etsdCmd.c:333-461), driven
   *     through [[graft.queries.EtsdQueryApi]]. A selection the sidecar
-  *     bounds to [[graft.sources.TsdLocalScan.MaxBlocks]] blocks (8 MiB,
+  *     bounds to [[graft.sources.TsdLocalScan.MaxBlocks]] blocks (2 MiB,
   *     whatever the window's length) is read and folded in this process
   *     with no Spark session, as the reference answers every window from
   *     one thread; anything larger starts a session and runs the

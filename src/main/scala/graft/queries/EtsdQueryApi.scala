@@ -29,17 +29,18 @@ import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
   *
   * Driver-local rule: when `df` is a bare `TsdDataSource` load and the
   * sidecar prunes the selection to at most [[TsdLocalScan.MaxBlocks]]
-  * blocks (8 MiB), the answer is folded on the driver and returned as a
+  * blocks (2 MiB), the answer is folded on the driver and returned as a
   * local relation of result rows — no Spark job, the reference's
   * one-thread read of the blocks the window spans. The bound is a
   * constant so that driver work stays O(1) in store size; anything else
   * (a filtered frame, a fleet, a longer selection) takes the distributed
-  * aggregate, with the same rows and schema either way. The local answer is one Spark-free core over a
-  * listed [[TsdStore]] and a Hadoop `Configuration`: [[query]] takes the
-  * store the load owns ([[TsdLocalScan.bareStore]]), listed once for the
-  * `begin` read, the fold and the scan a declined fold plans, and the
-  * cold `EtsdCmd query` calls it as [[answer]] on the store it listed
-  * before it builds any session.
+  * aggregate, with the same rows and schema either way. The local answer
+  * is one Spark-free core over a listed [[TsdStore]] and a Hadoop
+  * `Configuration`: [[query]] takes the store the load owns
+  * ([[TsdLocalScan.bareStore]]), listed once for the `begin` read, the
+  * fold and the scan a declined fold plans, and the cold `EtsdCmd query`
+  * calls it as [[answer]] on the store it listed before it builds any
+  * session.
   *
   * `begin` (`s=` missing or naming it) of a `.tsd` load is the store's
   * earliest block-1 stamp, read from its index entries

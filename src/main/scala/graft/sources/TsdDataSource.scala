@@ -52,7 +52,7 @@ import graft.model.EtsdSchema
   *
   * `EtsdQueryApi.query` over a bare load of this source skips the scan
   * when the sidecar prunes the selection to at most
-  * [[TsdLocalScan.MaxBlocks]] blocks (8 MiB): [[TsdLocalScan]] reads those
+  * [[TsdLocalScan.MaxBlocks]] blocks (2 MiB): [[TsdLocalScan]] reads those
   * files on the driver with the same partition reader, and a cold
   * `EtsdCmd query` reads them the same way before it builds any session.
   * The bound is a constant so that driver work stays O(1) in store size.

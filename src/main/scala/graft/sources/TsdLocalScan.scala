@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.EtsdSchema
 
-/** Reads of a `.tsd` selection the sidecar bounds to at most 8 MiB of
+/** Reads of a `.tsd` selection the sidecar bounds to at most 2 MiB of
   * blocks, in the calling process — the reference's `etsdFindBlock`
   * seek-and-read (etsdRead.c:300-353) and its one-thread query loop
   * (etsdQuery.c:218-401), with no Spark job and no Spark session.
@@ -29,18 +29,21 @@ import graft.model.EtsdSchema
   * never from decoding its blocks.
   *
   * The bound is a constant, not a setting: it caps the caller's work at
-  * 8 MiB of reads and decode whatever the store's size, so the planner's
+  * 2 MiB of reads and decode whatever the store's size, so the planner's
   * "no per-row driver logic at scale" rule holds. Every block is 512 B,
-  * so the block count is the byte budget. At the fold rate measured on a
-  * 4-vCPU machine, about 36 K blocks/s warm on one thread, a full budget
-  * folds in about half a second, well under a session start. The fold's
-  * decision itself reads only the directory listing and the sidecar —
-  * never a data file, never a probe job; [[begin]] probes only files the
-  * sidecar lacks, within the same bound. */
+  * so the block count is the byte budget. Its size is measured: in a
+  * warm `local[4]` session on a 4-vCPU machine, over perfbench's
+  * 8-channel garage store, the one-thread fold beats the distributed
+  * aggregate up to about 8 K blocks (3,938 blocks: 189 ms against
+  * 448 ms) and only ties it at 16 K (573 ms against 570 ms, and slower
+  * once the answer is sorted). 4,096 blocks holds a two-week window of
+  * that store. The fold's decision itself reads only the directory
+  * listing and the sidecar — never a data file, never a probe job;
+  * [[begin]] probes only files the sidecar lacks, within the same bound. */
 object TsdLocalScan {
-  /** Most 512 B blocks (8 MiB) a selection may span to be read in the
+  /** Most 512 B blocks (2 MiB) a selection may span to be read in the
     * calling process. */
-  val MaxBlocks = 16384L
+  val MaxBlocks = 4096L
 
   /** Count, sum, min and max of one channel's kept samples. */
   private[graft] final case class ChannelFold(channel: String, n: Long,
@@ -75,8 +78,8 @@ object TsdLocalScan {
       .filter(_.map(_.nBlocks).sum <= MaxBlocks).map { cs =>
       val want = chan.map(UTF8String.fromString)
       // n, sum, min, max per channel. No sum can overflow: a channel has
-      // at most MaxBlocks * 127 < 2^21 samples (blocks of <= 127
-      // intervals), each at most 32 bits wide, so |sum| < 2^53.
+      // at most MaxBlocks * 127 < 2^19 samples (blocks of <= 127
+      // intervals), each at most 32 bits wide, so |sum| < 2^51.
       val acc = mutable.HashMap.empty[UTF8String, Array[Long]]
       // the scan's rows hold registers, invalid samples and whole blocks
       // at the window's edges: keep only what the aggregate keeps

@@ -148,13 +148,13 @@ object LocalQueryStores {
   val gaugeT0: Long = gaugeFileSpan * 27670L
 
   /** Files in [[overBound]]. */
-  private val overBoundFiles = 66
+  private val overBoundFiles = 18
   /** The end of [[overBound]]'s last block. */
   val overBoundEnd: Long = gaugeT0 + overBoundFiles * gaugeFileSpan
 
-  /** A store over `TsdLocalScan.MaxBlocks`: the gauge in 66 full 256-block
-    * files (16,896 blocks, 67,584 rows), every 11th sample invalid, so the
-    * driver-local fold declines any window that keeps over 64 of its files.
+  /** A store over `TsdLocalScan.MaxBlocks`: the gauge in 18 full 256-block
+    * files (4,608 blocks, 18,432 rows), every 11th sample invalid, so the
+    * driver-local fold declines any window that keeps over 16 of its files.
     * Exported once per JVM. */
   lazy val overBound: String = exportStore(TestSpark.spark, gaugeSchema,
     (0 until overBoundFiles * 256 * 4).map(k =>

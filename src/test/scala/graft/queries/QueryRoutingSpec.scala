@@ -96,11 +96,11 @@ class QueryRoutingSpec extends AnyFunSuite {
     }
   }
 
-  test("the block bound: 16,384 surviving blocks stay local, one file more does not") {
+  test("the block bound: 4,096 surviving blocks stay local, one file more does not") {
     val df = load(spark, overBound)
     val lo = t0 + fileSpan + 1 // the file before ends exactly at lo - 1
-    assert(TsdLocalScan.MaxBlocks == 64 * 256)
-    val last = t0 + 65 * fileSpan - 1 // the last second of file 64
+    assert(TsdLocalScan.MaxBlocks == 16 * 256)
+    val last = t0 + 17 * fileSpan - 1 // the last second of file 16
     val within = args(lo, last, chan = false)
     assert(scans(EtsdQueryApi.query(df, schema, within, bigNow)) == 0)
     val (got, jobs) = ask(df, within, bigNow)
@@ -148,7 +148,7 @@ class QueryRoutingSpec extends AnyFunSuite {
   }
 
   test("a begin default over an unindexed store runs one probe job") {
-    // no sidecar and 16,896 blocks: `begin` is past the local bound, so it
+    // no sidecar and 4,608 blocks: `begin` is past the local bound, so it
     // comes from the load's probe job, whose entries the scan then plans
     // with; the probe job's call site is in TsdIndex
     val bare = withoutSidecar(overBound)
