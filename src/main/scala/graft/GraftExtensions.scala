@@ -9,7 +9,10 @@ import graft.functions.{BinaryResize, HalfBits, HalfValue, LongArrayDot, Md5Long
   * `.withExtensions`). Registers `graft_h60` and `graft_dot` for SQL
   * text; the Column APIs ([[graft.functions.DetHash.h60]],
   * [[graft.functions.LongArrayDot.apply]]) embed the expressions
-  * directly and need no registration. */
+  * directly and need no registration. Injects two optimizer rules:
+  * [[graft.plans.BandJoinRewrite]] (a band join as a bucketed equi
+  * join) and [[graft.plans.SortLocalRelation]] (a sort of a local
+  * relation done on the driver, so its ordered collect runs no job). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(Md5Long60.registryEntry)
@@ -18,5 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(HalfValue.registryEntry)
     ext.injectFunction(BinaryResize.registryEntry)
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
+    ext.injectOptimizerRule(_ => graft.plans.SortLocalRelation)
   }
 }

@@ -40,7 +40,11 @@ import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
   * ([[TsdLocalScan.bareStore]]), listed once for the `begin` read, the
   * fold and the scan a declined fold plans, and the cold `EtsdCmd query`
   * calls it as [[answer]] on the store it listed before it builds any
-  * session.
+  * session. An ordered collect of the local answer (the CLI's
+  * `orderBy("channel")`) runs no job either in a session with
+  * `graft.GraftExtensions`, whose [[graft.plans.SortLocalRelation]] sorts
+  * the rows on the driver; a session without it still plans Spark's
+  * range-partitioned sort, three jobs for a multi-channel answer.
   *
   * `begin` (`s=` missing or naming it) of a `.tsd` load is the store's
   * earliest block-1 stamp, read from its index entries

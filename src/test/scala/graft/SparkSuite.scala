@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed specs. */
@@ -11,5 +14,21 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Spark jobs started while `f` runs, of those `pick` accepts. */
+  def jobsOf(f: => Unit, pick: SparkListenerJobStart => Boolean = _ => true): Int = {
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (pick(j)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      org.apache.spark.graftbridge.ListenerBridge
+        .waitUntilEmpty(spark.sparkContext, 10000L)
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
   }
 }

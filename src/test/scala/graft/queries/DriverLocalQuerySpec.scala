@@ -31,15 +31,7 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
   private val tEnd = mixedT0 + 10L * mixedIntervals
   private val now = Instant.ofEpochSecond(tEnd + 3600L)
 
-  // the mixed channels at 60 s cadence in 30-minute blocks, 128 blocks per
-  // file: eight weeks is 2,689 blocks
-  private val longSchema = mixedSchema.copy(intervalSec = 60, blockIntervals = 30)
-  private val longSpan = 1800L
-  private val longIntervals = 8 * 7 * 1440
-  private val longEnd = mixedT0 + 60L * longIntervals
   private val longNow = Instant.ofEpochSecond(longEnd + 3600L)
-  private lazy val longStore = exportStore(spark, longSchema,
-    mixedRows(mixedT0, longIntervals, 60L), blocksPerFile = 128)
 
   /** (verb spelling, channel argument, start, end). */
   private val genQuery: Gen[(String, Option[String], Long, Long)] = for {

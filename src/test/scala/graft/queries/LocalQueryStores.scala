@@ -6,7 +6,7 @@ import java.time.format.DateTimeFormatter
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.timestamp_seconds
 
 import graft.TestSpark
@@ -79,9 +79,11 @@ object LocalQueryStores {
   def load(spark: SparkSession, path: String): DataFrame =
     spark.read.format("graft.sources.TsdDataSource").load(path)
 
-  /** channel -> (n, result): the answer rows of an `EtsdQueryApi` query. */
-  def answer(df: DataFrame): Map[String, (Long, Double)] =
-    df.collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+  /** channel -> (n, result) of one answer row of an `EtsdQueryApi` query. */
+  def entry(r: Row): (String, (Long, Double)) = r.getString(0) -> ((r.getLong(1), r.getDouble(2)))
+
+  /** The answer rows of an `EtsdQueryApi` query, by channel. */
+  def answer(df: DataFrame): Map[String, (Long, Double)] = df.collect().map(entry).toMap
 
   /** The same answer from a whole-file decode of every file at `path`. */
   def oracle(path: String, verb: String, chan: Option[String], lo: Long,
@@ -137,6 +139,16 @@ object LocalQueryStores {
         (te, "Amps", Some(((k * 17) % 250).toLong), ok(2)))
     }
   }
+
+  /** The mixed channels at 60 s cadence in 30-minute blocks, 128 blocks
+    * per file: eight weeks is 2,689 blocks, within `TsdLocalScan.MaxBlocks`. */
+  val longSchema: EtsdSchema = mixedSchema.copy(intervalSec = 60, blockIntervals = 30)
+  val longSpan = 1800L
+  private val longIntervals = 8 * 7 * 1440
+  val longEnd: Long = mixedT0 + 60L * longIntervals
+  /** [[longSchema]]'s store of [[mixedRows]]. Exported once per JVM. */
+  lazy val longStore: String = exportStore(TestSpark.spark, longSchema,
+    mixedRows(mixedT0, longIntervals, 60L), blocksPerFile = 128)
 
   /** One gauge at 60 s cadence in 240 s blocks, 256-block files on a
     * file-span grid from [[gaugeT0]]: the geometry of the routing and

@@ -1,22 +1,23 @@
 package graft.queries
 
 import java.time.Instant
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.jobsOf
+import graft.model.EtsdSchema
 import graft.sources.TsdLocalScan
 
 /** Which `EtsdQueryApi.query` inputs are answered on the driver: a bare
   * `TsdDataSource` load whose selection the sidecar bounds to at most
   * `TsdLocalScan.MaxBlocks` blocks runs no Spark job at all, a week-long
-  * window included; longer selections and every other input plan the
-  * DSv2 scan, and a `begin` default adds no job to it. */
+  * window and the ordered collect of an all-channel answer included;
+  * longer selections and every other input plan the DSv2 scan, and a
+  * `begin` default adds no job to it. */
 class QueryRoutingSpec extends AnyFunSuite {
   import LocalQueryStores._
 
@@ -38,34 +39,24 @@ class QueryRoutingSpec extends AnyFunSuite {
   private def args(lo: Long, hi: Long, chan: Boolean = true): Seq[String] =
     Seq("q=ave", s"s=${iso(lo)}", s"e=${iso(hi)}") ++ (if (chan) Seq("c=g") else Nil)
 
-  /** Spark jobs started while `f` runs, of those `pick` accepts. */
-  private def jobsOf(f: => Unit,
-                     pick: SparkListenerJobStart => Boolean = _ => true): Int = {
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (pick(j)) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.graftbridge.ListenerBridge
-        .waitUntilEmpty(spark.sparkContext, 10000L)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
-
   private def scans(df: DataFrame): Int =
     df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }.size
 
-  /** The CLI's action: ordered collect; returns (answer, jobs run). */
-  private def ask(df: DataFrame, a: Seq[String],
-                  at: Instant = now): (Map[String, (Long, Double)], Int) = {
-    var got = Map.empty[String, (Long, Double)]
+  /** The CLI's action: ordered collect; returns (rows, jobs run). */
+  private def askRows(df: DataFrame, a: Seq[String], at: Instant = now,
+                      sch: EtsdSchema = schema): (Seq[Row], Int) = {
+    var got = Seq.empty[Row]
     val jobs = jobsOf {
-      got = answer(EtsdQueryApi.query(df, schema, a, at).orderBy("channel"))
+      got = EtsdQueryApi.query(df, sch, a, at).orderBy("channel").collect().toSeq
     }
     (got, jobs)
+  }
+
+  /** [[askRows]] as channel -> (n, result). */
+  private def ask(df: DataFrame, a: Seq[String],
+                  at: Instant = now): (Map[String, (Long, Double)], Int) = {
+    val (rows, jobs) = askRows(df, a, at)
+    (rows.map(entry).toMap, jobs)
   }
 
   test("point windows run no Spark job and plan a local table scan") {
@@ -122,6 +113,26 @@ class QueryRoutingSpec extends AnyFunSuite {
     val (got, jobs) = ask(df, a)
     assert(jobs == 0, s"$a ran $jobs jobs")
     assert(got == oracle(store, "ave", Some("G"), lo, lo + 7 * 86400L))
+  }
+
+  test("an all-channel answer of the mixed store: its ordered collect runs no job") {
+    // three channels, so the ordered collect sorts several local rows;
+    // every gauge-store answer above is one row
+    val df = load(spark, longStore)
+    val at = Instant.ofEpochSecond(longEnd + 3600L)
+    Seq((mixedT0 + 86400L, mixedT0 + 8 * 86400L),
+        (mixedT0 - longSpan, longEnd + longSpan)).foreach { case (lo, hi) =>
+      val a = Seq("q=tot", s"s=${iso(lo)}", s"e=${iso(hi)}")
+      val plan = EtsdQueryApi.query(df, longSchema, a, at).orderBy("channel")
+        .queryExecution.executedPlan
+      assert(plan.isInstanceOf[LocalTableScanExec], plan)
+      val (got, jobs) = askRows(df, a, at, longSchema)
+      assert(jobs == 0, s"$a ran $jobs jobs")
+      assert(got.map(_.getString(0)) == Seq("Amps", "Odo", "Temp"))
+      assert(got == EtsdQueryApi.queryDistributed(df, longSchema, a, at)
+        .orderBy("channel").collect().toSeq)
+      assert(got.map(entry) == oracle(longStore, "tot", None, lo, hi).toSeq.sortBy(_._1))
+    }
   }
 
   test("a window over MaxBlocks plans the DSv2 scan") {
