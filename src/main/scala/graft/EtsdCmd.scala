@@ -314,7 +314,7 @@ object EtsdCmd {
         val store = openStore(path, conf)
         // a selection the sidecar bounds to a few blocks is answered here
         // with no session; bad arguments fail before one is built
-        EtsdQueryApi.answer(conf, store, rest, now).getOrElse {
+        EtsdQueryApi.answer(conf, store, store.schema, rest, now).getOrElse {
           val spark = GraftSession("etsdCmd")
           try {
             // DSv2 scan: plans from the _graft_index sidecar (or one

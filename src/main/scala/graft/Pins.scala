@@ -50,6 +50,8 @@ import org.apache.spark.storage.StorageLevel
   * query boundary is a session-level event. Concurrent sessions sharing
   * one JVM should scope releases to their own quiet points. */
 object Pins {
+  /** Storage level of every pin's blocks. */
+  private val Level = StorageLevel.MEMORY_AND_DISK
   private val live = new ConcurrentLinkedQueue[() => Unit]()
   // identical-plan dedup across REBUILDS of one query within a release
   // scope (persist got this from the CacheManager for free; the
@@ -69,19 +71,17 @@ object Pins {
     * and register its blocks for the next [[releaseAll]]. Returns the
     * frame downstream plans must read.
     *
-    * `level` is the storage level of the checkpointed blocks (batch and
-    * streaming paths alike). Trade-off to know: unlike `persist`, a
-    * locally-checkpointed pin is NOT recomputable — its lineage is
-    * truncated, so losing an executor (or using a retained frame after
-    * [[releaseAll]]) fails with missing blocks instead of silently
-    * re-running the build. That is the right trade here: pins live
+    * The blocks are kept at [[Level]] (batch and streaming paths alike).
+    * Trade-off to know: unlike `persist`, a locally-checkpointed pin is
+    * NOT recomputable — its lineage is truncated, so losing an executor
+    * (or using a retained frame after [[releaseAll]]) fails with missing
+    * blocks instead of silently re-running the build. That is the right trade here: pins live
     * inside one query boundary on one driver, and the lineage
     * truncation is what removes the per-task deserialization of the
     * full child plan that `persist` charged every downstream task. */
-  def pin[T](ds: Dataset[T],
-             level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
+  def pin[T](ds: Dataset[T]): Dataset[T] = {
     if (ds.isStreaming) { // cannot checkpoint an unstarted stream
-      ds.persist(level)
+      ds.persist(Level)
       live.add(() => ds.unpersist(blocking = false))
       return ds
     }
@@ -96,16 +96,15 @@ object Pins {
     memo.compute(key, (_, existing) => {
       val cur = if (existing == null) Nil else existing
       if (cur.exists(_._1.sameResult(analyzed))) cur
-      else (analyzed, materialize(ds, level)) :: cur
+      else (analyzed, materialize(ds)) :: cur
     }).collectFirst {
       case (p, d) if p.sameResult(analyzed) => d.asInstanceOf[Dataset[T]]
     }.get
   }
 
-  private def materialize[T](ds: Dataset[T],
-                             level: StorageLevel): Dataset[T] = {
+  private def materialize[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
-    val ck = ds.localCheckpoint(eager = true, storageLevel = level)
+    val ck = ds.localCheckpoint(eager = true, storageLevel = Level)
     // the checkpointed blocks live outside the SQL cache manager; free
     // them via the underlying RDD at release
     val rdd = ck.queryExecution.analyzed.collectFirst {

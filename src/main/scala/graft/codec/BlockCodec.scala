@@ -225,8 +225,6 @@ final class BlockCodec(val layout: Layout) {
     require(off >= 0 && off < layout.schema.xDataSize, "xData offset")
     buf.setByteD(layout.xDataStart + off, b)
   }
-  def readXData(buf: BlockBuffer, off: Int): Int =
-    buf.byteD(layout.xDataStart + off)
 
   /** Fresh all-invalid block: data words 4..255 = 0xFFFF, scaling cleared,
     * timestamp + header echo stamped (etsdBlockClear/etsdBlockStart intent;

@@ -68,10 +68,6 @@ object DetHash {
   /** h60 folded below M31 for overflow-free MinHash permutation. */
   def h31(c: Column): Column = h60(c) % M31
 
-  /** i-th MinHash permutation of an h31 column. */
-  def perm(i: Int, h: Column): Column =
-    (h * MinHashA(i) + MinHashB(i)) % P31
-
   /** JVM-side scalar twin of [[h60]] (tests / driver-side spot checks). */
   def h60Value(s: String): Long =
     java.lang.Long.parseLong(
@@ -86,6 +82,8 @@ object DetHash {
 
   def h31Sql(e: String): String = s"${h60Sql(e)} % $M31"
 
+  /** i-th MinHash permutation of the h31 expression `h`: the oracle's
+    * SQL and the Spark operators' `transform` lambdas alike. */
   def permSql(i: Int, h: String): String =
     s"(($h) * ${MinHashA(i)} + ${MinHashB(i)}) % $P31"
 }

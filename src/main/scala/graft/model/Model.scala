@@ -143,12 +143,6 @@ final case class EtsdSchema(
   /** Long ("tidy") canonical Spark schema: scales to arbitrary channel
     * counts and 100 TB (SURVEY.md §1.5). */
   def longSchema: StructType = EtsdSchema.LongSchema
-
-  /** Wide view schema mirroring the reference's per-block layout. */
-  def wideSchema: StructType = StructType(
-    StructField("ts", TimestampType, nullable = false) +:
-    channels.filter(_.streamType != StreamType.DontSave)
-      .map(c => StructField(c.name, LongType, nullable = true)))
 }
 
 object EtsdSchema {

@@ -256,8 +256,7 @@ object DedupOps {
     arr.select($"doc_id", explode($"hs").as("h31"))
 
   private def minHashExpr(i: Int): Column =
-    expr(s"array_min(transform(hs, h -> (h * ${DetHash.MinHashA(i)} + " +
-      s"${DetHash.MinHashB(i)}) % ${DetHash.P31}))").as(s"m$i")
+    expr(s"array_min(transform(hs, h -> ${DetHash.permSql(i, "h")}))").as(s"m$i")
 
   /** MinHash signatures from the array form: one row per doc with m0..m15,
     * each `array_min` over an affine permutation of the doc's shingle-hash

@@ -977,8 +977,7 @@ object TextAnalysisOps {
   def fingerprint(docs: DataFrame, id: Column, text: Column): DataFrame =
     DedupOps.shingleHashArrays(docs, id, text)
       .select($"doc_id" +: (0 until 4).map { i =>
-        expr(s"array_min(transform(hs, h -> (h * ${DetHash.MinHashA(i)} + " +
-          s"${DetHash.MinHashB(i)}) % ${DetHash.P31}))").as(s"f$i")
+        expr(s"array_min(transform(hs, h -> ${DetHash.permSql(i, "h")}))").as(s"f$i")
       }: _*)
 
   /** Context-window chunking — the RAG/embedding prep step: fixed-length

@@ -37,18 +37,14 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * 2⁶³ (data spanning more than half the integer line), where the
   * wrapped "match" is itself an arithmetic artifact, so the bucketed
   * answer is arguably the less wrong one; under ANSI mode both plans
-  * throw on the overflow and there is no divergence. Set
-  * `spark.graft.bandJoinRewrite.enabled=false` to keep the naive plan
-  * when wrapped matches must be preserved. */
+  * throw on the overflow and there is no divergence. Exclude the rule,
+  * `spark.sql.optimizer.excludedRules=graft.plans.BandJoinRewrite`, to
+  * keep the naive plan when wrapped matches must be preserved. */
 object BandJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private val BucketCol = "__graft_band_bucket"
-  val EnabledKey = "spark.graft.bandJoinRewrite.enabled"
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // parseBoolean: accept TRUE/True like every other Spark boolean conf
-    if (!java.lang.Boolean.parseBoolean(
-        conf.getConfString(EnabledKey, "true"))) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if !hasEquiConjunct(cond, left, right) =>
@@ -57,7 +53,6 @@ object BandJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           case None => j
         }
     }
-  }
 
   private def sideOf(e: Expression, left: LogicalPlan,
                      right: LogicalPlan): Option[Boolean] = {

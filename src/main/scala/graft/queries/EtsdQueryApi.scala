@@ -34,24 +34,27 @@ import graft.sources.{TsdIndex, TsdLocalScan, TsdStore}
   * one-thread read of the blocks the window spans. The bound is a
   * constant so that driver work stays O(1) in store size; anything else
   * (a filtered frame, a fleet, a longer selection) takes the distributed
-  * aggregate, with the same rows and schema either way. The local answer
-  * is one Spark-free core over a listed [[TsdStore]] and a Hadoop
-  * `Configuration`: [[query]] takes the store the load owns
+  * aggregate, with the same rows and schema either way. Every query is
+  * one composition, the reference's parse, seek and fold: [[answer]], a
+  * Spark-free core over a listed [[TsdStore]] and a Hadoop
+  * `Configuration`, and, when it declines, [[queryDistributed]]. The cold
+  * `EtsdCmd query` calls [[answer]] on the store it listed before it
+  * builds any session; [[query]] calls it on the store the load owns
   * ([[TsdLocalScan.bareStore]]), listed once for the `begin` read, the
-  * fold and the scan a declined fold plans, and the cold `EtsdCmd query`
-  * calls it as [[answer]] on the store it listed before it builds any
-  * session. An ordered collect of the local answer (the CLI's
-  * `orderBy("channel")`) runs no job either in a session with
-  * `graft.GraftExtensions`, whose [[graft.plans.SortLocalRelation]] sorts
-  * the rows on the driver; a session without it still plans Spark's
-  * range-partitioned sort, three jobs for a multi-channel answer.
+  * fold and the scan a declined fold plans. An ordered collect of the
+  * local answer (the CLI's `orderBy("channel")`) runs no job either in a
+  * session with `graft.GraftExtensions`, whose
+  * [[graft.plans.SortLocalRelation]] sorts the rows on the driver; a
+  * session without it still plans Spark's range-partitioned sort, three
+  * jobs for a multi-channel answer.
   *
   * `begin` (`s=` missing or naming it) of a `.tsd` load is the store's
   * earliest block-1 stamp, read from its index entries
-  * ([[TsdIndex.begin]]): the fresh sidecar's, and a probe of each
-  * unindexed file, in this process within the bound and past it with the
-  * load's one probe job, which its scan reuses, never with a job over the
-  * data. It is the first stored sample whenever the schema has a register
+  * ([[TsdIndex.begin]]), never with a job over the data: [[answer]] reads
+  * the fresh sidecar's and probes each unindexed file in this process,
+  * within the bound; [[queryDistributed]] takes the load's planned
+  * entries, whose one probe job for the unindexed files its scan reuses.
+  * It is the first stored sample whenever the schema has a register
   * channel and block clocks run forward; with no register it is one
   * interval earlier, and a clock stepping backwards inside a file is not
   * looked for, as in the reference. Only a frame that is not a bare `.tsd`
@@ -134,65 +137,59 @@ object EtsdQueryApi {
     q
   }
 
-  /** The answer core over `[lo, hi]`: `(channel, n, result)` rows in
-    * channel order, read and folded in this process by [[TsdLocalScan]]
-    * with no Spark job or session, or None when the sidecar does not bound
-    * the selection to [[TsdLocalScan.MaxBlocks]] blocks. */
-  private def local(conf: Configuration, store: TsdStore, q: Resolved,
-                    window: (Long, Long)): Option[Seq[(String, Long, Double)]] =
-    TsdLocalScan.fold(conf, store, window._1, window._2, q.chan)
-      .map(_.map(f => (f.channel, f.n, q.result(f))))
-
-  /** [[query]]'s rows for the bare `.tsd` store `store`, with no Spark
-    * session: the cold `EtsdCmd query`. `begin` comes from the store's
-    * index entries ([[TsdLocalScan.begin]]). None when the local rule
-    * declines, which is when the selection is over
-    * [[TsdLocalScan.MaxBlocks]] blocks; the caller then runs
-    * [[queryDistributed]] over a session, which does not retry the fold.
-    * Bad arguments raise IllegalArgumentException either way. */
-  def answer(conf: Configuration, store: TsdStore, rawArgs: Seq[String],
-             now: Instant): Option[Seq[(String, Long, Double)]] = {
-    val q = resolve(store.schema, rawArgs, now)
-    (if (q.needsBegin) TsdLocalScan.begin(store) else Some(0L))
-      .flatMap(b => local(conf, store, q, q.window(b)))
+  /** [[query]]'s rows for the bare `.tsd` store `store`, read and folded
+    * in this process by [[TsdLocalScan]] with no Spark job or session, in
+    * channel order; None when the selection is over
+    * [[TsdLocalScan.MaxBlocks]] blocks, as it is whenever the unindexed
+    * files alone are, which is when `begin` is not read here
+    * ([[TsdLocalScan.begin]]). The caller then runs [[queryDistributed]],
+    * which does not retry the fold. The arguments resolve against
+    * `schema`: the cold `EtsdCmd query` passes the header it read,
+    * [[query]] its own argument, so that it opens no header. Bad
+    * arguments raise IllegalArgumentException either way. */
+  def answer(conf: Configuration, store: TsdStore, schema: EtsdSchema,
+             rawArgs: Seq[String], now: Instant): Option[Seq[(String, Long, Double)]] = {
+    val q = resolve(schema, rawArgs, now)
+    (if (q.needsBegin) TsdLocalScan.begin(store) else Some(0L)).flatMap { b =>
+      val (lo, hi) = q.window(b)
+      TsdLocalScan.fold(conf, store, lo, hi, q.chan)
+        .map(_.map(f => (f.channel, f.n, q.result(f))))
+    }
   }
 
   /** Run an AMT-family query. `df` is the long DataFrame (`ts, channel,
     * value, valid, is_register`); `now` injected for determinism. Output:
-    * one row per matched channel: (channel, n, result). */
+    * one row per matched channel: (channel, n, result). The CLI's
+    * composition: [[answer]] over the store of a bare load, as a local
+    * relation, else [[queryDistributed]]. */
   def query(df: DataFrame, schema: EtsdSchema, rawArgs: Seq[String],
-            now: Instant): DataFrame =
-    run(df, schema, rawArgs, now, driverLocal = true)
+            now: Instant): DataFrame = {
+    val spark = df.sparkSession
+    TsdLocalScan.bareStore(df)
+      .flatMap(answer(spark.sessionState.newHadoopConf(), _, schema, rawArgs, now))
+      .fold(queryDistributed(df, schema, rawArgs, now)) { rs =>
+        spark.createDataFrame(
+          rs.map { case (c, n, r) => Row(c, n, r) }.asJava, ResultSchema)
+      }
+  }
 
   /** [[query]] always through the distributed aggregate, never the
     * driver-local fold: the reference plan the local answer must equal,
     * and the cold `EtsdCmd query`'s plan once [[answer]] has declined. */
   private[graft] def queryDistributed(df: DataFrame, schema: EtsdSchema,
-      rawArgs: Seq[String], now: Instant): DataFrame =
-    run(df, schema, rawArgs, now, driverLocal = false)
-
-  private def run(df: DataFrame, schema: EtsdSchema, rawArgs: Seq[String],
-                  now: Instant, driverLocal: Boolean): DataFrame = {
+      rawArgs: Seq[String], now: Instant): DataFrame = {
     val q = resolve(schema, rawArgs, now)
-    val spark = df.sparkSession
-    lazy val store = TsdLocalScan.bareStore(df)
-    // `begin` (etsdQuery.c:259-261): a `.tsd` load's from its index
-    // entries, read here or, past the local bound, with the load's one
-    // probe job; any other frame's as its smallest `ts`, one aggregate job
-    def begin: Long = store.fold {
+    // `begin` (etsdQuery.c:259-261): a bare `.tsd` load's from its index
+    // entries, with the load's one probe job, which its scan reuses; any
+    // other frame's as its smallest `ts`, one aggregate job
+    def begin: Long = TsdLocalScan.bareStore(df).fold {
       val r = df.agg(min(unix_timestamp($"ts"))).head()
       if (r.isNullAt(0)) // empty frame: the reference's read error path
         throw new IllegalArgumentException("no data blocks in file")
       r.getLong(0)
-    }(s => TsdLocalScan.begin(s).getOrElse(TsdIndex.begin(s.planned)))
-
+    }(s => TsdIndex.begin(s.planned))
     val (lo, hi) = q.window(if (q.needsBegin) begin else 0L)
-    val rows = if (!driverLocal) None
-      else store.flatMap(local(spark.sessionState.newHadoopConf(), _, q, (lo, hi)))
-    rows.fold(distributed(df, q.verb, q.chan, lo, hi)) { rs =>
-      spark.createDataFrame(
-        rs.map { case (c, n, r) => Row(c, n, r) }.asJava, ResultSchema)
-    }
+    distributed(df, q.verb, q.chan, lo, hi)
   }
 
   private def distributed(df: DataFrame, verb: String,

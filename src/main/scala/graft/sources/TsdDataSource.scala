@@ -31,9 +31,11 @@ import graft.model.EtsdSchema
   * Usage: `spark.read.format("graft.sources.TsdDataSource").load(path)`.
   * Output is the canonical long schema. Pruning is block-granular, so all
   * filters are also returned as residual — Spark re-applies them exactly.
-  * Partitions are fixed-size sector ranges, so a single large file splits
-  * across the cluster instead of one task, and many small files pack into
-  * one task ([[TsdPacking]]).
+  * Partitions are sector ranges of at most
+  * [[TsdPacking.BlocksPerPartition]] blocks, a constant, so a single large
+  * file splits across the cluster instead of one task, and many small
+  * files pack into one task ([[TsdPacking]]). Its read options are
+  * `xdata`, `stores` and `fleet`.
   *
   * One scan, [[TsdScan]], serves every mode: a single store (a file or a
   * directory), a fleet of stores with a `store_id` column
@@ -154,20 +156,13 @@ private[sources] class TsdTable(props: CaseInsensitiveStringMap)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TsdScanBuilder(this, options.getLong("blocksPerPartition", 2048))
+    new TsdScanBuilder(this)
 }
 
-private[sources] class TsdScanBuilder(table: TsdTable, blocksPerPartition: Long)
+private[sources] class TsdScanBuilder(table: TsdTable)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
   import table.{fleet, xdata}
-  // each task bulk-reads its partition's sector ranges into byte arrays
-  // bounded by blocksPerPartition * 512 B; validate at scan build so a
-  // misconfiguration fails with a message instead of Int overflow /
-  // multi-GiB task allocations (2^21 blocks = a 1 GiB read buffer)
-  require(blocksPerPartition >= 1 && blocksPerPartition <= (1L << 21),
-    s"blocksPerPartition must be in [1, ${1L << 21}] " +
-      s"(512 B blocks; got $blocksPerPartition)")
   private var lo = Long.MinValue
   private var hi = Long.MaxValue
   private var chans: Option[Set[String]] = None // channel pruning (long mode)
@@ -237,7 +232,7 @@ private[sources] class TsdScanBuilder(table: TsdTable, blocksPerPartition: Long)
   }
   override def pushedFilters(): Array[sources.Filter] = pushed
   override def build(): Scan =
-    new TsdScan(table, lo, hi, blocksPerPartition, chans, storeSel, required)
+    new TsdScan(table, lo, hi, chans, storeSel, required)
 }
 
 /** One file's contiguous sector range — the unit the partition packer
@@ -272,6 +267,11 @@ private[sources] case class TsdInputPartition(chunks: Seq[TsdChunk],
     cols: Option[Seq[String]] = None) extends InputPartition
 
 private[sources] object TsdPacking {
+  /** Most 512 B blocks in one partition (1 MiB): each task bulk-reads a
+    * chunk's sector range into one byte array of at most this many
+    * blocks. A constant of the scan, not a read option. */
+  val BlocksPerPartition = 2048L
+
   /** Cost charged per chunk for its file open + header read, in 512 B
     * block units (64 blocks = 32 KiB): bounds how many tiny files one
     * task packs, exactly the role of `spark.sql.files.openCostInBytes`
@@ -339,7 +339,6 @@ private[sources] object TsdPacking {
   * metadata I/O of theirs. */
 private[sources] class TsdScan(table: TsdTable,
                                lo: Long, hi: Long,
-                               blocksPerPartition: Long,
                                chans: Option[Set[String]],
                                storeSel: Option[Set[String]],
                                required: Option[StructType])
@@ -372,7 +371,7 @@ private[sources] class TsdScan(table: TsdTable,
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    TsdPacking.pack(pruned, blocksPerPartition, TsdPacking.OpenCostBlocks,
+    TsdPacking.pack(pruned, TsdPacking.BlocksPerPartition, TsdPacking.OpenCostBlocks,
       SparkSession.active.sparkContext.defaultParallelism,
       lo, hi, chans.map(_.toSeq.sorted), required.map(_.fieldNames.toSeq))
 

@@ -76,24 +76,22 @@ object TsdLocalScan {
                           hi: Long, chan: Option[String]): Option[Seq[ChannelFold]] =
     Some(store.select(lo, hi, store.indexed))
       .filter(_.map(_.nBlocks).sum <= MaxBlocks).map { cs =>
-      val want = chan.map(UTF8String.fromString)
       // n, sum, min, max per channel. No sum can overflow: a channel has
       // at most MaxBlocks * 127 < 2^19 samples (blocks of <= 127
       // intervals), each at most 32 bits wide, so |sum| < 2^51.
       val acc = mutable.HashMap.empty[UTF8String, Array[Long]]
-      // the scan's rows hold registers, invalid samples and whole blocks
-      // at the window's edges: keep only what the aggregate keeps
+      // the reader emits only the pushed channel, but with registers,
+      // invalid samples and whole blocks at the window's edges: keep only
+      // what the aggregate keeps
       val part = TsdInputPartition(cs, lo, hi, chan.map(Seq(_)))
       cs.foreach { c =>
         val r = new TsdPartitionReader(c, part, conf)
         try while (r.next()) {
           val row = r.get()
           val ts = row.getLong(0) / 1000000L
-          val name = row.getUTF8String(1)
-          if (row.getBoolean(3) && !row.getBoolean(4) && ts >= lo && ts <= hi &&
-              want.forall(_ == name)) {
+          if (row.getBoolean(3) && !row.getBoolean(4) && ts >= lo && ts <= hi) {
             val v = row.getLong(2)
-            val a = acc.getOrElseUpdate(name,
+            val a = acc.getOrElseUpdate(row.getUTF8String(1),
               Array(0L, 0L, Long.MaxValue, Long.MinValue))
             a(0) += 1; a(1) += v
             a(2) = math.min(a(2), v); a(3) = math.max(a(3), v)
@@ -108,8 +106,10 @@ object TsdLocalScan {
   /** `begin` of `store` ([[TsdIndex.begin]]), read in the calling
     * process: the fresh sidecar entries' block-1 stamps, plus a probe of
     * each unindexed file's first and last block. None when the unindexed
-    * files span over [[MaxBlocks]] blocks, a store whose every selection
-    * [[fold]] declines too. */
+    * files span over [[MaxBlocks]] blocks: [[fold]] counts those files
+    * whole, so it declines every selection of such a store too, and the
+    * distributed plan reads `begin` from the load's one probe job
+    * ([[TsdStore.planned]]) instead. */
   private[graft] def begin(store: TsdStore): Option[Long] =
     Option.when(store.unindexed.map(f => TsdIndex.dataBlocks(f.getLen)).sum <= MaxBlocks) {
       TsdIndex.begin(store.indexed ++ store.unindexed.map(f => TsdIndex.probe(store.fs,

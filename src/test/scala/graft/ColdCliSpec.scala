@@ -86,20 +86,20 @@ class ColdCliSpec extends AnyFunSuite {
   test("the core reads begin from the sidecar of a large store") {
     val conf = HadoopConfs.standalone()
     val big = EtsdCmd.openStore(overBound, conf)
-    assert(EtsdQueryApi.answer(conf, big, Seq("c=g"), bigNow).isEmpty)
-    assert(EtsdQueryApi.answer(conf, big, Seq("s=begin+1h"), bigNow).isEmpty)
+    assert(EtsdQueryApi.answer(conf, big, schema, Seq("c=g"), bigNow).isEmpty)
+    assert(EtsdQueryApi.answer(conf, big, schema, Seq("s=begin+1h"), bigNow).isEmpty)
     // the 1,800-block store is within the bound: the same defaults answer
     // here, as the whole-file decode has them
     val listed = EtsdCmd.openStore(store, conf)
     val now = java.time.Instant.ofEpochSecond(t0 + 6 * 86400L)
     val begin = firstBlockTs(tsdFiles(store))
-    def lines(args: Seq[String]) = EtsdQueryApi.answer(conf, listed, args, now)
+    def lines(args: Seq[String]) = EtsdQueryApi.answer(conf, listed, schema, args, now)
       .map(_.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) })
     assert(lines(Seq("q=ave", "c=g")).contains(oracleLines(begin, now.getEpochSecond)))
     assert(lines(Seq("q=ave", "c=g", "s=begin+1h"))
       .contains(oracleLines(begin + 3600L, now.getEpochSecond)))
     val lo = t0 + 3 * 86400L
-    assert(EtsdQueryApi.answer(conf, listed, window(lo, lo + 2 * span), now)
+    assert(EtsdQueryApi.answer(conf, listed, schema, window(lo, lo + 2 * span), now)
       .isDefined)
     // an hour from `begin`, the earliest block 1, is a few blocks of the
     // 1,800
@@ -144,7 +144,8 @@ class ColdCliSpec extends AnyFunSuite {
       val args = Seq("q=ave", "c=g", "s=begin+1h")
       CountingFs.reset()
       val conf = spark.sessionState.newHadoopConf()
-      assert(EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, bigNow).isEmpty)
+      val listed = EtsdCmd.openStore(path, conf)
+      assert(EtsdQueryApi.answer(conf, listed, listed.schema, args, bigNow).isEmpty)
       val rows = EtsdQueryApi.queryDistributed(load(spark, path), schema, args, bigNow)
         .orderBy("channel").collect().toSeq
         .map(r => EtsdCmd.queryLine(r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -153,6 +154,31 @@ class ColdCliSpec extends AnyFunSuite {
       assert(CountingFs.calls("list", overBound) <= 2, CountingFs.log)
       assert(CountingFs.calls("open", s"$overBound/${TsdIndex.FileName}") <= 2,
         CountingFs.log)
+    } finally spark.conf.unset(key)
+  }
+
+  test("the distributed plan probes an unindexed file in its job alone") {
+    // `begin` of a store whose sidecar lacks two files comes from the
+    // load's one probe job, whose entries the scan then plans with: each
+    // of those files is opened by that job and by the scan's read, never
+    // on the driver
+    val dir = copyStore(overBound)
+    val dropped = tsdFiles(dir).take(2).map(_.getFileName.toString)
+    TsdIndex.merge(spark, dir, Nil, drop = dropped.toSet)
+    val key = s"fs.${CountingFs.Scheme}.impl"
+    spark.conf.set(key, classOf[CountingFs].getName)
+    try {
+      val df = load(spark, s"${CountingFs.Scheme}:$dir")
+      CountingFs.reset()
+      val rows = EtsdQueryApi.queryDistributed(df, schema, Seq("q=ave", "c=g", "s=begin+1h"),
+          bigNow).orderBy("channel").collect().toSeq
+        .map(r => EtsdCmd.queryLine(r.getString(0), r.getLong(1), r.getDouble(2)))
+      val begin = firstBlockTs(tsdFiles(dir))
+      assert(rows == oracleLines(begin + 3600L, bigNow.getEpochSecond, dir))
+      dropped.foreach { name =>
+        assert(CountingFs.driverCalls("open", s"$dir/$name") == 0, CountingFs.log)
+        assert(CountingFs.calls("open", s"$dir/$name") == 2, CountingFs.log)
+      }
     } finally spark.conf.unset(key)
   }
 

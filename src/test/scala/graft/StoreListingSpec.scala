@@ -9,6 +9,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{lit, timestamp_seconds}
 import org.scalatest.funsuite.AnyFunSuite
@@ -209,9 +210,9 @@ class StoreListingSpec extends AnyFunSuite {
 }
 
 /** The local file system under the scheme [[CountingFs.Scheme]], which
-  * records every status call, listing and open a reader makes (calls made
-  * inside another recorded call, such as the per-entry status calls of a
-  * listing, are not recorded). */
+  * records every status call, listing and open a reader makes, and whether
+  * a Spark task made it (calls made inside another recorded call, such as
+  * the per-entry status calls of a listing, are not recorded). */
 final class CountingFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create(s"${CountingFs.Scheme}:///")
   override def getScheme: String = CountingFs.Scheme
@@ -225,11 +226,12 @@ final class CountingFs extends RawLocalFileSystem {
 
 object CountingFs {
   val Scheme = "countfs"
-  private val seen = new ConcurrentLinkedQueue[(String, String)]()
+  /** (call, path, made outside any Spark task) */
+  private val seen = new ConcurrentLinkedQueue[(String, String, Boolean)]()
   private val depth = new ThreadLocal[Int] { override def initialValue = 0 }
 
   def record[T](call: String, f: Path)(body: => T): T = {
-    if (depth.get == 0) seen.add((call, f.toUri.getPath))
+    if (depth.get == 0) seen.add((call, f.toUri.getPath, TaskContext.get() == null))
     depth.set(depth.get + 1)
     try body finally depth.set(depth.get - 1)
   }
@@ -237,8 +239,12 @@ object CountingFs {
   def reset(): Unit = seen.clear()
   def total: Int = seen.size
   def calls(call: String, path: String): Int =
-    seen.asScala.count(_ == ((call, path)))
-  def log: String = seen.asScala.mkString(", ")
-  def opened: Seq[String] = seen.asScala.toSeq.collect { case ("open", p) => p }
-  def listed: Seq[String] = seen.asScala.toSeq.collect { case ("list", p) => p }
+    seen.asScala.count(s => s._1 == call && s._2 == path)
+  /** [[calls]] made on the driver, outside any Spark task. */
+  def driverCalls(call: String, path: String): Int =
+    seen.asScala.count(_ == ((call, path, true)))
+  def log: String = seen.asScala.map { case (c, p, d) =>
+    s"$c $p${if (d) "" else " (task)"}" }.mkString(", ")
+  def opened: Seq[String] = seen.asScala.toSeq.collect { case ("open", p, _) => p }
+  def listed: Seq[String] = seen.asScala.toSeq.collect { case ("list", p, _) => p }
 }

@@ -53,18 +53,20 @@ class BandJoinRewriteSpec extends AnyFunSuite {
              if math.abs(lv - rv) <= 100 && lid < rid } yield 1).size)
   }
 
-  test("spark.graft.bandJoinRewrite.enabled=false keeps the naive plan") {
+  test("excluding the rule through spark.sql.optimizer.excludedRules keeps the naive plan") {
     val l = lRows.toDF("lid", "lv")
     val r = rRowsOpt.toDF("rid", "rv")
-    spark.conf.set(BandJoinRewrite.EnabledKey, "false")
+    val key = "spark.sql.optimizer.excludedRules"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "graft.plans.BandJoinRewrite")
     try {
       val joined = l.join(r, abs($"lv" - $"rv") <= 100)
       val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastNestedLoopJoin"), s"flag ignored:\n$plan")
+      assert(plan.contains("BroadcastNestedLoopJoin"), s"exclusion ignored:\n$plan")
       val want = (for { (_, lv) <- lRows; (_, rvo) <- rRowsOpt; rv <- rvo
                         if math.abs(lv - rv) <= 100 } yield 1).size
       assert(joined.count() == want) // same answer, naive plan
-    } finally spark.conf.set(BandJoinRewrite.EnabledKey, "true")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("does not fire when an equi key already exists, or on doubles") {

@@ -79,7 +79,8 @@ class DriverLocalQuerySpec extends AnyFunSuite with GenDriven {
   /** The cold CLI's stdout for `args`, from the answer core alone. */
   private def cliLines(path: String, args: Seq[String], at: Instant): Seq[String] = {
     val conf = HadoopConfs.standalone()
-    val rows = EtsdQueryApi.answer(conf, EtsdCmd.openStore(path, conf), args, at)
+    val store = EtsdCmd.openStore(path, conf)
+    val rows = EtsdQueryApi.answer(conf, store, store.schema, args, at)
     assert(rows.isDefined, s"$args on $path must need no session")
     rows.get.map { case (c, n, r) => EtsdCmd.queryLine(c, n, r) }
   }

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.time.Instant
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.timestamp_seconds
 import org.scalatest.funsuite.AnyFunSuite
@@ -153,11 +154,21 @@ class EtsdSourceSpec extends AnyFunSuite {
   }
 
   test("DSv2 reader splits one file into sector-range partitions") {
+    // the scan's packing with a 1-block budget: 3 blocks -> 3 partitions,
+    // which the scan's reader factory reads back to the whole decode
     val dir = tsdPath
-    val v2 = spark.read.format("graft.sources.TsdDataSource")
-      .option("blocksPerPartition", 1).load(dir)
-    assert(v2.rdd.getNumPartitions == 3) // 3 blocks -> 3 partitions
-    assert(v2.count() == decoded(dir).count())
+    val conf = spark.sessionState.newHadoopConf()
+    val store = TsdIndex.listStore(new Path(dir).getFileSystem(conf), new Path(dir))
+    val parts = TsdPacking.pack(store.select(Long.MinValue, Long.MaxValue, Nil), 1L,
+      TsdPacking.OpenCostBlocks, 1, Long.MinValue, Long.MaxValue, None, None)
+    assert(parts.length == 3)
+    val factory = new TsdReaderFactory(HadoopConfs.props(spark), xdata = false)
+    val rows = parts.map { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r.next()).takeWhile(identity).size finally r.close()
+    }
+    assert(rows.forall(_ > 0))
+    assert(rows.sum == decoded(dir).count())
   }
 
   test("DSv2 channel pushdown: decode skips non-selected channels") {
