@@ -53,7 +53,9 @@ class BandJoinRewriteSpec extends AnyFunSuite {
              if math.abs(lv - rv) <= 100 && lid < rid } yield 1).size)
   }
 
-  test("excluding the rule through spark.sql.optimizer.excludedRules keeps the naive plan") {
+  // The rule once had its own enable conf, named in this test; excluding
+  // it by class name is now the one way to keep the naive plan.
+  test("spark.graft.bandJoinRewrite.enabled=false keeps the naive plan") {
     val l = lRows.toDF("lid", "lv")
     val r = rRowsOpt.toDF("rid", "rv")
     val key = "spark.sql.optimizer.excludedRules"
